@@ -67,6 +67,12 @@ def double_lit_sql(v: float) -> str:
     return r if ("e" in r or "E" in r) else r + "D"
 
 
+def quote_ident(name: str) -> str:
+    """A column name as a Spark SQL identifier: backtick-quoted, so
+    reserved words (``order``) and names with spaces parse too."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def cell_id_sql(lon: str, lat: str, res: int) -> str:
     """The cell-id arithmetic as ONE SQL string (server-side parsed).
 

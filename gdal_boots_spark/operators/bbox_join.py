@@ -19,6 +19,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import memo
+
 
 def _cell_x_sql(v: str, res: int) -> str:
     n = 1 << res
@@ -47,29 +49,6 @@ def _explode_cover(df: DataFrame, res: int, prefix: str) -> DataFrame:
     ).drop("_ix", "_iy", "_iy0", "_iy1")
 
 
-# per-session memo of the auto_res/auto_levels sampling probes, keyed
-# by the SEMANTIC hash of both input plans (the knn _STATS_CACHE /
-# spatial_join _POLY_DIM_CACHE pattern): each probe is 2 bounded
-# limit(sample) jobs whose ~0.3-0.6s of scheduling latency re-ran on
-# EVERY join build (bench best-of-N reps rebuild the plan per rep).
-# Standard table-statistics caching assumption: inputs are immutable
-# within a session; clear with _RES_CACHE.clear() after rewriting an
-# input path in-session.
-_RES_CACHE: dict = {}
-
-
-def _res_memo_key(left: DataFrame, right: DataFrame, tag: str, sample: int):
-    try:
-        return (
-            left.sparkSession.sparkContext.applicationId,
-            left._jdf.queryExecution().analyzed().semanticHash(),
-            right._jdf.queryExecution().analyzed().semanticHash(),
-            tag, sample,
-        )
-    except Exception:  # internal API moved: fall back to no memo
-        return None
-
-
 def auto_res(left: DataFrame, right: DataFrame, sample: int = 1024) -> int:
     """Pick the bucketing resolution from the DATA: x-cell edge closest
     (in log2) to the median rect edge max(w, 2h) — i.e. cell ~ rect.
@@ -82,32 +61,34 @@ def auto_res(left: DataFrame, right: DataFrame, sample: int = 1024) -> int:
     join rows).  cell ~ rect bottoms the trade: res=12 = 19.0M join
     rows / 1575 cells, measured -40% wall vs res=10 (clean-window
     interleaved probe, scripts/bbox_res_probe.py, BENCH/BASELINE.md).
-    Two bounded `limit(sample)` scans; their cost (~2 tiny jobs) is
-    paid once per (session, input pair) — memoized in _RES_CACHE."""
+    Two bounded `limit(sample)` scans; their cost (~2 tiny jobs, whose
+    ~0.3-0.6 s of scheduling latency would otherwise re-run on every
+    join build) is paid once per (session, input pair) — memoised."""
     import statistics
 
-    key = _res_memo_key(left, right, "res", sample)
-    if key is not None and key in _RES_CACHE:
-        return _RES_CACHE[key]
+    def build():
+        # y cells are 180/n vs x 360/n
+        med = [max(w, h * 2.0) for w, h in _sample_edges(left, right, sample)]
+        if not med:
+            return 10
+        target = max(statistics.median(med), 1e-9)
+        return max(4, min(int(round(math.log2(360.0 / target))), 18))
 
-    med = []
+    return memo.get("bbox_res", memo.plan_key(left, right, "res", sample), build)
+
+
+def _sample_edges(left: DataFrame, right: DataFrame, sample: int) -> list:
+    """(w, h) of up to ``sample`` rects from each side."""
+    out = []
     for df, p in ((left, "l"), (right, "r")):
-        rows = df.select(
-            (F.col(f"{p}maxx") - F.col(f"{p}minx")).alias("w"),
-            (F.col(f"{p}maxy") - F.col(f"{p}miny")).alias("h"),
-        ).limit(sample).collect()
-        for r in rows:
-            med.append(max(r["w"], r["h"] * 2.0))  # y cells are 180/n vs x 360/n
-    if not med:
-        return 10
-    target = max(statistics.median(med), 1e-9)
-    res = int(round(math.log2(360.0 / target)))
-    res = max(4, min(res, 18))
-    if key is not None:
-        if len(_RES_CACHE) > 64:
-            _RES_CACHE.pop(next(iter(_RES_CACHE)))
-        _RES_CACHE[key] = res
-    return res
+        out.extend(
+            (r["w"], r["h"])
+            for r in df.select(
+                (F.col(f"{p}maxx") - F.col(f"{p}minx")).alias("w"),
+                (F.col(f"{p}maxy") - F.col(f"{p}miny")).alias("h"),
+            ).limit(sample).collect()
+        )
+    return out
 
 
 def bbox_overlap_join(left: DataFrame, right: DataFrame, res: int | None = 10) -> DataFrame:
@@ -196,32 +177,21 @@ def auto_levels(left: DataFrame, right: DataFrame, sample: int = 1024) -> tuple[
     this window instead of one global compromise resolution.  Every
     SAMPLED rect covers <= 2x2 cells at its own level; outliers the
     non-uniform limit(sample) scan missed (or rects beyond the hi-8
-    cap) can still exceed that bound.  Memoized per (session, input
+    cap) can still exceed that bound.  Memoised per (session, input
     pair) like auto_res."""
-    key = _res_memo_key(left, right, "levels", sample)
-    if key is not None and key in _RES_CACHE:
-        return _RES_CACHE[key]
-    edges = []
-    for df, p in ((left, "l"), (right, "r")):
-        rows = df.select(
-            (F.col(f"{p}maxx") - F.col(f"{p}minx")).alias("w"),
-            (F.col(f"{p}maxy") - F.col(f"{p}miny")).alias("h"),
-        ).limit(sample).collect()
-        edges.extend(max(r["w"], r["h"] * 2.0) for r in rows)
-    if not edges:
-        return 10, 10
-    edges.sort()
-    p10 = max(edges[int(len(edges) * 0.1)], 1e-9)
-    emax = max(edges[-1], 1e-9)
-    hi = max(4, min(int(round(math.log2(360.0 / p10))), 18))
-    # floor, not round: guarantees cell edge >= the sampled max edge
-    lo = max(4, min(int(math.floor(math.log2(360.0 / emax))), hi))
-    out = (max(lo, hi - 8), hi)
-    if key is not None:
-        if len(_RES_CACHE) > 64:
-            _RES_CACHE.pop(next(iter(_RES_CACHE)))
-        _RES_CACHE[key] = out
-    return out
+
+    def build():
+        edges = sorted(max(w, h * 2.0) for w, h in _sample_edges(left, right, sample))
+        if not edges:
+            return 10, 10
+        p10 = max(edges[int(len(edges) * 0.1)], 1e-9)
+        emax = max(edges[-1], 1e-9)
+        hi = max(4, min(int(round(math.log2(360.0 / p10))), 18))
+        # floor, not round: guarantees cell edge >= the sampled max edge
+        lo = max(4, min(int(math.floor(math.log2(360.0 / emax))), hi))
+        return max(lo, hi - 8), hi
+
+    return memo.get("bbox_res", memo.plan_key(left, right, "levels", sample), build)
 
 
 def bbox_overlap_join_adaptive(

@@ -33,6 +33,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..geom.affine import invert_transform
 from ..geom.packed import from_geojson
 from ..sources.tiles import RasterGrid
@@ -94,58 +95,34 @@ def _tile_range(minv, maxv, tile_size: int, n_tiles: int):
     return t0, t1
 
 
-# (applicationId, polys semanticHash, grid geometry) -> collected dim.
-# Same pattern and caveat as spatial_join._POLY_DIM_CACHE: a rewritten
-# input path within one session needs _CONTRIB_CACHE.clear() for
-# correct results, not just fresh timings.
-_CONTRIB_CACHE: dict = {}
-
-
 def contribs_broadcast(spark, polys: DataFrame, grid: RasterGrid):
     """-> (packed dict {poly_id: (coords, ring_offsets)},
            contribs list [(tile_x, tile_y, poly_id)]).
-    Driver collect (memoized per session on the dimension's semantic
-    hash + the grid — rebuilding the same burn costs zero jobs); the
-    polygon table must be dimension-sized.
+    Driver collect, memoised per session on the dimension's plan and
+    the grid (rebuilding the same burn costs zero jobs); the polygon
+    table must be dimension-sized.  The returned objects are the memo's
+    entries themselves: callers must treat them as read-only."""
 
-    IMMUTABILITY CONTRACT (ADVICE r7): the returned (packed, contribs)
-    objects are the cache entries THEMSELVES — callers must treat them
-    as read-only (mutating them would corrupt later cache hits), and a
-    caller that rewrites the same input path in-session must call
-    ``_CONTRIB_CACHE.clear()`` (alongside
-    ``spatial_join._POLY_DIM_CACHE.clear()``) before the next build for
-    correct results, not just fresh timings."""
-    try:
-        key = (
-            polys.sparkSession.sparkContext.applicationId,
-            polys._jdf.queryExecution().analyzed().semanticHash(),
-            grid.transform, grid.width, grid.height, grid.tile_w, grid.tile_h,
-        )
-    except Exception:  # internal API moved: fall back to no memo
-        key = None
-    if key is not None and key in _CONTRIB_CACHE:
-        return _CONTRIB_CACHE[key]
-    rows = polys.select("poly_id", "geojson").collect()
-    packed, contribs = {}, []
-    for r in rows:
-        pg = from_geojson(r["geojson"])
-        if pg.n_points == 0:
-            continue
-        pid = int(r["poly_id"])
-        packed[pid] = (pg.coords, pg.ring_offsets)
-        minpx, minpy, maxpx, maxpy = vertex_pixel_bbox(pg, grid.transform)
-        tx0 = max(0, int(np.floor(minpx)) // grid.tile_w)
-        tx1 = min(grid.n_tiles_x - 1, int(np.ceil(maxpx) - 1) // grid.tile_w)
-        ty0 = max(0, int(np.floor(minpy)) // grid.tile_h)
-        ty1 = min(grid.n_tiles_y - 1, int(np.ceil(maxpy) - 1) // grid.tile_h)
-        for ty in range(ty0, ty1 + 1):
-            for tx in range(tx0, tx1 + 1):
-                contribs.append((tx, ty, pid))
-    if key is not None:
-        if len(_CONTRIB_CACHE) > 64:
-            _CONTRIB_CACHE.pop(next(iter(_CONTRIB_CACHE)))
-        _CONTRIB_CACHE[key] = (packed, contribs)
-    return packed, contribs
+    def build():
+        packed, contribs = {}, []
+        for r in polys.select("poly_id", "geojson").collect():
+            pg = from_geojson(r["geojson"])
+            if pg.n_points == 0:
+                continue
+            pid = int(r["poly_id"])
+            packed[pid] = (pg.coords, pg.ring_offsets)
+            minpx, minpy, maxpx, maxpy = vertex_pixel_bbox(pg, grid.transform)
+            tx0 = max(0, int(np.floor(minpx)) // grid.tile_w)
+            tx1 = min(grid.n_tiles_x - 1, int(np.ceil(maxpx) - 1) // grid.tile_w)
+            ty0 = max(0, int(np.floor(minpy)) // grid.tile_h)
+            ty1 = min(grid.n_tiles_y - 1, int(np.ceil(maxpy) - 1) // grid.tile_h)
+            for ty in range(ty0, ty1 + 1):
+                for tx in range(tx0, tx1 + 1):
+                    contribs.append((tx, ty, pid))
+        return packed, contribs
+
+    key = memo.plan_key(polys, grid.transform, grid.width, grid.height, grid.tile_w, grid.tile_h)
+    return memo.get("contribs", key, build)
 
 
 def contribs_distributed(polys: DataFrame, grid: RasterGrid) -> DataFrame:

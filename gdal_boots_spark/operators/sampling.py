@@ -42,69 +42,37 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..geom.affine import invert_transform
 from ..sources.tiles import RasterGrid
 
-# (applicationId, tiles semanticHash, grid geometry) -> (dense array,
-# present mask).  Same pattern/caveat as spatial_join._POLY_DIM_CACHE:
-# inputs immutable within a session; clear after rewriting a path.
-_RASTER_DIM_CACHE: dict = {}
-
-
-def _collect_raster(tiles: DataFrame, grid: RasterGrid):
-    """Collect the tile table into (dense float64 (bands, H, W) array,
-    present bool (bands, n_ty, n_tx) mask), memoized per session."""
-    try:
-        key = (
-            tiles.sparkSession.sparkContext.applicationId,
-            tiles._jdf.queryExecution().analyzed().semanticHash(),
-            grid.raster_id, grid.transform, grid.width, grid.height,
-            grid.tile_w, grid.tile_h, grid.bands,
-        )
-    except Exception:  # internal API moved: fall back to no memo
-        key = None
-    if key is not None and key in _RASTER_DIM_CACHE:
-        return _RASTER_DIM_CACHE[key]
-    arr = np.full((grid.bands, grid.height, grid.width), np.nan, dtype=np.float64)
-    present = np.zeros((grid.bands, grid.n_tiles_y, grid.n_tiles_x), dtype=bool)
-    rows = tiles.select("band", "tile_x", "tile_y", "width", "height", "dtype", "data").collect()
-    for r in rows:
-        b, tx, ty = int(r["band"]), int(r["tile_x"]), int(r["tile_y"])
-        if not (0 <= b < grid.bands and 0 <= tx < grid.n_tiles_x and 0 <= ty < grid.n_tiles_y):
-            continue
-        blk = np.frombuffer(r["data"], dtype=np.dtype(r["dtype"])).reshape(r["height"], r["width"])
-        y0, x0 = ty * grid.tile_h, tx * grid.tile_w
-        arr[b, y0 : y0 + r["height"], x0 : x0 + r["width"]] = blk.astype(np.float64)
-        present[b, ty, tx] = True
-    out = (arr, present)
-    if key is not None:
-        if len(_RASTER_DIM_CACHE) > 16:
-            _RASTER_DIM_CACHE.pop(next(iter(_RASTER_DIM_CACHE)))
-        _RASTER_DIM_CACHE[key] = out
-    return out
-
-
-# the dense raster's Broadcast handle, memoized alongside the collect:
-# sc.broadcast() re-pickles and re-ships the whole dense array on every
-# plan build otherwise (bench best-of-N rebuilds the plan per rep).
-_RASTER_BC_CACHE: dict = {}
-
 
 def _broadcast_raster(tiles: DataFrame, grid: RasterGrid):
-    out = _collect_raster(tiles, grid)
-    sc = tiles.sparkSession.sparkContext
-    # key on id(out) ONLY while the dim cache pins the tuple alive (an
-    # unmemoized collect could see its id recycled after GC)
-    if not any(v is out for v in _RASTER_DIM_CACHE.values()):
-        return sc.broadcast(out)
-    key = (sc.applicationId, id(out))
-    bc = _RASTER_BC_CACHE.get(key)
-    if bc is None:
-        if len(_RASTER_BC_CACHE) > 16:
-            _RASTER_BC_CACHE.pop(next(iter(_RASTER_BC_CACHE)))
-        bc = sc.broadcast(out)
-        _RASTER_BC_CACHE[key] = bc
-    return bc
+    """The tile table collected into a dense float64 (bands, H, W) array
+    plus a present bool (bands, n_ty, n_tx) mask, broadcast — one memo
+    entry per session, raster plan and grid: sc.broadcast() re-pickles
+    and re-ships the whole dense array otherwise (bench best-of-N
+    rebuilds the plan per rep)."""
+
+    def build():
+        arr = np.full((grid.bands, grid.height, grid.width), np.nan, dtype=np.float64)
+        present = np.zeros((grid.bands, grid.n_tiles_y, grid.n_tiles_x), dtype=bool)
+        rows = tiles.select("band", "tile_x", "tile_y", "width", "height", "dtype", "data").collect()
+        for r in rows:
+            b, tx, ty = int(r["band"]), int(r["tile_x"]), int(r["tile_y"])
+            if not (0 <= b < grid.bands and 0 <= tx < grid.n_tiles_x and 0 <= ty < grid.n_tiles_y):
+                continue
+            blk = np.frombuffer(r["data"], dtype=np.dtype(r["dtype"])).reshape(r["height"], r["width"])
+            y0, x0 = ty * grid.tile_h, tx * grid.tile_w
+            arr[b, y0 : y0 + r["height"], x0 : x0 + r["width"]] = blk.astype(np.float64)
+            present[b, ty, tx] = True
+        return tiles.sparkSession.sparkContext.broadcast((arr, present))
+
+    key = memo.plan_key(
+        tiles, grid.raster_id, grid.transform, grid.width, grid.height,
+        grid.tile_w, grid.tile_h, grid.bands,
+    )
+    return memo.get("raster", key, build, limit=16)
 
 
 def values_by_points(
@@ -129,21 +97,13 @@ def values_by_points(
     if distributed is None:
         dense_bytes = grid.width * grid.height * grid.bands * 8
         distributed = dense_bytes > BROADCAST_MAX_BYTES
-    from ..functions.geometry_fns import double_lit_sql as _dl
+    from ..functions.geometry_fns import double_lit_sql as _dl, quote_ident
 
     ia, ib, ic, id_, ie, if_ = invert_transform(grid.transform)
-    # build mechanics as server-parsed SQL strings (r8 cold-plan cost);
-    # exotic column names keep the Column-tree fallback
-    sql_ok = id_col.isidentifier() and x_col.isidentifier() and y_col.isidentifier()
-    if sql_ok:
-        px_sql = f"CAST(FLOOR({_dl(ia)} * {x_col} + {_dl(ib)} * {y_col} + {_dl(ic)}) AS INT)"
-        py_sql = f"CAST(FLOOR({_dl(id_)} * {x_col} + {_dl(ie)} * {y_col} + {_dl(if_)}) AS INT)"
-        px = F.expr(px_sql)
-        py = F.expr(py_sql)
-    else:
-        x, y = F.col(x_col), F.col(y_col)
-        px = F.floor(F.lit(ia) * x + F.lit(ib) * y + F.lit(ic)).cast("int")
-        py = F.floor(F.lit(id_) * x + F.lit(ie) * y + F.lit(if_)).cast("int")
+    # build mechanics as server-parsed SQL strings (r8 cold-plan cost)
+    x, y = quote_ident(x_col), quote_ident(y_col)
+    px_sql = f"CAST(FLOOR({_dl(ia)} * {x} + {_dl(ib)} * {y} + {_dl(ic)}) AS INT)"
+    py_sql = f"CAST(FLOOR({_dl(id_)} * {x} + {_dl(ie)} * {y} + {_dl(if_)}) AS INT)"
     bands = spark.range(grid.bands).selectExpr("CAST(id AS INT) AS band")
 
     if not distributed:
@@ -169,10 +129,7 @@ def values_by_points(
             # NA-coerce it, diverging from the cogroup path)
             return pd.Series(pd.arrays.FloatingArray(np.ascontiguousarray(vals), ~ok))
 
-        if sql_ok:
-            pts = points.selectExpr(f"{id_col} AS point_id", f"{px_sql} AS px", f"{py_sql} AS py")
-        else:
-            pts = points.select(F.col(id_col).alias("point_id"), px.alias("px"), py.alias("py"))
+        pts = points.selectExpr(f"{quote_ident(id_col)} AS point_id", f"{px_sql} AS px", f"{py_sql} AS py")
         return pts.crossJoin(F.broadcast(bands)).select(
             "point_id", "band", sample(F.col("band"), F.col("px"), F.col("py")).alias("value")
         )
@@ -187,7 +144,10 @@ def values_by_points(
     in_bounds = (
         (F.col("px") >= 0) & (F.col("px") < grid.width) & (F.col("py") >= 0) & (F.col("py") < grid.height)
     )
-    pts = points.select(F.col(id_col).alias("point_id"), px.alias("px"), py.alias("py"), in_bounds.alias("ok"))
+    pts = points.select(
+        F.col(id_col).alias("point_id"), F.expr(px_sql).alias("px"), F.expr(py_sql).alias("py"),
+        in_bounds.alias("ok"),
+    )
     cand = pts.crossJoin(F.broadcast(bands)).select(
         "point_id",
         "band",

@@ -31,7 +31,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.geometry_fns import cell_id_col
+from .. import memo
+from ..functions.geometry_fns import cell_id_col, quote_ident
 from ..geom.cells import MAX_RES, cover_bbox, pick_res
 from ..geom.packed import from_geojson
 from ..geom.pip import points_in_polygon
@@ -95,71 +96,24 @@ def _parse_float_segments(blobs: list) -> np.ndarray:
         return _parse_floats(joined)
 
 
-def _cell_id_for(x_col: str, y_col: str, res: int):
-    """cell_id Column for named point columns: the single-round-trip
-    F.expr build when the names are plain identifiers, the Column-tree
-    form otherwise (exotic names would need quoting in raw SQL)."""
-    if x_col.isidentifier() and y_col.isidentifier():
-        return cell_id_col(x_col, y_col, res)
-    return cell_id_col(F.col(x_col), F.col(y_col), res)
-
-
-# per-session memo of the dimension collect, keyed by the SEMANTIC hash
-# of the polygon plan (the knn stats-probe pattern): one flagship build
-# runs _collect_polys from both the Point branch and the poly branch,
-# and bench best-of-N reps rebuild the plan per rep — each collect is a
-# full Spark job (~0.5-0.8s of scheduling latency for a 14-row dim).
-# Standard table-statistics caching assumption: inputs are immutable
-# within a session; clear with _POLY_DIM_CACHE.clear() after rewriting.
-_POLY_DIM_CACHE: dict = {}
-
-# per-session memo of tiny driver-built dimension DataFrames (cell
-# covers): createDataFrame ships every row through py4j and parses the
-# schema per call (~35 round trips + conversion for a few hundred rows)
-# on EVERY cold plan build — the rows are a pure function of the
-# (bboxes, res) key, so the same immutability contract as
-# _POLY_DIM_CACHE applies.  Values are DataFrames (plans, not results:
-# a LogicalRDD over driver-resident rows; every job still recomputes
-# downstream from it).
-_LOCAL_DF_CACHE: dict = {}
-
-
-def _memo_local_df(spark: SparkSession, key: tuple, rows_fn, schema: str) -> DataFrame:
-    full_key = (spark.sparkContext.applicationId, schema) + key
-    df = _LOCAL_DF_CACHE.get(full_key)
-    if df is None:
-        if len(_LOCAL_DF_CACHE) > 64:
-            _LOCAL_DF_CACHE.pop(next(iter(_LOCAL_DF_CACHE)))
-        df = spark.createDataFrame(rows_fn(), schema)
-        _LOCAL_DF_CACHE[full_key] = df
-    return df
-
-
 def _collect_polys(polys: DataFrame):
     """Driver-side: polygon table -> {poly_id: (coords, ring_offsets)} +
-    per-poly bbox list.  The polygon side is the *dimension*; the point
-    side is the 10^12-row fact and never leaves the executors."""
-    try:
-        key = (
-            polys.sparkSession.sparkContext.applicationId,
-            polys._jdf.queryExecution().analyzed().semanticHash(),
-        )
-    except Exception:  # internal API moved: fall back to no memo
-        key = None
-    if key is not None and key in _POLY_DIM_CACHE:
-        return _POLY_DIM_CACHE[key]
-    rows = polys.select("poly_id", "geojson").collect()
-    packed, bboxes = {}, {}
-    for r in rows:
-        pg = from_geojson(r["geojson"])
-        packed[int(r["poly_id"])] = (pg.coords, pg.ring_offsets)
-        c = pg.coords.reshape(-1, 2)
-        bboxes[int(r["poly_id"])] = (c[:, 0].min(), c[:, 1].min(), c[:, 0].max(), c[:, 1].max())
-    if key is not None:
-        if len(_POLY_DIM_CACHE) > 64:
-            _POLY_DIM_CACHE.pop(next(iter(_POLY_DIM_CACHE)))
-        _POLY_DIM_CACHE[key] = (packed, bboxes)
-    return packed, bboxes
+    per-poly bbox list, memoised per session and input plan (one
+    flagship build collects from both the Point and the poly branch,
+    and each collect is a full Spark job).  The polygon side is the
+    *dimension*; the point side is the 10^12-row fact and never leaves
+    the executors."""
+
+    def build():
+        packed, bboxes = {}, {}
+        for r in polys.select("poly_id", "geojson").collect():
+            pg = from_geojson(r["geojson"])
+            packed[int(r["poly_id"])] = (pg.coords, pg.ring_offsets)
+            c = pg.coords.reshape(-1, 2)
+            bboxes[int(r["poly_id"])] = (c[:, 0].min(), c[:, 1].min(), c[:, 0].max(), c[:, 1].max())
+        return packed, bboxes
+
+    return memo.get("poly_dim", memo.plan_key(polys), build)
 
 
 def _auto_res(bboxes: dict) -> int:
@@ -221,6 +175,8 @@ def pip_join_points(
     # zero bytes across the Python boundary.  Mixed/non-rect dims keep
     # the pandas-UDF ray-cast path unchanged.
     all_rect = bool(packed) and all(_is_rect_poly(c, ro) for c, ro in packed.values())
+    xq, yq = quote_ident(x_col), quote_ident(y_col)
+    pts = points.withColumn("cell_id", cell_id_col(xq, yq, res))
     if refine and all_rect:
         def _mk_rect_cover():
             cover_rows = []
@@ -229,23 +185,19 @@ def pip_join_points(
                     cover_rows.append((cid, pid, float(minx), float(miny), float(maxx), float(maxy)))
             return cover_rows
 
-        cover_df = _memo_local_df(
-            spark, ("rect_cover", res, tuple(sorted(bboxes.items()))), _mk_rect_cover,
-            "cell_id long, poly_id long, _pminx double, _pminy double, _pmaxx double, _pmaxy double",
+        # the driver-built cell covers are memoised per session:
+        # createDataFrame ships every row through py4j (~35 round trips
+        # for a few hundred rows) on every cold plan build, and the rows
+        # are a pure function of the key
+        cover_df = memo.get(
+            "cover_df", ("rect_cover", res, tuple(sorted(bboxes.items()))),
+            lambda: spark.createDataFrame(
+                _mk_rect_cover(),
+                "cell_id long, poly_id long, _pminx double, _pminy double, _pmaxx double, _pmaxy double",
+            ),
         )
-        pts = points.withColumn("cell_id", _cell_id_for(x_col, y_col, res))
         cand = pts.join(F.broadcast(cover_df), "cell_id").drop("cell_id")
-        if x_col.isidentifier() and y_col.isidentifier():
-            keep = (
-                f"{x_col} >= _pminx AND {x_col} < _pmaxx AND "
-                f"{y_col} >= _pminy AND {y_col} < _pmaxy"
-            )
-        else:
-            x, y = F.col(x_col), F.col(y_col)
-            keep = (
-                (x >= F.col("_pminx")) & (x < F.col("_pmaxx"))
-                & (y >= F.col("_pminy")) & (y < F.col("_pmaxy"))
-            )
+        keep = f"{xq} >= _pminx AND {xq} < _pmaxx AND {yq} >= _pminy AND {yq} < _pmaxy"
         return cand.where(keep).drop("_pminx", "_pminy", "_pmaxx", "_pmaxy")
 
     def _mk_cover():
@@ -255,12 +207,10 @@ def pip_join_points(
                 cover_rows.append((cid, pid))
         return cover_rows
 
-    cover_df = _memo_local_df(
-        spark, ("cell_cover", res, tuple(sorted(bboxes.items()))), _mk_cover,
-        "cell_id long, poly_id long",
+    cover_df = memo.get(
+        "cover_df", ("cell_cover", res, tuple(sorted(bboxes.items()))),
+        lambda: spark.createDataFrame(_mk_cover(), "cell_id long, poly_id long"),
     )
-
-    pts = points.withColumn("cell_id", _cell_id_for(x_col, y_col, res))
     cand = pts.join(F.broadcast(cover_df), "cell_id").drop("cell_id")
     if not refine:
         return cand
@@ -756,10 +706,12 @@ def _poly_span_candidates(
                         )
         return cover_rows
 
-    cover_df = _memo_local_df(
-        spark, ("poly_cover", res, lmin, tuple(sorted(bboxes.items())), rect_pids),
-        _mk_cover_rows,
-        "cell_id long, poly_id long, pminx double, pminy double, pmaxx double, pmaxy double, prect boolean",
+    cover_df = memo.get(
+        "cover_df", ("poly_cover", res, lmin, tuple(sorted(bboxes.items())), rect_pids),
+        lambda: spark.createDataFrame(
+            _mk_cover_rows(),
+            "cell_id long, poly_id long, pminx double, pminy double, pmaxx double, pmaxy double, prect boolean",
+        ),
     )
 
     g = geo.where(~is_point).selectExpr("doc_id", "span_pos", "text").mapInArrow(
@@ -840,37 +792,36 @@ def poly_span_candidates(docs: DataFrame, polys: DataFrame, res: int | None = No
     return _poly_span_candidates(spark, geo, is_point, bboxes, res, rect_pids)
 
 
-def pip_join_docs_any(
-    docs: DataFrame, polys: DataFrame, res: int | None = None, refine_mode: str = "split"
-) -> DataFrame:
+def pip_join_docs_any(docs: DataFrame, polys: DataFrame, res: int | None = None) -> DataFrame:
     """Interleaved documents x polygons -> (doc_id, span_pos, poly_id)
     for geo spans of ANY geometry type (crop/rasterize in the reference
     accept any geometry, gdal.py:836-846).
 
     Point spans take the codegen fast path (== pip_join_docs);
-    Polygon/LineString/Multi* spans go through geojson_decode_udf ->
+    Polygon/LineString/Multi* spans go through the Arrow decode ->
     native bbox cover explode -> broadcast cell join, deduped WITHOUT a
     shuffle via the reporting-cell trick (a candidate survives only in
     the cell containing the bbox-intersection lower-left corner), then
     exact GEOS-Intersects refinement against the broadcast packed dims.
 
-    ``refine_mode``: "split" (default) materializes the candidates
-    once (persist) and accepts rect-span x rect-polygon pairs directly
-    in the JVM — the bbox filter already decided them — so at
-    rect-heavy corpus shapes ~90% of candidate rows never cross Arrow
-    (A/B: 4.80s vs 5.81s vs 7.00s split/where/arrow at 4.66M
-    candidates, same-run controls).  "where" refines with a BOOLEAN pandas
-    UDF inside a WHERE — the Point path's pattern: only the argument
-    columns (poly_id, rect flag, bbox, geometry struct — empty for the
-    rect-span majority) cross Arrow and one byte returns per row, so
-    doc_id/span_pos strings never leave the JVM.  "arrow" keeps the
-    mapInArrow row-filter variant (zero-copy flat geometry buffers —
-    preferable when most spans carry real polygon payloads).  (A plain
-    where()-split would recompute the candidate subtree twice — the
-    persist is the documented price of branching, cf. CLAUDE gotchas.)
+    The candidates are materialized once (persist) and split: a rect
+    span against a rect dim polygon is already decided by the bbox
+    overlap filter it passed (closed rects: bbox overlap <=> GEOS
+    Intersects), so those pairs are accepted in the JVM and at
+    rect-heavy corpus shapes ~90% of candidate rows never cross Arrow.
+    The rest is refined by a BOOLEAN pandas UDF inside a WHERE — the
+    Point path's pattern: only the argument columns (poly_id, rect flag,
+    bbox, geometry struct — empty for rect spans) cross Arrow and one
+    byte returns per row, so doc_id/span_pos strings never leave the
+    JVM.  (A/B at 4.66M candidates, same-run controls: 4.80 s for this
+    split, 5.81 s for one refine over all candidates, 7.00 s for a
+    mapInArrow row filter.  A plain where()-split without the persist
+    would recompute the candidate subtree twice.)
     """
-    from ..functions.geometry_fns import cell_id_col, geojson_decode_udf, geom_bounds_udf, point_xy_native
-    from ..functions.geometry_fns import point_xy_sql
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.storagelevel import StorageLevel
+
+    from ..functions.geometry_fns import point_xy_native, point_xy_sql
 
     spark = docs.sparkSession
     packed, bboxes = _collect_polys(polys)
@@ -890,181 +841,11 @@ def pip_join_docs_any(
     # --- non-Point spans: decode -> cover -> intersects --------------
     rect_pids = frozenset(pid for pid, (c, ro) in packed.items() if _is_rect_poly(c, ro))
     cand = _poly_span_candidates(spark, geo, is_point, bboxes, res, rect_pids)
-    # RectangleIntersects bypass: a rect SPAN against a rect DIM polygon
-    # is decided by the bbox-overlap filter the candidates already
-    # passed (closed rects: bbox overlap <=> GEOS Intersects).  Those
-    # pairs' geometry is replaced by an EMPTY sentinel struct
-    # (gtype=-1): the plan stays ONE pass (a where()-split would
-    # recompute the candidate subtree twice), their coordinates
-    # contribute zero bytes to the refine's Arrow transfer, and the
-    # refine accepts sentinel rows directly.  (A NULL struct would be
-    # semantically cleaner but Spark's Arrow writer serializes null
-    # structs pathologically slowly — measured 65s vs 1.8s on 4.66M
-    # rows.)
-    # (SQL-string form of when(~both_rect, geom).otherwise(empty) —
-    # identical three-valued logic, one server-side parse instead of a
-    # ~70-round-trip py4j Column tree on the cold-plan profile)
-    empty_geom_sql = (
-        "named_struct("
-        "'gtype', CAST(-1 AS TINYINT), "
-        "'coords', CAST(array() AS array<double>), "
-        "'ring_offsets', CAST(array() AS array<int>), "
-        "'part_offsets', CAST(array() AS array<int>), "
-        "'part_types', CAST(array() AS array<tinyint>), "
-        "'child_offsets', CAST(array() AS array<int>))"
-    )
-    cand = cand.selectExpr(
-        "doc_id", "span_pos", "poly_id",
-        # rect spans travel payload-free (geometry blanked at decode);
-        # the refine rebuilds their test from the four bbox doubles
-        f"CASE WHEN NOT (rect AND prect) THEN geom ELSE {empty_geom_sql} END AS geom",
-        "rect", "prect", "minx", "miny", "maxx", "maxy",
-    )
-
     bpolys = spark.sparkContext.broadcast(packed)
 
-    if refine_mode in ("where", "split"):
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("boolean")
-        def poly_ok(pid_s, rect_s, minx_s, miny_s, maxx_s, maxy_s, geom_df):
-            import pandas as pd
-
-            from ..geom.packed import PackedGeometry, collection_children
-            from ..geom.pip import (
-                _any_segment_intersection,
-                _open_edges,
-                _ring_edges,
-                points_in_polygon,
-                polygons_intersect,
-                rects_intersect_polygon,
-            )
-
-            polys_local = bpolys.value
-            gtypes = geom_df["gtype"].to_numpy(np.int8)
-            keep = gtypes == -1  # RectangleIntersects bypass sentinel
-            pidv = pid_s.to_numpy(np.int64)
-            rectv = rect_s.to_numpy(bool)
-            mnx = minx_s.to_numpy(np.float64)
-            mny = miny_s.to_numpy(np.float64)
-            mxx = maxx_s.to_numpy(np.float64)
-            mxy = maxy_s.to_numpy(np.float64)
-            coords_o = geom_df["coords"].to_numpy(object)
-            ring_o = geom_df["ring_offsets"].to_numpy(object)
-            part_o = geom_df["part_offsets"].to_numpy(object)
-            ptype_o = geom_df["part_types"].to_numpy(object)
-            choff_o = geom_df["child_offsets"].to_numpy(object)
-
-            order = np.argsort(pidv, kind="stable")
-            uniq = np.unique(pidv)
-            bnds = np.searchsorted(pidv[order], uniq)
-            for s, p in zip(np.split(order, bnds[1:]), uniq):
-                s0 = s[gtypes[s] != -1]
-                if len(s0) == 0:
-                    continue
-                pcoords, pro = polys_local[int(p)]
-                lens = np.fromiter((len(coords_o[i]) for i in s0), np.int64, len(s0))
-                srect = s0[rectv[s0] & (lens == 0)]
-                if len(srect):
-                    hit = rects_intersect_polygon(
-                        mnx[srect], mny[srect], mxx[srect], mxy[srect], pcoords, pro
-                    )
-                    keep[srect[hit]] = True
-                sreal = s0[lens > 0]
-                if len(sreal) == 0:
-                    continue
-                verts = np.concatenate([np.asarray(coords_o[i], np.float64) for i in sreal]).reshape(-1, 2)
-                inside = points_in_polygon(verts[:, 0], verts[:, 1], pcoords, pro)
-                vstarts = np.zeros(len(sreal), dtype=np.int64)
-                np.cumsum((lens[lens > 0] // 2)[:-1], out=vstarts[1:])
-                anyin = np.logical_or.reduceat(inside, vstarts)
-                keep[sreal[anyin]] = True
-                poly = PackedGeometry(
-                    gtype=3, coords=pcoords, ring_offsets=pro, part_offsets=np.asarray([0], np.int32)
-                )
-                poly_edges = None
-                for i in sreal[~anyin]:
-                    gt = int(gtypes[i])
-                    if gt in (1, 4):
-                        continue
-                    pg = PackedGeometry(
-                        gtype=gt,
-                        coords=np.asarray(coords_o[i], np.float64),
-                        ring_offsets=np.asarray(ring_o[i], np.int32),
-                        part_offsets=np.asarray(part_o[i], np.int32),
-                    )
-                    if gt == 7:
-                        pg.part_types = np.asarray(ptype_o[i], np.int8)
-                        pg.child_offsets = np.asarray(choff_o[i], np.int32)
-                        for ch in collection_children(pg):
-                            cgt = int(ch.gtype)
-                            if cgt in (1, 4) or ch.coords.size == 0:
-                                continue
-                            if cgt in (3, 6):
-                                if polygons_intersect(ch, poly):
-                                    keep[i] = True
-                                    break
-                            else:
-                                if poly_edges is None:
-                                    poly_edges = _ring_edges(pcoords, pro)
-                                if _any_segment_intersection(
-                                    _open_edges(ch.coords, ch.ring_offsets), poly_edges
-                                ):
-                                    keep[i] = True
-                                    break
-                    elif gt in (3, 6):
-                        keep[i] = polygons_intersect(pg, poly)
-                    else:
-                        if poly_edges is None:
-                            poly_edges = _ring_edges(pcoords, pro)
-                        keep[i] = _any_segment_intersection(
-                            _open_edges(pg.coords, pg.ring_offsets), poly_edges
-                        )
-            return pd.Series(keep)
-
-        if refine_mode == "split":
-            # materialize once, branch: rect-x-rect pairs are already
-            # decided by the bbox filter the candidates passed — accept
-            # them JVM-side; only the remainder crosses Arrow.
-            # persist (NOT localCheckpoint): lineage survives, so an
-            # executor loss on a 1000-node cluster recomputes the lost
-            # partitions instead of failing the job; spill-to-disk
-            # bounds memory; the ContextCleaner unpersists when the
-            # plan is released.
-            from pyspark.storagelevel import StorageLevel
-
-            c = cand.persist(StorageLevel.MEMORY_AND_DISK)
-            fast = c.where("rect AND prect").selectExpr("doc_id", "span_pos", "poly_id")
-            slow = c.where("NOT (rect AND prect)").where(
-                poly_ok(
-                    F.col("poly_id"), F.col("rect"),
-                    F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
-                    F.col("geom"),
-                )
-            ).selectExpr("doc_id", "span_pos", "poly_id")
-            return pt_pairs.unionByName(fast).unionByName(slow)
-        poly_pairs = cand.where(
-            poly_ok(
-                F.col("poly_id"), F.col("rect"),
-                F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
-                F.col("geom"),
-            )
-        ).selectExpr("doc_id", "span_pos", "poly_id")
-        return pt_pairs.unionByName(poly_pairs)
-
-    def refine(batches):
-        """Arrow-columnar grouped refinement (VERDICT r2 item 2, the
-        Point path's pattern taken further): mapInArrow exposes the
-        packed geometries as FLAT child buffers (values + offsets) with
-        zero per-row object materialization — no pandas dicts, no
-        per-row PackedGeometry.  Rows group by poly_id; most pairs
-        resolve with ONE vectorized points_in_polygon call over the
-        group's concatenated vertices (any vertex inside => intersects,
-        the same first branch polygons_intersect takes).  Only the rare
-        no-vertex-inside tail runs the per-row edge-crossing test, with
-        the polygon's edge array built once per group."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
+    @pandas_udf("boolean")
+    def poly_ok(pid_s, rect_s, minx_s, miny_s, maxx_s, maxy_s, geom_df):
+        import pandas as pd
 
         from ..geom.packed import PackedGeometry, collection_children
         from ..geom.pip import (
@@ -1077,135 +858,98 @@ def pip_join_docs_any(
         )
 
         polys_local = bpolys.value
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            geom = batch.column(batch.schema.get_field_index("geom"))
-            gtypes = np.asarray(geom.field("gtype"))
-            # gtype -1 == RectangleIntersects bypass sentinel (rect span
-            # x rect polygon, bbox overlap already proven): keep directly
-            bypass_rows = gtypes == -1
-            cl = geom.field("coords")
-            cvals = np.asarray(cl.values, dtype=np.float64)
-            coffs = np.asarray(cl.offsets, dtype=np.int64)
-            rl = geom.field("ring_offsets")
-            rvals = np.asarray(rl.values, dtype=np.int32)
-            roffs = np.asarray(rl.offsets, dtype=np.int64)
-            pl = geom.field("part_offsets")
-            pvals = np.asarray(pl.values, dtype=np.int32)
-            poffs = np.asarray(pl.offsets, dtype=np.int64)
-            ptl = geom.field("part_types")
-            ptvals = np.asarray(ptl.values, dtype=np.int8)
-            ptoffs = np.asarray(ptl.offsets, dtype=np.int64)
-            chl = geom.field("child_offsets")
-            chvals = np.asarray(chl.values, dtype=np.int32)
-            choffs = np.asarray(chl.offsets, dtype=np.int64)
-            pids = np.asarray(batch.column(batch.schema.get_field_index("poly_id")), dtype=np.int64)
-            rects = np.asarray(batch.column(batch.schema.get_field_index("rect")))
-            bminx = np.asarray(batch.column(batch.schema.get_field_index("minx")), dtype=np.float64)
-            bminy = np.asarray(batch.column(batch.schema.get_field_index("miny")), dtype=np.float64)
-            bmaxx = np.asarray(batch.column(batch.schema.get_field_index("maxx")), dtype=np.float64)
-            bmaxy = np.asarray(batch.column(batch.schema.get_field_index("maxy")), dtype=np.float64)
+        gtypes = geom_df["gtype"].to_numpy(np.int8)
+        keep = np.zeros(len(gtypes), dtype=bool)
+        pidv = pid_s.to_numpy(np.int64)
+        rectv = rect_s.to_numpy(bool)
+        mnx = minx_s.to_numpy(np.float64)
+        mny = miny_s.to_numpy(np.float64)
+        mxx = maxx_s.to_numpy(np.float64)
+        mxy = maxy_s.to_numpy(np.float64)
+        coords_o = geom_df["coords"].to_numpy(object)
+        ring_o = geom_df["ring_offsets"].to_numpy(object)
+        part_o = geom_df["part_offsets"].to_numpy(object)
+        ptype_o = geom_df["part_types"].to_numpy(object)
+        choff_o = geom_df["child_offsets"].to_numpy(object)
 
-            keep = np.zeros(n, dtype=bool)
-            keep[bypass_rows] = True
-            dbl_cnt = coffs[1:] - coffs[:-1]  # doubles per row (2 * vertices)
-            order = np.argsort(pids, kind="stable")
-            uniq = np.unique(pids)
-            bnds = np.searchsorted(pids[order], uniq)
-            for s, p in zip(np.split(order, bnds[1:]), uniq):
-                s0 = s[~bypass_rows[s]]
-                # rect spans arrive payload-free: their test runs
-                # vectorized from the bbox columns alone
-                srect = s0[rects[s0] & (dbl_cnt[s0] == 0)]
-                if len(srect):
-                    pcoords, pro = polys_local[int(p)]
-                    hit = rects_intersect_polygon(
-                        bminx[srect], bminy[srect], bmaxx[srect], bmaxy[srect], pcoords, pro
-                    )
-                    keep[srect[hit]] = True
-                # empty non-rect geoms never intersect
-                s = s0[dbl_cnt[s0] > 0]
-                if len(s) == 0:
-                    continue
-                pcoords, pro = polys_local[int(p)]
-                # multi-range gather of the group's coord slices — one
-                # cumsum trick, no per-row concatenate
-                starts, ends = coffs[s], coffs[s + 1]
-                cnt = ends - starts
-                step = np.ones(int(cnt.sum()), dtype=np.int64)
-                step[0] = starts[0]
-                cum = np.cumsum(cnt)[:-1]
-                step[cum] = starts[1:] - ends[:-1] + 1
-                verts = cvals[np.cumsum(step)].reshape(-1, 2)
-                inside = points_in_polygon(verts[:, 0], verts[:, 1], pcoords, pro)
-                vstarts = np.zeros(len(s), dtype=np.int64)
-                np.cumsum((cnt // 2)[:-1], out=vstarts[1:])
-                anyin = np.logical_or.reduceat(inside, vstarts)
-                keep[s[anyin]] = True
-                rest = s[~anyin]
-                if len(rest) == 0:
-                    continue
-                poly = PackedGeometry(
-                    gtype=3, coords=pcoords, ring_offsets=pro, part_offsets=np.asarray([0], np.int32)
+        order = np.argsort(pidv, kind="stable")
+        uniq = np.unique(pidv)
+        bnds = np.searchsorted(pidv[order], uniq)
+        for s0, p in zip(np.split(order, bnds[1:]), uniq):
+            pcoords, pro = polys_local[int(p)]
+            lens = np.fromiter((len(coords_o[i]) for i in s0), np.int64, len(s0))
+            srect = s0[rectv[s0] & (lens == 0)]
+            if len(srect):
+                hit = rects_intersect_polygon(
+                    mnx[srect], mny[srect], mxx[srect], mxy[srect], pcoords, pro
                 )
-                poly_edges = None
-                for i in rest:
-                    gt = int(gtypes[i])
-                    if gt in (1, 4):
-                        continue  # Point/MultiPoint: containment was the only test
-                    pg = PackedGeometry(
-                        gtype=gt,
-                        coords=cvals[coffs[i] : coffs[i + 1]],
-                        ring_offsets=rvals[roffs[i] : roffs[i + 1]],
-                        part_offsets=pvals[poffs[i] : poffs[i + 1]],
-                    )
-                    if gt == 7:
-                        # GeometryCollection: any child intersects =>
-                        # the collection intersects.  Point children are
-                        # settled (their vertices failed the containment
-                        # pass); dispatch the rest per child type.
-                        pg.part_types = ptvals[ptoffs[i] : ptoffs[i + 1]]
-                        pg.child_offsets = chvals[choffs[i] : choffs[i + 1]]
-                        for ch in collection_children(pg):
-                            cgt = int(ch.gtype)
-                            if cgt in (1, 4) or ch.coords.size == 0:
-                                continue
-                            if cgt in (3, 6):
-                                if polygons_intersect(ch, poly):
-                                    keep[i] = True
-                                    break
-                            else:
-                                if poly_edges is None:
-                                    poly_edges = _ring_edges(pcoords, pro)
-                                if _any_segment_intersection(
-                                    _open_edges(ch.coords, ch.ring_offsets), poly_edges
-                                ):
-                                    keep[i] = True
-                                    break
-                    elif gt in (3, 6):
-                        keep[i] = polygons_intersect(pg, poly)
-                    else:
-                        if poly_edges is None:
-                            poly_edges = _ring_edges(pcoords, pro)
-                        keep[i] = _any_segment_intersection(
-                            _open_edges(pg.coords, pg.ring_offsets), poly_edges
-                        )
-            mask = pa.array(keep)
-            out = pa.RecordBatch.from_arrays(
-                [
-                    pc.filter(batch.column(batch.schema.get_field_index("doc_id")), mask),
-                    pc.filter(batch.column(batch.schema.get_field_index("span_pos")), mask),
-                    pc.filter(batch.column(batch.schema.get_field_index("poly_id")), mask),
-                ],
-                names=["doc_id", "span_pos", "poly_id"],
+                keep[srect[hit]] = True
+            sreal = s0[lens > 0]
+            if len(sreal) == 0:
+                continue
+            verts = np.concatenate([np.asarray(coords_o[i], np.float64) for i in sreal]).reshape(-1, 2)
+            inside = points_in_polygon(verts[:, 0], verts[:, 1], pcoords, pro)
+            vstarts = np.zeros(len(sreal), dtype=np.int64)
+            np.cumsum((lens[lens > 0] // 2)[:-1], out=vstarts[1:])
+            anyin = np.logical_or.reduceat(inside, vstarts)
+            keep[sreal[anyin]] = True
+            poly = PackedGeometry(
+                gtype=3, coords=pcoords, ring_offsets=pro, part_offsets=np.asarray([0], np.int32)
             )
-            if out.num_rows:
-                yield out
+            poly_edges = None
+            for i in sreal[~anyin]:
+                gt = int(gtypes[i])
+                if gt in (1, 4):
+                    continue
+                pg = PackedGeometry(
+                    gtype=gt,
+                    coords=np.asarray(coords_o[i], np.float64),
+                    ring_offsets=np.asarray(ring_o[i], np.int32),
+                    part_offsets=np.asarray(part_o[i], np.int32),
+                )
+                if gt == 7:
+                    pg.part_types = np.asarray(ptype_o[i], np.int8)
+                    pg.child_offsets = np.asarray(choff_o[i], np.int32)
+                    for ch in collection_children(pg):
+                        cgt = int(ch.gtype)
+                        if cgt in (1, 4) or ch.coords.size == 0:
+                            continue
+                        if cgt in (3, 6):
+                            if polygons_intersect(ch, poly):
+                                keep[i] = True
+                                break
+                        else:
+                            if poly_edges is None:
+                                poly_edges = _ring_edges(pcoords, pro)
+                            if _any_segment_intersection(
+                                _open_edges(ch.coords, ch.ring_offsets), poly_edges
+                            ):
+                                keep[i] = True
+                                break
+                elif gt in (3, 6):
+                    keep[i] = polygons_intersect(pg, poly)
+                else:
+                    if poly_edges is None:
+                        poly_edges = _ring_edges(pcoords, pro)
+                    keep[i] = _any_segment_intersection(
+                        _open_edges(pg.coords, pg.ring_offsets), poly_edges
+                    )
+        return pd.Series(keep)
 
-    poly_pairs = cand.mapInArrow(refine, schema="doc_id string, span_pos int, poly_id long")
-    return pt_pairs.unionByName(poly_pairs)
+    # persist (NOT localCheckpoint): lineage survives, so an executor
+    # loss on a 1000-node cluster recomputes the lost partitions instead
+    # of failing the job; spill-to-disk bounds memory; the
+    # ContextCleaner unpersists when the plan is released.
+    c = cand.persist(StorageLevel.MEMORY_AND_DISK)
+    fast = c.where("rect AND prect").selectExpr("doc_id", "span_pos", "poly_id")
+    slow = c.where("NOT (rect AND prect)").where(
+        poly_ok(
+            F.col("poly_id"), F.col("rect"),
+            F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
+            F.col("geom"),
+        )
+    ).selectExpr("doc_id", "span_pos", "poly_id")
+    return pt_pairs.unionByName(fast).unionByName(slow)
 
 
 def pip_join_points_shuffle(
@@ -1244,7 +988,7 @@ def pip_join_points_shuffle(
         res = int(np.clip(np.floor(np.log2(360.0 / max(med, 1e-9))), 0, 24))
     cells = gp.select("poly_id", "geom", F.explode(cells_cover_udf(res)(F.col("geom"))).alias("cell_id"))
 
-    pts = points.withColumn("cell_id", _cell_id_for(x_col, y_col, res))
+    pts = points.withColumn("cell_id", cell_id_col(quote_ident(x_col), quote_ident(y_col), res))
     cand = salted_join(pts, cells, "cell_id", salt=salt, hot_threshold=hot_threshold).drop("cell_id")
 
     out_cols = [c for c in cand.columns if c not in ("geom",)]

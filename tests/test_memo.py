@@ -1,0 +1,127 @@
+"""The session memo: no stale reads after a rewrite, per-raster
+broadcasts that survive eviction, warm rebuilds, and no ad-hoc cache
+outside ``gdal_boots_spark/memo.py``."""
+
+import ast
+import pathlib
+
+import numpy as np
+
+from gdal_boots_spark.sources.synth import rect_ring_geojson
+
+from tests.conftest import SF_SMOKE
+
+PKG = pathlib.Path(__file__).resolve().parent.parent / "gdal_boots_spark"
+
+
+def _write_rect_dim(spark, path, pid, minx):
+    spark.createDataFrame(
+        [(pid, rect_ring_geojson(minx, 0.0, minx + 1.0, 1.0))], "poly_id long, geojson string"
+    ).write.mode("overwrite").parquet(path)
+
+
+def test_rewritten_parquet_path_serves_new_rows(spark, tmp_path):
+    """Rewriting a parquet path mid-session: both the path memo and the
+    plan-keyed dim memo must see the new rows (a file relation's
+    semantic hash is the same before and after the rewrite)."""
+    from gdal_boots_spark.operators.spatial_join import pip_join_points
+    from gdal_boots_spark.sources.synth import read_parquet_memo
+
+    path = str(tmp_path / "dim.parquet")
+    pts = spark.createDataFrame([(1, 0.5, 0.5), (2, 2.5, 0.5)], "point_id long, x double, y double")
+
+    def pairs():
+        got = pip_join_points(pts, spark.read.parquet(path)).select("point_id", "poly_id").collect()
+        return sorted(tuple(r) for r in got)
+
+    _write_rect_dim(spark, path, 7, 0.0)
+    assert [r["poly_id"] for r in read_parquet_memo(spark, path).collect()] == [7]
+    assert pairs() == [(1, 7)]
+    _write_rect_dim(spark, path, 8, 2.0)
+    assert [r["poly_id"] for r in read_parquet_memo(spark, path).collect()] == [8]
+    assert pairs() == [(2, 8)]
+
+
+def test_many_rasters_sample_their_own_values(spark):
+    """More distinct rasters than the raster memo holds: each one, and
+    each evicted one sampled again, reads its own pixels."""
+    from gdal_boots_spark.operators.sampling import values_by_points
+    from gdal_boots_spark.sources.tiles import RasterGrid, array_to_tiles
+
+    grid = RasterGrid(
+        raster_id="m", epsg=4326, transform=(1.0, 0.0, 0.0, 0.0, -1.0, 3.0),
+        width=5, height=3, tile_w=2, tile_h=2, bands=1, dtype="int32",
+    )
+    pts = spark.createDataFrame([(0, 0.5, 2.5), (1, 4.5, 0.5)], "point_id long, x double, y double")
+    base = np.arange(15, dtype=np.int32).reshape(3, 5)
+    rasters = [array_to_tiles(spark, base + 100 * i, grid) for i in range(20)]
+
+    def sampled(i):
+        got = values_by_points(pts, rasters[i], grid, distributed=False).collect()
+        return sorted((r["point_id"], r["value"]) for r in got)
+
+    for i in list(range(20)) + [0, 1, 2]:
+        assert sampled(i) == [(0, 100.0 * i), (1, 14.0 + 100 * i)], i
+
+
+def test_board_rebuild_is_all_memo_hits(spark):
+    """Building the benchmark board's ten queries a second time in one
+    session runs no memo miss: every probe, collect and relation comes
+    from the memo."""
+    import __spark_entry__ as entry
+    from gdal_boots_spark import memo
+
+    board = (
+        "pip_join", "cell_assign", "span_counts", "knn", "radius_join",
+        "bbox_join", "rasterize_hist", "zonal_stats", "point_sampling", "polygonize",
+    )
+    qs = entry.queries()
+    for name in board:
+        qs[name](spark, SF_SMOKE)
+    before = memo.stats()
+    for name in board:
+        qs[name](spark, SF_SMOKE)
+    after = memo.stats()
+    misses = {k: v["misses"] - before.get(k, {"misses": 0})["misses"] for k, v in after.items()}
+    assert not any(misses.values()), misses
+    assert sum(v["hits"] for v in after.values()) > sum(v["hits"] for v in before.values())
+
+
+def test_memo_lru_and_clear(spark):
+    from gdal_boots_spark import memo
+
+    memo.clear()
+    built = []
+
+    def build(v):
+        built.append(v)
+        return v
+
+    for v in (1, 2, 1, 3):  # 1 is re-used, so 2 is the one evicted
+        memo.get("t", v, lambda v=v: build(v), limit=2)
+    memo.get("t", 1, lambda: build(-1), limit=2)
+    memo.get("t", 2, lambda: build(2), limit=2)
+    assert built == [1, 2, 3, 2]
+    assert memo.stats()["t"] == {"hits": 2, "misses": 4}
+    bc = memo.get("t", 9, lambda: spark.sparkContext.broadcast(9), limit=1)
+    assert bc.value == 9
+    memo.clear()
+    assert memo.stats() == {}
+
+
+def test_no_session_cache_outside_memo():
+    """Only memo.py may read applicationId or keep a module-level
+    ``*_CACHE``: session memos have one mechanism."""
+    bad = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path.name == "memo.py" and path.parent == PKG:
+            continue
+        src = path.read_text()
+        if "applicationId" in src:
+            bad.append(f"{path.name}: applicationId")
+        for node in ast.parse(src).body:
+            targets = node.targets if isinstance(node, ast.Assign) else [getattr(node, "target", None)]
+            for t in targets:
+                if isinstance(t, ast.Name) and t.id.endswith("_CACHE"):
+                    bad.append(f"{path.name}: {t.id}")
+    assert not bad, bad

@@ -208,12 +208,12 @@ def test_annulus_cells_unique_property(res, r_out, r_in, spark):
     radius — including blocks wider than the wrap modulus (ADVICE r2)."""
     from pyspark.sql import functions as F
 
-    from gdal_boots_spark.operators.knn import _annulus_cells_expr
+    from gdal_boots_spark.operators.knn import _annulus_cells_sql
 
     if r_in >= r_out:
         r_in = -1
     df = spark.createDataFrame([(27.3, 53.9), (-179.99, 84.0)], "x double, y double")
-    rows = df.select(_annulus_cells_expr(res, r_in, r_out).alias("cells")).collect()
+    rows = df.select(F.expr(_annulus_cells_sql(res, r_in, r_out)).alias("cells")).collect()
     for r in rows:
         cells = list(r["cells"])
         assert len(cells) == len(set(cells)), (res, r_in, r_out)

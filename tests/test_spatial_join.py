@@ -452,6 +452,7 @@ def test_point_rect_bypass_equals_raycast(spark, monkeypatch):
     the pandas ray-cast path EXACTLY, including points ON edges/corners
     (half-open: bottom/left edges inside, top/right outside)."""
     import gdal_boots_spark.operators.spatial_join as sj
+    from gdal_boots_spark import memo
     from gdal_boots_spark.sources.synth import RECTS
 
     pid0, minx, miny, maxx, maxy = RECTS[0]
@@ -476,13 +477,13 @@ def test_point_rect_bypass_equals_raycast(spark, monkeypatch):
     assert "ArrowEvalPython" not in plan and "EvalPython" not in plan
     # force the ray-cast path and compare pair sets
     monkeypatch.setattr(sj, "_is_rect_poly", lambda c, ro: False)
-    sj._POLY_DIM_CACHE.clear()
+    memo.clear()
     slow = {
         (r["point_id"], r["poly_id"])
         for r in pip_join_points(pts, polys).select("point_id", "poly_id").collect()
     }
     monkeypatch.undo()
-    sj._POLY_DIM_CACHE.clear()
+    memo.clear()
     assert fast == slow
     # boundary membership follows the half-open rule on the probe rect
     probe = {(i, p) for i, p in fast if p == pid0}
@@ -635,29 +636,14 @@ def test_pip_join_docs_any_geometry_collection_spans(spark):
     assert got == {("c1", 1), ("c2", 1)}
 
 
-def test_poly_refine_modes_identical(spark):
-    """refine_mode='split' (persist-branch, default), 'where'
-    (boolean-UDF filter) and 'arrow' (mapInArrow row filter) produce
-    identical pairs on mixed Point / rect-Polygon /
-    GeometryCollection spans."""
-    from gdal_boots_spark.operators.spatial_join import pip_join_docs_any
-    from gdal_boots_spark.sources.synth import interleaved_docs, rect_polygons_df
-
-    docs = interleaved_docs(spark, SF_ORACLE, poly_spans=True)
-    polys = rect_polygons_df(spark)
-    a = {
-        tuple(r)
-        for r in pip_join_docs_any(docs, polys, refine_mode="arrow").collect()
-    }
-    b = {
-        tuple(r)
-        for r in pip_join_docs_any(docs, polys, refine_mode="where").collect()
-    }
-    c = {
-        tuple(r)
-        for r in pip_join_docs_any(docs, polys, refine_mode="split").collect()
-    }
-    assert a == b == c and len(a) > 0
+def test_poly_refine_vs_oracle_sf0001(spark):
+    """The one poly-span refine path at sf0.001 (mixed Point /
+    rect-Polygon / GeometryCollection spans) equals the analytic DuckDB
+    oracle, and only the non-rect-x-rect branch enters Python."""
+    df = entrymod.all_queries()["pip_join_poly_spans"](spark, SF_SMOKE)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    compare_to_oracle(df, entrymod.all_oracle_sql()["pip_join_poly_spans"], SF_SMOKE)
 
 
 def test_adaptive_levels_heterogeneous_spans(spark):
@@ -799,3 +785,54 @@ def test_multiring_fast_decode_parity():
     fast = decode(True)
     slow = decode(False)
     assert fast == slow and len(fast) == 350  # 50 None rows dropped
+
+
+@pytest.mark.parametrize("name", ["order", "my id"])
+def test_reserved_and_spaced_column_names(spark, name):
+    """Operators that build SQL strings quote the caller's column names:
+    a reserved word or a name with a space gives the same rows as the
+    plain name."""
+    from gdal_boots_spark.operators.knn import knn_join, radius_join
+    from gdal_boots_spark.operators.sampling import values_by_points
+    from gdal_boots_spark.sources.tiles import RasterGrid, generate_tiles, ramp_fill
+
+    xy = [(i, 26.0 + (i * 37 % 50) / 20.0, 53.0 + (i * 11 % 40) / 20.0) for i in range(40)]
+    plain = spark.createDataFrame(xy, "id long, x double, y double")
+    odd = plain.withColumnRenamed("id", name)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def knn(q, b, col):
+        return knn_join(q, b, k=3, q_id=col, b_id=col)
+
+    assert rows(knn(odd, odd, name)) == rows(knn(plain, plain, "id"))
+
+    def near(q, b, col):
+        return radius_join(q, b, 0.3, q_id=col, b_id=col)
+
+    assert rows(near(odd, odd, name)) == rows(near(plain, plain, "id"))
+
+    grid = RasterGrid(
+        raster_id="q", epsg=4326, transform=(1.0, 0.0, 0.0, 0.0, -1.0, 3.0),
+        width=5, height=3, tile_w=2, tile_h=2, bands=1, dtype="int32",
+    )
+    tiles = generate_tiles(spark, grid, ramp_fill)
+    pts = spark.createDataFrame([(0, 0.2, 2.5), (1, 4.5, 0.5), (2, 9.0, 9.0)], "id long, x double, y double")
+    for distributed in (False, True):
+        got = values_by_points(
+            pts.toDF(name, f"{name} x", f"{name} y"), tiles, grid,
+            id_col=name, x_col=f"{name} x", y_col=f"{name} y", distributed=distributed,
+        )
+        assert rows(got) == rows(values_by_points(pts, tiles, grid, id_col="id", distributed=distributed))
+
+    polys = rect_polygons_df(spark)
+    tri = spark.createDataFrame(
+        [(7, '{"type":"Polygon","coordinates":[[[26.0,53.0],[28.0,53.0],[26.0,55.0],[26.0,53.0]]]}')],
+        "poly_id long, geojson string",
+    )
+    for dim in (polys, tri):  # the rect bypass and the ray-cast refine
+        got = pip_join_points(odd.toDF(name, name + "x", "select"), dim, x_col=name + "x", y_col="select")
+        exp = pip_join_points(plain, dim)
+        assert rows(got.select(name, "poly_id")) == rows(exp.select("id", "poly_id"))
+
