@@ -267,3 +267,31 @@ def rects_intersect_polygon(
             )
             out[i] = _any_segment_intersection(redges, pedges)
     return out
+
+
+def rect_rings(coords: np.ndarray, offsets: np.ndarray, one_ring: np.ndarray) -> np.ndarray:
+    """Vectorized exact-rectangle test over k geometries packed in one
+    flat buffer -> bool[k].
+
+    Row i's interleaved coords are ``coords[offsets[i]:offsets[i+1]]``;
+    ``one_ring[i]`` says it is a single-ring polygon.  A row is a
+    rectangle iff that ring is closed, has 5 points, and its 4 edges
+    are axis-parallel, non-degenerate and alternate between the axes.
+    Those conditions make the ring (a,b)->(c,b)->(c,d)->(a,d)->(a,b)
+    (or its transpose) with a != c and b != d: the tour of the 4
+    distinct corners of its own bbox, whose even-odd interior IS the
+    bbox.  A bowtie tour of the same corners has diagonal edges and
+    fails.  Such a rectangle is fully determined by its bbox, which is
+    what lets the spatial join test it with box arithmetic alone."""
+    offsets = np.asarray(offsets, np.int64)
+    out = np.zeros(offsets.size - 1, dtype=bool)
+    idx = np.flatnonzero(np.asarray(one_ring, bool) & (np.diff(offsets) == 10))
+    if idx.size:
+        ring = np.asarray(coords, np.float64)[offsets[idx, None] + np.arange(10)].reshape(-1, 5, 2)
+        x, y = ring[..., 0], ring[..., 1]
+        closed = (x[:, 0] == x[:, 4]) & (y[:, 0] == y[:, 4])
+        mx = x[:, 1:] != x[:, :-1]  # edge moves along x
+        my = y[:, 1:] != y[:, :-1]  # edge moves along y
+        alternating = (mx ^ my).all(axis=1) & (mx[:, 1:] != mx[:, :-1]).all(axis=1)
+        out[idx] = closed & alternating
+    return out

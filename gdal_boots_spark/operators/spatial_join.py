@@ -10,12 +10,13 @@ Physical shape (small/medium polygon side — the common case):
                                              ├─ BROADCAST hash join on cell_id
     polys ──(driver: bbox cover explode)─────┘
                       │
-                      └─ mapInPandas ray-cast refinement (Arrow batches,
+                      └─ ray-cast refinement: a boolean pandas UDF in a
+                         WHERE (Arrow batches of (x, y, poly_id) only,
                          polygon coords via a Spark broadcast variable —
                          candidate rows never carry coordinate payloads)
 
 Zero shuffles end-to-end: the fact (document/point) side flows
-filter -> project -> broadcast-join -> mapInPandas entirely within one
+filter -> project -> broadcast-join -> UDF filter entirely within one
 stage, so the plan scales linearly with executors at 100 TB (the
 two-parallelism scaling evidence in BENCH runs this operator).
 
@@ -35,7 +36,7 @@ from .. import memo
 from ..functions.geometry_fns import cell_id_col, quote_ident
 from ..geom.cells import MAX_RES, cover_bbox, pick_res
 from ..geom.packed import from_geojson
-from ..geom.pip import points_in_polygon
+from ..geom.pip import points_in_polygon, rect_rings
 from .spans import extract_geo_spans
 
 
@@ -97,12 +98,13 @@ def _parse_float_segments(blobs: list) -> np.ndarray:
 
 
 def _collect_polys(polys: DataFrame):
-    """Driver-side: polygon table -> {poly_id: (coords, ring_offsets)} +
-    per-poly bbox list, memoised per session and input plan (one
-    flagship build collects from both the Point and the poly branch,
-    and each collect is a full Spark job).  The polygon side is the
-    *dimension*; the point side is the 10^12-row fact and never leaves
-    the executors."""
+    """Driver-side: polygon table -> ({poly_id: (coords, ring_offsets)},
+    {poly_id: bbox}, rect_pids), memoised per session and input plan
+    (one flagship build collects from both the Point and the poly
+    branch, and each collect is a full Spark job).  ``rect_pids`` holds
+    the ids of the exact axis-aligned rectangles (geom.pip.rect_rings).
+    The polygon side is the *dimension*; the point side is the
+    10^12-row fact and never leaves the executors."""
 
     def build():
         packed, bboxes = {}, {}
@@ -111,22 +113,65 @@ def _collect_polys(polys: DataFrame):
             packed[int(r["poly_id"])] = (pg.coords, pg.ring_offsets)
             c = pg.coords.reshape(-1, 2)
             bboxes[int(r["poly_id"])] = (c[:, 0].min(), c[:, 1].min(), c[:, 0].max(), c[:, 1].max())
-        return packed, bboxes
+        rect_pids = frozenset(
+            pid for pid, (c, ro) in packed.items() if rect_rings(c, [0, c.size], [len(ro) == 2])[0]
+        )
+        return packed, bboxes, rect_pids
 
     return memo.get("poly_dim", memo.plan_key(polys), build)
 
 
+def _span_res(med: float, worst) -> int:
+    """One global resolution for a polygon dim: cell size ~ the median
+    polygon extent ``med``, capped so the largest-area polygon (bbox
+    ``worst``) covers no more than ~64 cells (SURVEY §4.1)."""
+    res = int(np.clip(np.floor(np.log2(360.0 / (med or 1e-9))), 0, MAX_RES))
+    return min(res, pick_res(*worst, max_cells=64))
+
+
 def _auto_res(bboxes: dict) -> int:
-    """Pick one global resolution: cell size ~ median polygon extent,
-    capped so no polygon covers more than ~64 cells (SURVEY §4.1)."""
+    """_span_res of a collected dim's {poly_id: bbox}."""
     if not bboxes:
         return 8
     spans = sorted(max(b[2] - b[0], b[3] - b[1]) for b in bboxes.values())
-    med = spans[len(spans) // 2] or 1e-9
-    res = int(np.clip(np.floor(np.log2(360.0 / med)), 0, MAX_RES))
     worst = max(bboxes.values(), key=lambda b: (b[2] - b[0]) * (b[3] - b[1]))
-    res = min(res, pick_res(*worst, max_cells=64))
-    return res
+    return _span_res(spans[len(spans) // 2], worst)
+
+
+# how many levels BELOW the poly-derived cap the span side may choose;
+# the polygon dim publishes its cover at every level in the window, so
+# the window is a (small) multiplier on the broadcast dim, not on the
+# fact side
+ADAPTIVE_LEVEL_WINDOW = 4
+
+
+def _cover_df(spark: SparkSession, bboxes: dict, rect_pids: frozenset, res: int) -> DataFrame:
+    """The polygon dim's cell cover, the one relation both join paths
+    read: a (cell_id, poly_id, _pminx, _pminy, _pmaxx, _pmaxy, _prect)
+    row per polygon and cell of its bbox cover at every level in
+    [res - ADAPTIVE_LEVEL_WINDOW, res].  Cell ids embed their level
+    (geom.cells), so a Point's level-``res`` cell matches only the
+    level-``res`` rows while a span matches at its own level.  The
+    underscore names cannot collide with a caller's point columns.
+
+    Memoised per session: createDataFrame ships every row through py4j
+    (~35 round trips for a few hundred rows) on every cold plan build,
+    and the rows are a pure function of the key."""
+    lmin = max(0, res - ADAPTIVE_LEVEL_WINDOW)
+
+    def build():
+        rows = []
+        for pid, box in bboxes.items():
+            b = tuple(float(v) for v in box)
+            for lvl in range(lmin, res + 1):
+                rows.extend((cid, pid, *b, pid in rect_pids) for cid in cover_bbox(*b, lvl).tolist())
+        return spark.createDataFrame(
+            rows,
+            "cell_id long, poly_id long, _pminx double, _pminy double, _pmaxx double, _pmaxy double, "
+            "_prect boolean",
+        )
+
+    return memo.get("cover_df", (res, tuple(sorted(bboxes.items())), rect_pids), build)
 
 
 def pip_join_points(
@@ -157,7 +202,7 @@ def pip_join_points(
     if refine and distributed:
         return pip_join_points_shuffle(points, polys, res=res, x_col=x_col, y_col=y_col)
     spark: SparkSession = points.sparkSession
-    packed, bboxes = _collect_polys(polys)
+    packed, bboxes, rect_pids = _collect_polys(polys)
     if res is None:
         res = _auto_res(bboxes)
 
@@ -174,44 +219,16 @@ def pip_join_points(
     # filter: no broadcast of packed coords, no ArrowEvalPython stage,
     # zero bytes across the Python boundary.  Mixed/non-rect dims keep
     # the pandas-UDF ray-cast path unchanged.
-    all_rect = bool(packed) and all(_is_rect_poly(c, ro) for c, ro in packed.values())
+    all_rect = rect_pids == set(packed)
     xq, yq = quote_ident(x_col), quote_ident(y_col)
     pts = points.withColumn("cell_id", cell_id_col(xq, yq, res))
+    cover_df = _cover_df(spark, bboxes, rect_pids, res)
     if refine and all_rect:
-        def _mk_rect_cover():
-            cover_rows = []
-            for pid, (minx, miny, maxx, maxy) in bboxes.items():
-                for cid in cover_bbox(minx, miny, maxx, maxy, res).tolist():
-                    cover_rows.append((cid, pid, float(minx), float(miny), float(maxx), float(maxy)))
-            return cover_rows
-
-        # the driver-built cell covers are memoised per session:
-        # createDataFrame ships every row through py4j (~35 round trips
-        # for a few hundred rows) on every cold plan build, and the rows
-        # are a pure function of the key
-        cover_df = memo.get(
-            "cover_df", ("rect_cover", res, tuple(sorted(bboxes.items()))),
-            lambda: spark.createDataFrame(
-                _mk_rect_cover(),
-                "cell_id long, poly_id long, _pminx double, _pminy double, _pmaxx double, _pmaxy double",
-            ),
-        )
         cand = pts.join(F.broadcast(cover_df), "cell_id").drop("cell_id")
         keep = f"{xq} >= _pminx AND {xq} < _pmaxx AND {yq} >= _pminy AND {yq} < _pmaxy"
-        return cand.where(keep).drop("_pminx", "_pminy", "_pmaxx", "_pmaxy")
+        return cand.where(keep).drop("_pminx", "_pminy", "_pmaxx", "_pmaxy", "_prect")
 
-    def _mk_cover():
-        cover_rows = []
-        for pid, (minx, miny, maxx, maxy) in bboxes.items():
-            for cid in cover_bbox(minx, miny, maxx, maxy, res).tolist():
-                cover_rows.append((cid, pid))
-        return cover_rows
-
-    cover_df = memo.get(
-        "cover_df", ("cell_cover", res, tuple(sorted(bboxes.items()))),
-        lambda: spark.createDataFrame(_mk_cover(), "cell_id long, poly_id long"),
-    )
-    cand = pts.join(F.broadcast(cover_df), "cell_id").drop("cell_id")
+    cand = pts.join(F.broadcast(cover_df.select("cell_id", "poly_id")), "cell_id").drop("cell_id")
     if not refine:
         return cand
 
@@ -278,396 +295,168 @@ def pip_join_docs(
     )
 
 
-def _is_rect_poly(coords: np.ndarray, ro: np.ndarray) -> bool:
-    """True iff the packed polygon is EXACTLY the closed 5-point ring of
-    its own bbox corners (axis-aligned, non-degenerate rectangle).
-    r8: additionally requires axis-parallel ALTERNATING edges, so a
-    bowtie-ordered tour of the same 4 corners (whose even-odd interior
-    is NOT the bbox) can never classify as a rectangle."""
-    c = coords.reshape(-1, 2)
-    if len(c) != 5 or len(ro) != 2 or not (c[0] == c[4]).all():
-        return False
-    ex = c[1:, 0] != c[:-1, 0]
-    ey = c[1:, 1] != c[:-1, 1]
-    if not bool(np.all(ex ^ ey)):
-        return False
-    mnx, mny = c[:, 0].min(), c[:, 1].min()
-    mxx, mxy = c[:, 0].max(), c[:, 1].max()
-    if mnx == mxx or mny == mxy:
-        return False
-    corners = {(mnx, mny), (mxx, mny), (mxx, mxy), (mnx, mxy)}
-    return {(float(x), float(y)) for x, y in c[:4]} == corners
-
-
-# A/B knob for the r7 multi-ring fast path (tests interleave both
-# settings to assert output parity and the speedup; production always
-# runs True)
-_FAST_MULTIRING = True
-
-
 def _decode_bounds(batches):
-    """One Arrow pass: GeoJSON text -> packed geometry struct + bbox,
-    building the output struct column DIRECTLY from flat buffers
-    (ListArray.from_arrays over one concatenated coord array) — no
-    pandas dict materialization on the way out.  Single-ring
+    """One Arrow pass: GeoJSON text -> packed geometry struct + bbox +
+    rect flag, building the output columns DIRECTLY from flat buffers
+    (_emit_decoded) — no pandas dict materialization on the way out.
     Polygons whose ``coordinates`` is the trailing field (the
-    overwhelmingly common span shape) parse via translate +
-    np.fromstring; everything else falls back to from_geojson."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from ..geom.packed import from_geojson
-
+    overwhelmingly common span shape, any ring count) parse as one
+    joined float blob; everything else falls back to from_geojson, and
+    a span it rejects (malformed JSON, unknown type) is dropped."""
     for batch in batches:
         n = batch.num_rows
         if n == 0:
             continue
         texts = batch.column(batch.schema.get_field_index("text")).to_pylist()
-        # fast-path rows parse as ONE nan-sentinel-joined fromstring
-        # call (translate once on the joined string): per-row
-        # fromstring overhead was the decode hot spot.  A segment-
-        # count mismatch (malformed token, literal 'nan') is a
-        # complete safety net — the whole batch then re-parses row
-        # by row through from_geojson.
-        fast_j: list[int] = []
-        fast_blob: list[str] = []
-        m_j: list[int] = []      # multi-ring Polygon rows (r7)
-        m_rc: list[int] = []     # their ring counts
-        m_blob: list[str] = []   # one blob PER RING, row-major
+        # fast-path rows parse as ONE nan-sentinel-joined float parse,
+        # one segment per ring (per-row fromstring overhead was the
+        # decode hot spot).  A segment-count mismatch (malformed token,
+        # literal 'nan') is a complete safety net — every row then
+        # re-parses through from_geojson.
+        f_j: list[int] = []
+        f_rc: list[int] = []     # ring counts
+        f_blob: list[str] = []   # one blob PER RING, row-major
         for j, v in enumerate(texts):
-            if (
-                v is not None and '"Polygon"' in v
-                and v.endswith("]]]}")
-            ):
+            if v is not None and '"Polygon"' in v and v.endswith("]]]}"):
                 i = v.find('"coordinates"')
                 if i < 0:
                     continue
                 # ring count == "[[" occurrences in the coords blob
-                # (non-overlapping, exactly one per ring start; the
-                # old `"]],[[" not in v` guard missed hole polygons
-                # serialized with whitespace — "]], [[", json.dumps
-                # default separators — which would merge outer+inner
-                # rings, ADVICE r3).
+                # (non-overlapping, exactly one per ring start, with or
+                # without whitespace after the commas — ADVICE r3), and
+                # str.split on "[[" yields exactly those r ring bodies
+                # (the stray "["/"]],"-junk around the floats is
+                # whitespace after the translate table); a single ring
+                # skips the split, the hot span shape
                 r = v.count("[[", i)
                 if r == 1:
-                    fast_j.append(j)
-                    fast_blob.append(v[i + 14 : -1])
-                elif r > 1 and _FAST_MULTIRING:
-                    # r7 (VERDICT r6 item 5): multi-ring Polygons take
-                    # the same joined-fromstring fast path, one segment
-                    # per ring — str.split on "[[" yields exactly r
-                    # ring bodies (same non-overlapping scan as count;
-                    # the stray "["/"]],"-junk around the floats is
-                    # whitespace after the translate table)
-                    m_j.append(j)
-                    m_rc.append(r)
-                    m_blob.extend(v[i + 14 : -1].split("[[")[1:])
+                    f_blob.append(v[i + 14 : -1])
+                elif r:
+                    f_blob.extend(v[i + 14 : -1].split("[[")[1:])
+                else:
+                    continue
+                f_j.append(j)
+                f_rc.append(r)
         fastmask = np.zeros(n, dtype=bool)
-        if fast_blob:
-            nums = _parse_float_segments(fast_blob)
+        if f_blob:
+            nums = _parse_float_segments(f_blob)
             isn = np.isnan(nums)
-            if int(isn.sum()) == len(fast_j) - 1:
+            if int(isn.sum()) == len(f_blob) - 1:
                 seps = np.flatnonzero(isn)
                 starts = np.concatenate(([0], seps + 1))
-                ends = np.concatenate((seps, [nums.size]))
-                lens = ends - starts
-                seg_ok = (lens >= 8) & (lens % 2 == 0)
-                if seg_ok.any():
-                    # fast rows ship as their own fully-vectorized
-                    # RecordBatch; only the remainder pays the
-                    # per-row fallback loop below
-                    fast_sel = np.asarray(fast_j, np.int64)[seg_ok]
-                    fastmask[fast_sel] = True
-                    bounds = np.concatenate((starts, [nums.size]))
-                    keep_pos = np.repeat(seg_ok, np.diff(bounds)) & ~isn
-                    yield _decode_fast_batch(
-                        batch, fast_sel, nums[keep_pos], lens[seg_ok]
-                    )
-            # else: global segment-count mismatch -> every row
-            # falls back to the per-row path
-        if m_blob:
-            nums_m = _parse_float_segments(m_blob)
-            isn_m = np.isnan(nums_m)
-            if int(isn_m.sum()) == len(m_blob) - 1:
-                seps = np.flatnonzero(isn_m)
-                starts = np.concatenate(([0], seps + 1))
-                ends = np.concatenate((seps, [nums_m.size]))
-                rl = ends - starts  # per-RING float counts
-                rc = np.asarray(m_rc, np.int64)
+                rl = np.concatenate((seps, [nums.size])) - starts  # per-RING float counts
+                rc = np.asarray(f_rc, np.int64)
                 row_id = np.repeat(np.arange(rc.size), rc)
                 ring_ok = (rl >= 8) & (rl % 2 == 0)
                 row_ok = np.bincount(row_id, weights=~ring_ok, minlength=rc.size) == 0
                 if row_ok.any():
+                    # fast rows ship as their own fully-vectorized
+                    # RecordBatch; only the remainder pays the per-row
+                    # fallback loop below
                     keep_ring = row_ok[row_id]
-                    bounds = np.concatenate((starts, [nums_m.size]))
-                    keep_pos = np.repeat(keep_ring, np.diff(bounds)) & ~isn_m
-                    sel_m = np.asarray(m_j, np.int64)[row_ok]
-                    fastmask[sel_m] = True
-                    rs = np.concatenate(([0], np.cumsum(rc)))[:-1]
-                    clen_m = np.add.reduceat(rl, rs)[row_ok]  # rc >= 2: no empty windows
-                    yield _decode_fast_batch(
-                        batch, sel_m, nums_m[keep_pos], clen_m,
-                        rings=rc[row_ok], ring_lens=rl[keep_ring],
-                    )
+                    keep_pos = np.repeat(keep_ring, np.diff(np.append(starts, nums.size))) & ~isn
+                    sel = np.asarray(f_j, np.int64)[row_ok]
+                    fastmask[sel] = True
+                    rc, rl = rc[row_ok], rl[keep_ring]
+                    # ring_offsets per row: [0, p1, p1+p2, ...] in points
+                    ring_at = np.concatenate(([0], np.cumsum(rl)))  # float offset of each ring
+                    first = np.concatenate(([0], np.cumsum(rc)))    # first ring of each row
+                    coffs = ring_at[first]
+                    roffs = np.concatenate(([0], np.cumsum(rc + 1)))
+                    ring_ix = np.arange(roffs[-1]) - np.repeat(roffs[:-1] - first[:-1], rc + 1)
+                    rvals = (ring_at[ring_ix] - np.repeat(coffs[:-1], rc + 1)) // 2
+                    # part_offsets per row: [0, nrings] (one Polygon part)
+                    pvals = np.zeros(2 * rc.size, np.int64)
+                    pvals[1::2] = rc
+                    no_list = (np.empty(0), np.zeros(rc.size + 1, np.int64))
+                    yield _emit_decoded(batch, sel, np.full(rc.size, 3, np.int8), [
+                        (nums[keep_pos], coffs), (rvals, roffs),
+                        (pvals, np.arange(0, 2 * rc.size + 1, 2)), no_list, no_list,
+                    ])
 
-        mask = np.zeros(n, dtype=bool)
-        gts: list[int] = []
-        coord_parts: list[np.ndarray] = []
-        ring_parts: list[np.ndarray] = []
-        part_parts: list[np.ndarray] = []
-        ptype_parts: list[np.ndarray] = []  # GeometryCollection only
-        choff_parts: list[np.ndarray] = []
-        coffs, roffs, poffs, ptoffs, choffs = [0], [0], [0], [0], [0]
+        rows, pgs = [], []
         for j, v in enumerate(texts):
             if v is None or fastmask[j]:
                 continue
-            ptypes = None
             try:
                 pg = from_geojson(v)
-            except (ValueError, KeyError, json.JSONDecodeError):
+            except (ValueError, KeyError):  # json.JSONDecodeError is a ValueError
                 continue
-            if pg is None or pg.coords.size == 0:
-                continue
-            coords = pg.coords
-            ring = np.asarray(pg.ring_offsets, dtype=np.int32)
-            part = np.asarray(pg.part_offsets, dtype=np.int32)
-            gt = int(pg.gtype)
-            if gt == 7:
-                ptypes = np.asarray(pg.part_types, dtype=np.int8)
-                choff = np.asarray(pg.child_offsets, dtype=np.int32)
-            mask[j] = True
-            gts.append(gt)
-            coord_parts.append(coords)
-            ring_parts.append(ring)
-            part_parts.append(part)
-            coffs.append(coffs[-1] + coords.size)
-            roffs.append(roffs[-1] + ring.size)
-            poffs.append(poffs[-1] + part.size)
-            if ptypes is not None:
-                ptype_parts.append(ptypes)
-                choff_parts.append(choff)
-                ptoffs.append(ptoffs[-1] + ptypes.size)
-                choffs.append(choffs[-1] + choff.size)
-            else:
-                ptoffs.append(ptoffs[-1])
-                choffs.append(choffs[-1])
-        if not mask.any():
+            if pg.coords.size:
+                rows.append(j)
+                pgs.append(pg)
+        if not pgs:
             continue
-        cvals = np.concatenate(coord_parts)
-        coffs_np = np.asarray(coffs, dtype=np.int64)
-        # vectorized per-row bbox over the interleaved flat buffer
-        vstarts = coffs_np[:-1] // 2
-        xs, ys = cvals[0::2], cvals[1::2]
-        minx = np.minimum.reduceat(xs, vstarts)
-        maxx = np.maximum.reduceat(xs, vstarts)
-        miny = np.minimum.reduceat(ys, vstarts)
-        maxy = np.maximum.reduceat(ys, vstarts)
-        # exact rectangle detection (vectorized): single-ring
-        # 5-point closed Polygon whose vertex set IS its 4 bbox
-        # corners.  Rect spans x rect dim polygons later BYPASS the
-        # Python refinement entirely (bbox overlap <=> intersects
-        # for closed axis-aligned rectangles — GEOS
-        # RectangleIntersects, done at plan level).
-        gts_np = np.asarray(gts, dtype=np.int8)
-        sizes = coffs_np[1:] - coffs_np[:-1]
-        rsizes = np.diff(np.asarray(roffs, dtype=np.int64))
-        rect = np.zeros(len(gts_np), dtype=bool)
-        idx = np.flatnonzero((gts_np == 3) & (sizes == 10) & (rsizes == 2))
-        if idx.size:
-            M = cvals[coffs_np[idx][:, None] + np.arange(10)[None, :]]
-            closed = (M[:, 0] == M[:, 8]) & (M[:, 1] == M[:, 9])
-            xs4, ys4 = M[:, [0, 2, 4, 6]], M[:, [1, 3, 5, 7]]
-            mnx, mxx = minx[idx][:, None], maxx[idx][:, None]
-            mny, mxy = miny[idx][:, None], maxy[idx][:, None]
-            onx = ((xs4 == mnx) | (xs4 == mxx)).all(axis=1)
-            ony = ((ys4 == mny) | (ys4 == mxy)).all(axis=1)
-            code = np.sort((xs4 == mxx) * 1 + (ys4 == mxy) * 2, axis=1)
-            corners = (code == np.arange(4)[None, :]).all(axis=1)
-            rect[idx] = closed & onx & ony & corners
-        # rect spans ship PAYLOAD-FREE (round-4 verdict item 4): a
-        # closed axis-aligned rectangle is fully determined by its
-        # bbox columns, so its coords/offsets are blanked here —
-        # ~95% of spans at bench shapes stop paying the 130-byte
-        # geometry struct through explode, join, and the refine's
-        # Arrow transfer.  The refine reconstructs the test from
-        # (minx, miny, maxx, maxy) via rects_intersect_polygon.
-        roffs_np = np.asarray(roffs, np.int64)
-        poffs_np = np.asarray(poffs, np.int64)
-        rvals_all = np.concatenate(ring_parts)
-        pvals_all = np.concatenate(part_parts)
-        if rect.any():
-            keeprow = ~rect
-            clen = np.diff(coffs_np)
-            cvals = cvals[np.repeat(keeprow, clen)]
-            coffs_np = np.concatenate(([0], np.cumsum(np.where(keeprow, clen, 0))))
-            rlen = np.diff(roffs_np)
-            rvals_all = rvals_all[np.repeat(keeprow, rlen)]
-            roffs_np = np.concatenate(([0], np.cumsum(np.where(keeprow, rlen, 0))))
-            plen = np.diff(poffs_np)
-            pvals_all = pvals_all[np.repeat(keeprow, plen)]
-            poffs_np = np.concatenate(([0], np.cumsum(np.where(keeprow, plen, 0))))
-        geom_arr = pa.StructArray.from_arrays(
-            [
-                pa.array(np.asarray(gts, dtype=np.int8)),
-                pa.ListArray.from_arrays(pa.array(coffs_np, pa.int32()), pa.array(cvals, pa.float64())),
-                pa.ListArray.from_arrays(
-                    pa.array(roffs_np, pa.int32()), pa.array(rvals_all, pa.int32())
-                ),
-                pa.ListArray.from_arrays(
-                    pa.array(poffs_np, pa.int32()), pa.array(pvals_all, pa.int32())
-                ),
-                pa.ListArray.from_arrays(
-                    pa.array(np.asarray(ptoffs, np.int64), pa.int32()),
-                    pa.array(
-                        np.concatenate(ptype_parts) if ptype_parts else np.empty(0, np.int8),
-                        pa.int8(),
-                    ),
-                ),
-                pa.ListArray.from_arrays(
-                    pa.array(np.asarray(choffs, np.int64), pa.int32()),
-                    pa.array(
-                        np.concatenate(choff_parts) if choff_parts else np.empty(0, np.int32),
-                        pa.int32(),
-                    ),
-                ),
-            ],
-            names=["gtype", "coords", "ring_offsets", "part_offsets", "part_types", "child_offsets"],
-        )
-        pmask = pa.array(mask)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pc.filter(batch.column(batch.schema.get_field_index("doc_id")), pmask),
-                pc.filter(batch.column(batch.schema.get_field_index("span_pos")), pmask),
-                geom_arr,
-                pa.array(minx, pa.float64()),
-                pa.array(miny, pa.float64()),
-                pa.array(maxx, pa.float64()),
-                pa.array(maxy, pa.float64()),
-                pa.array(rect),
-            ],
-            names=["doc_id", "span_pos", "geom", "minx", "miny", "maxx", "maxy", "rect"],
-        )
+
+        def flat(arrs):
+            return np.concatenate([np.asarray(a) for a in arrs]), np.cumsum([0] + [len(a) for a in arrs])
+
+        yield _emit_decoded(batch, np.asarray(rows, np.int64), np.asarray([pg.gtype for pg in pgs], np.int8), [
+            flat([pg.coords for pg in pgs]),
+            flat([pg.ring_offsets for pg in pgs]),
+            flat([pg.part_offsets for pg in pgs]),
+            flat([pg.part_types if pg.gtype == 7 else () for pg in pgs]),
+            flat([pg.child_offsets if pg.gtype == 7 else () for pg in pgs]),
+        ])
 
 
-def _decode_fast_batch(batch, sel, cvals, clen, rings=None, ring_lens=None):
-    """Vectorized emitter for the Polygon decode fast path (r5, VERDICT
-    r4 item 2; r7 extends it to MULTI-RING polygons, VERDICT r6 item
-    5): given the joined-fromstring parse results — row indices ``sel``
-    into ``batch``, their concatenated coords ``cvals``, per-row coord
-    counts ``clen``, and (multi-ring) per-row ring counts ``rings``
-    with per-ring coord counts ``ring_lens`` (row-major) — build the
-    entire output RecordBatch (bbox, rect detection, rect
-    payload-blanking, packed-geometry struct) with numpy/Arrow array
-    ops only: ring offsets come from a grouped cumsum over the flat
-    per-ring counts, never per-row Python dicts.  Fast rows ship as
-    their OWN batch, separate from the per-row fallback batch:
-    downstream candidate generation (explode -> broadcast cell join ->
-    reporting-cell dedup) is order-insensitive, so splitting the batch
-    removes the per-row append/assembly loop for the majority
-    (it was ~2.3s of the 5.1s clean-window poly path)."""
+_GEOM_LISTS = (
+    ("coords", np.float64), ("ring_offsets", np.int32), ("part_offsets", np.int32),
+    ("part_types", np.int8), ("child_offsets", np.int32),
+)
+
+
+def _emit_decoded(batch, sel, gtypes, lists):
+    """The one decode emitter: rows ``sel`` of ``batch`` with their
+    packed geometries -> RecordBatch(doc_id, span_pos, geom, minx, miny,
+    maxx, maxy, rect).  ``gtypes`` is int8[k]; ``lists`` holds the five
+    list fields of the geom struct (_GEOM_LISTS), each as (flat values,
+    k+1 row offsets).  Every row has at least one coordinate pair.
+
+    ``rect`` is geom.pip.rect_rings over single-ring Polygons, and rect
+    rows ship PAYLOAD-FREE (round-4 verdict item 4): a closed
+    axis-aligned rectangle is fully determined by its bbox columns, so
+    its lists are blanked here — most spans at bench shapes stop paying
+    the geometry struct through explode, join, and the refine's Arrow
+    transfer, which tests them from the bbox via
+    rects_intersect_polygon."""
     import pyarrow as pa
 
-    k = sel.size
-    if rings is None:
-        rings = np.ones(k, np.int64)
-        ring_lens = np.asarray(clen, np.int64)
-    coffs = np.concatenate(([0], np.cumsum(clen)))
-    xs, ys = cvals[0::2], cvals[1::2]
+    coords, coffs = lists[0]
     vstarts = coffs[:-1] // 2
-    minx = np.minimum.reduceat(xs, vstarts)
-    maxx = np.maximum.reduceat(xs, vstarts)
-    miny = np.minimum.reduceat(ys, vstarts)
-    maxy = np.maximum.reduceat(ys, vstarts)
-    # exact rectangle detection: closed SINGLE-ring 5-point Polygon
-    # whose vertex set IS its 4 bbox corners (same predicate as the
-    # fallback path)
-    rect = np.zeros(k, dtype=bool)
-    idx = np.flatnonzero((clen == 10) & (rings == 1))
-    if idx.size:
-        M = cvals[coffs[idx][:, None] + np.arange(10)[None, :]]
-        closed = (M[:, 0] == M[:, 8]) & (M[:, 1] == M[:, 9])
-        xs4, ys4 = M[:, [0, 2, 4, 6]], M[:, [1, 3, 5, 7]]
-        mnx, mxx = minx[idx][:, None], maxx[idx][:, None]
-        mny, mxy = miny[idx][:, None], maxy[idx][:, None]
-        onx = ((xs4 == mnx) | (xs4 == mxx)).all(axis=1)
-        ony = ((ys4 == mny) | (ys4 == mxy)).all(axis=1)
-        code = np.sort((xs4 == mxx) * 1 + (ys4 == mxy) * 2, axis=1)
-        corners = (code == np.arange(4)[None, :]).all(axis=1)
-        rect[idx] = closed & onx & ony & corners
-    # rect rows ship payload-free (bbox columns determine them fully)
-    keep = ~rect
-    nk = int(keep.sum())
-    cvals_out = cvals[np.repeat(keep, clen)]
-    coffs_out = np.concatenate(([0], np.cumsum(np.where(keep, clen, 0))))
-    # ring_offsets payload per kept row: [0, p1, p1+p2, ...] — grouped
-    # cumsum of the kept rows' per-ring point counts
-    keep_ring = np.repeat(keep, rings)
-    rl = ring_lens[keep_ring]
-    rc = rings[keep]
-    npts_ring = rl // 2
-    g = np.cumsum(npts_ring)
-    if rc.size:
-        row_first = np.concatenate(([0], np.cumsum(rc)))[:-1]
-        base = np.repeat(np.concatenate(([0], g))[row_first], rc)
-        local = g - base
-    else:
-        local = g
-    entries = rc + 1
-    total = int(entries.sum())
-    row_starts = np.concatenate(([0], np.cumsum(entries)))[:-1]
-    rvals = np.zeros(total, np.int32)
-    fill = np.ones(total, dtype=bool)
-    fill[row_starts] = False
-    rvals[fill] = local.astype(np.int32)
-    roffs = np.concatenate(([0], np.cumsum(np.where(keep, rings + 1, 0))))
-    # part_offsets per kept row: [0, nrings] (one Polygon part)
-    poffs = np.concatenate(([0], np.cumsum(np.where(keep, 2, 0))))
-    pvals = np.zeros(2 * nk, np.int32)
-    pvals[1::2] = rc.astype(np.int32)
-    zoffs = pa.array(np.zeros(k + 1, np.int64), pa.int32())
-    geom_arr = pa.StructArray.from_arrays(
-        [
-            pa.array(np.full(k, 3, np.int8)),
-            pa.ListArray.from_arrays(pa.array(coffs_out, pa.int32()), pa.array(cvals_out, pa.float64())),
-            pa.ListArray.from_arrays(pa.array(roffs, pa.int32()), pa.array(rvals, pa.int32())),
-            pa.ListArray.from_arrays(pa.array(poffs, pa.int32()), pa.array(pvals, pa.int32())),
-            pa.ListArray.from_arrays(zoffs, pa.array(np.empty(0, np.int8), pa.int8())),
-            pa.ListArray.from_arrays(zoffs, pa.array(np.empty(0, np.int32), pa.int32())),
-        ],
-        names=["gtype", "coords", "ring_offsets", "part_offsets", "part_types", "child_offsets"],
-    )
-    sel_pa = pa.array(sel)
+    xs, ys = coords[0::2], coords[1::2]
+    bbox = [
+        np.minimum.reduceat(xs, vstarts), np.minimum.reduceat(ys, vstarts),
+        np.maximum.reduceat(xs, vstarts), np.maximum.reduceat(ys, vstarts),
+    ]
+    rect = rect_rings(coords, coffs, (gtypes == 3) & (np.diff(lists[1][1]) == 2))
+    fields = [pa.array(gtypes, pa.int8())]
+    for (vals, offs), (_, dtype) in zip(lists, _GEOM_LISTS):
+        lens = np.diff(offs)
+        fields.append(pa.ListArray.from_arrays(
+            pa.array(np.concatenate(([0], np.cumsum(np.where(rect, 0, lens)))), pa.int32()),
+            pa.array(vals[np.repeat(~rect, lens)].astype(dtype, copy=False)),
+        ))
+    take = pa.array(sel)
     return pa.RecordBatch.from_arrays(
         [
-            batch.column(batch.schema.get_field_index("doc_id")).take(sel_pa),
-            batch.column(batch.schema.get_field_index("span_pos")).take(sel_pa),
-            geom_arr,
-            pa.array(minx, pa.float64()),
-            pa.array(miny, pa.float64()),
-            pa.array(maxx, pa.float64()),
-            pa.array(maxy, pa.float64()),
+            batch.column(batch.schema.get_field_index("doc_id")).take(take),
+            batch.column(batch.schema.get_field_index("span_pos")).take(take),
+            pa.StructArray.from_arrays(fields, names=["gtype", *(name for name, _ in _GEOM_LISTS)]),
+            *(pa.array(b, pa.float64()) for b in bbox),
             pa.array(rect),
         ],
         names=["doc_id", "span_pos", "geom", "minx", "miny", "maxx", "maxy", "rect"],
     )
 
 
-# how many levels BELOW the poly-derived cap the span side may choose;
-# the polygon dim publishes its cover at every level in the window, so
-# the window is a (small) multiplier on the broadcast dim, not on the
-# fact side
-ADAPTIVE_LEVEL_WINDOW = 4
-
-
-def _poly_span_candidates(
-    spark: SparkSession, geo: DataFrame, is_point, bboxes: dict, res: int,
-    rect_pids: frozenset = frozenset(),
-) -> DataFrame:
-    """non-Point geo spans -> deduped (doc_id, span_pos, poly_id, geom)
-    candidates: geojson decode -> native bbox cover explode -> broadcast
-    cell join -> bbox overlap filter -> reporting-cell dedup (the pair
-    survives only in the cell holding the bbox-intersection lower-left
-    corner — dedup WITHOUT a shuffle).
+def _poly_span_candidates(docs: DataFrame, bboxes: dict, rect_pids: frozenset, res: int) -> DataFrame:
+    """non-Point geo spans of ``docs`` -> deduped (doc_id, span_pos,
+    poly_id, geom, rect, _prect, bbox) candidates: geojson decode ->
+    native bbox cover explode -> broadcast cell join (_cover_df) -> bbox
+    overlap filter -> reporting-cell dedup (the pair survives only in
+    the cell holding the bbox-intersection lower-left corner — dedup
+    WITHOUT a shuffle).
 
     ADAPTIVE COVER RESOLUTION (VERDICT r5 item 4): each span explodes at
     its OWN level — the finest level in [res-ADAPTIVE_LEVEL_WINDOW, res]
@@ -685,36 +474,18 @@ def _poly_span_candidates(
     level choice, because the cell holding the bbox-intersection
     lower-left corner is covered by both sides at the span's level.
 
-    The decode is ONE mapInPandas pass that emits the packed geometry
-    AND its bbox as concrete columns.  The previous scalar-UDF version
-    (geojson_decode_udf + geom_bounds_udf) got duplicated by projection
-    collapse into stacked ArrowEvalPython stages — the JSON parse ran
+    The decode is ONE mapInArrow pass (_decode_bounds) that emits the
+    packed geometry AND its bbox as concrete columns.  The previous
+    scalar-UDF version (geojson_decode_udf + geom_bounds_udf) got
+    duplicated by projection collapse into stacked ArrowEvalPython stages — the JSON parse ran
     several times per span (measured 14.7s -> ~4s on 2M spans at
-    local[32]).  A mapInPandas node is a black-box projection the
+    local[32]).  A mapInArrow node is a black-box projection the
     optimizer can neither split nor replicate."""
+    from ..functions.geometry_fns import point_xy_native
+
     lmin = max(0, res - ADAPTIVE_LEVEL_WINDOW)
-    def _mk_cover_rows():
-        cover_rows = []
-        for pid, (minx, miny, maxx, maxy) in bboxes.items():
-            seen: set[int] = set()
-            for lvl in range(lmin, res + 1):
-                for cid in cover_bbox(minx, miny, maxx, maxy, lvl).tolist():
-                    if cid not in seen:
-                        seen.add(cid)
-                        cover_rows.append(
-                            (cid, pid, float(minx), float(miny), float(maxx), float(maxy), pid in rect_pids)
-                        )
-        return cover_rows
-
-    cover_df = memo.get(
-        "cover_df", ("poly_cover", res, lmin, tuple(sorted(bboxes.items())), rect_pids),
-        lambda: spark.createDataFrame(
-            _mk_cover_rows(),
-            "cell_id long, poly_id long, pminx double, pminy double, pmaxx double, pmaxy double, prect boolean",
-        ),
-    )
-
-    g = geo.where(~is_point).selectExpr("doc_id", "span_pos", "text").mapInArrow(
+    _, _, is_point = point_xy_native("text")
+    g = extract_geo_spans(docs).where(~is_point).selectExpr("doc_id", "span_pos", "text").mapInArrow(
         _decode_bounds,
         schema=(
             "doc_id string, span_pos int, "
@@ -762,15 +533,15 @@ def _poly_span_candidates(
     # only in the cell (at the span's own level) holding the
     # bbox-intersection lower-left corner (dedup without a shuffle)
     keep = (
-        "minx <= pmaxx AND pminx <= maxx AND miny <= pmaxy AND pminy <= maxy "
+        "minx <= _pmaxx AND _pminx <= maxx AND miny <= _pmaxy AND _pminy <= maxy "
         "AND cell_id = "
-        + cell_of.format(ix=cix("GREATEST(minx, pminx)"), iy=ciy("GREATEST(miny, pminy)"))
+        + cell_of.format(ix=cix("GREATEST(minx, _pminx)"), iy=ciy("GREATEST(miny, _pminy)"))
     )
     return (
-        covered.join(F.broadcast(cover_df), "cell_id")
+        covered.join(F.broadcast(_cover_df(docs.sparkSession, bboxes, rect_pids, res)), "cell_id")
         .where(keep)
         .selectExpr(
-            "doc_id", "span_pos", "poly_id", "geom", "rect", "prect",
+            "doc_id", "span_pos", "poly_id", "geom", "rect", "_prect",
             "minx", "miny", "maxx", "maxy",
         )
     )
@@ -780,16 +551,8 @@ def poly_span_candidates(docs: DataFrame, polys: DataFrame, res: int | None = No
     """Bench/diagnostic surface: the poly-span path's pre-refinement
     candidates for interleaved docs (mirrors pip_join_points
     ``refine=False``) — used to normalize per-candidate refine cost."""
-    from ..functions.geometry_fns import point_xy_native
-
-    spark = docs.sparkSession
-    packed, bboxes = _collect_polys(polys)
-    if res is None:
-        res = _auto_res(bboxes)
-    geo = extract_geo_spans(docs)
-    _, _, is_point = point_xy_native("text")
-    rect_pids = frozenset(pid for pid, (c, ro) in packed.items() if _is_rect_poly(c, ro))
-    return _poly_span_candidates(spark, geo, is_point, bboxes, res, rect_pids)
+    _, bboxes, rect_pids = _collect_polys(polys)
+    return _poly_span_candidates(docs, bboxes, rect_pids, _auto_res(bboxes) if res is None else res)
 
 
 def pip_join_docs_any(docs: DataFrame, polys: DataFrame, res: int | None = None) -> DataFrame:
@@ -821,26 +584,13 @@ def pip_join_docs_any(docs: DataFrame, polys: DataFrame, res: int | None = None)
     from pyspark.sql.functions import pandas_udf
     from pyspark.storagelevel import StorageLevel
 
-    from ..functions.geometry_fns import point_xy_native, point_xy_sql
-
     spark = docs.sparkSession
-    packed, bboxes = _collect_polys(polys)
+    packed, bboxes, rect_pids = _collect_polys(polys)
     if res is None:
         res = _auto_res(bboxes)
 
-    geo = extract_geo_spans(docs)
-    _, _, is_point = point_xy_native("text")
-    xs, ys, ps = point_xy_sql("text")
-
-    # --- Point spans: identical plan to pip_join_docs ---------------
-    pts = geo.where(ps).selectExpr(
-        "doc_id", "span_pos", f"{xs} AS x", f"{ys} AS y"
-    ).where("x IS NOT NULL AND y IS NOT NULL")
-    pt_pairs = pip_join_points(pts, polys, res=res).selectExpr("doc_id", "span_pos", "poly_id")
-
-    # --- non-Point spans: decode -> cover -> intersects --------------
-    rect_pids = frozenset(pid for pid, (c, ro) in packed.items() if _is_rect_poly(c, ro))
-    cand = _poly_span_candidates(spark, geo, is_point, bboxes, res, rect_pids)
+    pt_pairs = pip_join_docs(docs, polys, res=res).selectExpr("doc_id", "span_pos", "poly_id")
+    cand = _poly_span_candidates(docs, bboxes, rect_pids, res)
     bpolys = spark.sparkContext.broadcast(packed)
 
     @pandas_udf("boolean")
@@ -941,8 +691,8 @@ def pip_join_docs_any(docs: DataFrame, polys: DataFrame, res: int | None = None)
     # of failing the job; spill-to-disk bounds memory; the
     # ContextCleaner unpersists when the plan is released.
     c = cand.persist(StorageLevel.MEMORY_AND_DISK)
-    fast = c.where("rect AND prect").selectExpr("doc_id", "span_pos", "poly_id")
-    slow = c.where("NOT (rect AND prect)").where(
+    fast = c.where("rect AND _prect").selectExpr("doc_id", "span_pos", "poly_id")
+    slow = c.where("NOT (rect AND _prect)").where(
         poly_ok(
             F.col("poly_id"), F.col("rect"),
             F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
@@ -979,13 +729,20 @@ def pip_join_points_shuffle(
 
     gp = polys.select("poly_id", geojson_decode_udf(F.col("geojson")).alias("geom"))
     if res is None:
-        # distributed resolution heuristic: median bbox span via approx
-        b = gp.select(
-            F.col("poly_id"),
-            (F.array_max("geom.coords") - F.array_min("geom.coords")).alias("rough_span"),
-        ).agg(F.expr("percentile_approx(rough_span, 0.5)").alias("med")).collect()[0]
-        med = float(b["med"] or 1.0)
-        res = int(np.clip(np.floor(np.log2(360.0 / max(med, 1e-9))), 0, 24))
+        # _auto_res computed distributed: per-axis bbox extents in
+        # codegen (coords interleave x and y), the approximate median
+        # extent and the largest-area bbox in one aggregate
+        b = gp.selectExpr(
+            "filter(geom.coords, (v, i) -> i % 2 = 0) AS _xs",
+            "filter(geom.coords, (v, i) -> i % 2 = 1) AS _ys",
+        ).selectExpr(
+            "array_min(_xs) AS minx", "array_min(_ys) AS miny",
+            "array_max(_xs) AS maxx", "array_max(_ys) AS maxy",
+        ).selectExpr(
+            "percentile_approx(GREATEST(maxx - minx, maxy - miny), 0.5) AS med",
+            "max_by(struct(minx, miny, maxx, maxy), (maxx - minx) * (maxy - miny)) AS worst",
+        ).collect()[0]
+        res = _span_res(b["med"], tuple(b["worst"])) if b["worst"] else _auto_res({})
     cells = gp.select("poly_id", "geom", F.explode(cells_cover_udf(res)(F.col("geom"))).alias("cell_id"))
 
     pts = points.withColumn("cell_id", cell_id_col(quote_ident(x_col), quote_ident(y_col), res))

@@ -395,16 +395,15 @@ def test_event_rollup_vs_oracle(spark):
 def test_rect_bypass_classification(spark):
     """RectangleIntersects bypass correctness: exact-rect spans against
     exact-rect polys bypass Python; non-rect spans (triangle, L-ish
-    5-point non-rect ring) and rect spans with degenerate/rotated rings
-    still take the geometry path — outputs match the definitional
-    geometry_intersects_polygon on every pair."""
+    5-point non-rect ring, bowtie tour of a box's corners) still take
+    the geometry path — outputs match the definitional
+    geometry_intersects_polygon on every pair.  A doc whose other span
+    is malformed JSON keeps its valid span's pairs."""
     import json as _json
-
-    import numpy as np
 
     from gdal_boots_spark.geom.packed import from_geojson
     from gdal_boots_spark.geom.pip import geometry_intersects_polygon
-    from gdal_boots_spark.operators.spatial_join import _is_rect_poly, pip_join_docs_any
+    from gdal_boots_spark.operators.spatial_join import pip_join_docs_any
 
     def poly_ring(pts):
         return {"type": "Polygon", "coordinates": [pts + [pts[0]]]}
@@ -419,15 +418,25 @@ def test_rect_bypass_classification(spark):
                                                   [26.09, 53.09], [26.01, 53.09], [26.01, 53.01]]]},
         # cross-overlap rect (no vertex of either inside the other)
         "4": poly_ring([[26.0, 53.04], [26.2, 53.04], [26.2, 53.06], [26.0, 53.06]]),
+        # bowtie tour of the unit box's corners: its bbox meets dim 102,
+        # the bowtie itself does not
+        "5": poly_ring([[0.0, 0.0], [1.0, 1.0], [1.0, 0.0], [0.0, 1.0]]),
     }
+
+    def span(text):
+        return {"kind": "geo", "text": text, "media_ref": None, "offset": 1}
+
+    truncated = _json.dumps(spans["4"])[:-9]
     docs = spark.createDataFrame(
-        [(k, [{"kind": "geo", "text": _json.dumps(v), "media_ref": None, "offset": 1}]) for k, v in spans.items()],
+        [(k, [span(_json.dumps(v))]) for k, v in spans.items()]
+        + [("6", [span(truncated), span(_json.dumps(spans["1"]))])],
         "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
     )
     polys = spark.createDataFrame(
         [
             (100, _json.dumps(poly_ring([[26.0, 53.0], [26.1, 53.0], [26.1, 53.1], [26.0, 53.1]]))),  # rect
             (101, _json.dumps(poly_ring([[26.05, 53.0], [26.15, 53.05], [26.05, 53.1]]))),  # triangle dim
+            (102, _json.dumps(poly_ring([[0.45, 0.9], [0.55, 0.9], [0.5, 0.95]]))),  # in the bowtie's notch
         ],
         "poly_id long, geojson string",
     )
@@ -439,11 +448,9 @@ def test_rect_bypass_classification(spark):
         for pid, pp in pr.items():
             if geometry_intersects_polygon(pg, pp):
                 exp.add((k, pid))
-    assert got == exp and len(exp) >= 5
-    # the rect detector itself
-    assert _is_rect_poly(from_geojson(_json.dumps(spans["1"])).coords, np.asarray([0, 5]))
-    assert not _is_rect_poly(from_geojson(_json.dumps(spans["2"])).coords, np.asarray([0, 4]))
-    assert not _is_rect_poly(from_geojson(_json.dumps(spans["3"])).coords, np.asarray([0, 6]))
+    assert ("5", 102) not in exp
+    exp |= {("6", pid) for k, pid in exp if k == "1"}
+    assert got == exp and len(exp) >= 7
 
 
 def test_point_rect_bypass_equals_raycast(spark, monkeypatch):
@@ -476,7 +483,7 @@ def test_point_rect_bypass_equals_raycast(spark, monkeypatch):
     plan = pip_join_points(pts, polys)._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "EvalPython" not in plan
     # force the ray-cast path and compare pair sets
-    monkeypatch.setattr(sj, "_is_rect_poly", lambda c, ro: False)
+    monkeypatch.setattr(sj, "rect_rings", lambda coords, offsets, one_ring: np.zeros(len(offsets) - 1, bool))
     memo.clear()
     slow = {
         (r["point_id"], r["poly_id"])
@@ -495,18 +502,93 @@ def test_point_rect_bypass_equals_raycast(spark, monkeypatch):
     assert probe == exp
 
 
-def test_is_rect_poly_rejects_bowtie():
-    """A bowtie-ordered tour of 4 bbox corners is NOT a rectangle (its
-    even-odd interior differs from the bbox) — the r8 adjacency check."""
-    import numpy as np
+def test_mixed_dim_points_equal_bruteforce(spark):
+    """A dim mixing rectangles with a triangle and an L-shape takes the
+    ray-cast refine over the shared cover relation: pip_join_points
+    equals brute-force points_in_polygon on random points and on every
+    polygon's vertices and edge midpoints (shared edges included)."""
+    import json
 
-    from gdal_boots_spark.operators.spatial_join import _is_rect_poly
+    from gdal_boots_spark.geom.packed import from_geojson
+    from gdal_boots_spark.geom.pip import points_in_polygon
 
-    rect = np.asarray([0.0, 0.0, 1.0, 0.0, 1.0, 1.0, 0.0, 1.0, 0.0, 0.0])
-    bow = np.asarray([0.0, 0.0, 1.0, 1.0, 1.0, 0.0, 0.0, 1.0, 0.0, 0.0])
-    ro = np.asarray([0, 5])
-    assert _is_rect_poly(rect, ro)
-    assert not _is_rect_poly(bow, ro)
+    rings = {
+        1: [[26.0, 53.0], [26.5, 53.0], [26.5, 53.4], [26.0, 53.4]],  # rect
+        2: [[26.5, 53.0], [27.0, 53.0], [27.0, 53.4], [26.5, 53.4]],  # rect sharing an edge
+        3: [[26.2, 53.2], [26.9, 53.3], [26.4, 53.8]],  # triangle
+        4: [[27.0, 53.4], [27.6, 53.4], [27.6, 53.6], [27.2, 53.6], [27.2, 54.0], [27.0, 54.0]],  # L
+    }
+    polys = spark.createDataFrame(
+        [(pid, json.dumps({"type": "Polygon", "coordinates": [r + [r[0]]]})) for pid, r in rings.items()],
+        "poly_id long, geojson string",
+    )
+    rng = np.random.default_rng(17)
+    xy = [tuple(p) for r in rings.values() for p in r]
+    xy += [((a[0] + b[0]) / 2, (a[1] + b[1]) / 2) for r in rings.values() for a, b in zip(r, r[1:] + r[:1])]
+    xy += list(zip(rng.uniform(25.9, 27.7, 600), rng.uniform(52.9, 54.1, 600)))
+    pts = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)], "point_id long, x double, y double"
+    )
+    joined = pip_join_points(pts, polys)
+    assert "ArrowEvalPython" in joined._jdf.queryExecution().executedPlan().toString()
+    got = {(r["point_id"], r["poly_id"]) for r in joined.select("point_id", "poly_id").collect()}
+    px, py = np.asarray(xy).T
+    exp = set()
+    for pid, r in rings.items():
+        pg = from_geojson({"type": "Polygon", "coordinates": [r + [r[0]]]})
+        exp |= {(int(i), pid) for i in np.flatnonzero(points_in_polygon(px, py, pg.coords, pg.ring_offsets))}
+    assert got == exp and len(exp) > 100
+
+
+def test_shuffle_res_matches_auto_res(spark, monkeypatch):
+    """pip_join_points_shuffle picks its cell level from per-axis bbox
+    extents, within one level of the broadcast path's _auto_res for the
+    same dim (a span taken over the interleaved x and y values once read
+    ~27 degrees on the rect dim, level 3 against 9)."""
+    from gdal_boots_spark.functions import geometry_fns
+    from gdal_boots_spark.operators import spatial_join as sj
+
+    levels = []
+    real = geometry_fns.cells_cover_udf
+
+    def spy(res):
+        levels.append(res)
+        return real(res)
+
+    monkeypatch.setattr(geometry_fns, "cells_cover_udf", spy)
+    polys = rect_polygons_df(spark)
+    pts = spark.createDataFrame([(0, 26.5, 53.5)], "point_id long, x double, y double")
+    sj.pip_join_points_shuffle(pts, polys)
+    bboxes = sj._collect_polys(polys)[1]
+    assert len(levels) == 1 and abs(levels[0] - sj._auto_res(bboxes)) <= 1
+
+
+def test_rect_rings_predicate():
+    """geom.pip.rect_rings accepts exactly the closed 5-point rings that
+    tour their bbox's 4 distinct corners along alternating axis-parallel
+    edges, in either direction and from any corner.  A bowtie-ordered
+    tour of the same corners (whose even-odd interior is NOT the bbox),
+    a triangle, a ring with an edge midpoint, a degenerate box, an open
+    ring and a multi-ring row are not rectangles."""
+    from gdal_boots_spark.geom.pip import rect_rings
+
+    rings = {
+        "ccw": ([0, 0, 1, 0, 1, 1, 0, 1, 0, 0], True, True),
+        "cw_from_top": ([0, 2, 3, 2, 3, 0, 0, 0, 0, 2], True, True),
+        "bowtie": ([0, 0, 1, 1, 1, 0, 0, 1, 0, 0], True, False),
+        "triangle": ([0, 0, 1, 0, 0.5, 1, 0, 0], True, False),
+        "midpoint": ([0, 0, 0.5, 0, 1, 0, 1, 1, 0, 1, 0, 0], True, False),
+        "degenerate": ([0, 0, 1, 0, 1, 0, 0, 0, 0, 0], True, False),
+        "open": ([0, 0, 1, 0, 1, 1, 0, 1, 0, 0.5], True, False),
+        "two_rings": ([0, 0, 1, 0, 1, 1, 0, 1, 0, 0], False, False),
+    }
+    flat = [c for c, _, _ in rings.values()]
+    got = rect_rings(
+        np.concatenate([np.asarray(c, np.float64) for c in flat]),
+        np.cumsum([0] + [len(c) for c in flat]),
+        np.asarray([one for _, one, _ in rings.values()]),
+    )
+    assert dict(zip(rings, got.tolist())) == {k: exp for k, (_, _, exp) in rings.items()}
 
 
 def test_hole_polygon_with_whitespace_separators(spark):
@@ -713,22 +795,22 @@ def test_board_oracle_contract():
 
 
 def test_multiring_fast_decode_parity():
-    """VERDICT r6 item 5: the multi-ring Polygon fast path
-    (_decode_fast_batch with per-ring counts) must be BIT-IDENTICAL to
-    the per-row from_geojson fallback across hole polygons in both
-    compact and whitespace serializations, and must leave MultiPolygon
-    / GeometryCollection / malformed rows to the fallback.  (Measured
-    1.98x on the decode stage at 500k spans / 20% multi-ring,
-    interleaved best-of-6 A/B.)"""
+    """_decode_bounds (joined-blob fast path for trailing-coordinates
+    Polygons of any ring count, per-row from_geojson for the rest) must
+    be BIT-IDENTICAL to a reference built row by row from from_geojson:
+    bbox, rect flag and payload (blanked for rectangles), across hole
+    polygons in both compact and whitespace serializations, MultiPolygon
+    and GeometryCollection rows.  None rows and a truncated-JSON row are
+    dropped, not raised."""
     import json
 
-    import numpy as np
     import pyarrow as pa
 
     import gdal_boots_spark.operators.spatial_join as sj
+    from gdal_boots_spark.geom.packed import from_geojson
 
     rng = np.random.default_rng(3)
-    texts = []
+    texts, is_rect = [], []
 
     def poly(rings, sep=(",", ":")):
         return json.dumps({"type": "Polygon", "coordinates": rings}, separators=sep)
@@ -739,13 +821,14 @@ def test_multiring_fast_decode_parity():
         hole = [[cx + 0.2, cy + 0.2], [cx + 0.4, cy + 0.2], [cx + 0.3, cy + 0.4], [cx + 0.2, cy + 0.2]]
         hole2 = [[cx + 0.6, cy + 0.6], [cx + 0.8, cy + 0.6], [cx + 0.7, cy + 0.8], [cx + 0.6, cy + 0.6]]
         k = i % 8
+        is_rect.append(k in (0, 3))
         if k == 0:
             texts.append(poly([outer]))
         elif k == 1:
             texts.append(poly([outer, hole]))
         elif k == 2:
             texts.append(poly([outer, hole, hole2], sep=(", ", ": ")))
-        elif k == 3:  # exact rectangle: payload-blanked rect row
+        elif k == 3:
             texts.append(poly([[[cx, cy], [cx + 2, cy], [cx + 2, cy + 2], [cx, cy + 2], [cx, cy]]]))
         elif k == 4:
             texts.append(json.dumps({"type": "MultiPolygon", "coordinates": [
@@ -758,6 +841,8 @@ def test_multiring_fast_decode_parity():
             texts.append(None)
         else:
             texts.append(poly([outer, hole]).replace(",", ", "))
+    texts.append(poly([outer, hole])[:-7])  # truncated JSON
+    is_rect.append(False)
 
     batch = pa.RecordBatch.from_arrays(
         [pa.array([str(i) for i in range(len(texts))]),
@@ -765,26 +850,32 @@ def test_multiring_fast_decode_parity():
          pa.array(texts)],
         names=["doc_id", "span_pos", "text"],
     )
+    got = {}
+    for rb in sj._decode_bounds([batch]):
+        t = rb.to_pydict()
+        for m in range(rb.num_rows):
+            got[t["doc_id"][m]] = tuple(t[k][m] for k in rb.schema.names[1:])
 
-    def decode(flag):
-        old = sj._FAST_MULTIRING
-        sj._FAST_MULTIRING = flag
+    exp = {}
+    for i, (text, rect) in enumerate(zip(texts, is_rect)):
         try:
-            rows = {}
-            for rb in sj._decode_bounds([batch]):
-                t = rb.to_pydict()
-                for m in range(rb.num_rows):
-                    rows[t["doc_id"][m]] = tuple(
-                        tuple(sorted(t[k][m].items())) if isinstance(t[k][m], dict) else t[k][m]
-                        for k in rb.schema.names
-                    )
-            return rows
-        finally:
-            sj._FAST_MULTIRING = old
-
-    fast = decode(True)
-    slow = decode(False)
-    assert fast == slow and len(fast) == 350  # 50 None rows dropped
+            pg = from_geojson(text) if text is not None else None
+        except ValueError:
+            continue
+        if pg is None:
+            continue
+        xy = pg.coords.reshape(-1, 2)
+        gc = pg.gtype == 7
+        geom = {
+            "gtype": pg.gtype,
+            "coords": [] if rect else pg.coords.tolist(),
+            "ring_offsets": [] if rect else pg.ring_offsets.tolist(),
+            "part_offsets": [] if rect else pg.part_offsets.tolist(),
+            "part_types": pg.part_types.tolist() if gc else [],
+            "child_offsets": pg.child_offsets.tolist() if gc else [],
+        }
+        exp[str(i)] = (i, geom, xy[:, 0].min(), xy[:, 1].min(), xy[:, 0].max(), xy[:, 1].max(), rect)
+    assert got == exp and len(got) == 350  # 50 None rows and the truncated row dropped
 
 
 @pytest.mark.parametrize("name", ["order", "my id"])
