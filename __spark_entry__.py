@@ -79,16 +79,14 @@ def q_pip_join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ray-cast refinement reads each polygon's packed coords from the
     candidate rows.  Output is identical to pip_join, so it shares the
     same analytic oracle."""
-    from gdal_boots_spark.functions.geometry_fns import point_xy_native
+    from gdal_boots_spark.functions.geometry_fns import point_xy_sql
     from gdal_boots_spark.operators.spatial_join import extract_geo_spans, pip_join_points_shuffle
 
     docs = interleaved_docs(spark, sf_dir)
     polys = rect_polygons_df(spark)
     geo = extract_geo_spans(docs)
-    x, y, is_point = point_xy_native(F.col("text"))
-    pts = geo.where(is_point).select("doc_id", x.alias("x"), y.alias("y")).where(
-        F.col("x").isNotNull() & F.col("y").isNotNull()
-    )
+    xs, ys, ps = point_xy_sql("text")
+    pts = geo.where(ps).selectExpr("doc_id", f"{xs} AS x", f"{ys} AS y").where("x IS NOT NULL AND y IS NOT NULL")
     out = pip_join_points_shuffle(pts, polys, salt=4, hot_threshold=50)
     return out.select(F.col("doc_id").cast("long").alias("doc_id"), F.col("poly_id").alias("poly_id"))
 

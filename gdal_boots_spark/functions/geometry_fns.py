@@ -2,11 +2,13 @@
 
 Two tiers, per the engine's "UDFs are the slow path" rule:
 
-* **Native Column expressions** where the math is pure arithmetic —
-  cell ids (``cell_id_col``) stay entirely in whole-stage codegen; no
-  Python is involved at runtime.
+* **SQL-string expressions** where the math is pure arithmetic or
+  string ops — Point coordinates (``point_xy_sql``) and cell ids
+  (``cell_id_sql``, built in ``geom.cells`` with the rest of the cell
+  grid) stay entirely in whole-stage codegen; no Python is involved at
+  runtime.
 * **Arrow-batched pandas UDFs** for the NumPy kernels (GeoJSON codec,
-  CRS transform, bbox, covering) — Series/DataFrame in, never per-row
+  CRS transform, bbox) — Series/DataFrame in, never per-row
   Python on the Spark side (reference contrast: gdal_boots transforms
   one feature per C call in a Python loop, gdal.py:1316-1325).
 """
@@ -17,21 +19,19 @@ import json
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     ByteType,
     DoubleType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
 )
 
-from ..geom import cells as _cells
 from ..geom import crs as _crs
+from ..geom.cells import cell_id_sql  # noqa: F401  (re-exported: the cell id as SQL)
 from ..geom.packed import PackedGeometry, from_geojson, to_geojson
 
 GEOMETRY_TYPE = StructType(
@@ -73,58 +73,9 @@ def quote_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def cell_id_sql(lon: str, lat: str, res: int) -> str:
-    """The cell-id arithmetic as ONE SQL string (server-side parsed).
-
-    Semantically identical to the Column form below, but building a
-    deep Column tree costs ~25 py4j round-trips (~0.7s measured on a
-    loaded driver) while F.expr of this string costs one — complex
-    plans are BUILD-time bound on the driver (CLAUDE.md cold-plan
-    gotcha), so the hot operators pass column-name strings."""
-    n = 1 << res
-    return (
-        f"(CAST({res} AS BIGINT) * 288230376151711744 + "
-        f"CAST(LEAST(GREATEST(FLOOR(({lon} + 180.0) / 360.0 * {n}), 0), {n - 1}) AS BIGINT)"
-        f" * 536870912 + "
-        f"CAST(LEAST(GREATEST(FLOOR(({lat} + 90.0) / 180.0 * {n}), 0), {n - 1}) AS BIGINT))"
-    )
-
-
-def cell_id_col(lon, lat, res: int):
-    """Cell id as a pure Column expression (no UDF) — same arithmetic
-    as geom.cells.cell_id and as the DuckDB oracle SQL form.  Pass
-    column-name/SQL-fragment STRINGS to get the single-round-trip
-    F.expr build (cell_id_sql); Column inputs keep the tree form."""
-    if isinstance(lon, str) and isinstance(lat, str):
-        return F.expr(cell_id_sql(lon, lat, res)).alias("cell_id")
-    n = 1 << res
-    ix = F.least(F.greatest(F.floor((lon + F.lit(180.0)) / F.lit(360.0) * n), F.lit(0)), F.lit(n - 1))
-    iy = F.least(F.greatest(F.floor((lat + F.lit(90.0)) / F.lit(180.0) * n), F.lit(0)), F.lit(n - 1))
-    return (F.lit(res).cast(LongType()) * F.lit(2**58) + ix.cast(LongType()) * F.lit(2**29) + iy.cast(LongType())).alias(
-        "cell_id"
-    )
-
-
 def point_xy_sql(text: str = "text") -> tuple[str, str, str]:
-    """(x, y, is_point) as SQL-fragment strings — semantics identical
-    to point_xy_native below (same short-circuit, same parse), one
-    server-side parse per fragment instead of ~25 py4j round-trips."""
-    inner = f"substring_index(substring_index({text}, '[', -1), ']', 1)"
-    is_point = (
-        f"(startswith({text}, '{{\"type\":\"Point\"') OR "
-        f"(contains({text}, '\"Point\"') AND NOT contains({text}, '\"GeometryCollection\"')))"
-    )
-    return (
-        f"CAST(split({inner}, ',')[0] AS DOUBLE)",
-        f"CAST(split({inner}, ',')[1] AS DOUBLE)",
-        is_point,
-    )
-
-
-def point_xy_native(text):
-    """(x, y, is_point) for a GeoJSON Point string — pure string ops.
-    Pass a column-name/SQL-fragment STRING to build each output as one
-    F.expr (point_xy_sql); a Column input keeps the tree form.
+    """(x, y, is_point) SQL fragments for a GeoJSON Point string — pure
+    string ops, one server-side parse per fragment.
 
     Measured on this box: Spark's ``from_json`` does not scale with
     cores (JacksonParser contention: 7.0s @8 cores -> 8.3s @32 on 6M
@@ -142,15 +93,16 @@ def point_xy_native(text):
     # interleaved A/B).  The trailing quote in the prefix blocks
     # "PointX"-style false positives; non-canonical forms (whitespace,
     # reordered keys) fall through to the exact two-scan predicate.
-    if isinstance(text, str):
-        xs, ys, ps = point_xy_sql(text)
-        return F.expr(xs), F.expr(ys), F.expr(ps)
-    is_point = text.startswith('{"type":"Point"') | (
-        text.contains('"Point"') & ~text.contains('"GeometryCollection"')
+    inner = f"substring_index(substring_index({text}, '[', -1), ']', 1)"
+    is_point = (
+        f"(startswith({text}, '{{\"type\":\"Point\"') OR "
+        f"(contains({text}, '\"Point\"') AND NOT contains({text}, '\"GeometryCollection\"')))"
     )
-    inner = F.substring_index(F.substring_index(text, "[", -1), "]", 1)
-    parts = F.split(inner, ",")
-    return parts[0].cast("double"), parts[1].cast("double"), is_point
+    return (
+        f"CAST(split({inner}, ',')[0] AS DOUBLE)",
+        f"CAST(split({inner}, ',')[1] AS DOUBLE)",
+        is_point,
+    )
 
 
 # --- pandas UDFs ---------------------------------------------------------
@@ -227,25 +179,6 @@ def geom_bounds_udf(g: pd.DataFrame) -> pd.DataFrame:
         minx[i], miny[i] = a.min(axis=0)
         maxx[i], maxy[i] = a.max(axis=0)
     return pd.DataFrame({"minx": minx, "miny": miny, "maxx": maxx, "maxy": maxy})
-
-
-def cells_cover_udf(res: int):
-    """Factory: packed geometry struct -> array<long> covering cell ids
-    at resolution `res` (bbox cover; safe superset — SURVEY §2.9)."""
-
-    @pandas_udf(ArrayType(LongType()))
-    def _cover(g: pd.DataFrame) -> pd.Series:
-        out = []
-        for c in g["coords"]:
-            if c is None or len(c) == 0:
-                out.append(None)
-                continue
-            a = np.asarray(c, dtype=np.float64).reshape(-1, 2)
-            mn, mx = a.min(axis=0), a.max(axis=0)
-            out.append(_cells.cover_bbox(mn[0], mn[1], mx[0], mx[1], res))
-        return pd.Series(out)
-
-    return _cover
 
 
 def transform_geom_udf(src, dst):

@@ -16,6 +16,13 @@ Deterministic, versioned (v1): ids appear in persisted outputs
 ``ring(cell, k)`` gives the Chebyshev-distance-k neighbourhood used by
 the grid-pruned kNN expansion; ix wraps across the antimeridian, iy
 clamps at the poles.
+
+The ``*_sql`` builders at the end are the Spark side of the same grid:
+they take column names or SQL fragments and return Spark SQL strings
+(one server-side parse per fragment instead of a py4j Column tree),
+built from the same constants.  No other Spark code spells the format
+out.  A level is an int (range-checked like ``cell_id``) or a per-row
+SQL expression; ``n`` (2^level) may name a column holding it.
 """
 
 from __future__ import annotations
@@ -26,6 +33,21 @@ CELL_RES_BITS = 58
 _IX_SHIFT = 2**29
 _RES_SHIFT = 2**58
 MAX_RES = 28
+
+
+def _check_res(res: int) -> int:
+    if not (0 <= res <= MAX_RES):
+        raise ValueError(f"res must be in [0,{MAX_RES}]")
+    return res
+
+
+def level_for_edge(edge, span: float = 360.0) -> int:
+    """Finest level whose cell edge (span / 2^level) is at least ``edge``:
+    floor(log2(span / edge)) clipped to [0, MAX_RES]; a zero, negative or
+    missing edge gets MAX_RES."""
+    if not edge or edge <= 0:
+        return MAX_RES
+    return int(np.clip(np.floor(np.log2(span / edge)), 0, MAX_RES))
 
 
 def _grid(lon, lat, res: int):
@@ -39,9 +61,7 @@ def _grid(lon, lat, res: int):
 
 def cell_id(lon, lat, res: int):
     """lon/lat arrays -> int64 cell ids at resolution `res`."""
-    if not (0 <= res <= MAX_RES):
-        raise ValueError(f"res must be in [0,{MAX_RES}]")
-    ix, iy = _grid(lon, lat, res)
+    ix, iy = _grid(lon, lat, _check_res(res))
     return np.int64(res) * _RES_SHIFT + ix * _IX_SHIFT + iy
 
 
@@ -115,3 +135,81 @@ def ring(cid: int, k: int) -> np.ndarray:
     gx, gy = np.meshgrid((ix + dxs) % n, iy + dxs, indexing="ij")
     keep = (gy >= 0) & (gy < n)
     return compose(res, gx[keep], gy[keep])
+
+
+# --- Spark SQL builders --------------------------------------------------
+
+
+def grid_n_sql(level):
+    """2^level: an int for an int level, SQL for a per-row level."""
+    if isinstance(level, str):
+        return f"SHIFTLEFT(CAST(1 AS BIGINT), {level})"
+    return 1 << _check_res(level)
+
+
+def _index_sql(v: str, off: str, span: str, level, n, clamp: bool = True) -> str:
+    n = grid_n_sql(level) if n is None else n
+    idx = f"FLOOR((({v}) + {off}) / {span} * {n})"
+    if not clamp:
+        return f"CAST({idx} AS BIGINT)"
+    top = n - 1 if isinstance(n, int) else f"{n} - 1"
+    return f"CAST(LEAST(GREATEST({idx}, 0), {top}) AS BIGINT)"
+
+
+def cell_x_sql(lon: str, level, n=None, clamp: bool = True) -> str:
+    """ix of ``lon`` at ``level``, clamped to [0, n-1] like ``_grid``;
+    ``clamp=False`` keeps the raw floor for callers that wrap x mod n."""
+    return _index_sql(lon, "180.0D", "360.0D", level, n, clamp)
+
+
+def cell_y_sql(lat: str, level, n=None) -> str:
+    """iy of ``lat`` at ``level``, clamped to [0, n-1]."""
+    return _index_sql(lat, "90.0D", "180.0D", level, n)
+
+
+def compose_sql(level, ix: str, iy: str) -> str:
+    """level, ix, iy -> cell id (``compose``)."""
+    if not isinstance(level, str):
+        _check_res(level)
+    return f"(CAST({level} AS BIGINT) * {_RES_SHIFT} + ({ix}) * {_IX_SHIFT} + ({iy}))"
+
+
+def cell_id_sql(lon: str, lat: str, res: int) -> str:
+    """Point -> cell id at ``res`` (``cell_id``)."""
+    return compose_sql(res, cell_x_sql(lon, res), cell_y_sql(lat, res))
+
+
+def bbox_level_sql(minx: str, miny: str, maxx: str, maxy: str, lo: int, hi: int) -> str:
+    """Per-row finest level in [lo, hi] whose cell edge is at least the
+    bbox extent on both axes (y cells are half the x edge, hence 180/h),
+    so the bbox covers <= 2x2 cells at that level unless ``lo`` clamps."""
+    _check_res(lo)
+    _check_res(hi)
+    return (
+        f"GREATEST({lo}, LEAST({hi}, CAST(FLOOR(LOG2(LEAST("
+        f"360.0D / GREATEST(({maxx}) - ({minx}), 1e-12D), "
+        f"180.0D / GREATEST(({maxy}) - ({miny}), 1e-12D)))) AS INT)))"
+    )
+
+
+def cover_explode_sql(minx: str, miny: str, maxx: str, maxy: str, level, n=None):
+    """The bbox-range cover (``cover_bbox``) as SQL: the select items of
+    two selectExpr steps (explode cannot nest) and the cell id over
+    their outputs.  Step 1 explodes ix to ``_ix`` and carries the iy
+    range as ``_iy0``/``_iy1``; step 2 explodes ``_iy``."""
+    x0, x1 = cell_x_sql(minx, level, n), cell_x_sql(maxx, level, n)
+    return (
+        [f"explode(sequence({x0}, {x1})) AS _ix",
+         f"{cell_y_sql(miny, level, n)} AS _iy0", f"{cell_y_sql(maxy, level, n)} AS _iy1"],
+        ["explode(sequence(_iy0, _iy1)) AS _iy"],
+        compose_sql(level, "_ix", "_iy"),
+    )
+
+
+def reporting_cell_sql(minxs, minys, level, n=None) -> str:
+    """Cell id at ``level`` of the lower-left corner of an intersection
+    of bboxes with min corners ``minxs``/``minys``.  Two overlapping
+    boxes share exactly one such cell, so a pair met in several shared
+    cells is kept only there (dedup without a shuffle)."""
+    cx, cy = (f"GREATEST({', '.join(v)})" for v in (minxs, minys))
+    return compose_sql(level, cell_x_sql(cx, level, n), cell_y_sql(cy, level, n))

@@ -3,13 +3,13 @@ range/interval join realized as cell-bucket equi-join + exact
 refinement predicate" (the standard OSS-Spark pattern, cf. PAPERS.md
 "Raster Intervals").
 
-Both sides explode to covering cells at one resolution — **entirely in
-native Column math** (sequence/transform over the ix/iy ranges; no
-UDF) — then hash-join on cell_id, refine with the exact interval
-predicate, and de-duplicate WITHOUT a distinct shuffle via the
-reporting-cell trick: a pair is emitted only in the unique cell that
-contains the intersection's (max(minx), max(miny)) corner, so each
-overlapping pair appears exactly once.
+Both sides explode to covering cells at one resolution — entirely in
+codegen, through the one cell-grid SQL builder (geom.cells: sequence
+over the ix/iy ranges; no UDF) — then hash-join on cell_id, refine with
+the exact interval predicate, and de-duplicate WITHOUT a distinct
+shuffle via the reporting-cell trick: a pair is emitted only in the
+unique cell that contains the intersection's (max(minx), max(miny))
+corner, so each overlapping pair appears exactly once.
 """
 
 from __future__ import annotations
@@ -20,33 +20,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import memo
+from ..geom import cells
 
 
-def _cell_x_sql(v: str, res: int) -> str:
-    n = 1 << res
-    return f"CAST(LEAST(GREATEST(FLOOR(({v} + 180.0D) / 360.0D * {n}), 0), {n - 1}) AS BIGINT)"
+def _cover(df: DataFrame, p: str, level) -> DataFrame:
+    """bbox columns ``{p}minx..{p}maxy`` -> one row per covering cell
+    at ``level`` (an int, or a per-row level column), as server-parsed
+    SQL strings: the Column-tree form cost ~400 py4j round trips per
+    join build on the cold-plan profile (r8)."""
+    s1, s2, cid = cells.cover_explode_sql(f"{p}minx", f"{p}miny", f"{p}maxx", f"{p}maxy", level)
+    out = df.selectExpr("*", *s1).selectExpr("*", *s2)
+    return out.selectExpr("*", f"{cid} AS cell_id").drop("_ix", "_iy", "_iy0", "_iy1")
 
 
-def _cell_y_sql(v: str, res: int) -> str:
-    n = 1 << res
-    return f"CAST(LEAST(GREATEST(FLOOR(({v} + 90.0D) / 180.0D * {n}), 0), {n - 1}) AS BIGINT)"
-
-
-def _explode_cover(df: DataFrame, res: int, prefix: str) -> DataFrame:
-    """bbox columns -> one row per covering cell (native sequence math).
-
-    Server-side-parsed SQL strings (r8): the Column-tree form of the
-    same expressions cost ~400 py4j round trips per join build on the
-    cold-plan profile; the emitted plan is identical."""
-    out = df.selectExpr(
-        "*",
-        f"explode(sequence({_cell_x_sql(prefix + 'minx', res)}, {_cell_x_sql(prefix + 'maxx', res)})) AS _ix",
-        f"{_cell_y_sql(prefix + 'miny', res)} AS _iy0",
-        f"{_cell_y_sql(prefix + 'maxy', res)} AS _iy1",
-    ).selectExpr("*", "explode(sequence(_iy0, _iy1)) AS _iy")
-    return out.selectExpr(
-        "*", f"{res}L * {2**58}L + _ix * {2**29}L + _iy AS cell_id"
-    ).drop("_ix", "_iy", "_iy0", "_iy1")
+_OVERLAP = "lminx <= rmaxx AND rminx <= lmaxx AND lminy <= rmaxy AND rminy <= lmaxy"
 
 
 def auto_res(left: DataFrame, right: DataFrame, sample: int = 1024) -> int:
@@ -60,7 +47,7 @@ def auto_res(left: DataFrame, right: DataFrame, sample: int = 1024) -> int:
     smaller multiply the cover explode (res=14: 2.3M cover rows, 30.7M
     join rows).  cell ~ rect bottoms the trade: res=12 = 19.0M join
     rows / 1575 cells, measured -40% wall vs res=10 (clean-window
-    interleaved probe, scripts/bbox_res_probe.py, BENCH/BASELINE.md).
+    interleaved probe, BENCH/BASELINE.md).
     Two bounded `limit(sample)` scans; their cost (~2 tiny jobs, whose
     ~0.3-0.6 s of scheduling latency would otherwise re-run on every
     join build) is paid once per (session, input pair) — memoised."""
@@ -81,13 +68,8 @@ def _sample_edges(left: DataFrame, right: DataFrame, sample: int) -> list:
     """(w, h) of up to ``sample`` rects from each side."""
     out = []
     for df, p in ((left, "l"), (right, "r")):
-        out.extend(
-            (r["w"], r["h"])
-            for r in df.select(
-                (F.col(f"{p}maxx") - F.col(f"{p}minx")).alias("w"),
-                (F.col(f"{p}maxy") - F.col(f"{p}miny")).alias("h"),
-            ).limit(sample).collect()
-        )
+        rows = df.selectExpr(f"{p}maxx - {p}minx AS w", f"{p}maxy - {p}miny AS h").limit(sample).collect()
+        out.extend((r["w"], r["h"]) for r in rows)
     return out
 
 
@@ -104,68 +86,12 @@ def bbox_overlap_join(left: DataFrame, right: DataFrame, res: int | None = 10) -
     # well-partitioned inputs and for tiny correctness-SF seeds)
     from ..partitioning import spread_small_scan
 
-    lc = _explode_cover(spread_small_scan(left), res, "l")
-    rc = _explode_cover(spread_small_scan(right), res, "r")
-    j = lc.join(rc, "cell_id")
+    lc = _cover(spread_small_scan(left), "l", res)
+    rc = _cover(spread_small_scan(right), "r", res)
     # exact overlap + reporting cell (the one containing the
     # intersection's lower-left) in ONE server-parsed filter string
-    keep = (
-        "lminx <= rmaxx AND rminx <= lmaxx AND lminy <= rmaxy AND rminy <= lmaxy "
-        f"AND cell_id = {res}L * {2**58}L "
-        f"+ {_cell_x_sql('GREATEST(lminx, rminx)', res)} * {2**29}L "
-        f"+ {_cell_y_sql('GREATEST(lminy, rminy)', res)}"
-    )
-    return j.where(keep).drop("cell_id")
-
-
-def _rect_level(prefix: str, lo: int, hi: int):
-    """Per-row finest level in [lo, hi] whose cell covers the rect in
-    <= 2 cells per axis (cell edge >= rect edge; y cells are half the
-    x edge, hence the 180/h term) — the bbox twin of the poly path's
-    adaptive span level (spatial_join.py)."""
-    w = F.greatest(F.col(f"{prefix}maxx") - F.col(f"{prefix}minx"), F.lit(1e-12))
-    h = F.greatest(F.col(f"{prefix}maxy") - F.col(f"{prefix}miny"), F.lit(1e-12))
-    lx = F.floor(F.log2(F.lit(360.0) / w))
-    ly = F.floor(F.log2(F.lit(180.0) / h))
-    return F.least(F.greatest(F.least(lx, ly), F.lit(lo)), F.lit(hi)).cast("int")
-
-
-def _explode_cover_multi(df: DataFrame, lo: int, hi: int, prefix: str) -> DataFrame:
-    """bbox columns -> covering cells at EVERY level in [lo, own_level]
-    (level embedded in cell_id; `{prefix}lvl` carries the rect's own
-    level).  For any rect whose edge fits a cell at some level >= lo
-    (auto_levels sizes lo from the sampled max edge) the cover is
-    <= 2x2 cells at its own level and every coarser one, i.e.
-    <= 4*(hi-lo+1) rows; rects LARGER than every sampled edge can still
-    exceed that bound (they explode as (size/cell)^2 at lo)."""
-    own = _rect_level(prefix, lo, hi).alias(f"{prefix}lvl")
-    out = df.select("*", own).select(
-        "*", F.explode(F.sequence(F.lit(lo), F.col(f"{prefix}lvl"))).alias("_lvl")
-    )
-    n = F.pow(F.lit(2.0), F.col("_lvl")).cast("long")
-
-    def part(v, offs, span):
-        return F.least(
-            F.greatest(F.floor((v + F.lit(offs)) / span * n), F.lit(0)), n - F.lit(1)
-        ).cast("long")
-
-    out = out.select(
-        "*",
-        F.explode(
-            F.sequence(
-                part(F.col(f"{prefix}minx"), 180.0, 360.0),
-                part(F.col(f"{prefix}maxx"), 180.0, 360.0),
-            )
-        ).alias("_ix"),
-        part(F.col(f"{prefix}miny"), 90.0, 180.0).alias("_iy0"),
-        part(F.col(f"{prefix}maxy"), 90.0, 180.0).alias("_iy1"),
-    ).select("*", F.explode(F.sequence(F.col("_iy0"), F.col("_iy1"))).alias("_iy"))
-    cell = (
-        F.col("_lvl").cast("long") * F.lit(2**58)
-        + F.col("_ix") * F.lit(2**29)
-        + F.col("_iy")
-    )
-    return out.withColumn("cell_id", cell).drop("_ix", "_iy", "_iy0", "_iy1", "_lvl")
+    rep = cells.reporting_cell_sql(("lminx", "rminx"), ("lminy", "rminy"), res)
+    return lc.join(rc, "cell_id").where(f"{_OVERLAP} AND cell_id = {rep}").drop("cell_id")
 
 
 def auto_levels(left: DataFrame, right: DataFrame, sample: int = 1024) -> tuple[int, int]:
@@ -216,31 +142,17 @@ def bbox_overlap_join_adaptive(
     lo, hi = levels
     from ..partitioning import spread_small_scan
 
-    lc = _explode_cover_multi(spread_small_scan(left), lo, hi, "l")
-    rc = _explode_cover_multi(spread_small_scan(right), lo, hi, "r")
-    j = lc.join(rc, "cell_id")
-    overlap = (
-        (F.col("lminx") <= F.col("rmaxx"))
-        & (F.col("rminx") <= F.col("lmaxx"))
-        & (F.col("lminy") <= F.col("rmaxy"))
-        & (F.col("rminy") <= F.col("lmaxy"))
-    )
-    m = F.least(F.col("llvl"), F.col("rlvl")).cast("long")
-    cell_lvl = F.floor(F.col("cell_id") / F.lit(2**58)).cast("long")
-    n = F.pow(F.lit(2.0), m).cast("long")
-    cx = F.greatest(F.col("lminx"), F.col("rminx"))
-    cy = F.greatest(F.col("lminy"), F.col("rminy"))
-    rep_x = F.least(
-        F.greatest(F.floor((cx + F.lit(180.0)) / 360.0 * n), F.lit(0)), n - F.lit(1)
-    ).cast("long")
-    rep_y = F.least(
-        F.greatest(F.floor((cy + F.lit(90.0)) / 180.0 * n), F.lit(0)), n - F.lit(1)
-    ).cast("long")
-    rep = m * F.lit(2**58) + rep_x * F.lit(2**29) + rep_y
-    return (
-        j.where(overlap & (cell_lvl == m) & (F.col("cell_id") == rep))
-        .drop("cell_id", "llvl", "rlvl")
-    )
+    def cover(df, p):
+        # the rect's own level, then one cover per level in [lo, own]
+        lvl = cells.bbox_level_sql(f"{p}minx", f"{p}miny", f"{p}maxx", f"{p}maxy", lo, hi)
+        df = df.selectExpr("*", f"{lvl} AS {p}lvl").selectExpr("*", f"explode(sequence({lo}, {p}lvl)) AS _lvl")
+        return _cover(df, p, "_lvl").drop("_lvl")
+
+    lc = cover(spread_small_scan(left), "l")
+    rc = cover(spread_small_scan(right), "r")
+    # counted once: at the coarser rect's level, in the reporting cell
+    rep = cells.reporting_cell_sql(("lminx", "rminx"), ("lminy", "rminy"), "LEAST(llvl, rlvl)")
+    return lc.join(rc, "cell_id").where(f"{_OVERLAP} AND cell_id = {rep}").drop("cell_id", "llvl", "rlvl")
 
 
 def intersects_join(left: DataFrame, right: DataFrame, res: int | None = None) -> DataFrame:

@@ -36,9 +36,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import memo
-from ..functions.geometry_fns import cell_id_col, quote_ident
 from ..functions.geometry_fns import double_lit_sql as _dlit
-from ..geom.cells import MAX_RES
+from ..functions.geometry_fns import quote_ident
+from ..geom.cells import cell_id_sql, cell_x_sql, cell_y_sql, compose_sql, level_for_edge
 
 
 def _auto_res(n_base: int, bbox, k: int) -> int:
@@ -49,9 +49,7 @@ def _auto_res(n_base: int, bbox, k: int) -> int:
     w, h = maxx - minx, maxy - miny
     area = max(w * h, 1e-12)
     target_cell_area = area * max(k, 8) / max(n_base, 1)
-    cell_deg = max(float(np.sqrt(target_cell_area)), w / 32.0, h / 32.0, 1e-9)
-    res = int(np.clip(np.floor(np.log2(360.0 / cell_deg)), 0, MAX_RES))
-    return res
+    return level_for_edge(max(float(np.sqrt(target_cell_area)), w / 32.0, h / 32.0))
 
 
 def _annulus_cells_sql(res: int, r_in: int, r_out) -> str:
@@ -78,9 +76,7 @@ def _annulus_cells_sql(res: int, r_in: int, r_out) -> str:
     n = 1 << res
     ro = r_out if isinstance(r_out, str) else str(int(r_out))
     ri = str(int(r_in))
-    base = res * (2**58)
-    ix = f"least(greatest(floor(((x + 180.0) / 360.0) * {n}), 0), {n - 1})"
-    iy = f"least(greatest(floor(((y + 90.0) / 180.0) * {n}), 0), {n - 1})"
+    ix, iy = cell_x_sql("x", res), cell_y_sql("y", res)
     lo, hi = -(n // 2), (n - 1) // 2
     return (
         f"filter("
@@ -89,9 +85,16 @@ def _annulus_cells_sql(res: int, r_in: int, r_out) -> str:
         f"      CASE WHEN greatest(abs(dx), abs(dy)) > ({ri})"
         f"            AND {iy} + dy >= 0 AND {iy} + dy < {n}"
         f"            AND ((2 * ({ro}) + 1) <= {n} OR (dx >= {lo} AND dx <= {hi}))"
-        f"      THEN {base} + pmod({ix} + dx, {n}) * 536870912 + {iy} + dy"
+        f"      THEN {compose_sql(res, f'pmod({ix} + dx, {n})', iy)} + dy"
         f"      END))),"
         f"  c -> c IS NOT NULL)"
+    )
+
+
+def _base_cells(base: DataFrame, b_id: str, res: int) -> DataFrame:
+    """base(b_id, x, y) -> (bid, bx, by, cell_id at ``res``)."""
+    return base.selectExpr(
+        f"{quote_ident(b_id)} AS bid", "x AS bx", "y AS by", f"{cell_id_sql('x', 'y', res)} AS cell_id"
     )
 
 
@@ -172,12 +175,7 @@ def knn_join(
 
     # build mechanics as server-parsed SQL strings (r8: the Column-tree
     # form cost ~700 py4j round trips per cold build; identical plan)
-    from ..functions.geometry_fns import cell_id_sql
-
-    basec = base.selectExpr(
-        f"{quote_ident(b_id)} AS bid", "x AS bx", "y AS by",
-        f"{cell_id_sql('x', 'y', res)} AS cell_id",
-    )
+    basec = _base_cells(base, b_id, res)
     q0 = query.selectExpr(f"{quote_ident(q_id)} AS qid", "x", "y")
 
     # a query can never hold more than |base| neighbours; a radius of
@@ -261,17 +259,12 @@ def radius_join(
     if res is None:
         # cell edge ~ radius: the block is 3x3-ish; finer cells blow up
         # the explode, coarser ones the candidate count
-        res = int(np.clip(np.floor(np.log2(360.0 / max(radius, 1e-9))), 0, MAX_RES))
+        res = level_for_edge(radius)
     n = 1 << res
     cell_w, cell_h = 360.0 / n, 180.0 / n
     r_cells = int(np.ceil(radius / min(cell_w, cell_h)))
 
-    from ..functions.geometry_fns import cell_id_sql
-
-    basec = base.selectExpr(
-        f"{quote_ident(b_id)} AS bid", "x AS bx", "y AS by",
-        f"{cell_id_sql('x', 'y', res)} AS cell_id",
-    )
+    basec = _base_cells(base, b_id, res)
     blocks = query.selectExpr(
         f"{quote_ident(q_id)} AS qid", "x", "y",
         f"explode({_annulus_cells_sql(res, -1, r_cells)}) AS cell_id",
@@ -289,10 +282,11 @@ def radius_join(
 EARTH_MEAN_RADIUS_M = 6371008.8  # IUGG mean radius (PROJ's default sphere)
 
 
-def _meter_blocks(query: DataFrame, q_id: str, res: int, n: int, dlat_deg: float, dlon_deg):
+def _meter_blocks(query: DataFrame, q_id: str, res: int, dlat_deg: float, dlon_sql: str):
     """Per-query latitude-aware cell block for the metric radius joins:
     explode every (qid, x, y) to the distinct cell ids of the
-    [x ± dlon_deg(col), y ± dlat_deg] degree box at resolution ``res``.
+    [x ± dlon, y ± dlat_deg] degree box at resolution ``res``, where
+    ``dlon_sql`` is a per-row SQL expression over ``y``.
 
     x indices are NOT clamped: the sequence runs over the raw index
     range and each exploded index wraps modulo n when composing the
@@ -301,26 +295,18 @@ def _meter_blocks(query: DataFrame, q_id: str, res: int, n: int, dlat_deg: float
     full-circle block from listing any wrapped cell twice (the
     no-dedup-shuffle guarantee relies on distinct cells per query).
     """
-    def clampi(v, hi):
-        return F.least(F.greatest(v, F.lit(0)), F.lit(hi)).cast("long")
-
-    ix0 = F.floor((F.col("x") - dlon_deg + 180.0) / 360.0 * n).cast("long")
-    ix1 = F.least(
-        F.floor((F.col("x") + dlon_deg + 180.0) / 360.0 * n).cast("long"),
-        ix0 + F.lit(n - 1),
-    )
-    iy0 = clampi(F.floor((F.col("y") - F.lit(dlat_deg) + 90.0) / 180.0 * n), n - 1)
-    iy1 = clampi(F.floor((F.col("y") + F.lit(dlat_deg) + 90.0) / 180.0 * n), n - 1)
-    base_id = F.lit(res).cast("long") * F.lit(2**58)
-    wx = (F.col("_ix") % n + n) % n
+    n = 1 << res
+    ix0 = cell_x_sql(f"x - ({dlon_sql})", res, clamp=False)
+    ix1 = cell_x_sql(f"x + ({dlon_sql})", res, clamp=False)
+    dlat = _dlit(dlat_deg)
     return (
-        query.select(F.col(q_id).alias("qid"), "x", "y", ix0.alias("_ix0"), ix1.alias("_ix1"),
-                     iy0.alias("_iy0"), iy1.alias("_iy1"))
-        .select("qid", "x", "y", F.explode(F.sequence(F.col("_ix0"), F.col("_ix1"))).alias("_ix"),
-                "_iy0", "_iy1")
-        .select("qid", "x", "y", "_ix",
-                F.explode(F.sequence(F.col("_iy0"), F.col("_iy1"))).alias("_iy"))
-        .select("qid", "x", "y", (base_id + wx * F.lit(2**29) + F.col("_iy")).alias("cell_id"))
+        query.selectExpr(
+            f"{quote_ident(q_id)} AS qid", "x", "y",
+            f"explode(sequence({ix0}, LEAST({ix1}, {ix0} + {n - 1}))) AS _ix",
+            f"{cell_y_sql(f'y - {dlat}', res)} AS _iy0", f"{cell_y_sql(f'y + {dlat}', res)} AS _iy1",
+        )
+        .selectExpr("qid", "x", "y", "_ix", "explode(sequence(_iy0, _iy1)) AS _iy")
+        .selectExpr("qid", "x", "y", f"{compose_sql(res, f'pmod(_ix, {n})', '_iy')} AS cell_id")
     )
 
 
@@ -392,21 +378,16 @@ def radius_join_meters(
         m_min = e_a * (1.0 - e2)
         dlat_deg = radius_m / (m_min * math.pi / 180.0) * (1.0 + 1e-9)
         if res is None:
-            res = int(np.clip(np.floor(np.log2(180.0 / max(dlat_deg, 1e-12))), 0, MAX_RES))
-        n = 1 << res
+            res = level_for_edge(dlat_deg, 180.0)
 
-        basec = base.select(
-            F.col(b_id).alias("bid"), F.col("x").alias("bx"), F.col("y").alias("by"),
-            cell_id_col("x", "y", res),
-        )
-        phimax = F.least(F.abs(F.col("y")) + F.lit(dlat_deg), F.lit(90.0))
-        cosmax = F.cos(F.radians(phimax))
+        basec = _base_cells(base, b_id, res)
+        cosmax = f"cos(radians(LEAST(abs(y) + {_dlit(dlat_deg)}, 90.0D)))"
         lim = radius_m / (e_a * math.pi / 180.0) * (1.0 + 1e-9)
-        dlon_deg = F.when(cosmax * F.lit(e_a * math.pi / 180.0) <= F.lit(radius_m / 180.0),
-                          F.lit(180.0)).otherwise(
-            F.least(F.lit(180.0), F.lit(lim) / cosmax)
+        dlon_sql = (
+            f"CASE WHEN {cosmax} * {_dlit(e_a * math.pi / 180.0)} <= {_dlit(radius_m / 180.0)} THEN 180.0D "
+            f"ELSE LEAST(180.0D, {_dlit(lim)} / {cosmax}) END"
         )
-        blocks = _meter_blocks(query, q_id, res, n, dlat_deg, dlon_deg)
+        blocks = _meter_blocks(query, q_id, res, dlat_deg, dlon_sql)
 
         from pyspark.sql.functions import pandas_udf
 
@@ -432,13 +413,9 @@ def radius_join_meters(
     # haversine refinement is the truth)
     dlat_deg = radius_m / (sphere_r * math.pi / 180.0) * (1.0 + 1e-9)
     if res is None:
-        res = int(np.clip(np.floor(np.log2(180.0 / max(dlat_deg, 1e-12))), 0, MAX_RES))
-    n = 1 << res
+        res = level_for_edge(dlat_deg, 180.0)
 
-    basec = base.select(
-        F.col(b_id).alias("bid"), F.col("x").alias("bx"), F.col("y").alias("by"),
-        cell_id_col("x", "y", res),
-    )
+    basec = _base_cells(base, b_id, res)
     # latitude-aware per-point degree bbox.  The EXACT max longitude
     # extent of the cap is asin(sin(r/R)/cos(lat)) — the linearized
     # dlat/cos(lat) bound is ~z^2/6 SMALLER and could drop a boundary
@@ -446,12 +423,12 @@ def radius_join_meters(
     # (cos(lat) <= sin(r/R)) or when r >= (pi/2)R.
     z = radius_m / sphere_r
     sin_z = 1.0 if z >= math.pi / 2 else math.sin(z)
-    coslat = F.cos(F.radians(F.col("y")))
-    dlon_deg = F.when(coslat <= F.lit(sin_z), F.lit(180.0)).otherwise(
-        F.least(F.lit(180.0), F.degrees(F.asin(F.lit(sin_z) / coslat)) * F.lit(1.0 + 1e-9))
+    dlon_sql = (
+        f"CASE WHEN cos(radians(y)) <= {_dlit(sin_z)} THEN 180.0D "
+        f"ELSE LEAST(180.0D, degrees(asin({_dlit(sin_z)} / cos(radians(y)))) * {_dlit(1.0 + 1e-9)}) END"
     )
 
-    blocks = _meter_blocks(query, q_id, res, n, dlat_deg, dlon_deg)
+    blocks = _meter_blocks(query, q_id, res, dlat_deg, dlon_sql)
     # haversine refinement, spelled identically to the oracle SQL
     sdphi = F.sin(F.radians(F.col("by") - F.col("y")) / 2)
     sdlmb = F.sin(F.radians(F.col("bx") - F.col("x")) / 2)

@@ -33,8 +33,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import memo
-from ..functions.geometry_fns import cell_id_col, quote_ident
-from ..geom.cells import MAX_RES, cover_bbox, pick_res
+from ..functions.geometry_fns import point_xy_sql, quote_ident
+from ..geom import cells
+from ..geom.cells import cover_bbox, level_for_edge, pick_res
 from ..geom.packed import from_geojson
 from ..geom.pip import points_in_polygon, rect_rings
 from .spans import extract_geo_spans
@@ -125,8 +126,7 @@ def _span_res(med: float, worst) -> int:
     """One global resolution for a polygon dim: cell size ~ the median
     polygon extent ``med``, capped so the largest-area polygon (bbox
     ``worst``) covers no more than ~64 cells (SURVEY §4.1)."""
-    res = int(np.clip(np.floor(np.log2(360.0 / (med or 1e-9))), 0, MAX_RES))
-    return min(res, pick_res(*worst, max_cells=64))
+    return min(level_for_edge(med), pick_res(*worst, max_cells=64))
 
 
 def _auto_res(bboxes: dict) -> int:
@@ -221,7 +221,7 @@ def pip_join_points(
     # the pandas-UDF ray-cast path unchanged.
     all_rect = rect_pids == set(packed)
     xq, yq = quote_ident(x_col), quote_ident(y_col)
-    pts = points.withColumn("cell_id", cell_id_col(xq, yq, res))
+    pts = points.withColumn("cell_id", F.expr(cells.cell_id_sql(xq, yq, res)))
     cover_df = _cover_df(spark, bboxes, rect_pids, res)
     if refine and all_rect:
         cand = pts.join(F.broadcast(cover_df), "cell_id").drop("cell_id")
@@ -272,7 +272,7 @@ def pip_join_docs(
     """Interleaved documents x polygons -> (doc_id, span_pos, poly_id).
 
     Geometry extraction is all codegen: posexplode + filter (spans.py),
-    then Point coordinates via native string ops (point_xy_native — NOT
+    then Point coordinates via native string ops (point_xy_sql — NOT
     from_json, which does not scale with cores; see its docstring) —
     the engine keeps the 10^12-doc hot path JVM-side and enters Python
     only inside the Arrow-batched ray-cast refinement (pandas UDF
@@ -280,8 +280,6 @@ def pip_join_docs(
     use pip_join_docs_any when documents also carry Polygon/LineString
     geo spans.
     """
-    from ..functions.geometry_fns import point_xy_sql
-
     geo = extract_geo_spans(docs)
     # string form -> one server-side parse per fragment instead of the
     # ~25-round-trip py4j Column tree (cold-plan cost, VERDICT r5 item 7;
@@ -481,11 +479,10 @@ def _poly_span_candidates(docs: DataFrame, bboxes: dict, rect_pids: frozenset, r
     several times per span (measured 14.7s -> ~4s on 2M spans at
     local[32]).  A mapInArrow node is a black-box projection the
     optimizer can neither split nor replicate."""
-    from ..functions.geometry_fns import point_xy_native
-
     lmin = max(0, res - ADAPTIVE_LEVEL_WINDOW)
-    _, _, is_point = point_xy_native("text")
-    g = extract_geo_spans(docs).where(~is_point).selectExpr("doc_id", "span_pos", "text").mapInArrow(
+    g = extract_geo_spans(docs).where(f"NOT {point_xy_sql('text')[2]}").selectExpr(
+        "doc_id", "span_pos", "text"
+    ).mapInArrow(
         _decode_bounds,
         schema=(
             "doc_id string, span_pos int, "
@@ -496,46 +493,31 @@ def _poly_span_candidates(docs: DataFrame, bboxes: dict, rect_pids: frozenset, r
     )
 
     # the whole level-pick -> explode -> cell-id -> bbox-filter ->
-    # reporting-cell chain is emitted as server-side-parsed SQL strings:
-    # the Column tree version cost ~1.9s of py4j round-trips PER BUILD
-    # on the flagship (cold-plan profile, VERDICT r5 item 7) — the plan
-    # is identical, only the driver-side construction path changes
-    def cix(lon):
-        return f"CAST(LEAST(GREATEST(FLOOR(({lon} + 180.0D) / 360.0D * _n), 0), _n - 1) AS BIGINT)"
-
-    def ciy(lat):
-        return f"CAST(LEAST(GREATEST(FLOOR(({lat} + 90.0D) / 180.0D * _n), 0), _n - 1) AS BIGINT)"
-
-    # finest level in [lmin, res] whose cell covers the span per axis
-    # (<= 2x2 exploded cells for any span size within the window)
-    lvl_sql = (
-        f"GREATEST({lmin}, LEAST({res}, CAST(FLOOR(LOG2(LEAST("
-        "360.0D / GREATEST(maxx - minx, 1e-12D), "
-        "180.0D / GREATEST(maxy - miny, 1e-12D)))) AS INT)))"
-    )
-    cell_of = "CAST(_lvl AS BIGINT) * 288230376151711744 + {ix} * 536870912 + {iy}"
+    # reporting-cell chain is emitted as server-side-parsed SQL strings
+    # (geom.cells builders): a Column tree cost ~1.9s of py4j
+    # round-trips PER BUILD on the flagship (cold-plan profile, VERDICT
+    # r5 item 7).  The span's level is the finest in [lmin, res] whose
+    # cell covers the span per axis (<= 2x2 exploded cells for any span
+    # size within the window).
+    s1, s2, cid = cells.cover_explode_sql("minx", "miny", "maxx", "maxy", "_lvl", "_n")
     cols = ["doc_id", "span_pos", "geom", "minx", "miny", "maxx", "maxy", "rect"]
     covered = g.selectExpr(
-        *cols,
-        f"{lvl_sql} AS _lvl",
+        *cols, f"{cells.bbox_level_sql('minx', 'miny', 'maxx', 'maxy', lmin, res)} AS _lvl",
     ).selectExpr(
-        *cols, "_lvl", "SHIFTLEFT(CAST(1 AS BIGINT), _lvl) AS _n",
+        *cols, "_lvl", f"{cells.grid_n_sql('_lvl')} AS _n",
     ).selectExpr(
-        *cols, "_lvl", "_n",
-        f"explode(sequence({cix('minx')}, {cix('maxx')})) AS _ix",
-        f"{ciy('miny')} AS _iy0", f"{ciy('maxy')} AS _iy1",
+        *cols, "_lvl", "_n", *s1,
     ).selectExpr(
-        *cols, "_lvl", "_n", "_ix", "explode(sequence(_iy0, _iy1)) AS _iy",
+        *cols, "_lvl", "_n", "_ix", *s2,
     ).selectExpr(
-        *cols, "_lvl", "_n", cell_of.format(ix="_ix", iy="_iy") + " AS cell_id",
+        *cols, "_lvl", "_n", f"{cid} AS cell_id",
     )
     # bbox overlap + reporting cell in ONE filter: the pair survives
     # only in the cell (at the span's own level) holding the
     # bbox-intersection lower-left corner (dedup without a shuffle)
     keep = (
-        "minx <= _pmaxx AND _pminx <= maxx AND miny <= _pmaxy AND _pminy <= maxy "
-        "AND cell_id = "
-        + cell_of.format(ix=cix("GREATEST(minx, _pminx)"), iy=ciy("GREATEST(miny, _pminy)"))
+        "minx <= _pmaxx AND _pminx <= maxx AND miny <= _pmaxy AND _pminy <= maxy AND cell_id = "
+        + cells.reporting_cell_sql(("minx", "_pminx"), ("miny", "_pminy"), "_lvl", "_n")
     )
     return (
         covered.join(F.broadcast(_cover_df(docs.sparkSession, bboxes, rect_pids, res)), "cell_id")
@@ -713,9 +695,10 @@ def pip_join_points_shuffle(
 ) -> DataFrame:
     """Big-polygon-side variant: no driver collect, no broadcast dict.
 
-    The polygon table is decoded and cover-exploded DISTRIBUTED
-    (pandas UDFs), candidates come from a shuffle hash join on cell_id
-    with **salted repartitioning on hot cells** (north_star: points
+    The polygon table is decoded (pandas UDF) and cover-exploded
+    DISTRIBUTED (the cell-grid SQL explode of geom.cells over bboxes
+    computed in codegen), candidates come from a shuffle hash join on
+    cell_id with **salted repartitioning on hot cells** (north_star: points
     side counts pick hot cell ids; their rows split across `salt`
     reducers, the polygon side's hot rows are exploded x salt), and the
     ray-cast refinement runs per candidate batch with each polygon's
@@ -724,29 +707,35 @@ def pip_join_points_shuffle(
     Semantics identical to pip_join_points (tested); use when the
     polygon side is too large to broadcast.
     """
-    from ..functions.geometry_fns import cells_cover_udf, geojson_decode_udf
+    from ..functions.geometry_fns import geojson_decode_udf
     from .skew import salted_join
 
     gp = polys.select("poly_id", geojson_decode_udf(F.col("geojson")).alias("geom"))
+    # per-axis bbox extents in codegen (coords interleave x and y)
+    gb = gp.selectExpr(
+        "poly_id", "geom",
+        "filter(geom.coords, (v, i) -> i % 2 = 0) AS _xs",
+        "filter(geom.coords, (v, i) -> i % 2 = 1) AS _ys",
+    ).selectExpr(
+        "poly_id", "geom",
+        "array_min(_xs) AS minx", "array_min(_ys) AS miny",
+        "array_max(_xs) AS maxx", "array_max(_ys) AS maxy",
+    )
     if res is None:
-        # _auto_res computed distributed: per-axis bbox extents in
-        # codegen (coords interleave x and y), the approximate median
-        # extent and the largest-area bbox in one aggregate
-        b = gp.selectExpr(
-            "filter(geom.coords, (v, i) -> i % 2 = 0) AS _xs",
-            "filter(geom.coords, (v, i) -> i % 2 = 1) AS _ys",
-        ).selectExpr(
-            "array_min(_xs) AS minx", "array_min(_ys) AS miny",
-            "array_max(_xs) AS maxx", "array_max(_ys) AS maxy",
-        ).selectExpr(
+        # _auto_res computed distributed: the approximate median extent
+        # and the largest-area bbox in one aggregate
+        b = gb.selectExpr(
             "percentile_approx(GREATEST(maxx - minx, maxy - miny), 0.5) AS med",
             "max_by(struct(minx, miny, maxx, maxy), (maxx - minx) * (maxy - miny)) AS worst",
         ).collect()[0]
         res = _span_res(b["med"], tuple(b["worst"])) if b["worst"] else _auto_res({})
-    cells = gp.select("poly_id", "geom", F.explode(cells_cover_udf(res)(F.col("geom"))).alias("cell_id"))
+    s1, s2, cid = cells.cover_explode_sql("minx", "miny", "maxx", "maxy", res)
+    cover = gb.selectExpr("poly_id", "geom", *s1).selectExpr("poly_id", "geom", "_ix", *s2).selectExpr(
+        "poly_id", "geom", f"{cid} AS cell_id"
+    )
 
-    pts = points.withColumn("cell_id", cell_id_col(quote_ident(x_col), quote_ident(y_col), res))
-    cand = salted_join(pts, cells, "cell_id", salt=salt, hot_threshold=hot_threshold).drop("cell_id")
+    pts = points.withColumn("cell_id", F.expr(cells.cell_id_sql(quote_ident(x_col), quote_ident(y_col), res)))
+    cand = salted_join(pts, cover, "cell_id", salt=salt, hot_threshold=hot_threshold).drop("cell_id")
 
     out_cols = [c for c in cand.columns if c not in ("geom",)]
     out_schema = cand.select(*out_cols).schema

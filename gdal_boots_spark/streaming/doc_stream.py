@@ -9,8 +9,8 @@ operators: readStream(parquet dir) -> posexplode -> point decode ->
 native cell ids -> writeStream (append), or a watermarked windowed
 count per cell for monitoring.
 
-All transformations reuse the batch code paths (spans.explode_spans,
-point_xy_native, cell_id_col) — one logical plan serving both modes.
+All transformations reuse the batch code paths (point_xy_sql and the
+cell-grid SQL of geom.cells) — one logical plan serving both modes.
 """
 
 from __future__ import annotations
@@ -18,17 +18,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.geometry_fns import cell_id_col, point_xy_native
+from ..functions.geometry_fns import cell_id_sql, point_xy_sql, quote_ident
 
 
 def _geo_cells(docs: DataFrame, res: int, extra_cols: tuple[str, ...] = ()) -> DataFrame:
-    geo = docs.select(
-        "doc_id", *extra_cols, F.posexplode("spans").alias("span_pos", "span")
-    ).where(F.col("span.kind") == "geo")
-    x, y, is_point = point_xy_native(F.col("span.text"))
-    return geo.where(is_point).select(
-        "doc_id", *extra_cols, "span_pos", cell_id_col(x, y, res).alias("cell_id")
-    )
+    extra = [quote_ident(c) for c in extra_cols]
+    geo = docs.selectExpr("doc_id", *extra, "posexplode(spans) AS (span_pos, span)").where("span.kind = 'geo'")
+    xs, ys, ps = point_xy_sql("span.text")
+    return geo.where(ps).selectExpr("doc_id", *extra, "span_pos", f"{cell_id_sql(xs, ys, res)} AS cell_id")
 
 
 def stream_cell_assign(

@@ -26,7 +26,7 @@ def main() -> None:
     ap.add_argument("--replicate", type=int, default=1)
     args = ap.parse_args()
 
-    from gdal_boots_spark.functions.geometry_fns import cell_id_col
+    from gdal_boots_spark.functions.geometry_fns import cell_id_sql
     from gdal_boots_spark.operators.spatial_join import pip_join_docs
     from gdal_boots_spark.plans.runner import StageRunner
     from gdal_boots_spark.sources.synth import interleaved_docs, rect_polygons_df
@@ -39,7 +39,9 @@ def main() -> None:
     joined = runner.run("pip_join", lambda: pip_join_docs(docs, rect_polygons_df(spark)), fp)
     runner.run(
         "cell_stats",
-        lambda: joined.groupBy(cell_id_col(F.col("x"), F.col("y"), 8)).agg(F.count("*").alias("n_docs")),
+        lambda: joined.groupBy(F.expr(cell_id_sql("x", "y", 8)).alias("cell_id")).agg(
+            F.count("*").alias("n_docs")
+        ),
         fp,
     )
 

@@ -258,17 +258,115 @@ def test_pip_matches_bruteforce_random():
 # --- cells ---------------------------------------------------------------
 
 
-def test_cell_id_arithmetic_matches_sql_form():
-    lon = np.array([27.5, -180.0, 179.999])
-    lat = np.array([53.9, -90.0, 89.999])
-    res = 12
-    cid = cell_id(lon, lat, res)
-    n = 1 << res
-    ix = np.clip(np.floor((lon + 180) / 360 * n), 0, n - 1).astype(np.int64)
-    iy = np.clip(np.floor((lat + 90) / 180 * n), 0, n - 1).astype(np.int64)
-    assert np.array_equal(cid, res * 2**58 + ix * 2**29 + iy)
-    r2, ix2, iy2 = cell_decode(cid)
-    assert np.array_equal(ix2, ix) and np.array_equal(iy2, iy) and (r2 == res).all()
+def test_cell_id_arithmetic_matches_sql_form(spark):
+    """The geom.cells SQL builders, evaluated by Spark, equal the NumPy
+    codec: point ids (cell_id), bbox covers (cover_bbox) and reporting
+    cells at fixed levels, and covers at per-row levels (bbox_level_sql,
+    n inline or from a column) — at +-180/+-90, on exact cell edges and
+    for a bbox whose width equals the cell size.  Where the per-row
+    level clamps it equals the formula of
+    test_adaptive_level_cover_bound_property; elsewhere its cover is
+    <= 2x2 cells.  Levels outside [0, MAX_RES] are rejected."""
+    import math
+
+    from gdal_boots_spark.geom import cells
+
+    e = 360.0 / 512  # level-9 x cell edge (y cells are e / 2)
+    lons = [-180.0, 180.0, -179.999, 179.999, 0.0, 27.5, -180.0 + 7 * e, e]
+    lats = [-90.0, 90.0, -89.999, 89.999, 0.0, 53.9, -90.0 + 7 * e / 2, e / 2]
+    pts = spark.createDataFrame([(x, y) for x in lons for y in lats], "x double, y double")
+    for res in (0, 1, 9, 12, cells.MAX_RES):
+        got = pts.selectExpr("x", "y", f"{cells.cell_id_sql('x', 'y', res)} AS cid").collect()
+        exp = cell_id(np.array([r.x for r in got]), np.array([r.y for r in got]), res)
+        assert [r.cid for r in got] == exp.tolist(), res
+    for bad in (-1, cells.MAX_RES + 1, 30):
+        with pytest.raises(ValueError, match="res must be in"):
+            cells.cell_id_sql("x", "y", bad)
+        with pytest.raises(ValueError, match="res must be in"):
+            cells.cover_explode_sql("a", "b", "c", "d", bad)
+
+    boxes = [
+        (-180.0, -90.0, 180.0, 90.0),  # the whole plane: clamps to lo
+        (0.0, 0.0, 40.0, 20.0),  # clamps to lo
+        (-180.0, -90.0, -180.0 + e, -90.0 + e / 2),  # one level-9 cell
+        (e, e / 2, 2 * e, e),  # width == cell size, on cell edges
+        (26.0, 53.0, 29.0, 55.0),
+        (179.9, 89.9, 180.0, 90.0),  # clamps to hi
+        (27.3, 53.9, 27.3, 53.9),  # a point: clamps to hi
+    ]
+    bb = spark.createDataFrame(
+        [(i, *b) for i, b in enumerate(boxes)], "i int, minx double, miny double, maxx double, maxy double"
+    )
+    box = ("minx", "miny", "maxx", "maxy")
+
+    def covers(df, level, n=None):
+        s1, s2, cid = cells.cover_explode_sql(*box, level, n)
+        out = {}
+        for r in df.selectExpr("*", *s1).selectExpr("*", *s2).selectExpr("i", f"{cid} AS cid").collect():
+            out.setdefault(r.i, []).append(r.cid)
+        return {i: sorted(v) for i, v in out.items()}
+
+    for res in (0, 3, 9, 12):
+        keep = [i for i, b in enumerate(boxes) if len(cover_bbox(*b, res)) <= 4096]  # collectable
+        exp = {i: sorted(cover_bbox(*boxes[i], res).tolist()) for i in keep}
+        assert covers(bb.where(f"i IN ({', '.join(map(str, keep))})"), res) == exp, res
+
+    lo, hi = 5, 9
+    lv = bb.selectExpr("*", f"{cells.bbox_level_sql(*box, lo, hi)} AS _lvl")
+    levels = {r.i: r._lvl for r in lv.collect()}
+    exp = {i: sorted(cover_bbox(*b, levels[i]).tolist()) for i, b in enumerate(boxes)}
+    assert covers(lv, "_lvl") == exp
+    assert covers(lv.selectExpr("*", f"{cells.grid_n_sql('_lvl')} AS _n"), "_lvl", "_n") == exp
+    clamped = 0
+    for i, (minx, miny, maxx, maxy) in enumerate(boxes):
+        raw = int(math.floor(math.log2(min(360.0 / max(maxx - minx, 1e-12), 180.0 / max(maxy - miny, 1e-12)))))
+        if not lo <= raw <= hi:
+            clamped += 1
+            assert levels[i] == max(lo, min(hi, raw)), boxes[i]
+        else:
+            assert lo <= levels[i] <= hi and len(exp[i]) <= 4, boxes[i]
+    assert clamped == 4
+
+    pairs = bb.selectExpr("minx AS ax", "miny AS ay").crossJoin(bb.selectExpr("minx AS bx", "miny AS by"))
+    for res in (0, 9, 12):
+        rep = cells.reporting_cell_sql(("ax", "bx"), ("ay", "by"), res)
+        got = pairs.selectExpr("GREATEST(ax, bx) AS x", "GREATEST(ay, by) AS y", f"{rep} AS cid").collect()
+        assert [r.cid for r in got] == cell_id(
+            np.array([r.x for r in got]), np.array([r.y for r in got]), res
+        ).tolist()
+
+
+def test_level_for_edge_matches_inline_formulas():
+    """geom.cells.level_for_edge equals the inline floor-log2 level
+    formulas it replaced (their 1e-9/1e-12 edge floors all clip to
+    MAX_RES), for the 360- and 180-degree spans."""
+    from gdal_boots_spark.geom.cells import MAX_RES, level_for_edge
+
+    edges = [None, 0.0, -1.0, 1e-13, 1e-12, 1e-9, 1e-6, 0.0123, 0.7, 1.0, 45.0, 180.0, 360.0, 1e4]
+    for edge in edges:
+        for span, eps in ((360.0, 1e-9), (180.0, 1e-12)):
+            old = int(np.clip(np.floor(np.log2(span / max(edge or 0.0, eps))), 0, MAX_RES))
+            assert level_for_edge(edge, span) == old, (edge, span)
+
+
+def test_cell_format_in_one_module():
+    """Only geom/cells.py spells out the cell-id format (level * 2^58 +
+    ix * 2^29 + iy), and the deleted Column-tree / per-row Python twins
+    of its SQL builders stay deleted."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "gdal_boots_spark"
+    fmt = re.compile(r"288230376151711744|536870912|2\s*\*\*\s*(?:58|29)\b|<<\s*(?:58|29)\b")
+    twin = re.compile(r"^\s*def\s+(?:cell_id_col|point_xy_native|cells_cover_udf)\b", re.M)
+    bad = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        text = path.read_text()
+        if rel != "geom/cells.py":
+            bad += [f"{rel}: {m.group(0)}" for m in fmt.finditer(text)]
+        bad += [f"{rel}: {m.group(0).strip()}" for m in twin.finditer(text)]
+    assert not bad, bad
 
 
 def test_cell_bounds_contains_point():

@@ -204,13 +204,14 @@ def test_bbox_join_auto_res_identical(spark):
 def test_bbox_join_adaptive_heterogeneous(spark):
     """bbox_overlap_join_adaptive == brute-force cross join == the
     single-res join, on rects spanning 3 orders of magnitude — AND its
-    cover volume is bounded per rect (<= 4*(hi-lo+1)) where the
-    single-res cover of the big rects explodes."""
+    cover volume (the shared cell-grid explode at each rect's own level
+    and every coarser one in the window) is bounded per rect
+    (<= 4*(hi-lo+1)) where the single-res cover of the big rects
+    explodes."""
     import numpy as np
 
+    from gdal_boots_spark.geom import cells
     from gdal_boots_spark.operators.bbox_join import (
-        _explode_cover,
-        _explode_cover_multi,
         auto_levels,
         bbox_overlap_join,
         bbox_overlap_join_adaptive,
@@ -255,9 +256,16 @@ def test_bbox_join_adaptive_heterogeneous(spark):
     # per-rect cover bound vs the single-res explode of the huge rects
     lo, hi = auto_levels(left, right)
     assert hi > lo  # heterogeneous sizes must open a window
-    multi_cover = _explode_cover_multi(left, lo, hi, "l").count()
+    box = ("lminx", "lminy", "lmaxx", "lmaxy")
+
+    def cover_rows(df, level):
+        s1, s2, cid = cells.cover_explode_sql(*box, level)
+        return df.selectExpr("*", *s1).selectExpr("*", *s2).selectExpr(f"{cid} AS cell_id").count()
+
+    own = cells.bbox_level_sql(*box, lo, hi)
+    multi_cover = cover_rows(left.selectExpr("*", f"explode(sequence({lo}, {own})) AS _lvl"), "_lvl")
     assert multi_cover <= left.count() * 4 * (hi - lo + 1)
-    single_cover = _explode_cover(left, hi, "l").count()
+    single_cover = cover_rows(left, hi)
     assert single_cover > multi_cover  # the 4-deg rects explode at `hi`
 
 
@@ -544,23 +552,44 @@ def test_shuffle_res_matches_auto_res(spark, monkeypatch):
     """pip_join_points_shuffle picks its cell level from per-axis bbox
     extents, within one level of the broadcast path's _auto_res for the
     same dim (a span taken over the interleaved x and y values once read
-    ~27 degrees on the rect dim, level 3 against 9)."""
-    from gdal_boots_spark.functions import geometry_fns
+    ~27 degrees on the rect dim, level 3 against 9).  The spy reads the
+    level the polygon side's cover explode is built at."""
+    from gdal_boots_spark.geom import cells
     from gdal_boots_spark.operators import spatial_join as sj
 
     levels = []
-    real = geometry_fns.cells_cover_udf
+    real = cells.cover_explode_sql
 
-    def spy(res):
-        levels.append(res)
-        return real(res)
+    def spy(minx, miny, maxx, maxy, level, n=None):
+        levels.append(level)
+        return real(minx, miny, maxx, maxy, level, n)
 
-    monkeypatch.setattr(geometry_fns, "cells_cover_udf", spy)
+    monkeypatch.setattr(cells, "cover_explode_sql", spy)
     polys = rect_polygons_df(spark)
     pts = spark.createDataFrame([(0, 26.5, 53.5)], "point_id long, x double, y double")
     sj.pip_join_points_shuffle(pts, polys)
     bboxes = sj._collect_polys(polys)[1]
     assert len(levels) == 1 and abs(levels[0] - sj._auto_res(bboxes)) <= 1
+
+
+def test_cell_level_out_of_range_raises(spark):
+    """Cell ids give ix and iy 29 bits each, so above MAX_RES (28) iy
+    overflows into ix (and ix into the level) and points far apart can
+    share an id.  Both join entries reject such a level."""
+    from gdal_boots_spark.operators.bbox_join import bbox_overlap_join
+
+    polys = rect_polygons_df(spark)
+    pts = spark.createDataFrame([(0, 26.5, 53.5)], "point_id long, x double, y double")
+    for distributed in (False, True):
+        with pytest.raises(ValueError, match="res must be in"):
+            pip_join_points(pts, polys, res=30, distributed=distributed)
+    rect = "{p}id long, {p}minx double, {p}miny double, {p}maxx double, {p}maxy double"
+    # level-28 cells are ~1.3e-6 degrees wide: keep the boxes that small
+    left = spark.createDataFrame([(1, 0.0, 0.0, 1e-6, 1e-6)], rect.format(p="l"))
+    right = spark.createDataFrame([(2, 5e-7, 5e-7, 2e-6, 2e-6)], rect.format(p="r"))
+    with pytest.raises(ValueError, match="res must be in"):
+        bbox_overlap_join(left, right, res=30)
+    assert bbox_overlap_join(left, right, res=28).count() == 1
 
 
 def test_rect_rings_predicate():

@@ -18,12 +18,12 @@ def test_stream_cell_assign_matches_batch(spark, tmp_path):
     q.awaitTermination(120)
 
     got = spark.read.parquet(outdir)
-    from gdal_boots_spark.functions.geometry_fns import cell_id_col, point_xy_native
+    from gdal_boots_spark.functions.geometry_fns import cell_id_sql, point_xy_sql
     from gdal_boots_spark.operators.spans import explode_spans
 
     geo = explode_spans(docs).where(F.col("kind") == "geo")
-    x, y, is_point = point_xy_native(F.col("text"))
-    exp = geo.where(is_point).select("doc_id", cell_id_col(x, y, 8).alias("cell_id"))
+    xs, ys, ps = point_xy_sql("text")
+    exp = geo.where(ps).selectExpr("doc_id", f"{cell_id_sql(xs, ys, 8)} AS cell_id")
     assert sorted(map(tuple, got.select("doc_id", "cell_id").collect())) == sorted(
         map(tuple, exp.collect())
     )
