@@ -316,20 +316,12 @@ def q_polygonize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_geom_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Packed-geometry UDF pipeline: GeoJSON decode -> envelope
+    """The GeoJSON decode pass: packed geometry -> envelope
     (Feature.bounds, gdal.py:961-962) over the polygon dim."""
-    from gdal_boots_spark.functions.geometry_fns import geojson_decode_udf, geom_bounds_udf
+    from gdal_boots_spark.functions.geometry_fns import decode_geojson
 
-    polys = rect_polygons_df(spark)
-    g = polys.withColumn("geom", geojson_decode_udf(F.col("geojson")))
-    b = g.withColumn("b", geom_bounds_udf(F.col("geom")))
-    return b.select(
-        "poly_id",
-        F.col("b.minx").alias("bminx"),
-        F.col("b.miny").alias("bminy"),
-        F.col("b.maxx").alias("bmaxx"),
-        F.col("b.maxy").alias("bmaxy"),
-    )
+    g = decode_geojson(rect_polygons_df(spark), "geojson", ["poly_id"])
+    return g.selectExpr("poly_id", "minx AS bminx", "miny AS bminy", "maxx AS bmaxx", "maxy AS bmaxy")
 
 
 def q_crs_3857(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -648,11 +640,7 @@ def q_make_valid(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle is the goldens' literal summaries."""
     import json as _json
 
-    from gdal_boots_spark.functions.geometry_fns import (
-        geojson_decode_udf,
-        geom_bounds_udf,
-        make_valid_geojson_udf,
-    )
+    from gdal_boots_spark.functions.geometry_fns import decode_geojson, make_valid_geojson_udf
     from gdal_boots_spark.sources.synth import BOWTIE_POLYGON
 
     self_touch = {
@@ -667,15 +655,14 @@ def q_make_valid(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [(1, _json.dumps(BOWTIE_POLYGON)), (2, _json.dumps(self_touch)), (3, _json.dumps(square))]
     df = spark.createDataFrame(rows, "fid long, geojson string")
     rep = df.select("fid", make_valid_geojson_udf(F.col("geojson")).alias("rj"))
-    g = rep.withColumn("geom", geojson_decode_udf(F.col("rj")))
-    b = geom_bounds_udf(F.col("geom"))
+    g = decode_geojson(rep, "rj", ["fid"])
     return g.select(
         "fid",
         F.col("geom.gtype").cast("long").alias("gtype"),
         (F.size("geom.ring_offsets") - 1).cast("long").alias("n_rings"),
         (F.size("geom.coords") / 2).cast("long").alias("n_points"),
-        F.round(b["minx"], 6).alias("bminx"), F.round(b["miny"], 6).alias("bminy"),
-        F.round(b["maxx"], 6).alias("bmaxx"), F.round(b["maxy"], 6).alias("bmaxy"),
+        F.round("minx", 6).alias("bminx"), F.round("miny", 6).alias("bminy"),
+        F.round("maxx", 6).alias("bmaxx"), F.round("maxy", 6).alias("bmaxy"),
     )
 
 
@@ -683,16 +670,18 @@ def q_to_epsg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whole-column vectorized vector CRS transform (vector_to_epsg —
     the reference loops one osr call per feature, gdal.py:1316-1325):
     polygon dim 4326 -> 3857, envelopes rounded to cm."""
-    from gdal_boots_spark.functions.geometry_fns import geojson_decode_udf, geom_bounds_udf
+    from gdal_boots_spark.functions.geometry_fns import geojson_decode_udf
     from gdal_boots_spark.operators.reproject import vector_to_epsg
 
     polys = rect_polygons_df(spark).withColumn("geometry", geojson_decode_udf(F.col("geojson")))
     t = vector_to_epsg(polys, 4326, 3857, "geometry")
-    b = geom_bounds_udf(F.col("geometry"))
-    return t.select(
+    # envelope of the transformed coords, in codegen (x at even indices)
+    xs = "filter(geometry.coords, (v, i) -> i % 2 = 0)"
+    ys = "filter(geometry.coords, (v, i) -> i % 2 = 1)"
+    return t.selectExpr(
         "poly_id",
-        F.round(b["minx"], 2).alias("mminx"), F.round(b["miny"], 2).alias("mminy"),
-        F.round(b["maxx"], 2).alias("mmaxx"), F.round(b["maxy"], 2).alias("mmaxy"),
+        f"round(array_min({xs}), 2) AS mminx", f"round(array_min({ys}), 2) AS mminy",
+        f"round(array_max({xs}), 2) AS mmaxx", f"round(array_max({ys}), 2) AS mmaxy",
     )
 
 

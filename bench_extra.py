@@ -4,7 +4,7 @@ bench.py contract.  Isolates the stages of the xl flagships so r8
 optimization work targets the real cost, not the sink:
 
   pt_full     pip_join_docs(docs, polys)            (xl Point path)
-  poly_decode the _decode_bounds mapInArrow alone    (poly xl stage 1)
+  poly_decode the decode_geojson mapInArrow alone    (poly xl stage 1)
   poly_cand   poly_span_candidates (decode+cover+join+dedup)
   poly_full   pip_join_docs_any(pdocs, polys)        (whole poly path)
 
@@ -28,8 +28,8 @@ REPS = int(os.environ.get("SPARK_GRAFT_EXTRA_RUNS", "3"))
 def main():
     from pyspark.sql import functions as F
 
+    from gdal_boots_spark.functions.geometry_fns import decode_geojson
     from gdal_boots_spark.operators.spatial_join import (
-        _decode_bounds,
         pip_join_docs,
         pip_join_docs_any,
         poly_span_candidates,
@@ -53,16 +53,8 @@ def main():
     docs.count(); pdocs.count()
     polys = rect_polygons_df(spark)
 
-    decode_schema = (
-        "doc_id string, span_pos int, "
-        "geom struct<gtype:tinyint,coords:array<double>,ring_offsets:array<int>,part_offsets:array<int>,"
-        "part_types:array<tinyint>,child_offsets:array<int>>, "
-        "minx double, miny double, maxx double, maxy double, rect boolean"
-    )
-
     def poly_decode():
-        geo = extract_geo_spans(pdocs)
-        return geo.select("doc_id", "span_pos", "text").mapInArrow(_decode_bounds, schema=decode_schema)
+        return decode_geojson(extract_geo_spans(pdocs), "text", ["doc_id", "span_pos"], blank_rect=True)
 
     def poly_scan():
         return extract_geo_spans(pdocs).select("doc_id", "span_pos", "text")

@@ -1,16 +1,21 @@
 """Spark-facing geometry functions.
 
-Two tiers, per the engine's "UDFs are the slow path" rule:
+Three tiers, per the engine's "UDFs are the slow path" rule:
 
 * **SQL-string expressions** where the math is pure arithmetic or
   string ops — Point coordinates (``point_xy_sql``) and cell ids
   (``cell_id_sql``, built in ``geom.cells`` with the rest of the cell
   grid) stay entirely in whole-stage codegen; no Python is involved at
   runtime.
-* **Arrow-batched pandas UDFs** for the NumPy kernels (GeoJSON codec,
-  CRS transform, bbox) — Series/DataFrame in, never per-row
-  Python on the Spark side (reference contrast: gdal_boots transforms
-  one feature per C call in a Python loop, gdal.py:1316-1325).
+* **One GeoJSON decode pass** (``decode_geojson``): a single mapInArrow
+  that emits the packed geometry, its bbox and a rectangle flag as
+  concrete columns.  Every operator that reads a GeoJSON column decodes
+  it here, exactly once.
+* **Arrow-batched pandas UDFs** for row-preserving column codecs and
+  NumPy kernels (GeoJSON decode/encode with null in, null out; CRS
+  transform; make_valid) — Series/DataFrame in, never per-row Python on
+  the Spark side (reference contrast: gdal_boots transforms one feature
+  per C call in a Python loop, gdal.py:1316-1325).
 """
 
 from __future__ import annotations
@@ -19,9 +24,11 @@ import json
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
+    BooleanType,
     ByteType,
     DoubleType,
     IntegerType,
@@ -33,6 +40,7 @@ from pyspark.sql.types import (
 from ..geom import crs as _crs
 from ..geom.cells import cell_id_sql  # noqa: F401  (re-exported: the cell id as SQL)
 from ..geom.packed import PackedGeometry, from_geojson, to_geojson
+from ..geom.pip import rect_rings
 
 GEOMETRY_TYPE = StructType(
     [
@@ -46,16 +54,6 @@ GEOMETRY_TYPE = StructType(
         StructField("child_offsets", ArrayType(IntegerType())),
     ]
 )
-
-BOUNDS_TYPE = StructType(
-    [
-        StructField("minx", DoubleType()),
-        StructField("miny", DoubleType()),
-        StructField("maxx", DoubleType()),
-        StructField("maxy", DoubleType()),
-    ]
-)
-
 
 # --- native (JVM-side, codegen) ----------------------------------------
 
@@ -81,7 +79,8 @@ def point_xy_sql(text: str = "text") -> tuple[str, str, str]:
     cores (JacksonParser contention: 7.0s @8 cores -> 8.3s @32 on 6M
     strings) while substring/split ops scale near-linearly.  Points
     have un-nested coordinates, so the last '['..']' span is exactly
-    the coordinate pair.  Non-points take the geojson_decode_udf path.
+    the coordinate pair.  Every other geometry type is decoded by
+    decode_geojson.
     """
     # a GeometryCollection may carry a Point CHILD and still must take
     # the decode path — '"Point"' alone would misroute it here (the
@@ -105,6 +104,256 @@ def point_xy_sql(text: str = "text") -> tuple[str, str, str]:
     )
 
 
+# --- the one GeoJSON decode pass (mapInArrow) ------------------------------
+
+def _parse_floats(s: str) -> np.ndarray:
+    """Whitespace-separated float blob -> float64 array.  Prefers
+    np.fromstring(sep=' ') (fastest single-call text parse) but NumPy
+    has slated text-mode fromstring for removal, so fall back to a
+    split-parse; malformed tokens yield an EMPTY array in both paths'
+    net effect (fromstring truncates -> segment-count check fails;
+    split-parse raises -> we return empty), routing callers to the
+    slow from_geojson path."""
+    import warnings
+
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore", DeprecationWarning)
+            return np.fromstring(s, sep=" ")
+    except Exception:
+        try:
+            return np.asarray(s.split(), dtype=np.float64)
+        except ValueError:
+            return np.empty(0, dtype=np.float64)
+
+
+# "[]," AND pre-existing whitespace all become newlines in ONE pass
+# (r8: the old two-pass translate-to-space + replace(" ", "\n") copied
+# the multi-MB joined blob an extra time per batch)
+_TBL = str.maketrans("[], ", "\n\n\n\n")
+
+
+def _parse_float_segments(blobs: list) -> np.ndarray:
+    """Coord blobs -> ONE float64 array with NaN separators between
+    segments.  Arrow's CSV float parser (single-threaded) measured
+    ~1.8x np.fromstring on the joined blob; any parse surprise — error,
+    non-float inference — falls back to _parse_floats, whose own
+    failure mode (empty / truncated array) routes the caller's
+    segment-count check to the per-row from_geojson path.  Guards stay
+    a tight per-row str loop (vectorizing short-string scans through
+    Arrow compute measured 7.7x SLOWER); only the float parse runs
+    through Arrow."""
+    joined = "\nnan\n".join(blobs).translate(_TBL)
+    try:
+        import pyarrow as pa
+        import pyarrow.csv as pacsv
+
+        out = (
+            pacsv.read_csv(
+                pa.py_buffer(joined.encode()),
+                read_options=pacsv.ReadOptions(autogenerate_column_names=True, use_threads=False),
+            )
+            .column(0)
+            .to_numpy(zero_copy_only=False)
+        )
+        if out.dtype != np.float64:
+            return _parse_floats(joined)
+        return out
+    except Exception:
+        return _parse_floats(joined)
+
+
+def decode_geojson(df: DataFrame, col: str, keep: list[str], blank_rect: bool = False) -> DataFrame:
+    """The one GeoJSON decode pass: ``df`` -> (``keep``..., geom
+    GEOMETRY_TYPE, minx, miny, maxx, maxy, rect) as ONE mapInArrow.
+
+    ``keep`` columns (any type) pass through untouched.  Rows whose
+    ``col`` is null, fails to parse or has no coordinates are dropped;
+    callers that must keep every row use the row-preserving
+    geojson_decode_udf.  ``rect`` flags single-ring axis-aligned
+    rectangles (geom.pip.rect_rings); ``blank_rect=True`` ships those
+    rows PAYLOAD-FREE (empty geom lists), for callers that read a
+    rectangle from its bbox columns alone.
+
+    A mapInArrow node is a black-box projection the optimizer can
+    neither split nor replicate: scalar decode/bounds pandas UDF pairs
+    got duplicated by projection collapse into stacked ArrowEvalPython
+    stages, parsing every geometry several times (measured 14.7s ->
+    ~4s on 2M spans at local[32])."""
+    schema = StructType(
+        [df.schema[k] for k in keep]
+        + [StructField("geom", GEOMETRY_TYPE)]
+        + [StructField(c, DoubleType()) for c in ("minx", "miny", "maxx", "maxy")]
+        + [StructField("rect", BooleanType())]
+    )
+
+    def _decode_geojson(batches):
+        for batch in batches:
+            yield from _decode_batch(batch, col, keep, blank_rect)
+
+    return df.selectExpr(*(quote_ident(c) for c in [*keep, col])).mapInArrow(_decode_geojson, schema=schema)
+
+
+def _decode_batch(batch, col, keep, blank_rect):
+    """decode_geojson over one RecordBatch, building the output columns
+    DIRECTLY from flat buffers (_emit_decoded) — no pandas dict
+    materialization on the way out.  Polygons whose ``coordinates`` is
+    the trailing field (the overwhelmingly common span shape, any ring
+    count) parse as one joined float blob; everything else falls back to
+    from_geojson, and a row it rejects (malformed JSON, unknown type) is
+    dropped."""
+    n = batch.num_rows
+    if n == 0:
+        return
+    texts = batch.column(batch.schema.get_field_index(col)).to_pylist()
+    # fast-path rows parse as ONE nan-sentinel-joined float parse, one
+    # segment per ring (per-row fromstring overhead was the decode hot
+    # spot).  A segment-count mismatch (malformed token, literal 'nan')
+    # is a complete safety net — every row then re-parses through
+    # from_geojson.
+    f_j: list[int] = []
+    f_rc: list[int] = []     # ring counts
+    f_blob: list[str] = []   # one blob PER RING, row-major
+    f_pos: list[int] = []    # positions per ring ('[' count of its blob)
+    for j, v in enumerate(texts):
+        if v is not None and '"Polygon"' in v and v.endswith("]]]}"):
+            i = v.find('"coordinates"')
+            if i < 0:
+                continue
+            # ring count == "[[" occurrences in the coords blob
+            # (non-overlapping, exactly one per ring start, with or
+            # without whitespace after the commas — ADVICE r3), and
+            # str.split on "[[" yields exactly those r ring bodies (the
+            # stray "["/"]],"-junk around the floats is whitespace after
+            # the translate table); a single ring skips the split, the
+            # hot span shape, and its blob holds two extra '['
+            r = v.count("[[", i)
+            if r == 1:
+                f_blob.append(v[i + 14 : -1])
+                f_pos.append(f_blob[-1].count("[") - 2)
+            elif r:
+                rings = v[i + 14 : -1].split("[[")[1:]
+                f_blob.extend(rings)
+                f_pos.extend(b.count("[") for b in rings)
+            else:
+                continue
+            f_j.append(j)
+            f_rc.append(r)
+    fastmask = np.zeros(n, dtype=bool)
+    if f_blob:
+        nums = _parse_float_segments(f_blob)
+        isn = np.isnan(nums)
+        if int(isn.sum()) == len(f_blob) - 1:
+            seps = np.flatnonzero(isn)
+            starts = np.concatenate(([0], seps + 1))
+            rl = np.concatenate((seps, [nums.size])) - starts  # per-RING float counts
+            rc = np.asarray(f_rc, np.int64)
+            row_id = np.repeat(np.arange(rc.size), rc)
+            # exactly x,y per position: a 3-D (x,y,z) ring, or a ring
+            # the "[[" count merged with its neighbour, takes the
+            # from_geojson path
+            ring_ok = (rl >= 8) & (rl == 2 * np.asarray(f_pos, np.int64))
+            row_ok = np.bincount(row_id, weights=~ring_ok, minlength=rc.size) == 0
+            if row_ok.any():
+                # fast rows ship as their own fully-vectorized
+                # RecordBatch; only the remainder pays the per-row
+                # fallback loop below
+                keep_ring = row_ok[row_id]
+                keep_pos = np.repeat(keep_ring, np.diff(np.append(starts, nums.size))) & ~isn
+                sel = np.asarray(f_j, np.int64)[row_ok]
+                fastmask[sel] = True
+                rc, rl = rc[row_ok], rl[keep_ring]
+                # ring_offsets per row: [0, p1, p1+p2, ...] in points
+                ring_at = np.concatenate(([0], np.cumsum(rl)))  # float offset of each ring
+                first = np.concatenate(([0], np.cumsum(rc)))    # first ring of each row
+                coffs = ring_at[first]
+                roffs = np.concatenate(([0], np.cumsum(rc + 1)))
+                ring_ix = np.arange(roffs[-1]) - np.repeat(roffs[:-1] - first[:-1], rc + 1)
+                rvals = (ring_at[ring_ix] - np.repeat(coffs[:-1], rc + 1)) // 2
+                # part_offsets per row: [0, nrings] (one Polygon part)
+                pvals = np.zeros(2 * rc.size, np.int64)
+                pvals[1::2] = rc
+                no_list = (np.empty(0), np.zeros(rc.size + 1, np.int64))
+                yield _emit_decoded(batch, keep, blank_rect, sel, np.full(rc.size, 3, np.int8), [
+                    (nums[keep_pos], coffs), (rvals, roffs),
+                    (pvals, np.arange(0, 2 * rc.size + 1, 2)), no_list, no_list,
+                ])
+
+    rows, pgs = [], []
+    for j, v in enumerate(texts):
+        if v is None or fastmask[j]:
+            continue
+        try:
+            pg = from_geojson(v)
+        except (ValueError, KeyError):  # json.JSONDecodeError is a ValueError
+            continue
+        if pg.coords.size:
+            rows.append(j)
+            pgs.append(pg)
+    if not pgs:
+        return
+
+    def flat(arrs):
+        return np.concatenate([np.asarray(a) for a in arrs]), np.cumsum([0] + [len(a) for a in arrs])
+
+    yield _emit_decoded(batch, keep, blank_rect, np.asarray(rows, np.int64), np.asarray([pg.gtype for pg in pgs], np.int8), [
+        flat([pg.coords for pg in pgs]),
+        flat([pg.ring_offsets for pg in pgs]),
+        flat([pg.part_offsets for pg in pgs]),
+        flat([pg.part_types if pg.gtype == 7 else () for pg in pgs]),
+        flat([pg.child_offsets if pg.gtype == 7 else () for pg in pgs]),
+    ])
+
+
+_GEOM_LISTS = (
+    ("coords", np.float64), ("ring_offsets", np.int32), ("part_offsets", np.int32),
+    ("part_types", np.int8), ("child_offsets", np.int32),
+)
+
+
+def _emit_decoded(batch, keep, blank_rect, sel, gtypes, lists):
+    """The one decode emitter: rows ``sel`` of ``batch`` with their
+    packed geometries -> RecordBatch(keep..., geom, minx, miny, maxx,
+    maxy, rect).  ``gtypes`` is int8[k]; ``lists`` holds the five list
+    fields of the geom struct (_GEOM_LISTS), each as (flat values, k+1
+    row offsets).  Every row has at least one coordinate pair.
+
+    ``rect`` is geom.pip.rect_rings over single-ring Polygons; with
+    ``blank_rect`` their lists are blanked (round-4 verdict item 4): a
+    closed axis-aligned rectangle is fully determined by its bbox
+    columns, so most spans at bench shapes stop paying the geometry
+    struct through explode, join, and the refine's Arrow transfer,
+    which tests them from the bbox via rects_intersect_polygon."""
+    import pyarrow as pa
+
+    coords, coffs = lists[0]
+    vstarts = coffs[:-1] // 2
+    xs, ys = coords[0::2], coords[1::2]
+    bbox = [
+        np.minimum.reduceat(xs, vstarts), np.minimum.reduceat(ys, vstarts),
+        np.maximum.reduceat(xs, vstarts), np.maximum.reduceat(ys, vstarts),
+    ]
+    rect = rect_rings(coords, coffs, (gtypes == 3) & (np.diff(lists[1][1]) == 2))
+    blank = rect if blank_rect else np.zeros_like(rect)
+    fields = [pa.array(gtypes, pa.int8())]
+    for (vals, offs), (_, dtype) in zip(lists, _GEOM_LISTS):
+        lens = np.diff(offs)
+        fields.append(pa.ListArray.from_arrays(
+            pa.array(np.concatenate(([0], np.cumsum(np.where(blank, 0, lens)))), pa.int32()),
+            pa.array(vals[np.repeat(~blank, lens)].astype(dtype, copy=False)),
+        ))
+    take = pa.array(sel)
+    return pa.RecordBatch.from_arrays(
+        [
+            *(batch.column(batch.schema.get_field_index(k)).take(take) for k in keep),
+            pa.StructArray.from_arrays(fields, names=["gtype", *(name for name, _ in _GEOM_LISTS)]),
+            *(pa.array(b, pa.float64()) for b in bbox),
+            pa.array(rect),
+        ],
+        names=[*keep, "geom", "minx", "miny", "maxx", "maxy", "rect"],
+    )
+
+
 # --- pandas UDFs ---------------------------------------------------------
 
 def _rows_to_struct_pdf(pgs: list[PackedGeometry | None]) -> pd.DataFrame:
@@ -122,7 +371,9 @@ def _rows_to_struct_pdf(pgs: list[PackedGeometry | None]) -> pd.DataFrame:
 
 @pandas_udf(GEOMETRY_TYPE)
 def geojson_decode_udf(s: pd.Series) -> pd.DataFrame:
-    """GeoJSON string -> packed geometry struct (invalid/null -> null)."""
+    """GeoJSON string -> packed geometry struct (invalid/null -> null):
+    the row-preserving column codec.  Operators decode through
+    decode_geojson instead."""
     out = []
     for v in s:
         if v is None:
@@ -163,24 +414,6 @@ def geojson_encode_udf(precision: int = 15):
     return _encode
 
 
-@pandas_udf(BOUNDS_TYPE)
-def geom_bounds_udf(g: pd.DataFrame) -> pd.DataFrame:
-    """Envelope of a packed geometry (Feature.bounds, gdal.py:961-962).
-    Vectorized: one pass over the concatenated coord buffer per batch."""
-    n = len(g)
-    minx = np.full(n, np.nan)
-    miny = np.full(n, np.nan)
-    maxx = np.full(n, np.nan)
-    maxy = np.full(n, np.nan)
-    for i, c in enumerate(g["coords"]):
-        if c is None or len(c) == 0:
-            continue
-        a = np.asarray(c, dtype=np.float64).reshape(-1, 2)
-        minx[i], miny[i] = a.min(axis=0)
-        maxx[i], maxy[i] = a.max(axis=0)
-    return pd.DataFrame({"minx": minx, "miny": miny, "maxx": maxx, "maxy": maxy})
-
-
 def transform_geom_udf(src, dst):
     """Factory: packed geometry -> packed geometry with coords
     transformed src->dst CRS (vectorized over the whole Arrow batch —
@@ -214,24 +447,6 @@ def transform_geom_udf(src, dst):
         )
 
     return _transform
-
-
-@pandas_udf(StructType([StructField("x", DoubleType()), StructField("y", DoubleType())]))
-def point_xy_udf(s: pd.Series) -> pd.DataFrame:
-    """GeoJSON Point string -> (x, y); non-Point/invalid -> null."""
-    xs, ys = [], []
-    for v in s:
-        try:
-            o = json.loads(v)
-            if o.get("type") == "Point" and o.get("coordinates"):
-                xs.append(float(o["coordinates"][0]))
-                ys.append(float(o["coordinates"][1]))
-                continue
-        except (TypeError, ValueError):
-            pass
-        xs.append(None)
-        ys.append(None)
-    return pd.DataFrame({"x": xs, "y": ys})
 
 
 @pandas_udf(StringType())

@@ -17,9 +17,9 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .. import memo
+from ..functions.geometry_fns import decode_geojson
 from ..geom import cells
 
 
@@ -156,8 +156,8 @@ def bbox_overlap_join_adaptive(
 
 
 def intersects_join(left: DataFrame, right: DataFrame, res: int | None = None) -> DataFrame:
-    """Exact polygon-intersects join: left(lid, geojson) x
-    right(rid, geojson) -> (lid, rid) for every intersecting pair.
+    """Exact polygon-intersects join: left(poly_id, geojson) x
+    right(poly_id, geojson) -> (lid, rid) for every intersecting pair.
 
     bbox-overlap candidates (cell-bucketed, dedup-free; res=None picks
     the resolution from sampled bbox sizes — the candidate volume
@@ -165,73 +165,58 @@ def intersects_join(left: DataFrame, right: DataFrame, res: int | None = None) -
     candidate row crosses into the Python refine) refined by the
     exact GEOS-Intersects predicate (geom.pip.polygons_intersect —
     boundary crossing, containment, AND degenerate touching).
-    Geometries ride the candidate rows as GeoJSON strings; within each
-    Arrow batch every distinct lid/rid geometry is decoded ONCE (a
-    geometry touching 1000 candidates parses once, not 1000x) and
-    pairs are processed grouped by lid.  For dimension x dimension
+    Each side is decoded ONCE (functions.geometry_fns.decode_geojson,
+    which also emits the bbox and drops unparseable geometries) and the
+    packed geometry struct rides the candidate rows; within each Arrow
+    batch every distinct lid/rid geometry is read from its struct once
+    and pairs are processed grouped by lid.  For dimension x dimension
     workloads; point x polygon goes through pip_join_*, bbox-only
     through bbox_overlap_join.
     """
-    from ..functions.geometry_fns import geojson_decode_udf, geom_bounds_udf
-    import numpy as np
 
-    def side(df, ident, prefix):
-        g = df.select(F.col(ident), F.col("geojson").alias(f"{prefix}gj"))
-        g = g.withColumn("_geom", geojson_decode_udf(F.col(f"{prefix}gj")))
-        b = geom_bounds_udf(F.col("_geom"))
-        return g.select(
-            ident, f"{prefix}gj",
-            b["minx"].alias(f"{prefix}minx"), b["miny"].alias(f"{prefix}miny"),
-            b["maxx"].alias(f"{prefix}maxx"), b["maxy"].alias(f"{prefix}maxy"),
-        )
+    def side(df, p):
+        g = decode_geojson(df.selectExpr(f"CAST(poly_id AS BIGINT) AS {p}id", "geojson"), "geojson", [f"{p}id"])
+        return g.selectExpr(f"{p}id", *(f"{c} AS {p}{c}" for c in ("geom", "minx", "miny", "maxx", "maxy")))
 
-    l = side(left.select(F.col("poly_id").alias("lid"), "geojson"), "lid", "l")
-    r = side(right.select(F.col("poly_id").alias("rid"), "geojson"), "rid", "r")
-    cand = bbox_overlap_join(l, r, res=res)
+    cand = bbox_overlap_join(side(left, "l"), side(right, "r"), res=res).select("lid", "rid", "lgeom", "rgeom")
 
     def refine(batches):
-        from ..geom.packed import from_geojson
+        import numpy as np
+        import pyarrow as pa
+
+        from ..geom.packed import PackedGeometry
         from ..geom.pip import polygons_intersect
 
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            lids = pdf["lid"].to_numpy()
-            rids = pdf["rid"].to_numpy()
-            lgj = pdf["lgj"].to_numpy()
-            rgj = pdf["rgj"].to_numpy()
-            lcache: dict = {}
+        def packed(geom, i):
+            g = geom[int(i)].as_py()
+            return PackedGeometry(
+                gtype=g["gtype"], coords=np.asarray(g["coords"], np.float64),
+                ring_offsets=np.asarray(g["ring_offsets"], np.int32),
+                part_offsets=np.asarray(g["part_offsets"], np.int32),
+            )
+
+        for batch in batches:
+            lids = batch.column("lid").to_numpy(zero_copy_only=False)
+            rids = batch.column("rid").to_numpy(zero_copy_only=False)
+            lgeom, rgeom = batch.column("lgeom"), batch.column("rgeom")
             rcache: dict = {}
-            keep = np.zeros(n, dtype=bool)
+            keep = np.zeros(batch.num_rows, dtype=bool)
             order = np.argsort(lids, kind="stable")
             uniq_l = np.unique(lids)
             bounds = np.searchsorted(lids[order], uniq_l)
-            for grp, lid in zip(np.split(order, bounds[1:]), uniq_l):
+            for grp in np.split(order, bounds[1:]):
                 if len(grp) == 0:
                     continue
-                lpg = lcache.get(lid)
-                if lpg is None:
-                    try:
-                        lpg = from_geojson(lgj[grp[0]])
-                    except (ValueError, KeyError):
-                        lpg = False
-                    lcache[lid] = lpg
-                if lpg is False:
-                    continue
+                lpg = packed(lgeom, grp[0])
                 for i in grp:
-                    rid = rids[i]
-                    rpg = rcache.get(rid)
+                    rpg = rcache.get(rids[i])
                     if rpg is None:
-                        try:
-                            rpg = from_geojson(rgj[i])
-                        except (ValueError, KeyError):
-                            rpg = False
-                        rcache[rid] = rpg
-                    if rpg is not False:
-                        keep[i] = polygons_intersect(lpg, rpg)
-            out = pdf.loc[keep, ["lid", "rid"]]
-            if len(out):
-                yield out
+                        rpg = rcache[rids[i]] = packed(rgeom, i)
+                    keep[i] = polygons_intersect(lpg, rpg)
+            if keep.any():
+                mask = pa.array(keep)
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column("lid").filter(mask), batch.column("rid").filter(mask)], names=["lid", "rid"]
+                )
 
-    return cand.mapInPandas(refine, schema="lid long, rid long")
+    return cand.mapInArrow(refine, schema="lid long, rid long")

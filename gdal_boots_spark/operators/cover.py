@@ -10,11 +10,12 @@ Python double loop becomes the bottleneck, so the engine offers both:
 * ``contribs_broadcast`` — driver-side decode + loop, polygons ride a
   Spark broadcast dict keyed by poly_id (zero shuffle; the render joins
   candidates to the dict inside the worker).  For small dims.
-* ``contribs_distributed`` — never collects: GeoJSON decode
-  (Arrow-batched pandas UDF), envelope, inverse-affine pixel bbox and
-  tile-range explode ALL as native Column math; the packed-geometry
-  struct rides the contribution rows to the render/aggregate stage
-  (the same shape as pip_join_points_shuffle, spatial_join.py:150).
+* ``contribs_distributed`` — never collects: the one GeoJSON decode
+  pass (functions.geometry_fns.decode_geojson: packed geometry plus
+  envelope, one mapInArrow), then inverse-affine pixel bbox and
+  tile-range explode as native Column math; the packed-geometry struct
+  rides the contribution rows to the render/aggregate stage (the same
+  shape as spatial_join.pip_join_points_shuffle).
 
 Both paths produce the same logical relation; pytest asserts
 rasterize/zonal equality between them (tests/test_rasterize_warp.py,
@@ -34,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import memo
+from ..functions.geometry_fns import decode_geojson
 from ..geom.affine import invert_transform
 from ..geom.packed import from_geojson
 from ..sources.tiles import RasterGrid
@@ -128,18 +130,14 @@ def contribs_broadcast(spark, polys: DataFrame, grid: RasterGrid):
 def contribs_distributed(polys: DataFrame, grid: RasterGrid) -> DataFrame:
     """-> DataFrame(tile_x int, tile_y int, poly_id long, geom struct).
 
-    No driver collect: decode is a pandas UDF, everything after it is
-    whole-stage-codegen Column math; the output is ready to shuffle on
-    (tile_x, tile_y) and carries each polygon's packed coords to the
-    consumer stage.
+    No driver collect: decode is the one mapInArrow pass
+    (decode_geojson, which drops null/unparseable/empty geometries),
+    everything after it is whole-stage-codegen Column math; the output
+    is ready to shuffle on (tile_x, tile_y) and carries each polygon's
+    packed coords to the consumer stage.
     """
-    from ..functions.geometry_fns import geojson_decode_udf, geom_bounds_udf
-
     ia, ib, ic, id_, ie, if_ = invert_transform(grid.transform)
-    gp = polys.select("poly_id", geojson_decode_udf(F.col("geojson")).alias("geom"))
-    gp = gp.where(F.col("geom").isNotNull() & (F.size("geom.coords") > 0))
-    b = geom_bounds_udf(F.col("geom"))
-    gp = gp.select("poly_id", "geom", b.alias("b"))
+    gp = decode_geojson(polys, "geojson", ["poly_id"])
 
     def px(x, y):
         return F.lit(ia) * x + F.lit(ib) * y + F.lit(ic)
@@ -147,12 +145,7 @@ def contribs_distributed(polys: DataFrame, grid: RasterGrid) -> DataFrame:
     def py(x, y):
         return F.lit(id_) * x + F.lit(ie) * y + F.lit(if_)
 
-    corners = [
-        (F.col("b.minx"), F.col("b.miny")),
-        (F.col("b.minx"), F.col("b.maxy")),
-        (F.col("b.maxx"), F.col("b.miny")),
-        (F.col("b.maxx"), F.col("b.maxy")),
-    ]
+    corners = [(F.col(x), F.col(y)) for x in ("minx", "maxx") for y in ("miny", "maxy")]
     minpx = F.least(*[px(x, y) for x, y in corners])
     maxpx = F.greatest(*[px(x, y) for x, y in corners])
     minpy = F.least(*[py(x, y) for x, y in corners])

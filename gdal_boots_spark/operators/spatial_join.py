@@ -33,69 +33,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import memo
-from ..functions.geometry_fns import point_xy_sql, quote_ident
+from ..functions.geometry_fns import decode_geojson, point_xy_sql, quote_ident
 from ..geom import cells
 from ..geom.cells import cover_bbox, level_for_edge, pick_res
 from ..geom.packed import from_geojson
 from ..geom.pip import points_in_polygon, rect_rings
 from .spans import extract_geo_spans
-
-
-def _parse_floats(s: str) -> np.ndarray:
-    """Whitespace-separated float blob -> float64 array.  Prefers
-    np.fromstring(sep=' ') (fastest single-call text parse) but NumPy
-    has slated text-mode fromstring for removal, so fall back to a
-    split-parse; malformed tokens yield an EMPTY array in both paths'
-    net effect (fromstring truncates -> segment-count check fails;
-    split-parse raises -> we return empty), routing callers to the
-    slow from_geojson path."""
-    import warnings
-
-    try:
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore", DeprecationWarning)
-            return np.fromstring(s, sep=" ")
-    except Exception:
-        try:
-            return np.asarray(s.split(), dtype=np.float64)
-        except ValueError:
-            return np.empty(0, dtype=np.float64)
-
-
-# "[]," AND pre-existing whitespace all become newlines in ONE pass
-# (r8: the old two-pass translate-to-space + replace(" ", "\n") copied
-# the multi-MB joined blob an extra time per batch)
-_TBL = str.maketrans("[], ", "\n\n\n\n")
-
-
-def _parse_float_segments(blobs: list) -> np.ndarray:
-    """Coord blobs -> ONE float64 array with NaN separators between
-    segments.  Arrow's CSV float parser (single-threaded) measured
-    ~1.8x np.fromstring on the joined blob; any parse surprise — error,
-    non-float inference — falls back to _parse_floats, whose own
-    failure mode (empty / truncated array) routes the caller's
-    segment-count check to the per-row from_geojson path.  Guards stay
-    a tight per-row str loop (vectorizing short-string scans through
-    Arrow compute measured 7.7x SLOWER); only the float parse runs
-    through Arrow."""
-    joined = "\nnan\n".join(blobs).translate(_TBL)
-    try:
-        import pyarrow as pa
-        import pyarrow.csv as pacsv
-
-        out = (
-            pacsv.read_csv(
-                pa.py_buffer(joined.encode()),
-                read_options=pacsv.ReadOptions(autogenerate_column_names=True, use_threads=False),
-            )
-            .column(0)
-            .to_numpy(zero_copy_only=False)
-        )
-        if out.dtype != np.float64:
-            return _parse_floats(joined)
-        return out
-    except Exception:
-        return _parse_floats(joined)
 
 
 def _collect_polys(polys: DataFrame):
@@ -293,161 +236,6 @@ def pip_join_docs(
     )
 
 
-def _decode_bounds(batches):
-    """One Arrow pass: GeoJSON text -> packed geometry struct + bbox +
-    rect flag, building the output columns DIRECTLY from flat buffers
-    (_emit_decoded) — no pandas dict materialization on the way out.
-    Polygons whose ``coordinates`` is the trailing field (the
-    overwhelmingly common span shape, any ring count) parse as one
-    joined float blob; everything else falls back to from_geojson, and
-    a span it rejects (malformed JSON, unknown type) is dropped."""
-    for batch in batches:
-        n = batch.num_rows
-        if n == 0:
-            continue
-        texts = batch.column(batch.schema.get_field_index("text")).to_pylist()
-        # fast-path rows parse as ONE nan-sentinel-joined float parse,
-        # one segment per ring (per-row fromstring overhead was the
-        # decode hot spot).  A segment-count mismatch (malformed token,
-        # literal 'nan') is a complete safety net — every row then
-        # re-parses through from_geojson.
-        f_j: list[int] = []
-        f_rc: list[int] = []     # ring counts
-        f_blob: list[str] = []   # one blob PER RING, row-major
-        for j, v in enumerate(texts):
-            if v is not None and '"Polygon"' in v and v.endswith("]]]}"):
-                i = v.find('"coordinates"')
-                if i < 0:
-                    continue
-                # ring count == "[[" occurrences in the coords blob
-                # (non-overlapping, exactly one per ring start, with or
-                # without whitespace after the commas — ADVICE r3), and
-                # str.split on "[[" yields exactly those r ring bodies
-                # (the stray "["/"]],"-junk around the floats is
-                # whitespace after the translate table); a single ring
-                # skips the split, the hot span shape
-                r = v.count("[[", i)
-                if r == 1:
-                    f_blob.append(v[i + 14 : -1])
-                elif r:
-                    f_blob.extend(v[i + 14 : -1].split("[[")[1:])
-                else:
-                    continue
-                f_j.append(j)
-                f_rc.append(r)
-        fastmask = np.zeros(n, dtype=bool)
-        if f_blob:
-            nums = _parse_float_segments(f_blob)
-            isn = np.isnan(nums)
-            if int(isn.sum()) == len(f_blob) - 1:
-                seps = np.flatnonzero(isn)
-                starts = np.concatenate(([0], seps + 1))
-                rl = np.concatenate((seps, [nums.size])) - starts  # per-RING float counts
-                rc = np.asarray(f_rc, np.int64)
-                row_id = np.repeat(np.arange(rc.size), rc)
-                ring_ok = (rl >= 8) & (rl % 2 == 0)
-                row_ok = np.bincount(row_id, weights=~ring_ok, minlength=rc.size) == 0
-                if row_ok.any():
-                    # fast rows ship as their own fully-vectorized
-                    # RecordBatch; only the remainder pays the per-row
-                    # fallback loop below
-                    keep_ring = row_ok[row_id]
-                    keep_pos = np.repeat(keep_ring, np.diff(np.append(starts, nums.size))) & ~isn
-                    sel = np.asarray(f_j, np.int64)[row_ok]
-                    fastmask[sel] = True
-                    rc, rl = rc[row_ok], rl[keep_ring]
-                    # ring_offsets per row: [0, p1, p1+p2, ...] in points
-                    ring_at = np.concatenate(([0], np.cumsum(rl)))  # float offset of each ring
-                    first = np.concatenate(([0], np.cumsum(rc)))    # first ring of each row
-                    coffs = ring_at[first]
-                    roffs = np.concatenate(([0], np.cumsum(rc + 1)))
-                    ring_ix = np.arange(roffs[-1]) - np.repeat(roffs[:-1] - first[:-1], rc + 1)
-                    rvals = (ring_at[ring_ix] - np.repeat(coffs[:-1], rc + 1)) // 2
-                    # part_offsets per row: [0, nrings] (one Polygon part)
-                    pvals = np.zeros(2 * rc.size, np.int64)
-                    pvals[1::2] = rc
-                    no_list = (np.empty(0), np.zeros(rc.size + 1, np.int64))
-                    yield _emit_decoded(batch, sel, np.full(rc.size, 3, np.int8), [
-                        (nums[keep_pos], coffs), (rvals, roffs),
-                        (pvals, np.arange(0, 2 * rc.size + 1, 2)), no_list, no_list,
-                    ])
-
-        rows, pgs = [], []
-        for j, v in enumerate(texts):
-            if v is None or fastmask[j]:
-                continue
-            try:
-                pg = from_geojson(v)
-            except (ValueError, KeyError):  # json.JSONDecodeError is a ValueError
-                continue
-            if pg.coords.size:
-                rows.append(j)
-                pgs.append(pg)
-        if not pgs:
-            continue
-
-        def flat(arrs):
-            return np.concatenate([np.asarray(a) for a in arrs]), np.cumsum([0] + [len(a) for a in arrs])
-
-        yield _emit_decoded(batch, np.asarray(rows, np.int64), np.asarray([pg.gtype for pg in pgs], np.int8), [
-            flat([pg.coords for pg in pgs]),
-            flat([pg.ring_offsets for pg in pgs]),
-            flat([pg.part_offsets for pg in pgs]),
-            flat([pg.part_types if pg.gtype == 7 else () for pg in pgs]),
-            flat([pg.child_offsets if pg.gtype == 7 else () for pg in pgs]),
-        ])
-
-
-_GEOM_LISTS = (
-    ("coords", np.float64), ("ring_offsets", np.int32), ("part_offsets", np.int32),
-    ("part_types", np.int8), ("child_offsets", np.int32),
-)
-
-
-def _emit_decoded(batch, sel, gtypes, lists):
-    """The one decode emitter: rows ``sel`` of ``batch`` with their
-    packed geometries -> RecordBatch(doc_id, span_pos, geom, minx, miny,
-    maxx, maxy, rect).  ``gtypes`` is int8[k]; ``lists`` holds the five
-    list fields of the geom struct (_GEOM_LISTS), each as (flat values,
-    k+1 row offsets).  Every row has at least one coordinate pair.
-
-    ``rect`` is geom.pip.rect_rings over single-ring Polygons, and rect
-    rows ship PAYLOAD-FREE (round-4 verdict item 4): a closed
-    axis-aligned rectangle is fully determined by its bbox columns, so
-    its lists are blanked here — most spans at bench shapes stop paying
-    the geometry struct through explode, join, and the refine's Arrow
-    transfer, which tests them from the bbox via
-    rects_intersect_polygon."""
-    import pyarrow as pa
-
-    coords, coffs = lists[0]
-    vstarts = coffs[:-1] // 2
-    xs, ys = coords[0::2], coords[1::2]
-    bbox = [
-        np.minimum.reduceat(xs, vstarts), np.minimum.reduceat(ys, vstarts),
-        np.maximum.reduceat(xs, vstarts), np.maximum.reduceat(ys, vstarts),
-    ]
-    rect = rect_rings(coords, coffs, (gtypes == 3) & (np.diff(lists[1][1]) == 2))
-    fields = [pa.array(gtypes, pa.int8())]
-    for (vals, offs), (_, dtype) in zip(lists, _GEOM_LISTS):
-        lens = np.diff(offs)
-        fields.append(pa.ListArray.from_arrays(
-            pa.array(np.concatenate(([0], np.cumsum(np.where(rect, 0, lens)))), pa.int32()),
-            pa.array(vals[np.repeat(~rect, lens)].astype(dtype, copy=False)),
-        ))
-    take = pa.array(sel)
-    return pa.RecordBatch.from_arrays(
-        [
-            batch.column(batch.schema.get_field_index("doc_id")).take(take),
-            batch.column(batch.schema.get_field_index("span_pos")).take(take),
-            pa.StructArray.from_arrays(fields, names=["gtype", *(name for name, _ in _GEOM_LISTS)]),
-            *(pa.array(b, pa.float64()) for b in bbox),
-            pa.array(rect),
-        ],
-        names=["doc_id", "span_pos", "geom", "minx", "miny", "maxx", "maxy", "rect"],
-    )
-
-
 def _poly_span_candidates(docs: DataFrame, bboxes: dict, rect_pids: frozenset, res: int) -> DataFrame:
     """non-Point geo spans of ``docs`` -> deduped (doc_id, span_pos,
     poly_id, geom, rect, _prect, bbox) candidates: geojson decode ->
@@ -472,25 +260,12 @@ def _poly_span_candidates(docs: DataFrame, bboxes: dict, rect_pids: frozenset, r
     level choice, because the cell holding the bbox-intersection
     lower-left corner is covered by both sides at the span's level.
 
-    The decode is ONE mapInArrow pass (_decode_bounds) that emits the
-    packed geometry AND its bbox as concrete columns.  The previous
-    scalar-UDF version (geojson_decode_udf + geom_bounds_udf) got
-    duplicated by projection collapse into stacked ArrowEvalPython stages — the JSON parse ran
-    several times per span (measured 14.7s -> ~4s on 2M spans at
-    local[32]).  A mapInArrow node is a black-box projection the
-    optimizer can neither split nor replicate."""
+    The decode is the one mapInArrow pass (decode_geojson) with
+    payload-free rectangles: the rect-x-rect split and the refine read a
+    rectangle span from its bbox columns."""
     lmin = max(0, res - ADAPTIVE_LEVEL_WINDOW)
-    g = extract_geo_spans(docs).where(f"NOT {point_xy_sql('text')[2]}").selectExpr(
-        "doc_id", "span_pos", "text"
-    ).mapInArrow(
-        _decode_bounds,
-        schema=(
-            "doc_id string, span_pos int, "
-            "geom struct<gtype:tinyint,coords:array<double>,ring_offsets:array<int>,part_offsets:array<int>,"
-            "part_types:array<tinyint>,child_offsets:array<int>>, "
-            "minx double, miny double, maxx double, maxy double, rect boolean"
-        ),
-    )
+    spans = extract_geo_spans(docs).where(f"NOT {point_xy_sql('text')[2]}")
+    g = decode_geojson(spans, "text", ["doc_id", "span_pos"], blank_rect=True)
 
     # the whole level-pick -> explode -> cell-id -> bbox-filter ->
     # reporting-cell chain is emitted as server-side-parsed SQL strings
@@ -695,32 +470,22 @@ def pip_join_points_shuffle(
 ) -> DataFrame:
     """Big-polygon-side variant: no driver collect, no broadcast dict.
 
-    The polygon table is decoded (pandas UDF) and cover-exploded
-    DISTRIBUTED (the cell-grid SQL explode of geom.cells over bboxes
-    computed in codegen), candidates come from a shuffle hash join on
-    cell_id with **salted repartitioning on hot cells** (north_star: points
-    side counts pick hot cell ids; their rows split across `salt`
-    reducers, the polygon side's hot rows are exploded x salt), and the
-    ray-cast refinement runs per candidate batch with each polygon's
-    packed coords decoded once per (batch, poly) group.
+    The polygon table is decoded by the one mapInArrow pass
+    (decode_geojson, which also emits each bbox) and cover-exploded
+    DISTRIBUTED (the cell-grid SQL explode of geom.cells), candidates
+    come from a shuffle hash join on cell_id with **salted
+    repartitioning on hot cells** (north_star: points side counts pick
+    hot cell ids; their rows split across `salt` reducers, the polygon
+    side's hot rows are exploded x salt), and the ray-cast refinement
+    runs per candidate batch with each polygon's packed coords read
+    once per (batch, poly) group.
 
     Semantics identical to pip_join_points (tested); use when the
     polygon side is too large to broadcast.
     """
-    from ..functions.geometry_fns import geojson_decode_udf
     from .skew import salted_join
 
-    gp = polys.select("poly_id", geojson_decode_udf(F.col("geojson")).alias("geom"))
-    # per-axis bbox extents in codegen (coords interleave x and y)
-    gb = gp.selectExpr(
-        "poly_id", "geom",
-        "filter(geom.coords, (v, i) -> i % 2 = 0) AS _xs",
-        "filter(geom.coords, (v, i) -> i % 2 = 1) AS _ys",
-    ).selectExpr(
-        "poly_id", "geom",
-        "array_min(_xs) AS minx", "array_min(_ys) AS miny",
-        "array_max(_xs) AS maxx", "array_max(_ys) AS maxy",
-    )
+    gb = decode_geojson(polys, "geojson", ["poly_id"])
     if res is None:
         # _auto_res computed distributed: the approximate median extent
         # and the largest-area bbox in one aggregate

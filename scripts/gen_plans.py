@@ -76,8 +76,9 @@ def main():
     g3 = RasterGrid("pc", 4326, (0.01, 0.0, 26.0, 0.0, -0.01, 55.0), 300, 200, 64, 64, 1, "uint8")
     sections.append((
         "Distributed polygon cover (rasterize/zonal scale path)",
-        "No driver collect: one ArrowEvalPython decode, then envelope/"
-        "inverse-affine/tile-range explode entirely in codegen Column math — "
+        "No driver collect: one decode_geojson MapInArrow (packed geometry "
+        "plus envelope), then inverse-affine/tile-range explode entirely in "
+        "codegen Column math — "
         "ready to shuffle on (tile_x, tile_y) with the packed coords riding "
         "the rows.",
         cap(contribs_distributed(rect_polygons_df(spark), g3)),

@@ -369,6 +369,24 @@ def test_cell_format_in_one_module():
     assert not bad, bad
 
 
+def test_operators_decode_once():
+    """Operators decode GeoJSON only through the one mapInArrow pass
+    (functions.geometry_fns.decode_geojson): no module under operators/
+    names the row-preserving scalar geojson_decode_udf, and the deleted
+    scalar bounds UDF and the span path's private decoder stay deleted."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    ops = root / "gdal_boots_spark" / "operators"
+    gone = re.compile(r"^\s*def\s+(?:geom_bounds_udf|_decode_bounds)\b", re.M)
+    bad = [p.name for p in sorted(ops.rglob("*.py")) if "geojson_decode_udf" in p.read_text()]
+    for path in sorted(root.rglob("*.py")):
+        if not any(part.startswith(".") for part in path.relative_to(root).parts):
+            bad += [f"{path.relative_to(root)}: {m.group(0).strip()}" for m in gone.finditer(path.read_text())]
+    assert not bad, bad
+
+
 def test_cell_bounds_contains_point():
     cid = cell_id(np.array([27.56]), np.array([53.9]), 10)
     minlon, minlat, maxlon, maxlat = cell_bounds(cid)

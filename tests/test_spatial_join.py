@@ -823,19 +823,19 @@ def test_board_oracle_contract():
     assert aq == ao, (sorted(aq - ao), sorted(ao - aq))
 
 
-def test_multiring_fast_decode_parity():
-    """_decode_bounds (joined-blob fast path for trailing-coordinates
+def test_multiring_fast_decode_parity(spark):
+    """decode_geojson (joined-blob fast path for trailing-coordinates
     Polygons of any ring count, per-row from_geojson for the rest) must
     be BIT-IDENTICAL to a reference built row by row from from_geojson:
-    bbox, rect flag and payload (blanked for rectangles), across hole
-    polygons in both compact and whitespace serializations, MultiPolygon
-    and GeometryCollection rows.  None rows and a truncated-JSON row are
-    dropped, not raised."""
+    bbox, rect flag and payload (blanked for rectangles only under
+    blank_rect), across hole polygons in both compact and whitespace
+    serializations, MultiPolygon, GeometryCollection, LineString,
+    MultiLineString, Point and 3-D rows.  The string/int/long keep
+    columns pass through.  None rows, a truncated-JSON row and an empty
+    GeometryCollection are dropped, not raised."""
     import json
 
-    import pyarrow as pa
-
-    import gdal_boots_spark.operators.spatial_join as sj
+    from gdal_boots_spark.functions.geometry_fns import decode_geojson
     from gdal_boots_spark.geom.packed import from_geojson
 
     rng = np.random.default_rng(3)
@@ -844,13 +844,13 @@ def test_multiring_fast_decode_parity():
     def poly(rings, sep=(",", ":")):
         return json.dumps({"type": "Polygon", "coordinates": rings}, separators=sep)
 
-    for i in range(400):
+    for i in range(480):
         cx, cy = float(rng.uniform(-170, 170)), float(rng.uniform(-80, 80))
         outer = [[cx, cy], [cx + 1, cy], [cx + 1, cy + 1], [cx, cy + 1], [cx, cy]]
         hole = [[cx + 0.2, cy + 0.2], [cx + 0.4, cy + 0.2], [cx + 0.3, cy + 0.4], [cx + 0.2, cy + 0.2]]
         hole2 = [[cx + 0.6, cy + 0.6], [cx + 0.8, cy + 0.6], [cx + 0.7, cy + 0.8], [cx + 0.6, cy + 0.6]]
-        k = i % 8
-        is_rect.append(k in (0, 3))
+        k = i % 12
+        is_rect.append(k in (0, 3, 10))
         if k == 0:
             texts.append(poly([outer]))
         elif k == 1:
@@ -868,43 +868,103 @@ def test_multiring_fast_decode_parity():
                 {"type": "Point", "coordinates": [cx, cy]}]}))
         elif k == 6:
             texts.append(None)
-        else:
+        elif k == 7:
             texts.append(poly([outer, hole]).replace(",", ", "))
-    texts.append(poly([outer, hole])[:-7])  # truncated JSON
-    is_rect.append(False)
+        elif k == 8:
+            texts.append(json.dumps({"type": "LineString", "coordinates": hole}))
+        elif k == 9:
+            texts.append(json.dumps({"type": "MultiLineString", "coordinates": [hole, hole2]}))
+        elif k == 10:  # 3-D rectangle
+            texts.append(poly([[p + [5.0] for p in outer]]))
+        else:
+            texts.append(json.dumps({"type": "Point", "coordinates": [cx, cy]}))
+    for extra in (
+        poly([[p + [1.0] for p in outer], [p + [2.0] for p in hole]]),
+        poly([[[0.0, 0.0, 5.0], [4.0, 0.0, 5.0], [0.0, 4.0, 5.0], [0.0, 0.0, 5.0]]]),
+        json.dumps({"type": "LineString", "coordinates": [[0.0, 0.0, 1.0], [1.0, 1.0, 1.0]]}),
+        poly([outer, hole]).replace("]],[[", "]], [ ["),  # "[[" misses the hole's start
+        json.dumps({"type": "GeometryCollection", "geometries": []}),
+        poly([outer, hole])[:-7],  # truncated JSON
+    ):
+        texts.append(extra)
+        is_rect.append(False)
 
-    batch = pa.RecordBatch.from_arrays(
-        [pa.array([str(i) for i in range(len(texts))]),
-         pa.array(np.arange(len(texts), dtype=np.int32)),
-         pa.array(texts)],
-        names=["doc_id", "span_pos", "text"],
+    df = spark.createDataFrame(
+        [(str(i), i, i * 1_000_000_007, t) for i, t in enumerate(texts)],
+        "doc_id string, span_pos int, k long, text string",
     )
-    got = {}
-    for rb in sj._decode_bounds([batch]):
-        t = rb.to_pydict()
-        for m in range(rb.num_rows):
-            got[t["doc_id"][m]] = tuple(t[k][m] for k in rb.schema.names[1:])
+    for blank in (False, True):
+        out = decode_geojson(df, "text", ["doc_id", "span_pos", "k"], blank_rect=blank)
+        assert out.columns == ["doc_id", "span_pos", "k", "geom", "minx", "miny", "maxx", "maxy", "rect"]
+        got = {r["doc_id"]: tuple(r.asDict(recursive=True).values())[1:] for r in out.collect()}
 
-    exp = {}
-    for i, (text, rect) in enumerate(zip(texts, is_rect)):
-        try:
-            pg = from_geojson(text) if text is not None else None
-        except ValueError:
-            continue
-        if pg is None:
-            continue
-        xy = pg.coords.reshape(-1, 2)
-        gc = pg.gtype == 7
-        geom = {
-            "gtype": pg.gtype,
-            "coords": [] if rect else pg.coords.tolist(),
-            "ring_offsets": [] if rect else pg.ring_offsets.tolist(),
-            "part_offsets": [] if rect else pg.part_offsets.tolist(),
-            "part_types": pg.part_types.tolist() if gc else [],
-            "child_offsets": pg.child_offsets.tolist() if gc else [],
-        }
-        exp[str(i)] = (i, geom, xy[:, 0].min(), xy[:, 1].min(), xy[:, 0].max(), xy[:, 1].max(), rect)
-    assert got == exp and len(got) == 350  # 50 None rows and the truncated row dropped
+        exp = {}
+        for i, (text, rect) in enumerate(zip(texts, is_rect)):
+            try:
+                pg = from_geojson(text) if text is not None else None
+            except ValueError:
+                continue
+            if pg is None or pg.coords.size == 0:
+                continue
+            xy = pg.coords.reshape(-1, 2)
+            gc = pg.gtype == 7
+            empty = rect and blank
+            geom = {
+                "gtype": pg.gtype,
+                "coords": [] if empty else pg.coords.tolist(),
+                "ring_offsets": [] if empty else pg.ring_offsets.tolist(),
+                "part_offsets": [] if empty else pg.part_offsets.tolist(),
+                "part_types": pg.part_types.tolist() if gc else [],
+                "child_offsets": pg.child_offsets.tolist() if gc else [],
+            }
+            exp[str(i)] = (
+                i, i * 1_000_000_007, geom, xy[:, 0].min(), xy[:, 1].min(), xy[:, 0].max(), xy[:, 1].max(), rect,
+            )
+        # 40 None rows, the empty collection and the truncated row dropped
+        assert got == exp and len(got) == 444
+
+
+def test_3d_span_coordinates_join(spark):
+    """GeoJSON positions may carry an altitude.  A 3-D span joins like
+    its 2-D twin: the triangle (0,0),(4,0),(0,4) misses both dims near
+    (4.5, 0.5) whatever its z, and a 3-D square around them hits both."""
+    import json
+
+    from gdal_boots_spark.operators.spatial_join import pip_join_docs_any
+
+    def doc(doc_id, coords):
+        span = {"kind": "geo", "text": json.dumps({"type": "Polygon", "coordinates": [coords]}),
+                "media_ref": None, "offset": 0}
+        return (doc_id, [span])
+
+    tri = [[0.0, 0.0], [4.0, 0.0], [0.0, 4.0], [0.0, 0.0]]
+    square = [[4.0, 0.0], [5.0, 0.0], [5.0, 1.0], [4.0, 1.0], [4.0, 0.0]]
+    docs = spark.createDataFrame(
+        [doc("d2", tri), doc("d3", [p + [5.0] for p in tri]), doc("s3", [p + [5.0] for p in square])],
+        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    rect = [[4.2, 0.2], [4.8, 0.2], [4.8, 0.8], [4.2, 0.8], [4.2, 0.2]]
+    inner = [[4.3, 0.3], [4.7, 0.3], [4.3, 0.7], [4.3, 0.3]]
+    polys = spark.createDataFrame(
+        [(pid, json.dumps({"type": "Polygon", "coordinates": [r]})) for pid, r in ((1, rect), (2, inner))],
+        "poly_id long, geojson string",
+    )
+    got = sorted(tuple(r) for r in pip_join_docs_any(docs, polys).collect())
+    assert got == [("s3", 0, 1), ("s3", 0, 2)]
+
+
+def test_decode_once_plan_shape(spark):
+    """The distributed raster x vector paths, the shuffle PIP join and
+    the intersects join decode each GeoJSON input in exactly one
+    decode_geojson mapInArrow, with no ArrowEvalPython (scalar pandas
+    UDF) node left in their executed plans."""
+    qs = entrymod.all_queries()
+    for name, inputs in (
+        ("rasterize_hist_dist", 1), ("zonal_stats_dist", 1), ("pip_join_shuffle", 1), ("intersects_join", 2),
+    ):
+        plan = qs[name](spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan, (name, plan)
+        assert plan.count("MapInArrow _decode_geojson(") == inputs, (name, plan)
 
 
 @pytest.mark.parametrize("name", ["order", "my id"])
