@@ -380,22 +380,22 @@ def neardup_groups(
     docs in no pair map to themselves.
 
     Scale shape: pairs come from the bucketed LSH join (never
-    all-pairs); components via min-label propagation + pointer jumping
-    (polygonize._cc_distributed — O(log diameter) rounds); the final
-    assignment is ONE left join on doc_id + a window count.  All
-    shuffles are on narrow (id, id) rows.
+    all-pairs); components come from polygonize.connected_components
+    (one lazy mapInArrow task over the (a, b) pairs, memory O(distinct
+    paired docs + pairs)), so building the plan runs no Spark job; the
+    final assignment is ONE left join on doc_id + a window count.
     """
     from pyspark.sql import Window as _W
 
-    from .polygonize import _cc_distributed
+    from .polygonize import connected_components
 
     pairs = lsh_candidate_pairs(
         docs, n_hashes=n_hashes, bands=bands, shingle_n=shingle_n,
         id_col=id_col, text_col=text_col, max_bucket=max_bucket,
     )
-    labels = _cc_distributed(pairs.select(F.col("a").alias("x"), F.col("b").alias("y")))
-    out = docs.select(F.col(id_col).alias("doc_id")).join(
+    labels = connected_components(pairs.selectExpr("a AS x", "b AS y"))
+    out = docs.selectExpr(f"`{id_col}` AS doc_id").join(
         labels.withColumnRenamed("comp", "doc_id"), "doc_id", "left"
-    ).select("doc_id", F.coalesce("gid", F.col("doc_id")).alias("canonical_id"))
+    ).selectExpr("doc_id", "coalesce(gid, doc_id) AS canonical_id")
     w = _W.partitionBy("canonical_id")
     return out.withColumn("group_size", F.count("*").over(w).cast("long"))

@@ -5,16 +5,15 @@ gdal.Polygonize: 4-connected regions of equal pixel value -> polygons.
 
 Engine shape (the two-stage plan of SURVEY §2.7):
 
-  1. per-tile mapInPandas: label components, emit per-component
-     (value, pixel count, directed boundary edges as an int64 blob,
-     border runs on each tile side);
+  1. per-tile mapInArrow: label components, emit per-component
+     (value, pixel count, directed boundary edges as an int64 blob) and
+     border runs on each tile side, as typed columns;
   2. adjacency join: border runs meet across a shared tile line when
      value matches and row/col intervals overlap -> merge pairs;
-  3. connected components over merge pairs — driver union-find for
-     small merge graphs (one node per *border-touching component*, not
-     per pixel), or an iterative min-label-propagation +
-     pointer-jumping Spark pass (O(log diameter) rounds) when the
-     merge graph exceeds ``cc_threshold`` (planet-scale rasters);
+  3. ``connected_components`` over the merge pairs: one lazy
+     mapInArrow task (vectorized root hooking + pointer jumping) over
+     one node per *border-touching component*, not per pixel — no
+     Spark job at build time;
   4. groupBy(global component): concat edges, cancel seam pairs, trace
      rings, emit Polygon (shell + holes) in world coordinates.
 
@@ -41,21 +40,25 @@ from ..geom.polygonize_kernel import (
 from ..geom.validity import _interior_point
 from ..sources.tiles import RasterGrid
 
+# one row per component (npix, edges set) or per border run (axis, line,
+# lo, hi set); the other kind's columns are null
+_SWEEP = "comp string, value double, npix long, edges binary, axis string, line long, lo long, hi long"
+
 
 def _per_tile(grid: RasterGrid, exclude):
     tw, th = grid.tile_w, grid.tile_h
 
     def fn(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            comp_rows, border_rows = [], []
-            for t in pdf.itertuples(index=False):
-                arr = np.frombuffer(t.data, dtype=np.dtype(t.dtype)).reshape(t.height, t.width)
+        types = {"string": pa.string(), "double": pa.float64(), "long": pa.int64(), "binary": pa.binary()}
+        schema = pa.schema([(n, types[t]) for n, t in (c.split() for c in _SWEEP.split(", "))])
+        for batch in batches:
+            rows = []
+            for t in batch.to_pylist():
+                arr = np.frombuffer(t["data"], dtype=np.dtype(t["dtype"])).reshape(t["height"], t["width"])
                 labels, n = label_components(arr, exclude=exclude)
-                if n == 0:
-                    continue
-                tx, ty = int(t.tile_x), int(t.tile_y)
+                tx, ty = int(t["tile_x"]), int(t["tile_y"])
                 r0, c0 = ty * th, tx * tw
                 h, w = arr.shape
                 for lab in range(1, n + 1):
@@ -63,9 +66,7 @@ def _per_tile(grid: RasterGrid, exclude):
                     val = float(arr[m][0])
                     edges = boundary_edges(labels, lab, r0=r0, c0=c0)
                     ckey = f"{tx}_{ty}_{lab}"
-                    comp_rows.append(
-                        {"comp": ckey, "value": val, "npix": int(m.sum()), "edges": edges.tobytes()}
-                    )
+                    rows.append((ckey, val, int(m.sum()), edges.tobytes(), None, None, None, None))
                     # border runs (global pixel indices along each side)
                     sides = [
                         ("v", c0, m[:, 0], r0),        # left side at line x=c0
@@ -82,176 +83,109 @@ def _per_tile(grid: RasterGrid, exclude):
                         starts = np.concatenate([[0], breaks + 1])
                         ends = np.concatenate([breaks, [len(idx) - 1]])
                         for s, e in zip(starts, ends):
-                            border_rows.append(
-                                {
-                                    "comp": ckey,
-                                    "value": val,
-                                    "axis": axis,
-                                    "line": int(line),
-                                    "lo": int(idx[s] + off),
-                                    "hi": int(idx[e] + off + 1),
-                                }
-                            )
-            if comp_rows:
-                yield pd.DataFrame(
-                    {
-                        "kind": ["c"] * len(comp_rows) + ["b"] * len(border_rows),
-                        "payload": [json.dumps({k: v for k, v in r.items() if k != "edges"}) for r in comp_rows]
-                        + [json.dumps(r) for r in border_rows],
-                        "edges": [r["edges"] for r in comp_rows] + [None] * len(border_rows),
-                    }
-                )
+                            lo, hi = int(idx[s] + off), int(idx[e] + off + 1)
+                            rows.append((ckey, val, None, None, axis, int(line), lo, hi))
+            if rows:
+                cols = [pa.array(c, type=f.type) for c, f in zip(zip(*rows), schema)]
+                yield pa.RecordBatch.from_arrays(cols, schema=schema)
 
     return fn
 
 
-def _cc_distributed(pairs: DataFrame) -> DataFrame:
-    """Connected components over (x, y) merge pairs -> (comp, gid) with
-    gid = lexicographic-min member of each component (the same root the
-    driver union-find picks, so outputs are path-identical).
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """Connected components over ``(x, y)`` id pairs -> ``(comp, gid)``
+    for every id in a pair, with gid the smallest id of its component
+    (string or long ids; strings order as Spark orders them).
 
-    Min-label propagation with pointer jumping: each round does one
-    1-hop min over the edge set and one label-of-label shortcut, which
-    converges in O(log diameter) rounds — a planet-scale seam graph
-    (10^8 border components, long tile-chain diameters) stays tractable
-    where single-step propagation would need O(diameter) rounds.
+    One lazy mapInArrow task: ``np.unique`` codes the ids (sorted, so
+    the smallest code is the smallest id), then each round hooks every
+    root under the smallest root it shares an edge with and pointer-
+    jumps each id to its root, until no edge joins two roots.  Building
+    it runs no Spark job; memory is O(distinct ids + pairs) in one task.
     """
-    edges = pairs.select(F.col("x").alias("u"), F.col("y").alias("v")).unionByName(
-        pairs.select(F.col("y").alias("u"), F.col("x").alias("v"))
-    ).persist()
-    labels = edges.select(F.col("u").alias("comp")).distinct().select(
-        "comp", F.col("comp").alias("gid")
-    ).localCheckpoint(eager=True)
-    while True:
-        # 1-hop: candidate label for v = label of each neighbor u
-        hop = edges.join(labels.withColumnRenamed("comp", "u"), "u").select(
-            F.col("v").alias("comp"), "gid"
-        )
-        l2 = labels.unionByName(hop).groupBy("comp").agg(F.min("gid").alias("gid"))
-        # pointer jump: gid <- gid(gid)
-        l3 = l2.alias("a").join(
-            l2.select(F.col("comp").alias("gid"), F.col("gid").alias("gid2")).alias("b"), "gid", "left"
-        ).select("comp", F.coalesce("gid2", "gid").alias("gid")).localCheckpoint(eager=True)
-        n_changed = (
-            l3.alias("n").join(labels.alias("o"), "comp").where(F.col("n.gid") != F.col("o.gid")).count()
-        )
-        labels = l3
-        if n_changed == 0:
-            break
-    edges.unpersist()
-    return labels
+    t = pairs.schema["x"].dataType.simpleString()
+
+    def cc(batches):
+        import pyarrow as pa
+
+        xs, ys = [], []
+        for b in batches:
+            xs.append(b.column("x").to_numpy(zero_copy_only=False))
+            ys.append(b.column("y").to_numpy(zero_copy_only=False))
+        ids = np.concatenate(xs + ys) if xs else np.empty(0, np.int64)
+        if len(ids) == 0:
+            return
+        if ids.dtype == object:
+            ids = ids.astype(str)
+        uniq, code = np.unique(ids, return_inverse=True)
+        u, v = code[: len(ids) // 2], code[len(ids) // 2:]
+        root = np.arange(len(uniq))
+        while True:
+            ru, rv = root[u], root[v]
+            cross = ru != rv
+            if not cross.any():
+                break
+            np.minimum.at(root, np.maximum(ru, rv)[cross], np.minimum(ru, rv)[cross])
+            while True:
+                nxt = root[root]
+                if (nxt == root).all():
+                    break
+                root = nxt
+        yield pa.RecordBatch.from_arrays([pa.array(uniq), pa.array(uniq[root])], names=["comp", "gid"])
+
+    return pairs.select("x", "y").repartition(1).mapInArrow(cc, f"comp {t}, gid {t}")
 
 
 def polygonize(
     spark: SparkSession, tiles: DataFrame, grid: RasterGrid, exclude=None, band: int = 0,
-    cc_threshold: int = 200_000, distributed_cc: bool | None = None,
     progress=None,
 ) -> DataFrame:
     """-> (comp_id string, value double, n_pixels long, geojson string).
 
-    ``distributed_cc``: None = auto (driver union-find while the merge
-    graph has <= cc_threshold pairs, Spark CC beyond), True/False to
-    force a path.  Outputs are identical either way (tested).
+    ``comp_id`` is the smallest per-tile component key of each stitched
+    component.
 
     ``progress``: optional GDAL-style callback ``(fraction, msg,
     user_data)`` mirroring the reference's ``to_vector(callback=...)``
     (gdal.py:609-623, exercised with tqdm in test_raster.py:120-134).
     gdal.Polygonize is synchronous, so when a callback is given the
-    stages run eagerly (tile sweep -> merge graph -> connected
-    components -> ring assembly) and the returned DataFrame is fully
+    stages run eagerly (tile sweep, then merge graph + connected
+    components + ring assembly) and the returned DataFrame is fully
     materialized (persisted) by the time 1.0 is reported; without one,
-    the plan stays lazy as before."""
+    the plan stays lazy and building it runs no Spark job."""
     def _report(frac, msg):
         if progress is not None:
             progress(frac, msg, None)
 
     _report(0.0, "polygonize: tile sweep")
-    src = tiles.where(F.col("band") == band).select("tile_x", "tile_y", "width", "height", "dtype", "data")
-    raw = src.mapInPandas(_per_tile(grid, exclude), schema="kind string, payload string, edges binary").persist()
+    src = tiles.where(f"band = {int(band)}").select("tile_x", "tile_y", "width", "height", "dtype", "data")
+    # the one branch point: components and border runs both read it
+    sweep = src.mapInArrow(_per_tile(grid, exclude), _SWEEP).persist()
     if progress is not None:
-        raw.count()  # materialize the per-tile pass into the persisted cache
-        _report(0.4, "polygonize: merge graph")
+        sweep.count()  # materialize the per-tile pass into the persisted cache
+        _report(0.4, "polygonize: merge graph, connected components, ring assembly")
 
-    comps = raw.where(F.col("kind") == "c").select(
-        F.get_json_object("payload", "$.comp").alias("comp"),
-        F.get_json_object("payload", "$.value").cast("double").alias("value"),
-        F.get_json_object("payload", "$.npix").cast("long").alias("npix"),
-        "edges",
-    )
-    borders = raw.where(F.col("kind") == "b").select(
-        F.get_json_object("payload", "$.comp").alias("comp"),
-        F.get_json_object("payload", "$.value").cast("double").alias("value"),
-        F.get_json_object("payload", "$.axis").alias("axis"),
-        F.get_json_object("payload", "$.line").cast("long").alias("line"),
-        F.get_json_object("payload", "$.lo").cast("long").alias("lo"),
-        F.get_json_object("payload", "$.hi").cast("long").alias("hi"),
+    comps = sweep.where("axis IS NULL").select("comp", "value", "npix", "edges")
+    borders = sweep.where("axis IS NOT NULL").select("comp", "value", "axis", "line", "lo", "hi")
+    pairs = borders.alias("a").join(
+        borders.alias("b"),
+        F.expr(
+            "a.axis = b.axis AND a.line = b.line AND a.value = b.value"
+            " AND a.comp < b.comp AND a.lo < b.hi AND b.lo < a.hi"
+        ),
+    ).selectExpr("a.comp AS x", "b.comp AS y")
+    merged = comps.join(connected_components(pairs), "comp", "left").selectExpr(
+        "coalesce(gid, comp) AS gid", "comp", "value", "npix", "edges"
     )
 
-    a = borders.alias("a")
-    b = borders.alias("b")
-    pairs_df = (
-        a.join(
-            b,
-            (F.col("a.axis") == F.col("b.axis"))
-            & (F.col("a.line") == F.col("b.line"))
-            & (F.col("a.value") == F.col("b.value"))
-            & (F.col("a.comp") < F.col("b.comp"))
-            & (F.col("a.lo") < F.col("b.hi"))
-            & (F.col("b.lo") < F.col("a.hi")),
-        )
-        .select(F.col("a.comp").alias("x"), F.col("b.comp").alias("y"))
-        .distinct()
-        .persist()
-    )
-    if distributed_cc is None:
-        use_dist = pairs_df.count() > cc_threshold
-    else:
-        use_dist = distributed_cc
-    _report(0.6, "polygonize: connected components")
-
-    if use_dist:
-        labels = _cc_distributed(pairs_df)
-        merged = comps.join(labels.withColumnRenamed("gid", "_gid"), "comp", "left").withColumn(
-            "gid", F.coalesce("_gid", "comp")
-        ).drop("_gid")
-    else:
-        # driver union-find over border-touching components
-        pairs = pairs_df.collect()
-        parent: dict[str, str] = {}
-
-        def find(u):
-            parent.setdefault(u, u)
-            while parent[u] != u:
-                parent[u] = parent[parent[u]]
-                u = parent[u]
-            return u
-
-        for r in pairs:
-            ru, rv = find(r["x"]), find(r["y"])
-            if ru != rv:
-                parent[max(ru, rv)] = min(ru, rv)
-        mapping = {u: find(u) for u in list(parent)}
-        bmap = spark.sparkContext.broadcast(mapping)
-
-        @F.pandas_udf("string")
-        def gid_of(comp):
-            import pandas as pd
-
-            m = bmap.value
-            return pd.Series([m.get(c, c) for c in comp])
-
-        merged = comps.withColumn("gid", gid_of(F.col("comp")))
-    pairs_df.unpersist()
-
-    g = grid
-    a_, b_, c_, d_, e_, f_ = g.transform
+    a_, b_, c_, d_, e_, f_ = grid.transform
 
     def assemble(key, pdf):
         import pandas as pd
 
         # concat in comp-key order: edge order feeds ring tracing, so a
         # deterministic order makes the emitted GeoJSON reproducible
-        # under any parallelism / CC path
+        # under any parallelism
         pdf = pdf.sort_values("comp")
         edges = np.concatenate(
             [np.frombuffer(x, dtype=np.int64).reshape(-1, 4) for x in pdf["edges"]]
@@ -302,7 +236,6 @@ def polygonize(
         assemble, schema="comp_id string, value double, n_pixels long, geojson string"
     )
     if progress is not None:
-        _report(0.8, "polygonize: ring assembly")
         out = out.persist()
         out.count()
         _report(1.0, "polygonize: done")

@@ -445,8 +445,9 @@ def pip_join_docs_any(docs: DataFrame, polys: DataFrame, res: int | None = None)
 
     # persist (NOT localCheckpoint): lineage survives, so an executor
     # loss on a 1000-node cluster recomputes the lost partitions instead
-    # of failing the job; spill-to-disk bounds memory; the
-    # ContextCleaner unpersists when the plan is released.
+    # of failing the job; spill-to-disk bounds memory.  Nothing frees
+    # the cached copy when the plan is released: the CacheManager holds
+    # it until unpersist/clearCache, across Python and JVM GC.
     c = cand.persist(StorageLevel.MEMORY_AND_DISK)
     fast = c.where("rect AND _prect").selectExpr("doc_id", "span_pos", "poly_id")
     slow = c.where("NOT (rect AND _prect)").where(

@@ -64,10 +64,22 @@ def test_many_rasters_sample_their_own_values(spark):
         assert sampled(i) == [(0, 100.0 * i), (1, 14.0 + 100 * i)], i
 
 
+def _build_jobs(spark, tag, build):
+    """Spark jobs that ``build()`` runs, counted in its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        build()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
 def test_board_rebuild_is_all_memo_hits(spark):
     """Building the benchmark board's ten queries a second time in one
-    session runs no memo miss: every probe, collect and relation comes
-    from the memo."""
+    session runs no memo miss and no Spark job: every probe, collect and
+    relation comes from the memo, and every plan stays lazy."""
     import __spark_entry__ as entry
     from gdal_boots_spark import memo
 
@@ -79,12 +91,21 @@ def test_board_rebuild_is_all_memo_hits(spark):
     for name in board:
         qs[name](spark, SF_SMOKE)
     before = memo.stats()
-    for name in board:
-        qs[name](spark, SF_SMOKE)
+    jobs = {name: _build_jobs(spark, f"warm-build-{name}", lambda: qs[name](spark, SF_SMOKE)) for name in board}
     after = memo.stats()
     misses = {k: v["misses"] - before.get(k, {"misses": 0})["misses"] for k, v in after.items()}
     assert not any(misses.values()), misses
     assert sum(v["hits"] for v in after.values()) > sum(v["hits"] for v in before.values())
+    assert not any(jobs.values()), {name: n for name, n in jobs.items() if n}
+
+
+def test_neardup_groups_builds_without_jobs(spark):
+    """The LSH pairs, their connected components and the group join are
+    one lazy plan: building it runs no Spark job."""
+    from gdal_boots_spark.operators.dedup import neardup_groups
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    assert _build_jobs(spark, "build-neardup-groups", lambda: neardup_groups(docs, n_hashes=16, bands=8)) == 0
 
 
 def test_memo_lru_and_clear(spark):

@@ -91,31 +91,89 @@ def test_polygonize_world_transform(spark):
     assert (min(ys), max(ys)) == (18.5, 19.5)  # rows 1..3, y-flip
 
 
-def test_polygonize_distributed_cc_matches_driver(spark):
-    """A merge graph spanning >= 100 border components (16 stripe rows
-    x 16 tile columns -> 256 border comps in 16 chains): the Spark CC
-    path (min-label propagation + pointer jumping) must produce exactly
-    the driver union-find's components (VERDICT r1 item 5)."""
-    import numpy as np
+def _serpentine(n=21):
+    """One value-1 path snaking through every other row (value-0 strips
+    between): with 3px tiles it crosses a seam every few pixels, so its
+    merge graph is a long chain."""
+    arr = np.zeros((n, n), np.int32)
+    arr[::2, :] = 1
+    for i, r in enumerate(range(1, n, 2)):
+        arr[r, n - 1 if i % 2 == 0 else 0] = 1
+    return arr
 
-    from gdal_boots_spark.operators.polygonize import polygonize
-    from gdal_boots_spark.sources.tiles import RasterGrid, array_to_tiles
 
+def _seam_touches():
+    """Equal values meeting only at a tile corner (two components) and
+    different values side by side across a seam (never merged)."""
+    arr = np.zeros((8, 8), np.int32)
+    arr[2:4, 2:4] = 5
+    arr[4:6, 4:6] = 5  # corner-touch at pixel corner (4, 4), a tile corner
+    arr[2:4, 4:6] = 6  # across the col-4 seam from the first 5-block
+    arr[4:6, 2:4] = 6  # corner-touches the other 6-block
+    return arr
+
+
+def test_polygonize_matches_whole_raster_labels(spark):
+    """The stitched components equal whole-raster ``label_components``
+    (checked pixel by pixel through the PIP round trip) on many-tile
+    rasters: 16 stripe chains over 16 tile columns, a serpentine whose
+    long diameter spans dozens of seams, and seam/corner contacts."""
     h, w = 16, 256
-    arr = np.repeat(np.arange(1, h + 1, dtype=np.int32)[:, None], w, axis=1)
-    grid = RasterGrid("cc", 4326, (0.01, 0.0, 0.0, 0.0, -0.01, 10.0), w, h, 16, 16, 1, "int32")
-    tiles = array_to_tiles(spark, arr, grid)
+    stripes = np.repeat(np.arange(1, h + 1, dtype=np.int32)[:, None], w, axis=1)
+    rows = _pip_roundtrip(spark, stripes, exclude=0, tile=16)
+    assert sorted(r["n_pixels"] for r in rows) == [w] * h
 
-    def snap(df):
-        return sorted(
-            (r["comp_id"], r["value"], r["n_pixels"], r["geojson"]) for r in df.collect()
-        )
+    snake = _serpentine()
+    rows = _pip_roundtrip(spark, snake, exclude=None, tile=3)
+    assert max(r["n_pixels"] for r in rows) == int(snake.sum())
+    rows = _pip_roundtrip(spark, snake, exclude=0, tile=3)
+    assert len(rows) == 1
 
-    got_driver = snap(polygonize(spark, tiles, grid, exclude=0, distributed_cc=False))
-    got_dist = snap(polygonize(spark, tiles, grid, exclude=0, distributed_cc=True))
-    assert got_driver == got_dist
-    assert len(got_dist) == h
-    assert all(n == w for _, _, n, _ in got_dist)
+    rows = _pip_roundtrip(spark, _seam_touches(), exclude=0, tile=4)
+    assert sorted((r["value"], r["n_pixels"]) for r in rows) == [(5.0, 4), (5.0, 4), (6.0, 4), (6.0, 4)]
+
+
+def _union_find_roots(pairs):
+    parent = {}
+
+    def find(u):
+        parent.setdefault(u, u)
+        while parent[u] != u:
+            parent[u] = parent[parent[u]]
+            u = parent[u]
+        return u
+
+    for x, y in pairs:
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            parent[max(rx, ry)] = min(rx, ry)
+    return {u: find(u) for u in list(parent)}
+
+
+def test_connected_components_matches_union_find(spark):
+    """(comp, gid = smallest id of the component) for every paired id:
+    no pairs, string ids (lexicographic minimum), and long ids on a
+    shuffled 10,000-node chain plus small side components."""
+    from gdal_boots_spark.operators.polygonize import connected_components
+
+    def cc(pairs, ddl):
+        got = connected_components(spark.createDataFrame(pairs, ddl)).collect()
+        return {r["comp"]: r["gid"] for r in got}
+
+    assert cc([], "x long, y long") == {}
+
+    words = [("m", "b"), ("b", "z"), ("q", "q"), ("k10", "k9"), ("k9", "k2"), ("a", "c")]
+    assert cc(words, "x string, y string") == _union_find_roots(words)
+
+    rng = np.random.default_rng(3)
+    perm = rng.permutation(10_000) + 100
+    chain = [(int(a), int(b)) for a, b in zip(perm[:-1], perm[1:])]
+    chain += [(7, 5), (5, 9), (3, 1)]
+    order = rng.permutation(len(chain))
+    chain = [chain[i][:: 1 if i % 2 else -1] for i in order]
+    want = _union_find_roots(chain)
+    assert cc(chain, "x long, y long") == want
+    assert set(want.values()) == {100, 5, 1}
 
 
 def test_polygonize_progress_callback(spark):
