@@ -178,38 +178,6 @@ def q_rasterize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tile_histogram(tiles).select("value", "cnt")
 
 
-def q_rasterize_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_rasterize through the NO-COLLECT distributed cover path
-    (operators/cover.py) — same histogram oracle, different physical
-    plan (the polygon side never touches the driver)."""
-    from gdal_boots_spark.operators.rasterize import rasterize
-    from gdal_boots_spark.operators.stats import tile_histogram
-    from gdal_boots_spark.sources.tiles import RasterGrid
-
-    grid = RasterGrid(
-        raster_id="burnd", epsg=4326, transform=(0.01, 0.0, 26.0, 0.0, -0.01, 55.0),
-        width=300, height=200, tile_w=64, tile_h=64, bands=1, dtype="uint8",
-    )
-    tiles = rasterize(spark, rect_polygons_df(spark), grid, all_touched=False, dense=True, distributed=True)
-    return tile_histogram(tiles).select("value", "cnt")
-
-
-def q_zonal_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_zonal through the distributed cover path — same oracle."""
-    from gdal_boots_spark.operators.zonal import zonal_stats
-    from gdal_boots_spark.sources.tiles import RasterGrid, generate_tiles, ramp_fill
-
-    grid = RasterGrid(
-        raster_id="zsd", epsg=4326, transform=(0.01, 0.0, 26.0, 0.0, -0.01, 55.0),
-        width=300, height=200, tile_w=64, tile_h=64, bands=1, dtype="int32",
-    )
-    tiles = generate_tiles(spark, grid, ramp_fill)
-    out = zonal_stats(spark, tiles, grid, rect_polygons_df(spark), distributed=True)
-    return out.select(
-        "poly_id", "n_pixels", "sum", "min", "max", F.round("mean", 9).alias("mean")
-    )
-
-
 def q_resample_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Average-downsample (Resampling.average, gdal.py:196) of an
     analytic ramp raster, emitted as a pixel table.  Block means of the
@@ -1158,11 +1126,9 @@ def q_pack_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 # contract in pytest every run).  r6 swap: the six distinct-operator
 # families added in r4/r5 (hash_split, pack_shards, repetition_stats,
 # scrub_text, top_ngrams, radius_join_m) are PROMOTED onto the board;
-# eight twinned variants move to extras:
+# twinned variants move to extras:
 #   pip_join_shuffle   — twin pip_join (same join, broadcast path)
 #   crs_3857           — twin to_epsg (subsumes the 3857 transform)
-#   rasterize_hist_dist— twin rasterize_hist (same op, distributed path)
-#   zonal_stats_dist   — twin zonal_stats (same op, distributed path)
 #   simhash            — twin simhash_neardup (recomputes simhash)
 #   minhash_pairs      — twin neardup_groups (oracle embeds the pair SQL)
 #   ann_cosine         — twin ann_lsh/ann_ivf (same fixture; documented
@@ -1181,8 +1147,11 @@ def q_pack_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 #                        windowed-agg family)
 # r7 add: bbox_join_hetero — twin bbox_join (same operator family;
 # exercises the adaptive multi-level cover on mixed-magnitude rects)
+# The distributed-path twins rasterize_hist_dist and zonal_stats_dist are
+# gone: the both-ways gate matrix (tests/test_spatial_join.py) runs
+# rasterize_hist and zonal_stats on both sides of the one broadcast gate.
 _EXTRA_QUERIES = (
-    "pip_join_shuffle", "crs_3857", "rasterize_hist_dist", "zonal_stats_dist",
+    "pip_join_shuffle", "crs_3857",
     "simhash", "minhash_pairs", "ann_cosine", "reproject",
     "crop_hist", "resample_avg", "event_windows", "bbox_join_hetero",
 )
@@ -1221,7 +1190,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "span_counts": q_span_counts,
         "point_sampling": q_point_sampling,
         "rasterize_hist": q_rasterize,
-        "rasterize_hist_dist": q_rasterize_dist,
         "polygonize": q_polygonize,
         "geom_bounds": q_geom_bounds,
         "crop_hist": q_crop_hist,
@@ -1233,7 +1201,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bbox_join_hetero": q_bbox_join_hetero,
         "intersects_join": q_intersects_join,
         "zonal_stats": q_zonal,
-        "zonal_stats_dist": q_zonal_dist,
         "event_windows": q_event_windows,
         "event_rollup": q_event_rollup,
         "asof_join": q_asof_join,
@@ -2244,10 +2211,6 @@ def _all_oracle_sql() -> dict[str, str]:
             FROM documents
         """,
     }
-    # the distributed-cover variants produce identical results through a
-    # different physical plan; they share the broadcast-path oracles
-    out["rasterize_hist_dist"] = out["rasterize_hist"]
-    out["zonal_stats_dist"] = out["zonal_stats"]
     return out
 
 

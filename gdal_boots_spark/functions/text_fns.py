@@ -51,12 +51,19 @@ def shingles(col, n: int = 3) -> Column:
 
     NB: Spark's sequence(1, 0) is DESCENDING [1, 0], not empty — the
     short-doc case must be guarded explicitly or slice(start=0) throws.
+
+    The token array is bound ONCE, as the lambda variable of a
+    one-element transform: written inline, the split would sit inside
+    the per-shingle lambda and re-run for every shingle.
     """
-    t = tokens(col)
-    idx = F.when(F.size(t) >= n, F.sequence(F.lit(1), F.size(t) - (n - 1))).otherwise(
-        F.array().cast("array<int>")
-    )
-    return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(t, i, n)))
+
+    def of(t):
+        idx = F.when(F.size(t) >= n, F.sequence(F.lit(1), F.size(t) - (n - 1))).otherwise(
+            F.array().cast("array<int>")
+        )
+        return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(t, i, n)))
+
+    return F.element_at(F.transform(F.array(tokens(col)), of), 1)
 
 
 def quality_features(col) -> dict[str, Column]:

@@ -18,8 +18,9 @@ single build) then pays the collect or probe job once.
 * **Session.**  The memo serves one ``applicationId``; a new
   application drops every entry, so no key carries the ID.
 * **Eviction.**  Each kind is a least-recently-used map bounded by the
-  call site's ``limit``.  An evicted ``Broadcast`` is unpersisted,
-  never destroyed: plans that are already built may still read it.
+  call site's ``limit``.  An evicted ``Broadcast``, or one held in an
+  evicted tuple, is unpersisted, never destroyed: plans that are
+  already built may still read it.
 
 Callers must treat returned values as read-only; they are the memo's
 entries themselves.
@@ -63,6 +64,9 @@ def _release(value: Any) -> None:
 
     if isinstance(value, Broadcast):
         value.unpersist()
+    elif isinstance(value, tuple):  # e.g. a collected dim holding its broadcast
+        for v in value:
+            _release(v)
 
 
 def get(kind: str, key: Any, build: Callable[[], Any], limit: int = 64) -> Any:

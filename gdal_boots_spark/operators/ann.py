@@ -33,16 +33,25 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import memo
 
-def _collect_base(base: DataFrame, id_col: str, vec_col: str):
-    rows = base.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    order = np.argsort(ids)
-    ids, mat = ids[order], mat[order]
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0] = 1.0
-    return ids, mat, norms
+
+def _broadcast_base(base: DataFrame, id_col: str, vec_col: str):
+    """The base table collected into id-sorted (ids, matrix, norms) and
+    broadcast, memoised per session and base plan (warm builds run no
+    job and make no broadcast)."""
+
+    def build():
+        rows = base.select(id_col, vec_col).collect()
+        ids = np.array([r[0] for r in rows], dtype=np.int64)
+        mat = np.array([r[1] for r in rows], dtype=np.float64)
+        order = np.argsort(ids)
+        ids, mat = ids[order], mat[order]
+        norms = np.linalg.norm(mat, axis=1)
+        norms[norms == 0] = 1.0
+        return base.sparkSession.sparkContext.broadcast((ids, mat, norms))
+
+    return memo.get("ann_base", memo.plan_key(base, id_col, vec_col), build, limit=16)
 
 
 def cosine_topk(
@@ -53,9 +62,7 @@ def cosine_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """-> (qid, bid, cos, rank): exact cosine top-k per query vector."""
-    spark = query.sparkSession
-    ids, mat, norms = _collect_base(base, id_col, vec_col)
-    b = spark.sparkContext.broadcast((ids, mat, norms))
+    b = _broadcast_base(base, id_col, vec_col)
     kk = k
 
     def topk(batches):

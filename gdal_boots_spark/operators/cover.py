@@ -1,25 +1,29 @@
-"""Polygon -> touched-tile contribution rows, in two physical shapes.
+"""The polygon dimension, its one size gate, and polygon -> touched-tile
+contribution rows in two physical shapes.
 
-The raster x vector operators (rasterize, zonal_stats, crop cutlines)
-all start from the same relation: one row per (tile, polygon) pair
-where the polygon's pixel-space bbox touches the tile.  SURVEY §2.7 /
-SCALE.md "what breaks first" item 1: the polygon side is usually a
-broadcast-sized dimension, but at 10^6+ parcels the driver collect +
-Python double loop becomes the bottleneck, so the engine offers both:
+The point-in-polygon join and the raster x vector operators
+(rasterize, zonal_stats, crop cutlines) all start from a small polygon
+dimension.  SURVEY §2.7 / SCALE.md "what breaks first" item 1: it is
+usually broadcast-sized, but at 10^6+ parcels the driver collect
+becomes the bottleneck, so every operator keeps both shapes and ONE
+gate picks between them:
 
-* ``contribs_broadcast`` — driver-side decode + loop, polygons ride a
-  Spark broadcast dict keyed by poly_id (zero shuffle; the render joins
-  candidates to the dict inside the worker).  For small dims.
-* ``contribs_distributed`` — never collects: the one GeoJSON decode
-  pass (functions.geometry_fns.decode_geojson: packed geometry plus
-  envelope, one mapInArrow), then inverse-affine pixel bbox and
-  tile-range explode as native Column math; the packed-geometry struct
-  rides the contribution rows to the render/aggregate stage (the same
-  shape as spatial_join.pip_join_points_shuffle).
+* ``fits_broadcast`` — the only broadcast↔distributed switch.  Callers
+  pass ``partitioning.plan_bytes(df)`` (zero jobs) or a plan-time
+  constant; nothing else selects a path.
+* ``poly_dim`` — the broadcast side's dimension: the one GeoJSON decode
+  pass (functions.geometry_fns.decode_geojson) collected once per
+  session and plan, with its packed coords broadcast once.
+  ``tile_contribs`` derives the (tile, polygon) pairs from it on the
+  driver, with no second job.
+* ``contribs_distributed`` — never collects: the same decode pass, then
+  inverse-affine pixel bbox and tile-range explode as native Column
+  math; the packed-geometry struct rides the contribution rows to the
+  render/aggregate stage (the same shape as
+  spatial_join.pip_join_points_shuffle).
 
-Both paths produce the same logical relation; pytest asserts
-rasterize/zonal equality between them (tests/test_rasterize_warp.py,
-tests/test_spatial_join.py).
+Both shapes produce the same logical relation; the both-ways gate
+matrix in tests/test_spatial_join.py forces each operator to each side.
 
 Pixel-bbox note: the distributed path computes the pixel bbox from the
 4 corners of the world-space envelope (exact for axis-aligned
@@ -30,6 +34,8 @@ all-zero masks and are dropped, so outputs agree.
 
 from __future__ import annotations
 
+from typing import Any, NamedTuple
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -37,52 +43,63 @@ from pyspark.sql import functions as F
 from .. import memo
 from ..functions.geometry_fns import decode_geojson
 from ..geom.affine import invert_transform
-from ..geom.packed import from_geojson
 from ..sources.tiles import RasterGrid
 
 
-# broadcast↔distributed auto-switch default (round-4 verdict item 6):
-# the collect-and-broadcast paths are only safe while the polygon
-# dimension stays driver-sized.  Callers that pass distributed=None get
-# a ZERO-JOB probe against this ceiling; tests monkeypatch it to force
-# the switch.
+# The broadcast↔distributed ceiling (round-4 verdict item 6): the
+# collect-and-broadcast shapes are only safe while the dimension stays
+# driver-sized.  Read at call time, so -1 forces every operator to its
+# distributed shape and 2**62 to its broadcast shape.
 BROADCAST_MAX_BYTES = 64 << 20
 
 
-def polys_fit_broadcast(polys: DataFrame, max_bytes: int | None = None) -> bool:
-    """Zero-job dimension-size estimate: Catalyst's optimized-plan
-    ``stats().sizeInBytes`` — the same statistic Spark's own
-    auto-broadcast-join threshold consults.  LocalRelation / parquet
-    sources report (near-)exact bytes; derived plans inherit
-    conservative (over-)estimates, which errs toward the no-collect
-    path — the safe direction.  True when the collect+broadcast paths
-    are safe; False routes callers to the no-collect siblings
-    (contribs_distributed / the shuffle PIP join).
-
-    An earlier one-aggregate-job version of this probe cost ~0.5s of
-    scheduling latency PER QUERY BUILD and showed up as a 10% flagship
-    bench regression (BENCH/BASELINE.md r4) — the probe must not run a
-    job.
-
-    Unknown statistics (sizeInBytes == Long.MaxValue, i.e. a
-    LogicalRDD from ``createDataFrame``) mean the dimension was built
-    from DRIVER-resident data — it already fit on the driver, so the
-    broadcast path is safe by construction and we return True.  Every
-    file-backed source (parquet/json/binaryFile) reports real sizes
-    and auto-switches; pass ``distributed=True`` explicitly for exotic
-    RDD-derived dimensions of unknown size."""
-    max_bytes = BROADCAST_MAX_BYTES if max_bytes is None else max_bytes
-    size = int(polys._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if size >= (1 << 62):  # statistics unknown: driver-created data
-        return True
-    return size <= max_bytes
+def fits_broadcast(nbytes: int) -> bool:
+    """The one gate: True when a dimension of ``nbytes`` (normally
+    ``partitioning.plan_bytes``, which reads unknown statistics — data
+    that was already on the driver — as 0) takes the broadcast shape."""
+    return nbytes <= BROADCAST_MAX_BYTES
 
 
-def vertex_pixel_bbox(pg, transform):
-    """Driver-side: packed geometry -> pixel-space bbox over ALL
-    vertices (exact under any affine transform)."""
+class PolyDim(NamedTuple):
+    """A collected polygon dimension.  Read-only: it is the memo's entry."""
+
+    key: Any  # memo key of the dim plan (None: not memoised)
+    packed: dict  # {poly_id: (coords float64[2n], ring_offsets int32)}
+    bboxes: dict  # {poly_id: (minx, miny, maxx, maxy)}
+    rect_pids: frozenset  # ids of single-ring axis-aligned rectangles
+    bpacked: Any  # Broadcast of ``packed``, unpersisted on memo eviction
+
+
+def poly_dim(polys: DataFrame) -> PolyDim:
+    """polys(poly_id, geojson) -> PolyDim, memoised per session and input
+    plan: one decode_geojson pass collected as Arrow (null, unparseable
+    and empty geometries are already dropped), its geom, bbox and rect
+    columns read as flat buffers, and ``packed`` broadcast once.  The
+    polygon side is the *dimension*; the fact side never leaves the
+    executors."""
+    key = memo.plan_key(polys)
+
+    def build():
+        t = decode_geojson(polys, "geojson", ["poly_id"]).toArrow()
+        geom = t.column("geom").combine_chunks().flatten()
+        cvals, coffs = geom[1].values.to_numpy(), geom[1].offsets.to_numpy()
+        rvals, roffs = geom[2].values.to_numpy(), geom[2].offsets.to_numpy()
+        bbox = zip(*(t.column(c).to_pylist() for c in ("minx", "miny", "maxx", "maxy")))
+        packed, bboxes, rect = {}, {}, {}
+        for i, (pid, box, r) in enumerate(zip(t.column("poly_id").to_pylist(), bbox, t.column("rect").to_pylist())):
+            packed[pid] = (cvals[coffs[i] : coffs[i + 1]], rvals[roffs[i] : roffs[i + 1]])
+            bboxes[pid], rect[pid] = box, r
+        bpacked = polys.sparkSession.sparkContext.broadcast(packed)
+        return PolyDim(key, packed, bboxes, frozenset(p for p, r in rect.items() if r), bpacked)
+
+    return memo.get("poly_dim", key, build)
+
+
+def vertex_pixel_bbox(coords: np.ndarray, transform):
+    """Driver-side: packed coords -> pixel-space bbox over ALL vertices
+    (exact under any affine transform)."""
     ia, ib, ic, id_, ie, if_ = invert_transform(transform)
-    c = pg.coords.reshape(-1, 2)
+    c = coords.reshape(-1, 2)
     px = ia * c[:, 0] + ib * c[:, 1] + ic
     py = id_ * c[:, 0] + ie * c[:, 1] + if_
     return px.min(), py.min(), px.max(), py.max()
@@ -90,40 +107,31 @@ def vertex_pixel_bbox(pg, transform):
 
 def _tile_range(minv, maxv, tile_size: int, n_tiles: int):
     """Pixel interval -> touched tile index range (floor/ceil snap,
-    clamped to the grid) — the Column form of the driver's
+    clamped to the grid) — the Column form of tile_contribs'
     ``int(np.floor(minpx)) // tile_w`` arithmetic."""
     t0 = F.greatest(F.lit(0), F.floor(F.floor(minv) / tile_size)).cast("int")
     t1 = F.least(F.lit(n_tiles - 1), F.floor((F.ceil(maxv) - 1) / tile_size)).cast("int")
     return t0, t1
 
 
-def contribs_broadcast(spark, polys: DataFrame, grid: RasterGrid):
-    """-> (packed dict {poly_id: (coords, ring_offsets)},
-           contribs list [(tile_x, tile_y, poly_id)]).
-    Driver collect, memoised per session on the dimension's plan and
-    the grid (rebuilding the same burn costs zero jobs); the polygon
-    table must be dimension-sized.  The returned objects are the memo's
-    entries themselves: callers must treat them as read-only."""
+def tile_contribs(dim: PolyDim, grid: RasterGrid) -> list[tuple[int, int, int]]:
+    """-> [(tile_x, tile_y, poly_id)] for every tile a dim polygon's
+    vertex pixel bbox touches: driver work over the collected dim, no
+    Spark job, memoised per dim and grid.  The list is the memo's entry:
+    callers must treat it as read-only."""
 
     def build():
-        packed, contribs = {}, []
-        for r in polys.select("poly_id", "geojson").collect():
-            pg = from_geojson(r["geojson"])
-            if pg.n_points == 0:
-                continue
-            pid = int(r["poly_id"])
-            packed[pid] = (pg.coords, pg.ring_offsets)
-            minpx, minpy, maxpx, maxpy = vertex_pixel_bbox(pg, grid.transform)
+        contribs = []
+        for pid, (coords, _) in dim.packed.items():
+            minpx, minpy, maxpx, maxpy = vertex_pixel_bbox(coords, grid.transform)
             tx0 = max(0, int(np.floor(minpx)) // grid.tile_w)
             tx1 = min(grid.n_tiles_x - 1, int(np.ceil(maxpx) - 1) // grid.tile_w)
             ty0 = max(0, int(np.floor(minpy)) // grid.tile_h)
             ty1 = min(grid.n_tiles_y - 1, int(np.ceil(maxpy) - 1) // grid.tile_h)
-            for ty in range(ty0, ty1 + 1):
-                for tx in range(tx0, tx1 + 1):
-                    contribs.append((tx, ty, pid))
-        return packed, contribs
+            contribs.extend((tx, ty, pid) for ty in range(ty0, ty1 + 1) for tx in range(tx0, tx1 + 1))
+        return contribs
 
-    key = memo.plan_key(polys, grid.transform, grid.width, grid.height, grid.tile_w, grid.tile_h)
+    key = None if dim.key is None else (dim.key, grid.transform, grid.width, grid.height, grid.tile_w, grid.tile_h)
     return memo.get("contribs", key, build)
 
 

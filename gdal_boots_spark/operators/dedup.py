@@ -39,23 +39,25 @@ def minhash_signatures(
 
     h_i(shingle) = portable 60-bit md5 hash of "i:shingle"; signature
     element i = min over shingles.  Built with transform/aggregate over
-    the shingle array — no explode, no shuffle: one narrow projection.
+    the shingle array — no explode, no shuffle: two narrow projections.
     Empty shingle sets -> null signature (doc too short).
+
+    The shingle array is materialized once, in its own projection (the
+    optimizer keeps a projection whose expensive output is read more
+    than once): inlined, the split and shingling re-ran for each of the
+    ``n_hashes`` hashes.
     """
-    sh = shingles(F.col(text_col), shingle_n)
+    sh = docs.select(F.col(id_col).alias("doc_id"), shingles(F.col(text_col), shingle_n).alias("_sh"))
 
     def _minhash(i: int):
         # NB: the transform lambda must take ONE parameter — a
         # two-parameter lambda makes Spark bind the array index to the
         # second one, shadowing the hash-family index
         prefix = f"{i}:"
-        return F.array_min(F.transform(sh, lambda s: md5_long(F.concat(F.lit(prefix), s))))
+        return F.array_min(F.transform(F.col("_sh"), lambda s: md5_long(F.concat(F.lit(prefix), s))))
 
     sig = F.array(*[_minhash(i) for i in range(n_hashes)])
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.when(F.size(sh) > 0, sig).alias("sig"),
-    )
+    return sh.select("doc_id", F.when(F.size("_sh") > 0, sig).alias("sig"))
 
 
 def lsh_candidate_pairs(
@@ -181,7 +183,6 @@ def embedding_neardup(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    distributed: bool | None = None,
     bits: int = 8,
     n_tables: int = 24,
 ) -> DataFrame:
@@ -189,9 +190,9 @@ def embedding_neardup(
     a < b with cosine >= threshold — the semantic face of the dedup
     family (brief: 'embedding-cosine near-dup').
 
-    TWO physical shapes, auto-picked from the table's plan statistics
-    (zero probe jobs — cover.polys_fit_broadcast, the same switch the
-    spatial dims use):
+    TWO physical shapes, picked from the table's plan statistics (zero
+    probe jobs — cover.fits_broadcast, the one switch the spatial dims
+    use too):
 
     * exact broadcast path (table fits a broadcast): the base matrix
       collects once (like ann.cosine_topk) and each Arrow batch does
@@ -199,8 +200,8 @@ def embedding_neardup(
       (each unordered pair produced exactly once: by the batch holding
       its smaller id).  Exact — the board-oracle contract.
 
-    * bucketed LSH path (``distributed=True`` or the table exceeds the
-      broadcast cap — the r8 closure of the 100 TB gap: the old code
+    * bucketed LSH path (the table exceeds the broadcast cap — the r8
+      closure of the 100 TB gap: the old code
       ALWAYS collected the full embedding table to the driver): the
       ann.py sign-LSH candidate generator (deterministic seeded integer
       hyperplanes, ids-only (id, table, bucket) rows) feeds a bucket
@@ -217,18 +218,15 @@ def embedding_neardup(
     """
     import numpy as np
 
-    from .cover import polys_fit_broadcast
+    from .. import memo
+    from ..partitioning import plan_bytes
+    from .cover import fits_broadcast
 
-    spark = emb.sparkSession
     t = float(threshold)
-    if distributed is None:
-        distributed = not polys_fit_broadcast(emb)
+    if fits_broadcast(plan_bytes(emb)):
+        from .ann import _broadcast_base
 
-    if not distributed:
-        from .ann import _collect_base
-
-        ids, mat, norms = _collect_base(emb, id_col, vec_col)
-        b = spark.sparkContext.broadcast((ids, mat, norms))
+        b = _broadcast_base(emb, id_col, vec_col)
 
         def pairs(batches):
             import pandas as pd
@@ -253,7 +251,8 @@ def embedding_neardup(
     # ---- bucketed path: LSH candidates -> exact cosine verify --------
     from .ann import _plane_matrix
 
-    dim = len(emb.select(vec_col).first()[0])
+    # one probe job per session and table plan
+    dim = memo.get("emb_dim", memo.plan_key(emb, vec_col), lambda: len(emb.select(vec_col).first()[0]))
     planes = [_plane_matrix(dim, bits, tbl) for tbl in range(n_tables)]
 
     def bucketize(batches):

@@ -5,7 +5,7 @@ an existing raster via gdal.RasterizeLayer (default burn value 1,
 ALL_TOUCHED toggle).  Engine shape (SURVEY §2.7):
 
     polys (dimension) ── (tile, poly) contribution rows ──┐
-       broadcast path: driver bbox loop + broadcast dict  │
+       broadcast path: cover.poly_dim + tile_contribs     │
        distributed path: operators.cover (no collect)     │
                                                           │
     repartition(tile) ── mapInPandas ─────────────────────┘
@@ -24,8 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..geom.raster_kernels import rasterize_mask
+from ..partitioning import plan_bytes
 from ..sources.tiles import TILE_SCHEMA, RasterGrid
-from .cover import contribs_broadcast, contribs_distributed, geom_arrays, polys_fit_broadcast
+from .cover import contribs_distributed, fits_broadcast, geom_arrays, poly_dim, tile_contribs
 
 
 def rasterize(
@@ -35,7 +36,6 @@ def rasterize(
     all_touched: bool = False,
     burn: int = 1,
     dense: bool = False,
-    distributed: bool | None = None,
 ) -> DataFrame:
     """polys(poly_id, geojson) -> uint8 mask tile table on `grid`.
 
@@ -43,16 +43,11 @@ def rasterize(
     poly_id order (they all burn the same value by default, but custom
     per-poly burn values stay reproducible).
 
-    ``distributed=True`` switches the polygon side to the no-collect
-    cover explode (operators.cover) — required when the polygon table
-    is too large to broadcast; output is identical (pytest-asserted).
-    Default ``None`` auto-picks from a cheap dimension-size probe
-    (cover.polys_fit_broadcast); pass an explicit bool to override.
+    A polygon table over the broadcast gate (cover.fits_broadcast of
+    its zero-job plan size) takes the no-collect cover explode
+    (operators.cover); output is identical (pytest-asserted).
     """
     from dataclasses import replace
-
-    if distributed is None:
-        distributed = not polys_fit_broadcast(polys)
 
     mask_grid = replace(
         grid, raster_id=grid.raster_id + "_mask", bands=1, dtype="uint8", nodata=None
@@ -95,7 +90,7 @@ def rasterize(
     n_tiles_total = g.n_tiles_x * g.n_tiles_y
     dn = dense
 
-    if distributed:
+    if not fits_broadcast(plan_bytes(polys)):
         contribs = contribs_distributed(polys, grid).select(
             (F.col("tile_y").cast("long") * ntx + F.col("tile_x")).alias("tile_index"),
             "poly_id",
@@ -159,32 +154,33 @@ def rasterize(
         )
     else:
         # r8 (guide §2.4): the contribution rows are DRIVER-resident
-        # (contribs_broadcast already collected them), so they ride the
-        # polygon broadcast as a {tile_index: [poly_id]} dict instead of
-        # a createDataFrame -> union(zeros) -> repartition chain.  The
+        # (tile_contribs derives them from the collected dim), so they
+        # ride the render closure as a {tile_index: [poly_id]} dict and
+        # the coords ride the dim's one broadcast, instead of a
+        # createDataFrame -> union(zeros) -> repartition chain.  The
         # render source collapses to ONE Range with explicit partitions:
         # zero exchanges, no ExistingRDD parallelize, two fewer stage
         # boundaries per build (plan: Range -> MapInPandas; before:
         # Scan ExistingRDD + Range -> Union -> Exchange -> MapInPandas).
-        packed, pairs = contribs_broadcast(spark, polys, grid)
-        contribs_by_tile: dict[int, list[int]] = {}
-        for tx, ty, pid in pairs:
-            contribs_by_tile.setdefault(ty * ntx + tx, []).append(pid)
+        dim = poly_dim(polys)
+        by_tile: dict[int, list[int]] = {}
+        for tx, ty, pid in tile_contribs(dim, grid):
+            by_tile.setdefault(ty * ntx + tx, []).append(pid)
         # dense: render every tile (ids ARE tile indices); sparse: only
-        # touched tiles, via a broadcast id -> tile_index table
-        units = None if dense else sorted(contribs_by_tile)
+        # touched tiles, via an id -> tile_index table
+        units = None if dense else sorted(by_tile)
         n_units = n_tiles_total if dense else len(units)
         n_parts = max(min(spark.sparkContext.defaultParallelism * 2, n_units), 2)
-        bstate = spark.sparkContext.broadcast((packed, contribs_by_tile, units))
+        bpacked = dim.bpacked
 
         def render_partition(batches):
             import pandas as pd
 
-            packed_l, by_tile, units_l = bstate.value
+            packed_l = bpacked.value
             rows = []
             for pdf in batches:
                 for u in pdf["id"]:
-                    ti = int(u) if units_l is None else units_l[int(u)]
+                    ti = int(u) if units is None else units[int(u)]
                     ty, tx = ti // ntx, ti % ntx
                     h, w = g.tile_shape(tx, ty)
                     t = g.tile_transform(tx, ty)

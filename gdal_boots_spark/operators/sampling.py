@@ -9,7 +9,7 @@ join); multiband rasters yield one value per band.
 TWO physical shapes, auto-picked from the raster's PLAN-TIME size
 (r8, guide §2.4/§3.1 — the raster is the DIMENSION of this join):
 
-* broadcast path (raster <= cover.BROADCAST_MAX_BYTES dense): the tile
+* broadcast path (dense raster bytes pass cover.fits_broadcast): the tile
   table is collected ONCE (memoized per session like the polygon dims)
   into a dense (bands, H, W) array + a present-tile mask, broadcast,
   and sampling is a single ArrowEvalPython over the point side's
@@ -17,7 +17,7 @@ TWO physical shapes, auto-picked from the raster's PLAN-TIME size
   leaves its scan stage.  Absent tiles still yield NULL via the mask
   (sparse tile tables keep left-outer semantics).
 
-* cogroup path (large rasters; ``distributed=True``): ONE shuffle of
+* cogroup path (large rasters): ONE shuffle of
   each side,
 
     points ── native inverse-affine pixel math (codegen) ──┐
@@ -82,22 +82,18 @@ def values_by_points(
     id_col: str = "point_id",
     x_col: str = "x",
     y_col: str = "y",
-    distributed: bool | None = None,
 ) -> DataFrame:
     """-> (point_id, band, value:double); value NULL when outside (or
     when the point's tile is absent from the tile table).
 
-    ``distributed``: None auto-picks from the DENSE raster size (a
-    plan-time constant of the grid — zero probe jobs); False forces the
-    broadcast gather, True the cogroup join.  Outputs are identical
+    The path is picked by cover.fits_broadcast from the DENSE raster
+    size (a plan-time constant of the grid — zero probe jobs): the
+    broadcast gather or the cogroup join.  Outputs are identical
     (pytest-asserted)."""
-    from .cover import BROADCAST_MAX_BYTES
+    from ..functions.geometry_fns import double_lit_sql as _dl, quote_ident
+    from .cover import fits_broadcast
 
     spark = points.sparkSession
-    if distributed is None:
-        dense_bytes = grid.width * grid.height * grid.bands * 8
-        distributed = dense_bytes > BROADCAST_MAX_BYTES
-    from ..functions.geometry_fns import double_lit_sql as _dl, quote_ident
 
     ia, ib, ic, id_, ie, if_ = invert_transform(grid.transform)
     # build mechanics as server-parsed SQL strings (r8 cold-plan cost)
@@ -106,7 +102,7 @@ def values_by_points(
     py_sql = f"CAST(FLOOR({_dl(id_)} * {x} + {_dl(ie)} * {y} + {_dl(if_)}) AS INT)"
     bands = spark.range(grid.bands).selectExpr("CAST(id AS INT) AS band")
 
-    if not distributed:
+    if fits_broadcast(grid.width * grid.height * grid.bands * 8):
         braster = _broadcast_raster(tiles, grid)
         g = grid
         from pyspark.sql.functions import pandas_udf

@@ -36,33 +36,10 @@ from .. import memo
 from ..functions.geometry_fns import decode_geojson, point_xy_sql, quote_ident
 from ..geom import cells
 from ..geom.cells import cover_bbox, level_for_edge, pick_res
-from ..geom.packed import from_geojson
-from ..geom.pip import points_in_polygon, rect_rings
+from ..geom.pip import points_in_polygon
+from ..partitioning import plan_bytes
+from .cover import fits_broadcast, poly_dim
 from .spans import extract_geo_spans
-
-
-def _collect_polys(polys: DataFrame):
-    """Driver-side: polygon table -> ({poly_id: (coords, ring_offsets)},
-    {poly_id: bbox}, rect_pids), memoised per session and input plan
-    (one flagship build collects from both the Point and the poly
-    branch, and each collect is a full Spark job).  ``rect_pids`` holds
-    the ids of the exact axis-aligned rectangles (geom.pip.rect_rings).
-    The polygon side is the *dimension*; the point side is the
-    10^12-row fact and never leaves the executors."""
-
-    def build():
-        packed, bboxes = {}, {}
-        for r in polys.select("poly_id", "geojson").collect():
-            pg = from_geojson(r["geojson"])
-            packed[int(r["poly_id"])] = (pg.coords, pg.ring_offsets)
-            c = pg.coords.reshape(-1, 2)
-            bboxes[int(r["poly_id"])] = (c[:, 0].min(), c[:, 1].min(), c[:, 0].max(), c[:, 1].max())
-        rect_pids = frozenset(
-            pid for pid, (c, ro) in packed.items() if rect_rings(c, [0, c.size], [len(ro) == 2])[0]
-        )
-        return packed, bboxes, rect_pids
-
-    return memo.get("poly_dim", memo.plan_key(polys), build)
 
 
 def _span_res(med: float, worst) -> int:
@@ -124,7 +101,6 @@ def pip_join_points(
     x_col: str = "x",
     y_col: str = "y",
     refine: bool = True,
-    distributed: bool | None = None,
 ) -> DataFrame:
     """points(<ids..>, x, y) x polys(poly_id, geojson) -> points cols + poly_id.
 
@@ -132,20 +108,17 @@ def pip_join_points(
     no-false-negative pre-filter.  ``refine=False`` returns the raw
     cell-join candidates (bench instrumentation: per-candidate cost).
 
-    ``distributed``: None (default) auto-picks via a cheap dimension
-    probe (cover.polys_fit_broadcast); True delegates to the no-collect
-    pip_join_points_shuffle (identical semantics, pytest-asserted);
-    False forces the broadcast path.  ``refine=False`` is broadcast-only
-    instrumentation and keeps the broadcast path regardless.
+    A polygon dim over the broadcast gate (cover.fits_broadcast of its
+    zero-job plan size) takes the no-collect pip_join_points_shuffle
+    (identical semantics, pytest-asserted).  ``refine=False`` is
+    broadcast-only instrumentation and keeps the broadcast path
+    regardless.
     """
-    from .cover import polys_fit_broadcast
-
-    if refine and distributed is None:
-        distributed = not polys_fit_broadcast(polys)
-    if refine and distributed:
+    if refine and not fits_broadcast(plan_bytes(polys)):
         return pip_join_points_shuffle(points, polys, res=res, x_col=x_col, y_col=y_col)
     spark: SparkSession = points.sparkSession
-    packed, bboxes, rect_pids = _collect_polys(polys)
+    dim = poly_dim(polys)
+    bboxes, rect_pids = dim.bboxes, dim.rect_pids
     if res is None:
         res = _auto_res(bboxes)
 
@@ -162,7 +135,7 @@ def pip_join_points(
     # filter: no broadcast of packed coords, no ArrowEvalPython stage,
     # zero bytes across the Python boundary.  Mixed/non-rect dims keep
     # the pandas-UDF ray-cast path unchanged.
-    all_rect = rect_pids == set(packed)
+    all_rect = rect_pids == set(dim.packed)
     xq, yq = quote_ident(x_col), quote_ident(y_col)
     pts = points.withColumn("cell_id", F.expr(cells.cell_id_sql(xq, yq, res)))
     cover_df = _cover_df(spark, bboxes, rect_pids, res)
@@ -175,7 +148,7 @@ def pip_join_points(
     if not refine:
         return cand
 
-    bpolys = spark.sparkContext.broadcast(packed)
+    bpolys = dim.bpacked
 
     # Refinement as a BOOLEAN pandas UDF inside a WHERE, not a
     # mapInArrow over whole rows: Spark's ArrowEvalPython projects ONLY
@@ -308,8 +281,8 @@ def poly_span_candidates(docs: DataFrame, polys: DataFrame, res: int | None = No
     """Bench/diagnostic surface: the poly-span path's pre-refinement
     candidates for interleaved docs (mirrors pip_join_points
     ``refine=False``) — used to normalize per-candidate refine cost."""
-    _, bboxes, rect_pids = _collect_polys(polys)
-    return _poly_span_candidates(docs, bboxes, rect_pids, _auto_res(bboxes) if res is None else res)
+    dim = poly_dim(polys)
+    return _poly_span_candidates(docs, dim.bboxes, dim.rect_pids, _auto_res(dim.bboxes) if res is None else res)
 
 
 def pip_join_docs_any(docs: DataFrame, polys: DataFrame, res: int | None = None) -> DataFrame:
@@ -341,14 +314,13 @@ def pip_join_docs_any(docs: DataFrame, polys: DataFrame, res: int | None = None)
     from pyspark.sql.functions import pandas_udf
     from pyspark.storagelevel import StorageLevel
 
-    spark = docs.sparkSession
-    packed, bboxes, rect_pids = _collect_polys(polys)
+    dim = poly_dim(polys)
     if res is None:
-        res = _auto_res(bboxes)
+        res = _auto_res(dim.bboxes)
 
     pt_pairs = pip_join_docs(docs, polys, res=res).selectExpr("doc_id", "span_pos", "poly_id")
-    cand = _poly_span_candidates(docs, bboxes, rect_pids, res)
-    bpolys = spark.sparkContext.broadcast(packed)
+    cand = _poly_span_candidates(docs, dim.bboxes, dim.rect_pids, res)
+    bpolys = dim.bpacked
 
     @pandas_udf("boolean")
     def poly_ok(pid_s, rect_s, minx_s, miny_s, maxx_s, maxy_s, geom_df):
@@ -489,12 +461,16 @@ def pip_join_points_shuffle(
     gb = decode_geojson(polys, "geojson", ["poly_id"])
     if res is None:
         # _auto_res computed distributed: the approximate median extent
-        # and the largest-area bbox in one aggregate
-        b = gb.selectExpr(
-            "percentile_approx(GREATEST(maxx - minx, maxy - miny), 0.5) AS med",
-            "max_by(struct(minx, miny, maxx, maxy), (maxx - minx) * (maxy - miny)) AS worst",
-        ).collect()[0]
-        res = _span_res(b["med"], tuple(b["worst"])) if b["worst"] else _auto_res({})
+        # and the largest-area bbox in one aggregate, memoised per
+        # session and dim plan (warm builds run no job)
+        def probe():
+            b = gb.selectExpr(
+                "percentile_approx(GREATEST(maxx - minx, maxy - miny), 0.5) AS med",
+                "max_by(struct(minx, miny, maxx, maxy), (maxx - minx) * (maxy - miny)) AS worst",
+            ).collect()[0]
+            return _span_res(b["med"], tuple(b["worst"])) if b["worst"] else _auto_res({})
+
+        res = memo.get("shuffle_res", memo.plan_key(polys), probe)
     s1, s2, cid = cells.cover_explode_sql("minx", "miny", "maxx", "maxy", res)
     cover = gb.selectExpr("poly_id", "geom", *s1).selectExpr("poly_id", "geom", "_ix", *s2).selectExpr(
         "poly_id", "geom", f"{cid} AS cell_id"

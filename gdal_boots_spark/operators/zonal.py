@@ -5,9 +5,10 @@ for every polygon, aggregate the raster values whose pixel CENTER falls
 inside it (same coverage rule as rasterize all_touched=False).
 
 Physical shape:
-    polys -> (tile, poly) contribution rows
-        broadcast path (default): driver bbox loop, coords via a Spark
-        broadcast dict, contributions broadcast-joined to tiles
+    polys -> (tile, poly) contribution rows, one side picked by
+    cover.fits_broadcast:
+        broadcast path: cover.poly_dim + tile_contribs, coords via the
+        dim's broadcast, contributions broadcast-joined to tiles
         distributed path: operators.cover no-collect explode; the geom
         struct rides the rows through a shuffle hash join on
         (tile_x, tile_y) — for polygon tables too large to broadcast
@@ -27,8 +28,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..geom.raster_kernels import rasterize_mask
+from ..partitioning import plan_bytes
 from ..sources.tiles import RasterGrid
-from .cover import contribs_broadcast, contribs_distributed, geom_arrays, polys_fit_broadcast
+from .cover import contribs_distributed, fits_broadcast, geom_arrays, poly_dim, tile_contribs
 
 _OUT_SCHEMA = "poly_id long, band int, n_pixels long, sum double, min double, max double, mean double"
 _PARTIAL_SCHEMA = "poly_id long, band int, n_pixels long, sum double, min double, max double"
@@ -39,20 +41,15 @@ def zonal_stats(
     tiles: DataFrame,
     grid: RasterGrid,
     polys: DataFrame,
-    distributed: bool | None = None,
 ) -> DataFrame:
     """-> (poly_id, band, n_pixels, sum, min, max, mean) per polygon
     over all raster bands; polygons with no covered pixel are absent
     (the reference's GDAL zonal workflows behave the same).
 
-    ``distributed=True``: no driver collect — use when the polygon side
-    exceeds broadcast size; identical output (pytest-asserted).
-    Default ``None`` auto-picks via cover.polys_fit_broadcast."""
+    A polygon side over the broadcast gate (cover.fits_broadcast) runs
+    with no driver collect; output is identical (pytest-asserted)."""
     g = grid
-    if distributed is None:
-        distributed = not polys_fit_broadcast(polys)
-
-    if distributed:
+    if not fits_broadcast(plan_bytes(polys)):
         cdf = contribs_distributed(polys, grid)
         joined = tiles.join(cdf, ["tile_x", "tile_y"])
 
@@ -75,12 +72,13 @@ def zonal_stats(
 
         partials = joined.mapInPandas(partial, schema=_PARTIAL_SCHEMA)
     else:
-        packed, pairs = contribs_broadcast(spark, polys, grid)
+        dim = poly_dim(polys)
+        pairs = tile_contribs(dim, grid)
         if not pairs:
             return spark.createDataFrame([], _OUT_SCHEMA)
         cdf = spark.createDataFrame(pairs, "tile_x int, tile_y int, poly_id long")
         joined = tiles.join(F.broadcast(cdf), ["tile_x", "tile_y"])
-        bpolys = spark.sparkContext.broadcast(packed)
+        bpolys = dim.bpacked
 
         def partial(batches):
             import pandas as pd

@@ -7,6 +7,10 @@ import pytest
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
+# operators.cover.BROADCAST_MAX_BYTES values that force every operator
+# to one side of the broadcast gate (unknown plan sizes read as 0 bytes)
+GATE_SIDES = {"broadcast": 1 << 62, "distributed": -1}
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -372,15 +372,25 @@ def test_cell_format_in_one_module():
 def test_operators_decode_once():
     """Operators decode GeoJSON only through the one mapInArrow pass
     (functions.geometry_fns.decode_geojson): no module under operators/
-    names the row-preserving scalar geojson_decode_udf, and the deleted
-    scalar bounds UDF and the span path's private decoder stay deleted."""
+    names the row-preserving scalar geojson_decode_udf or imports the
+    per-row from_geojson (crop.py alone decodes its one literal cutline
+    geometry), and the deleted scalar bounds UDF, the span path's private
+    decoder and the driver dim decoder stay deleted."""
+    import ast
     import pathlib
     import re
 
     root = pathlib.Path(__file__).resolve().parents[1]
     ops = root / "gdal_boots_spark" / "operators"
-    gone = re.compile(r"^\s*def\s+(?:geom_bounds_udf|_decode_bounds)\b", re.M)
+    gone = re.compile(r"^\s*def\s+(?:geom_bounds_udf|_decode_bounds|_collect_polys)\b", re.M)
     bad = [p.name for p in sorted(ops.rglob("*.py")) if "geojson_decode_udf" in p.read_text()]
+    for path in sorted(ops.rglob("*.py")):
+        if path.name != "crop.py":
+            bad += [
+                f"{path.name}: imports from_geojson"
+                for node in ast.walk(ast.parse(path.read_text()))
+                if isinstance(node, ast.ImportFrom) and any(a.name == "from_geojson" for a in node.names)
+            ]
     for path in sorted(root.rglob("*.py")):
         if not any(part.startswith(".") for part in path.relative_to(root).parts):
             bad += [f"{path.relative_to(root)}: {m.group(0).strip()}" for m in gone.finditer(path.read_text())]

@@ -6,10 +6,11 @@ import ast
 import pathlib
 
 import numpy as np
+import pytest
 
 from gdal_boots_spark.sources.synth import rect_ring_geojson
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import GATE_SIDES, SF_SMOKE
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "gdal_boots_spark"
 
@@ -57,7 +58,7 @@ def test_many_rasters_sample_their_own_values(spark):
     rasters = [array_to_tiles(spark, base + 100 * i, grid) for i in range(20)]
 
     def sampled(i):
-        got = values_by_points(pts, rasters[i], grid, distributed=False).collect()
+        got = values_by_points(pts, rasters[i], grid).collect()
         return sorted((r["point_id"], r["value"]) for r in got)
 
     for i in list(range(20)) + [0, 1, 2]:
@@ -99,6 +100,36 @@ def test_board_rebuild_is_all_memo_hits(spark):
     assert not any(jobs.values()), {name: n for name, n in jobs.items() if n}
 
 
+@pytest.mark.parametrize("side", list(GATE_SIDES))
+def test_warm_builds_run_no_job_and_no_broadcast(spark, monkeypatch, side):
+    """A second build in one session, on either side of the broadcast
+    gate, runs no Spark job and makes no SparkContext.broadcast call: the
+    collected dims, their broadcasts, the tile contributions, the auto-res
+    aggregate, the ann base matrix and the embedding-width probe all come
+    from the memo."""
+    import __spark_entry__ as entry
+    from pyspark import SparkContext
+
+    from gdal_boots_spark.operators import cover
+
+    monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", GATE_SIDES[side])
+    names = (
+        "pip_join", "pip_join_poly_spans", "rasterize_hist", "zonal_stats", "point_sampling", "polygonize",
+        "pip_join_shuffle", "ann_cosine", "embedding_neardup",
+    )
+    qs = entry.all_queries()
+    for name in names:
+        qs[name](spark, SF_SMOKE)
+    calls = []
+    real = SparkContext.broadcast
+    monkeypatch.setattr(SparkContext, "broadcast", lambda sc, value: calls.append(value) or real(sc, value))
+    warm = {}
+    for name in names:
+        del calls[:]
+        warm[name] = (_build_jobs(spark, f"warm-{side}-{name}", lambda: qs[name](spark, SF_SMOKE)), len(calls))
+    assert all(v == (0, 0) for v in warm.values()), warm
+
+
 def test_neardup_groups_builds_without_jobs(spark):
     """The LSH pairs, their connected components and the group join are
     one lazy plan: building it runs no Spark job."""
@@ -108,7 +139,9 @@ def test_neardup_groups_builds_without_jobs(spark):
     assert _build_jobs(spark, "build-neardup-groups", lambda: neardup_groups(docs, n_hashes=16, bands=8)) == 0
 
 
-def test_memo_lru_and_clear(spark):
+def test_memo_lru_and_clear(spark, monkeypatch):
+    from pyspark.broadcast import Broadcast
+
     from gdal_boots_spark import memo
 
     memo.clear()
@@ -126,6 +159,15 @@ def test_memo_lru_and_clear(spark):
     assert memo.stats()["t"] == {"hits": 2, "misses": 4}
     bc = memo.get("t", 9, lambda: spark.sparkContext.broadcast(9), limit=1)
     assert bc.value == 9
+    # an evicted broadcast, bare or inside a tuple (a collected dim), is
+    # unpersisted; clear() releases what is left
+    released = []
+    monkeypatch.setattr(Broadcast, "unpersist", lambda self, blocking=False: released.append(self))
+    held = spark.sparkContext.broadcast(10)
+    memo.get("t", 10, lambda: ("dim", held), limit=1)
+    assert released == [bc]
+    memo.get("t", 11, lambda: 11, limit=1)
+    assert released == [bc, held]
     memo.clear()
     assert memo.stats() == {}
 

@@ -155,23 +155,6 @@ def test_slice_window_pushes_tile_filters_to_parquet(spark, tmp_path):
     assert "GreaterThanOrEqual(tile_x" in plan and "LessThanOrEqual(tile_y" in plan
 
 
-def test_rasterize_broadcast_vs_distributed(spark):
-    """The no-collect cover path (operators.cover) produces exactly the
-    same tile rows as the driver-broadcast path, sparse AND dense."""
-    from gdal_boots_spark.sources.synth import rect_polygons_df
-
-    grid = RasterGrid(
-        "rzd", 4326, (0.01, 0.0, 26.0, 0.0, -0.01, 55.0), 300, 200, tile_w=64, tile_h=64, dtype="uint8"
-    )
-    polys = rect_polygons_df(spark)
-    for dense in (False, True):
-        a = rasterize(spark, polys, grid, dense=dense, distributed=False)
-        b = rasterize(spark, polys, grid, dense=dense, distributed=True)
-        ra = {r["tile_key"]: bytes(r["data"]) for r in a.collect()}
-        rb = {r["tile_key"]: bytes(r["data"]) for r in b.collect()}
-        assert ra == rb and len(ra) > 0
-
-
 def test_read_by_geom_composite_flow(spark, tmp_path):
     """Reference test_utils.py:14-26 (test_read_by_geom) — permanently
     skipped upstream for lack of its "extra" satellite fixture; ported

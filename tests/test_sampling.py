@@ -86,30 +86,3 @@ def test_values_by_points_empty(spark):
     pts = spark.createDataFrame([], "point_id long, x double, y double")
     assert values_by_points(pts, tiles, grid).count() == 0
 
-
-def test_values_by_points_broadcast_vs_cogroup(spark):
-    """r8 broadcast-raster gather == cogroup join, including NULL for
-    out-of-bounds AND for in-bounds points whose tile row is ABSENT
-    from a sparse tile table."""
-    from pyspark.sql import functions as F
-
-    grid = _ramp_grid(bands=2)
-    # sparse tile table: drop one tile (band 0, ty 0, tx 1)
-    tiles = generate_tiles(spark, grid, ramp_fill).where(F.col("tile_key") != "r/0/0/1")
-    pts = spark.createDataFrame(
-        [(i, x, y) for i, (x, y) in enumerate(
-            [(0.2, 2.5), (2.5, 2.5), (4.5, 0.5), (-1.0, 1.0), (10.0, 10.0), (0.0, 3.0), (5.0, 0.0)]
-        )],
-        "point_id long, x double, y double",
-    )
-    fast = {(r["point_id"], r["band"]): r["value"]
-            for r in values_by_points(pts, tiles, grid, distributed=False).collect()}
-    slow = {(r["point_id"], r["band"]): r["value"]
-            for r in values_by_points(pts, tiles, grid, distributed=True).collect()}
-    assert fast == slow and len(fast) == 14
-    # the dropped tile covers px in [2,4), py in [0,2): point (2.5, 2.5)
-    # -> px 2, py 0 -> NULL on band 0, real value on band 1
-    assert fast[(1, 0)] is None and fast[(1, 1)] is not None
-    # broadcast path emits no SHUFFLE exchange (broadcast is fine)
-    plan = values_by_points(pts, tiles, grid, distributed=False)._jdf.queryExecution().executedPlan().toString()
-    assert "hashpartitioning" not in plan and "CoGroup" not in plan

@@ -5,8 +5,9 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_ORACLE, SF_SMOKE, compare_to_oracle
+from tests.conftest import GATE_SIDES, SF_ORACLE, SF_SMOKE, compare_to_oracle
 
+from gdal_boots_spark.operators.cover import poly_dim
 from gdal_boots_spark.operators.spans import span_signature
 from gdal_boots_spark.operators.spatial_join import pip_join_points
 from gdal_boots_spark.sources.synth import interleaved_docs, rect_polygons_df
@@ -274,21 +275,6 @@ def test_zonal_stats_vs_oracle(spark):
     compare_to_oracle(df, entrymod.all_oracle_sql()["zonal_stats"], SF_ORACLE, float_cols=("mean",), atol=1e-9)
 
 
-def test_zonal_stats_dist_vs_oracle(spark):
-    """Name-level oracle coverage for the distributed-cover extra
-    (VERDICT r7 item 7: previously verified only transitively via
-    two-path equality against the green broadcast twin)."""
-    df = entrymod.all_queries()["zonal_stats_dist"](spark, SF_ORACLE)
-    compare_to_oracle(df, entrymod.all_oracle_sql()["zonal_stats_dist"], SF_ORACLE, float_cols=("mean",), atol=1e-9)
-
-
-def test_rasterize_hist_dist_vs_oracle(spark):
-    """Name-level oracle coverage for the distributed-cover extra
-    (VERDICT r7 item 7)."""
-    df = entrymod.all_queries()["rasterize_hist_dist"](spark, SF_ORACLE)
-    compare_to_oracle(df, entrymod.all_oracle_sql()["rasterize_hist_dist"], SF_ORACLE)
-
-
 def test_intersects_join_vs_bruteforce(spark):
     """Exact polygon-intersects join == pairwise kernel brute force."""
     import json
@@ -325,27 +311,6 @@ def test_intersects_join_vs_bruteforce(spark):
 def test_event_windows_vs_oracle(spark):
     df = entrymod.all_queries()["event_windows"](spark, SF_ORACLE)
     compare_to_oracle(df, entrymod.all_oracle_sql()["event_windows"], SF_ORACLE, float_cols=("v",), atol=1e-6)
-
-
-def test_zonal_broadcast_vs_distributed(spark):
-    """zonal_stats distributed cover path == broadcast path (VERDICT r1
-    item 2: the driver collect+loop must have a distributed swap-in)."""
-    from gdal_boots_spark.operators.zonal import zonal_stats
-    from gdal_boots_spark.sources.synth import rect_polygons_df
-    from gdal_boots_spark.sources.tiles import RasterGrid, generate_tiles, ramp_fill
-
-    grid = RasterGrid(
-        raster_id="zsd", epsg=4326, transform=(0.01, 0.0, 26.0, 0.0, -0.01, 55.0),
-        width=300, height=200, tile_w=64, tile_h=64, bands=1, dtype="int32",
-    )
-    tiles = generate_tiles(spark, grid, ramp_fill)
-    polys = rect_polygons_df(spark)
-    key = lambda r: (r["poly_id"], r["band"])
-    a = {key(r): (r["n_pixels"], r["sum"], r["min"], r["max"], r["mean"])
-         for r in zonal_stats(spark, tiles, grid, polys, distributed=False).collect()}
-    b = {key(r): (r["n_pixels"], r["sum"], r["min"], r["max"], r["mean"])
-         for r in zonal_stats(spark, tiles, grid, polys, distributed=True).collect()}
-    assert a == b and len(a) == 14
 
 
 def test_resample_cubic_vs_oracle(spark):
@@ -490,13 +455,13 @@ def test_point_rect_bypass_equals_raycast(spark, monkeypatch):
     # plan shape: all-rect dim => no Python eval node anywhere
     plan = pip_join_points(pts, polys)._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "EvalPython" not in plan
-    # force the ray-cast path and compare pair sets
-    monkeypatch.setattr(sj, "rect_rings", lambda coords, offsets, one_ring: np.zeros(len(offsets) - 1, bool))
+    # force the ray-cast path (a dim with no rectangle) and compare pair sets
+    real_dim = sj.poly_dim
+    monkeypatch.setattr(sj, "poly_dim", lambda p: real_dim(p)._replace(rect_pids=frozenset()))
     memo.clear()
-    slow = {
-        (r["point_id"], r["poly_id"])
-        for r in pip_join_points(pts, polys).select("point_id", "poly_id").collect()
-    }
+    forced = pip_join_points(pts, polys)
+    assert "ArrowEvalPython" in forced._jdf.queryExecution().executedPlan().toString()
+    slow = {(r["point_id"], r["poly_id"]) for r in forced.select("point_id", "poly_id").collect()}
     monkeypatch.undo()
     memo.clear()
     assert fast == slow
@@ -568,21 +533,24 @@ def test_shuffle_res_matches_auto_res(spark, monkeypatch):
     polys = rect_polygons_df(spark)
     pts = spark.createDataFrame([(0, 26.5, 53.5)], "point_id long, x double, y double")
     sj.pip_join_points_shuffle(pts, polys)
-    bboxes = sj._collect_polys(polys)[1]
+    bboxes = poly_dim(polys).bboxes
     assert len(levels) == 1 and abs(levels[0] - sj._auto_res(bboxes)) <= 1
 
 
-def test_cell_level_out_of_range_raises(spark):
+def test_cell_level_out_of_range_raises(spark, monkeypatch):
     """Cell ids give ix and iy 29 bits each, so above MAX_RES (28) iy
     overflows into ix (and ix into the level) and points far apart can
-    share an id.  Both join entries reject such a level."""
+    share an id.  Both join entries, on both sides of the broadcast
+    gate, reject such a level."""
+    from gdal_boots_spark.operators import cover
     from gdal_boots_spark.operators.bbox_join import bbox_overlap_join
 
     polys = rect_polygons_df(spark)
     pts = spark.createDataFrame([(0, 26.5, 53.5)], "point_id long, x double, y double")
-    for distributed in (False, True):
+    for ceiling in GATE_SIDES.values():
+        monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", ceiling)
         with pytest.raises(ValueError, match="res must be in"):
-            pip_join_points(pts, polys, res=30, distributed=distributed)
+            pip_join_points(pts, polys, res=30)
     rect = "{p}id long, {p}minx double, {p}miny double, {p}maxx double, {p}maxy double"
     # level-28 cells are ~1.3e-6 degrees wide: keep the boxes that small
     left = spark.createDataFrame([(1, 0.0, 0.0, 1e-6, 1e-6)], rect.format(p="l"))
@@ -659,56 +627,36 @@ def test_hole_polygon_with_whitespace_separators(spark):
 
 
 def test_auto_switch_broadcast_distributed(spark, monkeypatch, tmp_path):
-    """distributed=None auto-picks: broadcast under the threshold,
-    the no-collect shuffle sibling above it, identical results
-    (round-4 verdict item 6).  The probe is ZERO-JOB (Catalyst plan
-    statistics): driver-created dims (unknown stats) always fit;
-    file-backed dims compare real bytes against the ceiling."""
+    """The gate reads a dim's size from plan statistics with ZERO jobs
+    (round-4 verdict item 6): a driver-created dim (unknown statistics)
+    reads 0 bytes and fits; a file-backed dim reports its real bytes, and
+    a ceiling just below them switches pip_join_points to the no-collect
+    shuffle sibling.  Both sides' results are checked by
+    test_broadcast_gate_both_ways."""
     from gdal_boots_spark.operators import cover, spatial_join
+    from gdal_boots_spark.partitioning import plan_bytes
 
-    rng = np.random.default_rng(11)
-    pts = spark.createDataFrame(
-        [
-            (i, float(x), float(y))
-            for i, (x, y) in enumerate(
-                zip(rng.uniform(25.5, 29.5, 300), rng.uniform(52.5, 55.5, 300))
-            )
-        ],
-        "point_id long, x double, y double",
-    )
-    # driver-created dimension: statistics unknown -> fits by construction
-    assert cover.polys_fit_broadcast(rect_polygons_df(spark))
-    # file-backed dimension: real plan statistics against the ceiling
+    assert plan_bytes(rect_polygons_df(spark)) == 0
     ppath = str(tmp_path / "polys.parquet")
     rect_polygons_df(spark).write.parquet(ppath)
     polys = spark.read.parquet(ppath)
-    assert cover.polys_fit_broadcast(polys)
-    assert not cover.polys_fit_broadcast(polys, max_bytes=1)
+    size = plan_bytes(polys)
+    assert 0 < size <= cover.BROADCAST_MAX_BYTES and cover.fits_broadcast(size)
 
-    forced = {
-        (r["point_id"], r["poly_id"])
-        for r in pip_join_points(pts, polys, distributed=False)
-        .select("point_id", "poly_id")
-        .collect()
-    }
-
-    used = {}
+    used = []
     real_shuffle = spatial_join.pip_join_points_shuffle
 
     def spy(*a, **k):
-        used["shuffle"] = True
+        used.append(True)
         return real_shuffle(*a, **k)
 
     monkeypatch.setattr(spatial_join, "pip_join_points_shuffle", spy)
-    monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", 0)
-    auto = {
-        (r["point_id"], r["poly_id"])
-        for r in pip_join_points(pts, polys)
-        .select("point_id", "poly_id")
-        .collect()
-    }
-    assert used.get("shuffle"), "auto switch did not take the distributed path"
-    assert auto == forced and len(auto) > 0
+    pts = spark.createDataFrame([(0, 26.5, 53.5)], "point_id long, x double, y double")
+    pip_join_points(pts, polys)
+    assert not used, "a dim under the ceiling took the distributed path"
+    monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", size - 1)
+    pip_join_points(pts, polys)
+    assert used, "a dim over the ceiling did not take the distributed path"
 
 
 def test_pip_join_docs_any_geometry_collection_spans(spark):
@@ -953,14 +901,18 @@ def test_3d_span_coordinates_join(spark):
     assert got == [("s3", 0, 1), ("s3", 0, 2)]
 
 
-def test_decode_once_plan_shape(spark):
-    """The distributed raster x vector paths, the shuffle PIP join and
+def test_decode_once_plan_shape(spark, monkeypatch):
+    """The distributed raster x vector paths (rasterize_hist and
+    zonal_stats forced past the broadcast gate), the shuffle PIP join and
     the intersects join decode each GeoJSON input in exactly one
     decode_geojson mapInArrow, with no ArrowEvalPython (scalar pandas
     UDF) node left in their executed plans."""
+    from gdal_boots_spark.operators import cover
+
+    monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", GATE_SIDES["distributed"])
     qs = entrymod.all_queries()
     for name, inputs in (
-        ("rasterize_hist_dist", 1), ("zonal_stats_dist", 1), ("pip_join_shuffle", 1), ("intersects_join", 2),
+        ("rasterize_hist", 1), ("zonal_stats", 1), ("pip_join_shuffle", 1), ("intersects_join", 2),
     ):
         plan = qs[name](spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
         assert "ArrowEvalPython" not in plan, (name, plan)
@@ -968,10 +920,11 @@ def test_decode_once_plan_shape(spark):
 
 
 @pytest.mark.parametrize("name", ["order", "my id"])
-def test_reserved_and_spaced_column_names(spark, name):
+def test_reserved_and_spaced_column_names(spark, monkeypatch, name):
     """Operators that build SQL strings quote the caller's column names:
     a reserved word or a name with a space gives the same rows as the
     plain name."""
+    from gdal_boots_spark.operators import cover
     from gdal_boots_spark.operators.knn import knn_join, radius_join
     from gdal_boots_spark.operators.sampling import values_by_points
     from gdal_boots_spark.sources.tiles import RasterGrid, generate_tiles, ramp_fill
@@ -999,12 +952,14 @@ def test_reserved_and_spaced_column_names(spark, name):
     )
     tiles = generate_tiles(spark, grid, ramp_fill)
     pts = spark.createDataFrame([(0, 0.2, 2.5), (1, 4.5, 0.5), (2, 9.0, 9.0)], "id long, x double, y double")
-    for distributed in (False, True):
+    for ceiling in GATE_SIDES.values():
+        monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", ceiling)
         got = values_by_points(
             pts.toDF(name, f"{name} x", f"{name} y"), tiles, grid,
-            id_col=name, x_col=f"{name} x", y_col=f"{name} y", distributed=distributed,
+            id_col=name, x_col=f"{name} x", y_col=f"{name} y",
         )
-        assert rows(got) == rows(values_by_points(pts, tiles, grid, id_col="id", distributed=distributed))
+        assert rows(got) == rows(values_by_points(pts, tiles, grid, id_col="id"))
+    monkeypatch.undo()
 
     polys = rect_polygons_df(spark)
     tri = spark.createDataFrame(
@@ -1016,3 +971,161 @@ def test_reserved_and_spaced_column_names(spark, name):
         exp = pip_join_points(plain, dim)
         assert rows(got.select(name, "poly_id")) == rows(exp.select("id", "poly_id"))
 
+
+
+def _board_case(name, **kw):
+    """A gate-matrix case: the board query ``name`` against its oracle."""
+
+    def run(spark, side):
+        df = entrymod.all_queries()[name](spark, SF_ORACLE)
+        compare_to_oracle(df, entrymod.all_oracle_sql()[name], SF_ORACLE, **kw)
+        return df, None
+
+    return run
+
+
+def _rasterize_case(spark, side):
+    """rasterize_hist, plus the tile bytes of a dense and a sparse burn of
+    the rect dim (the histogram alone does not place the tiles)."""
+    from gdal_boots_spark.operators.rasterize import rasterize
+    from gdal_boots_spark.sources.tiles import RasterGrid
+
+    df, _ = _board_case("rasterize_hist")(spark, side)
+    grid = RasterGrid(
+        "rzd", 4326, (0.01, 0.0, 26.0, 0.0, -0.01, 55.0), 300, 200, tile_w=64, tile_h=64, dtype="uint8"
+    )
+    tiles = {
+        dense: {r["tile_key"]: bytes(r["data"]) for r in rasterize(spark, rect_polygons_df(spark), grid, dense=dense).collect()}
+        for dense in (False, True)
+    }
+    assert 0 < len(tiles[False]) <= len(tiles[True]) == grid.n_tiles_x * grid.n_tiles_y
+    return df, tiles
+
+
+def _sampling_case(spark, side):
+    """point_sampling, plus a sparse tile table: an in-bounds point whose
+    tile row is absent reads NULL, and the broadcast gather shuffles
+    nothing."""
+    from gdal_boots_spark.operators.sampling import values_by_points
+    from gdal_boots_spark.sources.tiles import RasterGrid, generate_tiles, ramp_fill
+
+    df, _ = _board_case("point_sampling")(spark, side)
+    grid = RasterGrid("r", 4326, (1.0, 0.0, 0.0, 0.0, -1.0, 3.0), 5, 3, tile_w=2, tile_h=2, bands=2, dtype="int32")
+    tiles = generate_tiles(spark, grid, ramp_fill).where(F.col("tile_key") != "r/0/0/1")
+    pts = spark.createDataFrame(
+        [(i, x, y) for i, (x, y) in enumerate(
+            [(0.2, 2.5), (2.5, 2.5), (4.5, 0.5), (-1.0, 1.0), (10.0, 10.0), (0.0, 3.0), (5.0, 0.0)]
+        )],
+        "point_id long, x double, y double",
+    )
+    sparse = values_by_points(pts, tiles, grid)
+    got = {(r["point_id"], r["band"]): r["value"] for r in sparse.collect()}
+    # the dropped tile covers px in [2,4), py in [0,2): point (2.5, 2.5)
+    # -> px 2, py 0 -> NULL on band 0, real value on band 1
+    assert len(got) == 14 and got[(1, 0)] is None and got[(1, 1)] is not None
+    if side == "broadcast":
+        plan = sparse._jdf.queryExecution().executedPlan().toString()
+        assert "hashpartitioning" not in plan and "CoGroup" not in plan, plan
+    return df, got
+
+
+def _embedding_case(spark, side):
+    """embedding_neardup on the sf0.01 fixture; the bucketed side must
+    return the exact side's pairs.  Low-threshold regime: 2-bit hashes x
+    24 tables drive the per-pair miss probability below 1e-5, and the
+    deterministic planes make that outcome fixed, not flaky; the
+    integer-seeded embeddings make cos values bit-identical."""
+    from gdal_boots_spark.operators.dedup import embedding_neardup
+
+    emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
+    df = embedding_neardup(emb, threshold=0.4, bits=2, n_tables=24)
+    pairs = {(r["a"], r["b"], round(r["cos"], 9)) for r in df.collect()}
+    assert len(pairs) > 10
+    return df, pairs
+
+
+# gate-switched operator -> (case, a node only its distributed side's
+# executed plan holds)
+GATE_CASES = {
+    "pip_join": (_board_case("pip_join", float_cols=("x", "y")), "MapInArrow _decode_geojson("),
+    "rasterize_hist": (_rasterize_case, "MapInArrow _decode_geojson("),
+    "zonal_stats": (_board_case("zonal_stats", float_cols=("mean",), atol=1e-9), "MapInArrow _decode_geojson("),
+    "point_sampling": (_sampling_case, "FlatMapCoGroupsInPandas"),
+    "embedding_neardup": (_embedding_case, "MapInPandas bucketize("),
+}
+
+
+@pytest.mark.parametrize("name", list(GATE_CASES))
+def test_broadcast_gate_both_ways(spark, monkeypatch, name):
+    """One constant, cover.BROADCAST_MAX_BYTES, forces each gate-switched
+    operator to each physical side.  The executed plan proves which side
+    ran, each side matches the DuckDB oracle, and the two sides return the
+    same rows (embedding_neardup: its bucketed side equals its exact
+    side)."""
+    from gdal_boots_spark.operators import cover
+
+    run, marker = GATE_CASES[name]
+    out = {}
+    for side, ceiling in GATE_SIDES.items():
+        monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", ceiling)
+        df, out[side] = run(spark, side)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert (marker in plan) == (side == "distributed"), (side, plan)
+    assert out["broadcast"] == out["distributed"]
+
+
+def test_dim_null_and_empty_geometry_rows(spark, monkeypatch):
+    """A polygon dim with a null geojson row and an empty Polygon gives,
+    on both sides of the broadcast gate, exactly what the dim of its one
+    good rectangle gives: pip_join_points, dense and sparse rasterize and
+    zonal_stats all skip the two rows (both sides drop them in the one
+    decode pass) and the two sides agree."""
+    from gdal_boots_spark.operators import cover
+    from gdal_boots_spark.operators.rasterize import rasterize
+    from gdal_boots_spark.operators.zonal import zonal_stats
+    from gdal_boots_spark.sources.synth import rect_ring_geojson
+    from gdal_boots_spark.sources.tiles import RasterGrid, generate_tiles, ramp_fill
+
+    schema = "poly_id long, geojson string"
+    good = (1, rect_ring_geojson(0.5505, 0.5505, 2.0505, 2.0505))
+    bad = [(2, None), (3, '{"type":"Polygon","coordinates":[]}')]
+    pts = spark.createDataFrame(
+        [(0, 1.0, 1.0), (1, 3.0, 3.0), (2, 0.2, 0.2), (3, 2.0, 0.6)], "point_id long, x double, y double"
+    )
+    grid = RasterGrid("nul", 4326, (0.1, 0.0, 0.0, 0.0, -0.1, 4.0), 40, 40, tile_w=16, tile_h=16, dtype="int32")
+    tiles = generate_tiles(spark, grid, ramp_fill)
+
+    def results(rows):
+        polys = spark.createDataFrame(rows, schema)
+        return {
+            "pip": sorted(tuple(r) for r in pip_join_points(pts, polys).select("point_id", "poly_id").collect()),
+            **{
+                f"rasterize_dense={dense}": sorted(
+                    (r["tile_key"], bytes(r["data"])) for r in rasterize(spark, polys, grid, dense=dense).collect()
+                )
+                for dense in (False, True)
+            },
+            "zonal": sorted(tuple(r) for r in zonal_stats(spark, tiles, grid, polys).collect()),
+        }
+
+    out = {}
+    for side, ceiling in GATE_SIDES.items():
+        monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", ceiling)
+        out[side] = results([good])
+        assert results([good, *bad]) == out[side], side
+    assert out["broadcast"] == out["distributed"]
+    assert out["broadcast"]["pip"] == [(0, 1), (3, 1)] and len(out["broadcast"]["rasterize_dense=False"]) == 4
+
+
+def test_no_operator_takes_a_path_flag():
+    """The broadcast gate alone picks each operator's physical side: no
+    gate-switched operator takes a path selector."""
+    import inspect
+
+    from gdal_boots_spark.operators.dedup import embedding_neardup
+    from gdal_boots_spark.operators.rasterize import rasterize
+    from gdal_boots_spark.operators.sampling import values_by_points
+    from gdal_boots_spark.operators.zonal import zonal_stats
+
+    for fn in (pip_join_points, rasterize, zonal_stats, values_by_points, embedding_neardup):
+        assert "distributed" not in inspect.signature(fn).parameters, fn.__name__
