@@ -155,6 +155,33 @@ def test_slice_window_pushes_tile_filters_to_parquet(spark, tmp_path):
     assert "GreaterThanOrEqual(tile_x" in plan and "LessThanOrEqual(tile_y" in plan
 
 
+def test_rasterize_broadcast_vs_distributed(spark, monkeypatch):
+    """The no-collect cover path (operators.cover) produces exactly the
+    same tile rows as the driver-broadcast path, sparse AND dense, each
+    side forced with cover.BROADCAST_MAX_BYTES."""
+    from gdal_boots_spark.operators import cover
+    from gdal_boots_spark.sources.synth import rect_polygons_df
+
+    from tests.conftest import GATE_SIDES
+
+    grid = RasterGrid(
+        "rzd", 4326, (0.01, 0.0, 26.0, 0.0, -0.01, 55.0), 300, 200, tile_w=64, tile_h=64, dtype="uint8"
+    )
+    polys = rect_polygons_df(spark)
+    out = {}
+    for side, ceiling in GATE_SIDES.items():
+        monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", ceiling)
+        out[side] = {}
+        for dense in (False, True):
+            df = rasterize(spark, polys, grid, dense=dense)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert ("MapInArrow _decode_geojson(" in plan) == (side == "distributed"), (side, dense, plan)
+            out[side][dense] = {r["tile_key"]: bytes(r["data"]) for r in df.collect()}
+    assert out["broadcast"] == out["distributed"]
+    tiles = out["broadcast"]
+    assert 0 < len(tiles[False]) <= len(tiles[True]) == grid.n_tiles_x * grid.n_tiles_y
+
+
 def test_read_by_geom_composite_flow(spark, tmp_path):
     """Reference test_utils.py:14-26 (test_read_by_geom) — permanently
     skipped upstream for lack of its "extra" satellite fixture; ported
