@@ -115,26 +115,22 @@ def polygons_intersect(pga: PackedGeometry, pgb: PackedGeometry) -> bool:
     return _any_segment_intersection((x1a, y1a, x2a, y2a), (x1b, y1b, x2b, y2b))
 
 
-def _any_segment_intersection(edges_a, edges_b) -> bool:
-    """True iff any segment of edges_a intersects any of edges_b —
-    proper crossing OR degenerate contact (collinear overlap,
-    endpoint-on-segment).  Vectorized (m x n)."""
-    x1a, y1a, x2a, y2a = edges_a
-    x1b, y1b, x2b, y2b = edges_b
-    if x1a.size == 0 or x1b.size == 0:
-        return False
+def _segment_contacts(edges_a, edges_b) -> np.ndarray:
+    """(m x n) bool: segment i of edges_a intersects segment j of
+    edges_b — proper crossing OR degenerate contact (collinear overlap,
+    endpoint-on-segment)."""
+    x1a, y1a, x2a, y2a = (np.asarray(v)[:, None] for v in edges_a)
+    x1b, y1b, x2b, y2b = (np.asarray(v)[None, :] for v in edges_b)
 
     def orient(ox, oy, px, py, qx, qy):
         return (px - ox) * (qy - oy) - (py - oy) * (qx - ox)
 
     # d1/d2: b endpoints relative to a; d3/d4: a endpoints relative to b
-    d1 = orient(x1a[:, None], y1a[:, None], x2a[:, None], y2a[:, None], x1b[None, :], y1b[None, :])
-    d2 = orient(x1a[:, None], y1a[:, None], x2a[:, None], y2a[:, None], x2b[None, :], y2b[None, :])
-    d3 = orient(x1b[None, :], y1b[None, :], x2b[None, :], y2b[None, :], x1a[:, None], y1a[:, None])
-    d4 = orient(x1b[None, :], y1b[None, :], x2b[None, :], y2b[None, :], x2a[:, None], y2a[:, None])
+    d1 = orient(x1a, y1a, x2a, y2a, x1b, y1b)
+    d2 = orient(x1a, y1a, x2a, y2a, x2b, y2b)
+    d3 = orient(x1b, y1b, x2b, y2b, x1a, y1a)
+    d4 = orient(x1b, y1b, x2b, y2b, x2a, y2a)
     proper = (d1 * d2 < 0) & (d3 * d4 < 0)
-    if proper.any():
-        return True
 
     # degenerate contact: a collinear endpoint lying ON the other
     # segment (covers shared edges, collinear partial overlap, and
@@ -147,17 +143,19 @@ def _any_segment_intersection(edges_a, edges_b) -> bool:
             & (np.minimum(sy1, sy2) <= py) & (py <= np.maximum(sy1, sy2))
         )
 
-    ax1, ay1 = x1a[:, None], y1a[:, None]
-    ax2, ay2 = x2a[:, None], y2a[:, None]
-    bx1, by1 = x1b[None, :], y1b[None, :]
-    bx2, by2 = x2b[None, :], y2b[None, :]
-    touch = (
-        ((d1 == 0) & on_seg(ax1, ay1, ax2, ay2, bx1, by1))
-        | ((d2 == 0) & on_seg(ax1, ay1, ax2, ay2, bx2, by2))
-        | ((d3 == 0) & on_seg(bx1, by1, bx2, by2, ax1, ay1))
-        | ((d4 == 0) & on_seg(bx1, by1, bx2, by2, ax2, ay2))
+    return (
+        proper
+        | ((d1 == 0) & on_seg(x1a, y1a, x2a, y2a, x1b, y1b))
+        | ((d2 == 0) & on_seg(x1a, y1a, x2a, y2a, x2b, y2b))
+        | ((d3 == 0) & on_seg(x1b, y1b, x2b, y2b, x1a, y1a))
+        | ((d4 == 0) & on_seg(x1b, y1b, x2b, y2b, x2a, y2a))
     )
-    return bool(touch.any())
+
+
+def _any_segment_intersection(edges_a, edges_b) -> bool:
+    """True iff any segment of edges_a intersects any of edges_b
+    (_segment_contacts)."""
+    return bool(_segment_contacts(edges_a, edges_b).any())
 
 
 def _open_edges(coords: np.ndarray, ring_offsets: np.ndarray):
@@ -227,8 +225,8 @@ def rects_intersect_polygon(
     common accept at bench shapes), (2) any rect corner inside the
     polygon (even-odd), (3) residual boundary-crossing pairs (a polygon
     edge slicing through the rect with no vertex containment either
-    way) via the exact segment test, only for the rare geometric
-    leftovers."""
+    way) via the exact segment test (_segment_contacts), chunked over
+    the leftovers with no per-rectangle loop."""
     minx = np.asarray(minx, np.float64)
     miny = np.asarray(miny, np.float64)
     maxx = np.asarray(maxx, np.float64)
@@ -256,16 +254,21 @@ def rects_intersect_polygon(
         out[rem[pin.any(axis=0)]] = True
     rem = np.flatnonzero(~out)
     if rem.size:
+        # each remaining rectangle's 4 closed edges against every
+        # polygon edge, ~48k contact cells per chunk, reduced per rect
         pedges = _ring_edges(coords, np.asarray(ring_offsets))
-        for i in rem:
-            x0, y0, x1, y1 = minx[i], miny[i], maxx[i], maxy[i]
+        ne = 4 * pedges[0].size
+        step = max(1, 48_000 // max(1, ne))
+        for lo in range(0, rem.size, step):
+            r = rem[lo:lo + step]
+            x0, y0, x1, y1 = minx[r], miny[r], maxx[r], maxy[r]
             redges = (
-                np.asarray([x0, x1, x1, x0]),
-                np.asarray([y0, y0, y1, y1]),
-                np.asarray([x1, x1, x0, x0]),
-                np.asarray([y0, y1, y1, y0]),
+                np.stack([x0, x1, x1, x0], axis=1).ravel(),
+                np.stack([y0, y0, y1, y1], axis=1).ravel(),
+                np.stack([x1, x1, x0, x0], axis=1).ravel(),
+                np.stack([y0, y1, y1, y0], axis=1).ravel(),
             )
-            out[i] = _any_segment_intersection(redges, pedges)
+            out[r] = _segment_contacts(redges, pedges).reshape(r.size, ne).any(axis=1)
     return out
 
 

@@ -19,6 +19,7 @@ from __future__ import annotations
 import json
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -64,7 +65,8 @@ def crop_by_geometry(
     sliced, out_grid = slice_window(tiles, grid, window)
 
     poly_df = spark.createDataFrame(
-        [(0, json.dumps(to_geojson(pg), separators=(",", ":")))], "poly_id long, geojson string"
+        pa.table({"poly_id": [0], "geojson": [json.dumps(to_geojson(pg), separators=(",", ":"))]}),
+        "poly_id long, geojson string",
     )
     mask_tiles = rasterize(spark, poly_df, out_grid, all_touched=all_touched, dense=True)
 

@@ -23,6 +23,7 @@ ANSI SQL — the DuckDB oracle asserts identical shard assignment.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -70,9 +71,10 @@ def pack_shards(
         src = ranged
     else:
         # thousands of partitions would bloat the plan with a literal
-        # map; ship the offsets as a broadcast dimension instead
+        # map; ship the offsets as a broadcast dimension instead (an
+        # Arrow local relation: no Python worker scans it)
         off_df = spark.createDataFrame(
-            sorted(offsets.items()), "_pid int, _off long"
+            pa.table(list(zip(*sorted(offsets.items()))), names=["_pid", "_off"]), "_pid int, _off long"
         )
         src = ranged.join(F.broadcast(off_df), "_pid", "left")
         off_col = F.coalesce(F.col("_off"), F.lit(0))

@@ -29,6 +29,7 @@ geometry x geometry joins).
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -74,19 +75,24 @@ def _cover_df(spark: SparkSession, bboxes: dict, rect_pids: frozenset, res: int)
     level-``res`` rows while a span matches at its own level.  The
     underscore names cannot collide with a caller's point columns.
 
-    Memoised per session: createDataFrame ships every row through py4j
-    (~35 round trips for a few hundred rows) on every cold plan build,
-    and the rows are a pure function of the key."""
+    An Arrow local relation (planned as a LocalTableScan), so no
+    execution runs a Python worker to broadcast it; a Python row list
+    would plan ``Scan ExistingRDD`` over a PythonRDD that every
+    execution re-runs.  Memoised per session: the build ships the
+    table through py4j on every cold plan build, and the rows are a
+    pure function of the key."""
     lmin = max(0, res - ADAPTIVE_LEVEL_WINDOW)
 
     def build():
-        rows = []
-        for pid, box in bboxes.items():
-            b = tuple(float(v) for v in box)
-            for lvl in range(lmin, res + 1):
-                rows.extend((cid, pid, *b, pid in rect_pids) for cid in cover_bbox(*b, lvl).tolist())
+        pids = np.fromiter(bboxes, np.int64, len(bboxes))
+        box = np.asarray(list(bboxes.values()), np.float64).reshape(-1, 4)
+        ids = [cover_bbox(*b, lvl) for b in box for lvl in range(lmin, res + 1)]
+        own = np.repeat(np.arange(len(ids)) // (res + 1 - lmin), [c.size for c in ids])
+        cols = {"cell_id": np.concatenate(ids) if ids else np.empty(0, np.int64), "poly_id": pids[own]}
+        cols.update((name, box[own, j]) for j, name in enumerate(("_pminx", "_pminy", "_pmaxx", "_pmaxy")))
+        cols["_prect"] = np.isin(pids, list(rect_pids))[own]
         return spark.createDataFrame(
-            rows,
+            pa.table(cols),
             "cell_id long, poly_id long, _pminx double, _pminy double, _pmaxx double, _pmaxy double, "
             "_prect boolean",
         )
@@ -280,7 +286,11 @@ def _poly_span_candidates(docs: DataFrame, bboxes: dict, rect_pids: frozenset, r
 def poly_span_candidates(docs: DataFrame, polys: DataFrame, res: int | None = None) -> DataFrame:
     """Bench/diagnostic surface: the poly-span path's pre-refinement
     candidates for interleaved docs (mirrors pip_join_points
-    ``refine=False``) — used to normalize per-candidate refine cost."""
+    ``refine=False``) — used to normalize per-candidate refine cost.
+
+    Collects and broadcasts the polygon dim whatever
+    cover.fits_broadcast says: the span branch has no distributed twin
+    yet."""
     dim = poly_dim(polys)
     return _poly_span_candidates(docs, dim.bboxes, dim.rect_pids, _auto_res(dim.bboxes) if res is None else res)
 
@@ -310,6 +320,12 @@ def pip_join_docs_any(docs: DataFrame, polys: DataFrame, res: int | None = None)
     split, 5.81 s for one refine over all candidates, 7.00 s for a
     mapInArrow row filter.  A plain where()-split without the persist
     would recompute the candidate subtree twice.)
+
+    Only the Point branch goes through the broadcast gate
+    (pip_join_points -> cover.fits_broadcast).  The non-Point span
+    branch collects and broadcasts the polygon dim whatever the gate
+    says: it has no distributed twin yet, so a dim too big to broadcast
+    is still pulled to the driver.
     """
     from pyspark.sql.functions import pandas_udf
     from pyspark.storagelevel import StorageLevel

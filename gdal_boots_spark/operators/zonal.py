@@ -24,6 +24,7 @@ O(polys x touched tiles) aggregate rows do.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -74,9 +75,16 @@ def zonal_stats(
     else:
         dim = poly_dim(polys)
         pairs = tile_contribs(dim, grid)
+        # driver relations come from Arrow tables (local relations: no
+        # execution runs a Python worker to scan them)
         if not pairs:
-            return spark.createDataFrame([], _OUT_SCHEMA)
-        cdf = spark.createDataFrame(pairs, "tile_x int, tile_y int, poly_id long")
+            return spark.createDataFrame(
+                pa.table({c.split()[0]: pa.nulls(0) for c in _OUT_SCHEMA.split(", ")}), _OUT_SCHEMA
+            )
+        cdf = spark.createDataFrame(
+            pa.table(list(zip(*pairs)), names=["tile_x", "tile_y", "poly_id"]),
+            "tile_x int, tile_y int, poly_id long",
+        )
         joined = tiles.join(F.broadcast(cdf), ["tile_x", "tile_y"])
         bpolys = dim.bpacked
 

@@ -129,6 +129,13 @@ def test_pack_shards_matches_duckdb_oracle(spark):
     a = got[cols].sort_values(cols).reset_index(drop=True)
     b = want[cols].sort_values(cols).reset_index(drop=True)
     assert a.equals(b) and len(a) > 0
+    # past 256 range partitions the offsets ship as a broadcast Arrow
+    # relation instead of a literal map: same shards
+    wide = pack_shards(docs, budget=5000, num_partitions=400)
+    assert "LocalTableScan" in wide._jdf.queryExecution().executedPlan().toString()
+    got_wide = wide.toPandas()
+    pack_release(wide)
+    assert got_wide[cols].sort_values(cols).reset_index(drop=True).equals(b)
     # invariants
     srt = got.sort_values("doc_id").reset_index(drop=True)
     assert (srt["shard"].diff().dropna() >= 0).all()  # monotone in key order

@@ -397,6 +397,34 @@ def test_operators_decode_once():
     assert not bad, bad
 
 
+def test_operators_build_driver_relations_from_arrow():
+    """Every relation an operator builds on the driver from Python
+    values comes from a pyarrow Table: each createDataFrame call under
+    operators/ takes a ``pa.table(...)`` as its data.  A Python row list
+    plans ``Scan ExistingRDD`` over a PythonRDD that every execution
+    re-runs in a Python worker, even when the DataFrame is memoised;
+    an Arrow table plans a LocalTableScan."""
+    import ast
+    import pathlib
+
+    ops = pathlib.Path(__file__).resolve().parents[1] / "gdal_boots_spark" / "operators"
+    bad, calls = [], 0
+    for path in sorted(ops.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "createDataFrame":
+                calls += 1
+                data = node.args[0] if node.args else None
+                arrow = (
+                    isinstance(data, ast.Call)
+                    and isinstance(data.func, ast.Attribute)
+                    and getattr(data.func.value, "id", None) == "pa"
+                    and data.func.attr == "table"
+                )
+                if not arrow:
+                    bad.append(f"{path.name}:{node.lineno}")
+    assert calls >= 5 and not bad, bad
+
+
 def test_cell_bounds_contains_point():
     cid = cell_id(np.array([27.56]), np.array([53.9]), 10)
     minlon, minlat, maxlon, maxlat = cell_bounds(cid)

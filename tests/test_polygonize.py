@@ -210,3 +210,35 @@ def test_polygonize_progress_callback(spark):
     }
     assert got == want
     out.unpersist()
+
+
+def test_polygonize_rebuilds_share_one_cached_sweep(spark):
+    """polygonize persists its tile sweep and never unpersists it, but a
+    rebuild of the same query plans the same sweep, which the cache
+    manager already holds: three build + collect rounds of the board
+    polygonize query at sf0.01 (Python and JVM GC after each) leave
+    exactly one newly persisted RDD, not one more per round."""
+    import gc
+
+    import __spark_entry__ as entrymod
+    from tests.conftest import SF_ORACLE
+
+    def persisted():
+        it = spark.sparkContext._jsc.sc().getPersistentRDDs().keysIterator()
+        ids = set()
+        while it.hasNext():
+            ids.add(it.next())
+        return ids
+
+    spark.catalog.clearCache()
+    before = persisted()
+    counts = []
+    try:
+        for _ in range(3):
+            assert entrymod.queries()["polygonize"](spark, SF_ORACLE).collect()
+            gc.collect()
+            spark._jvm.System.gc()
+            counts.append(len(persisted() - before))
+    finally:
+        spark.catalog.clearCache()
+    assert counts == [1, 1, 1], counts

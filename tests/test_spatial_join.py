@@ -640,6 +640,124 @@ def test_rect_rings_predicate():
     assert dict(zip(rings, got.tolist())) == {k: exp for k, (_, _, exp) in rings.items()}
 
 
+def _loop_segment_intersection(edges_a, edges_b) -> bool:
+    """The per-pair segment test as it stood before the contact matrix
+    (proper crossing, then collinear endpoint-on-segment contact)."""
+    x1a, y1a, x2a, y2a = edges_a
+    x1b, y1b, x2b, y2b = edges_b
+    if x1a.size == 0 or x1b.size == 0:
+        return False
+
+    def orient(ox, oy, px, py, qx, qy):
+        return (px - ox) * (qy - oy) - (py - oy) * (qx - ox)
+
+    ax1, ay1, ax2, ay2 = x1a[:, None], y1a[:, None], x2a[:, None], y2a[:, None]
+    bx1, by1, bx2, by2 = x1b[None, :], y1b[None, :], x2b[None, :], y2b[None, :]
+    d1 = orient(ax1, ay1, ax2, ay2, bx1, by1)
+    d2 = orient(ax1, ay1, ax2, ay2, bx2, by2)
+    d3 = orient(bx1, by1, bx2, by2, ax1, ay1)
+    d4 = orient(bx1, by1, bx2, by2, ax2, ay2)
+    if ((d1 * d2 < 0) & (d3 * d4 < 0)).any():
+        return True
+
+    def on_seg(sx1, sy1, sx2, sy2, px, py):
+        return (
+            (np.minimum(sx1, sx2) <= px) & (px <= np.maximum(sx1, sx2))
+            & (np.minimum(sy1, sy2) <= py) & (py <= np.maximum(sy1, sy2))
+        )
+
+    return bool((
+        ((d1 == 0) & on_seg(ax1, ay1, ax2, ay2, bx1, by1))
+        | ((d2 == 0) & on_seg(ax1, ay1, ax2, ay2, bx2, by2))
+        | ((d3 == 0) & on_seg(bx1, by1, bx2, by2, ax1, ay1))
+        | ((d4 == 0) & on_seg(bx1, by1, bx2, by2, ax2, ay2))
+    ).any())
+
+
+def _loop_rect_intersects(x0, y0, x1, y1, coords, ro):
+    """Per-rectangle reference of rects_intersect_polygon -> (hit,
+    decided by the residual edge test)."""
+    from gdal_boots_spark.geom.pip import _ring_edges, points_in_polygon
+
+    c = coords.reshape(-1, 2)
+    if ((c[:, 0] >= x0) & (c[:, 0] <= x1) & (c[:, 1] >= y0) & (c[:, 1] <= y1)).any():
+        return True, False
+    if points_in_polygon(np.asarray([x0, x1, x1, x0]), np.asarray([y0, y0, y1, y1]), coords, ro).any():
+        return True, False
+    redges = (
+        np.asarray([x0, x1, x1, x0]),
+        np.asarray([y0, y0, y1, y1]),
+        np.asarray([x1, x1, x0, x0]),
+        np.asarray([y0, y1, y1, y0]),
+    )
+    return _loop_segment_intersection(redges, _ring_edges(coords, ro)), True
+
+
+def test_rects_intersect_polygon_matches_loop():
+    """geom.pip.rects_intersect_polygon equals a per-rectangle loop
+    bit for bit over 2,400 seeded rectangles per polygon: a 64-gon
+    (many edges, so the residual test runs in several chunks), an
+    L-shape and a square with a square and a diamond hole.  The
+    rectangles include corners snapped to polygon vertices, edges
+    collinear with polygon edges, zero-width and zero-height boxes,
+    boxes inside the polygon or a hole, boxes containing the polygon and
+    long thin boxes that cross it with no vertex inside either way."""
+    from gdal_boots_spark.geom.pip import rects_intersect_polygon
+
+    t = np.linspace(0.0, 2 * np.pi, 65)[:-1]
+    gon = np.column_stack([5 + 3 * np.cos(t), 5 + 3 * np.sin(t)])
+    polys = {
+        "convex64": [np.vstack([gon, gon[:1]])],
+        "l_shape": [np.asarray([[0, 0], [4, 0], [4, 1], [1, 1], [1, 3], [0, 3], [0, 0]], np.float64)],
+        "holed": [
+            np.asarray([[0, 0], [6, 0], [6, 6], [0, 6], [0, 0]], np.float64),
+            np.asarray([[1, 1], [2, 1], [2, 2], [1, 2], [1, 1]], np.float64),
+            np.asarray([[4, 2.5], [5, 4], [4, 5.5], [3, 4], [4, 2.5]], np.float64),
+        ],
+    }
+    rng = np.random.default_rng(9)
+    for name, rings in polys.items():
+        coords = np.concatenate(rings).ravel()
+        ro = np.cumsum([0] + [len(r) for r in rings]).astype(np.int32)
+        v = np.concatenate(rings)
+        lo, hi = v.min(axis=0) - 1.0, v.max(axis=0) + 1.0
+        snap_x = np.concatenate([v[:, 0], rng.uniform(lo[0], hi[0], 8)])
+        snap_y = np.concatenate([v[:, 1], rng.uniform(lo[1], hi[1], 8)])
+        # snapped (vertex corners, collinear edges, zero extents)
+        sx = np.sort(rng.choice(snap_x, (800, 2)), axis=1)
+        sy = np.sort(rng.choice(snap_y, (800, 2)), axis=1)
+        # uniform boxes of any size
+        ux = np.sort(rng.uniform(lo[0], hi[0], (600, 2)), axis=1)
+        uy = np.sort(rng.uniform(lo[1], hi[1], (600, 2)), axis=1)
+        # long thin boxes (half of them zero-width or zero-height)
+        n = 600
+        cx, cy = rng.uniform(lo[0], hi[0], n), rng.uniform(lo[1], hi[1], n)
+        w = np.where(np.arange(n) % 4 == 0, 0.0, rng.uniform(0, 0.05, n))
+        horiz = np.arange(n) % 2 == 0
+        tx = np.where(horiz[:, None], [[lo[0], hi[0]]], np.column_stack([cx, cx + w]))
+        ty = np.where(horiz[:, None], np.column_stack([cy, cy + w]), [[lo[1], hi[1]]])
+        # small boxes inside (or in a hole), and boxes containing it all
+        m = 400
+        px_, py_ = rng.uniform(lo[0] + 1, hi[0] - 1, m), rng.uniform(lo[1] + 1, hi[1] - 1, m)
+        e = rng.uniform(0, 0.1, m)
+        big = rng.uniform(0, 2, (m, 2))
+        inside = np.arange(m) % 2 == 0
+        ix = np.where(inside[:, None], np.column_stack([px_, px_ + e]), np.column_stack([lo[0] - big[:, 0], hi[0] + big[:, 1]]))
+        iy = np.where(inside[:, None], np.column_stack([py_, py_ + e]), np.column_stack([lo[1] - big[:, 1], hi[1] + big[:, 0]]))
+        bx = np.vstack([sx, ux, tx, ix])
+        by = np.vstack([sy, uy, ty, iy])
+        assert len(bx) >= 2000
+
+        got = rects_intersect_polygon(bx[:, 0], by[:, 0], bx[:, 1], by[:, 1], coords, ro)
+        ref = [_loop_rect_intersects(bx[i, 0], by[i, 0], bx[i, 1], by[i, 1], coords, ro) for i in range(len(bx))]
+        exp = np.asarray([h for h, _ in ref])
+        assert np.array_equal(got, exp), (name, np.flatnonzero(got != exp)[:10])
+        residual = np.asarray([r for _, r in ref])
+        # the residual edge test decided many boxes, both ways
+        assert (residual & exp).sum() >= 20 and (residual & ~exp).sum() >= 20, name
+        assert ((bx[:, 0] == bx[:, 1]) | (by[:, 0] == by[:, 1])).sum() >= 100, name
+
+
 def test_hole_polygon_with_whitespace_separators(spark):
     """ADVICE r3: a hole polygon serialized with json.dumps DEFAULT
     separators ("]], [[") slipped past the old single-ring fast-path
@@ -969,6 +1087,80 @@ def test_decode_once_plan_shape(spark, monkeypatch):
         plan = qs[name](spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
         assert "ArrowEvalPython" not in plan, (name, plan)
         assert plan.count("MapInArrow _decode_geojson(") == inputs, (name, plan)
+
+
+def _executed_leaves(df):
+    """(node name, output column names, under a broadcast exchange) of
+    every leaf of ``df``'s executed plan, walking into AQE query stages
+    and cached relations the way perfbench/tracer.py does."""
+    out, seen = [], set()
+    stack = [(df._jdf.queryExecution().executedPlan(), False)]
+    while stack:
+        node, bcast = stack.pop()
+        if node.id() in seen:
+            continue
+        seen.add(node.id())
+        cls = node.getClass().getSimpleName()
+        bcast = bcast or cls == "BroadcastExchangeExec"
+        if cls.endswith("QueryStageExec"):
+            kids = [node.plan()]
+        elif cls == "AdaptiveSparkPlanExec":
+            kids = [node.executedPlan()]
+        elif cls == "InMemoryTableScanExec":
+            kids = [node.relation().cachedPlan()]
+        elif cls == "ReusedExchangeExec":
+            kids = [node.child()]
+        else:
+            ch = node.children()
+            kids = [ch.apply(i) for i in range(ch.size())]
+        if not kids:
+            cols = node.output()
+            out.append((node.nodeName(), {cols.apply(i).name() for i in range(cols.size())}, bcast))
+        stack.extend((k, bcast) for k in kids)
+    return out
+
+
+def test_driver_relations_plan_no_python_rdd(spark, monkeypatch, tmp_path):
+    """Relations an operator builds on the driver are Arrow local
+    relations, so executing the query runs no Python worker just to scan
+    them: after collecting pip_join_docs_any (sf0.001) and zonal_stats
+    on both sides of the broadcast gate, and the board pip_join at its
+    own gate, no executed plan (AQE stages and cached plans included)
+    has a ``Scan ExistingRDD`` leaf, and the broadcast cover or
+    contribution side is a LocalTableScan.  The dim is the board's
+    rectangle dim written to parquet, so the caller's own source is not
+    a driver list either."""
+    from gdal_boots_spark.operators import cover
+    from gdal_boots_spark.operators.spatial_join import pip_join_docs_any
+    from gdal_boots_spark.operators.zonal import zonal_stats
+    from gdal_boots_spark.sources.tiles import RasterGrid, generate_tiles, ramp_fill
+
+    ppath = str(tmp_path / "dim.parquet")
+    rect_polygons_df(spark).select("poly_id", "geojson").write.parquet(ppath)
+    dim = spark.read.parquet(ppath)
+    grid = RasterGrid(  # the board zonal_stats raster
+        raster_id="zs", epsg=4326, transform=(0.01, 0.0, 26.0, 0.0, -0.01, 55.0),
+        width=300, height=200, tile_w=64, tile_h=64, bands=1, dtype="int32",
+    )
+    tiles = generate_tiles(spark, grid, ramp_fill)
+    docs = interleaved_docs(spark, SF_SMOKE, poly_spans=True)
+    cover_cols, contrib_cols = {"cell_id", "poly_id"}, {"tile_x", "tile_y", "poly_id"}
+
+    def check(name, df, local_cols):
+        try:
+            assert df.count() > 0, name
+            leaves = _executed_leaves(df)
+        finally:
+            spark.catalog.clearCache()  # pip_join_docs_any persists its branch point
+        assert not [n for n, _, _ in leaves if n.startswith("Scan ExistingRDD")], (name, leaves)
+        local = [cols for n, cols, bcast in leaves if n == "LocalTableScan" and bcast]
+        assert any(local_cols <= cols for cols in local) if local_cols else not local, (name, leaves)
+
+    check("pip_join", entrymod.queries()["pip_join"](spark, SF_SMOKE), cover_cols)
+    for side, ceiling in GATE_SIDES.items():
+        monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", ceiling)
+        check(f"pip_join_docs_any/{side}", pip_join_docs_any(docs, dim), cover_cols)
+        check(f"zonal_stats/{side}", zonal_stats(spark, tiles, grid, dim), contrib_cols if side == "broadcast" else None)
 
 
 @pytest.mark.parametrize("name", ["order", "my id"])
