@@ -60,8 +60,10 @@ GEOMETRY_TYPE = StructType(
 def double_lit_sql(v: float) -> str:
     """A Python float as a Spark SQL DOUBLE literal: bare decimals parse
     as DECIMAL (need the D suffix), exponent forms are already DOUBLE
-    (and reject a D suffix)."""
+    (and reject a D suffix); NaN and infinities have no literal."""
     r = repr(float(v))
+    if r in ("nan", "inf", "-inf"):
+        return f"CAST('{r}' AS DOUBLE)"
     return r if ("e" in r or "E" in r) else r + "D"
 
 

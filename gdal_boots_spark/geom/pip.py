@@ -16,20 +16,21 @@ import numpy as np
 from .packed import PackedGeometry
 
 
-def _ring_edges(coords: np.ndarray, ring_offsets: np.ndarray):
+def _ring_edges(coords: np.ndarray, ring_offsets: np.ndarray, close: bool = True):
     """Build edge endpoint arrays (x1,y1,x2,y2) for every ring edge.
 
     Rings are assumed closed (GeoJSON-style repeated last point); if a
-    ring is not closed we wrap around to close it.
+    ring is not closed we wrap around to close it.  ``close=False``
+    keeps each part open (LineString/MultiLineString polylines).
     """
-    c = coords.reshape(-1, 2)
+    c = np.asarray(coords, dtype=np.float64).reshape(-1, 2)
     x1s, y1s, x2s, y2s = [], [], [], []
     for r in range(len(ring_offsets) - 1):
         lo, hi = int(ring_offsets[r]), int(ring_offsets[r + 1])
         if hi - lo < 2:
             continue
         ring = c[lo:hi]
-        if ring[0, 0] != ring[-1, 0] or ring[0, 1] != ring[-1, 1]:
+        if close and (ring[0, 0] != ring[-1, 0] or ring[0, 1] != ring[-1, 1]):
             ring = np.vstack([ring, ring[:1]])
         x1s.append(ring[:-1, 0])
         y1s.append(ring[:-1, 1])
@@ -54,7 +55,7 @@ def points_in_polygon(px, py, coords, ring_offsets, chunk: int = 65536):
     """
     px = np.asarray(px, dtype=np.float64)
     py = np.asarray(py, dtype=np.float64)
-    x1, y1, x2, y2 = _ring_edges(np.asarray(coords, dtype=np.float64), np.asarray(ring_offsets))
+    x1, y1, x2, y2 = _ring_edges(coords, np.asarray(ring_offsets))
     out = np.zeros(px.shape[0], dtype=bool)
     if x1.size == 0 or px.size == 0:
         return out
@@ -158,26 +159,6 @@ def _any_segment_intersection(edges_a, edges_b) -> bool:
     return bool(_segment_contacts(edges_a, edges_b).any())
 
 
-def _open_edges(coords: np.ndarray, ring_offsets: np.ndarray):
-    """Polyline edge arrays per part WITHOUT closing the ring (for
-    LineString/MultiLineString geometries)."""
-    c = np.asarray(coords, dtype=np.float64).reshape(-1, 2)
-    x1s, y1s, x2s, y2s = [], [], [], []
-    for r in range(len(ring_offsets) - 1):
-        lo, hi = int(ring_offsets[r]), int(ring_offsets[r + 1])
-        if hi - lo < 2:
-            continue
-        seg = c[lo:hi]
-        x1s.append(seg[:-1, 0])
-        y1s.append(seg[:-1, 1])
-        x2s.append(seg[1:, 0])
-        y2s.append(seg[1:, 1])
-    if not x1s:
-        z = np.empty(0, dtype=np.float64)
-        return z, z, z, z
-    return (np.concatenate(x1s), np.concatenate(y1s), np.concatenate(x2s), np.concatenate(y2s))
-
-
 def geometry_intersects_polygon(pg: PackedGeometry, poly: PackedGeometry) -> bool:
     """GEOS-Intersects of ANY geometry type against a Polygon/
     MultiPolygon: Polygon sides dispatch to polygons_intersect;
@@ -200,7 +181,7 @@ def geometry_intersects_polygon(pg: PackedGeometry, poly: PackedGeometry) -> boo
         return True
     if pg.gtype in (1, 4):  # Point/MultiPoint: containment was the only test
         return False
-    line_edges = _open_edges(pg.coords, pg.ring_offsets)
+    line_edges = _ring_edges(pg.coords, pg.ring_offsets, close=False)
     poly_edges = _ring_edges(poly.coords, poly.ring_offsets)
     return _any_segment_intersection(line_edges, poly_edges)
 

@@ -123,7 +123,6 @@ def knn_join(
     base: DataFrame,
     k: int,
     res: int | None = None,
-    max_rounds: int = 0,
     q_id: str = "qid",
     b_id: str = "bid",
 ) -> DataFrame:
@@ -155,10 +154,6 @@ def knn_join(
     The phase-1 subtree feeds two consumers (top-k rows + per-query
     stats); both share the identical exchange, which Spark dedups via
     ReuseExchange — no persist, no leaked cache, no barrier.
-    ``max_rounds`` is retained for API compatibility; it caps the
-    phase-2 annulus radius at 2^(max_rounds-1) cells (the radius the
-    old loop reached after that many rounds), trading exactness for a
-    bounded explode exactly as before.
 
     The stats probe is memoised (``gdal_boots_spark.memo``), and
     r_domain derived from it is an EXACTNESS parameter (a too-small
@@ -187,7 +182,6 @@ def knn_join(
         (umaxy - uminy) / cell_h if umaxy is not None else 0.0,
     ))) + 2 if n_base else 1
     r_domain = min(max(r_domain, 1), n)
-    r_cap = r_domain if max_rounds <= 0 else min(r_domain, 1 << max(max_rounds - 1, 0))
     r0 = min(1, r_domain)
 
     dist_sql = "SQRT((x - bx) * (x - bx) + (y - by) * (y - by)) AS dist"
@@ -217,7 +211,7 @@ def knn_join(
     done = f"(cnt = {k_eff} AND kth < {_dlit(r0 * g)})"
     r_need = (
         f"LEAST(CASE WHEN cnt = {k_eff} THEN CAST(FLOOR(kth / {_dlit(g)}) + 1 AS INT) "
-        f"ELSE {r_domain} END, {r_cap})"
+        f"ELSE {r_domain} END, {r_domain})"
     )
     tail = (
         q0.join(qstats, "qid", "left")

@@ -19,9 +19,9 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..sources.tiles import TILE_SCHEMA, RasterGrid
+from ..functions.geometry_fns import double_lit_sql
+from ..sources.tiles import TILE_SCHEMA, RasterGrid, explode_tiles
 
 
 def mosaic(
@@ -68,32 +68,13 @@ def mosaic(
     for i, (tiles, g) in enumerate(inputs):
         dx = _int((g.transform[2] - minx) / a, f"dx[{i}]")
         dy = _int((g.transform[5] - maxy) / e, f"dy[{i}]")
-        gx0 = F.col("tile_x") * g.tile_w + F.lit(dx)
-        gy0 = F.col("tile_y") * g.tile_h + F.lit(dy)
-        cand = tiles.select(
-            "band", "width", "height", "dtype", "data",
-            F.lit(i).alias("src"),
-            F.lit(g.nodata).cast("double").alias("src_nodata"),
-            gx0.alias("gx0"),
-            gy0.alias("gy0"),
-        ).select(
-            "*",
-            F.explode(
-                F.sequence(
-                    F.floor(F.col("gx0") / out.tile_w).cast("int"),
-                    F.floor((F.col("gx0") + F.col("width") - 1) / out.tile_w).cast("int"),
-                )
-            ).alias("otx"),
-        ).select(
-            "*",
-            F.explode(
-                F.sequence(
-                    F.floor(F.col("gy0") / out.tile_h).cast("int"),
-                    F.floor((F.col("gy0") + F.col("height") - 1) / out.tile_h).cast("int"),
-                )
-            ).alias("oty"),
+        nodata_sql = "NULL" if g.nodata is None else double_lit_sql(g.nodata)
+        placed = tiles.selectExpr(
+            "band", "width", "height", "dtype", "data", f"{i} AS src", f"CAST({nodata_sql} AS DOUBLE) AS src_nodata",
+            f"tile_x * {g.tile_w} + {dx} AS gx0", f"tile_y * {g.tile_h} + {dy} AS gy0",
         )
-        cands.append(cand)
+        keep = ["band", "width", "height", "dtype", "data", "src", "src_nodata", "gx0", "gy0"]
+        cands.append(explode_tiles(placed, keep, out, "gx0", "gx0 + width", "gy0", "gy0 + height", ("otx", "oty")))
 
     allc = cands[0]
     for cand in cands[1:]:

@@ -53,48 +53,26 @@ def rasterize(
         grid, raster_id=grid.raster_id + "_mask", bands=1, dtype="uint8", nodata=None
     )
     g = mask_grid
-    at, bv = all_touched, burn
+    at, bv, dn = all_touched, burn, dense
     ntx = g.n_tiles_x
+    # dense mode is ONE render pass: every tile is a render unit (a
+    # zero-contribution sentinel row per tile on the distributed side),
+    # and the render emits it even when nothing burned.  The old shape
+    # (burn touched tiles, then zeros.join(broadcast(burned.select(
+    # tile_key)), "left_anti") + union) consumed `burned` TWICE — Spark
+    # does not reuse an uncached subtree across consumers, so the whole
+    # render ran twice plus a zeros generate stage and an anti-join
+    # (measured ~2x the single-pass execution on the board burn).
+    n_tiles_total = g.n_tiles_x * g.n_tiles_y
 
     # NOT groupBy().applyInPandas(): contribution rows are a few bytes
     # but each group is heavy CPU (a full scanline render), so AQE's
     # byte-based partition coalescing would collapse the render stage
-    # onto one task.  An explicit repartition-by-number is exempt from
-    # AQE coalescing and spreads the tiles across all cores.
-    def tile_row(ti: int, out: np.ndarray):
-        ty, tx = ti // ntx, ti % ntx
-        return {
-            "tile_key": g.tile_key(0, ty, tx),
-            "raster_id": g.raster_id,
-            "band": 0,
-            "tile_x": tx,
-            "tile_y": ty,
-            "epsg": g.epsg,
-            "transform": list(g.tile_transform(tx, ty)),
-            "width": out.shape[1],
-            "height": out.shape[0],
-            "dtype": "uint8",
-            "nodata": None,
-            "data": out.tobytes(),
-            "meta": g.meta_encoded,
-        }
-
-    # dense mode is ONE render pass: a zero-contribution sentinel row
-    # per tile rides the (tiny) contribution shuffle and the render
-    # emits every group.  The old shape (burn touched tiles, then
-    # zeros.join(broadcast(burned.select(tile_key)), "left_anti") +
-    # union) consumed `burned` TWICE — Spark does not reuse an
-    # uncached subtree across consumers, so the whole render ran twice
-    # plus a zeros generate stage and an anti-join (measured ~2x the
-    # single-pass execution on the board burn).
-    n_tiles_total = g.n_tiles_x * g.n_tiles_y
-    dn = dense
-
+    # onto one task.  Both sides hand the render an explicit partition
+    # count (a repartition-by-number or a Range), which AQE leaves alone.
     if not fits_broadcast(plan_bytes(polys)):
-        contribs = contribs_distributed(polys, grid).select(
-            (F.col("tile_y").cast("long") * ntx + F.col("tile_x")).alias("tile_index"),
-            "poly_id",
-            "geom",
+        contribs = contribs_distributed(polys, grid).selectExpr(
+            f"CAST(tile_y AS BIGINT) * {ntx} + tile_x AS tile_index", "poly_id", "geom"
         )
         if dense:
             # r8 (ADVICE): the sentinel geom is a NON-NULL empty struct
@@ -119,39 +97,25 @@ def rasterize(
                 )
             )
         n_parts = max(spark.sparkContext.defaultParallelism * 2, 2)
+        source = contribs.repartition(n_parts, "tile_index")
 
-        def render_partition(batches):
+        def tile_geoms(batches):
             import pandas as pd
 
             pdfs = list(batches)
             if not pdfs:
                 return
-            allc = pd.concat(pdfs, ignore_index=True)
             cache: dict = {}  # decode each polygon once per partition (zonal's pattern, commit 3874102)
-            rows = []
-            for ti, grp in allc.groupby("tile_index"):
-                ti = int(ti)
-                ty, tx = ti // ntx, ti % ntx
-                h, w = g.tile_shape(tx, ty)
-                t = g.tile_transform(tx, ty)
-                out = np.zeros((h, w), dtype=np.uint8)
+            for ti, grp in pd.concat(pdfs, ignore_index=True).groupby("tile_index"):
                 grp = grp.sort_values("poly_id")
+                geoms = []
                 for pid, gg in zip(grp["poly_id"].to_numpy(), grp["geom"]):
                     if pd.isna(pid):
                         continue  # dense sentinel row
-                    arrays = cache.get(int(pid))
-                    if arrays is None:
-                        arrays = cache[int(pid)] = geom_arrays(gg)
-                    coords, ro = arrays
-                    rasterize_mask(coords, ro, t, h, w, all_touched=at, out=out, burn=bv)
-                if dn or out.any():
-                    rows.append(tile_row(ti, out))
-            if rows:
-                yield pd.DataFrame(rows)
-
-        burned = contribs.repartition(n_parts, "tile_index").mapInPandas(
-            render_partition, schema=TILE_SCHEMA
-        )
+                    if int(pid) not in cache:
+                        cache[int(pid)] = geom_arrays(gg)
+                    geoms.append(cache[int(pid)])
+                yield int(ti), geoms
     else:
         # r8 (guide §2.4): the contribution rows are DRIVER-resident
         # (tile_contribs derives them from the collected dim), so they
@@ -163,39 +127,47 @@ def rasterize(
         # boundaries per build (plan: Range -> MapInPandas; before:
         # Scan ExistingRDD + Range -> Union -> Exchange -> MapInPandas).
         dim = poly_dim(polys)
+        tx, ty, pids = tile_contribs(dim, grid)
         by_tile: dict[int, list[int]] = {}
-        for tx, ty, pid in tile_contribs(dim, grid):
-            by_tile.setdefault(ty * ntx + tx, []).append(pid)
+        for ti, pid in zip((ty * ntx + tx).tolist(), pids.tolist()):
+            by_tile.setdefault(ti, []).append(pid)
         # dense: render every tile (ids ARE tile indices); sparse: only
         # touched tiles, via an id -> tile_index table
         units = None if dense else sorted(by_tile)
         n_units = n_tiles_total if dense else len(units)
         n_parts = max(min(spark.sparkContext.defaultParallelism * 2, n_units), 2)
+        source = spark.range(0, n_units, 1, n_parts)
         bpacked = dim.bpacked
 
-        def render_partition(batches):
-            import pandas as pd
-
-            packed_l = bpacked.value
-            rows = []
+        def tile_geoms(batches):
+            packed = bpacked.value
             for pdf in batches:
                 for u in pdf["id"]:
                     ti = int(u) if units is None else units[int(u)]
-                    ty, tx = ti // ntx, ti % ntx
-                    h, w = g.tile_shape(tx, ty)
-                    t = g.tile_transform(tx, ty)
-                    out = np.zeros((h, w), dtype=np.uint8)
-                    # deterministic within-tile burn order (poly_id asc)
-                    for pid in sorted(by_tile.get(ti, ())):
-                        coords, ro = packed_l[int(pid)]
-                        rasterize_mask(coords, ro, t, h, w, all_touched=at, out=out, burn=bv)
-                    if dn or out.any():
-                        rows.append(tile_row(ti, out))
-            if rows:
-                yield pd.DataFrame(rows)
+                    yield ti, [packed[pid] for pid in sorted(by_tile.get(ti, ()))]
 
-        burned = spark.range(0, n_units, 1, n_parts).mapInPandas(
-            render_partition, schema=TILE_SCHEMA
-        )
+    def render_partition(batches):
+        """Burn each tile's polygons (poly_id order, so the within-tile
+        burn order is deterministic) and emit the tiles that are dense or
+        have a pixel set."""
+        import pandas as pd
 
-    return burned
+        rows = []
+        for ti, geoms in tile_geoms(batches):
+            ty, tx = divmod(ti, ntx)
+            h, w = g.tile_shape(tx, ty)
+            t = g.tile_transform(tx, ty)
+            out = np.zeros((h, w), dtype=np.uint8)
+            for coords, ro in geoms:
+                rasterize_mask(coords, ro, t, h, w, all_touched=at, out=out, burn=bv)
+            if dn or out.any():
+                rows.append({
+                    "tile_key": g.tile_key(0, ty, tx), "raster_id": g.raster_id, "band": 0,
+                    "tile_x": tx, "tile_y": ty, "epsg": g.epsg, "transform": list(t),
+                    "width": w, "height": h, "dtype": "uint8", "nodata": None,
+                    "data": out.tobytes(), "meta": g.meta_encoded,
+                })
+        if rows:
+            yield pd.DataFrame(rows)
+
+    return source.mapInPandas(render_partition, schema=TILE_SCHEMA)

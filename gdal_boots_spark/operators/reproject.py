@@ -8,7 +8,7 @@ Pipeline:
              what GDAL's SuggestedWarpOutput does)
   executors— (1) mapInPandas over source tiles: each tile's dst-tile
              span via vectorized corner+edge transform (+1 px margin)
-             -> native sequence explode
+             -> sources.tiles.explode_tiles
              (2) groupBy(dst tile) applyInPandas: paste contributions
              into a src-pixel buffer, transform the dst tile's pixel
              centers dst->src in ONE batch call (geom.crs), then
@@ -28,7 +28,7 @@ from ..functions.geometry_fns import transform_geom_udf
 from ..geom.affine import invert_transform
 from ..geom.crs import transform_coords
 from ..geom.resample_kernels import gather_bilinear, gather_nearest
-from ..sources.tiles import TILE_SCHEMA, RasterGrid
+from ..sources.tiles import TILE_SCHEMA, RasterGrid, explode_tiles
 
 
 def _boundary_samples(minx, miny, maxx, maxy, n=21):
@@ -89,47 +89,31 @@ def reproject(
     fill = 0.0 if g.nodata is None else g.nodata
 
     def spans(batches):
-        import pandas as pd
-
+        a, b, c, d, e, f = g.transform
         for pdf in batches:
-            rows = []
+            box = []
             for r in pdf.itertuples(index=False):
                 tx0 = int(r.tile_x) * g.tile_w
                 ty0 = int(r.tile_y) * g.tile_h
-                a, b, c, d, e, f = g.transform
                 bx, by = _boundary_samples(0, 0, int(r.width), int(r.height), n=9)
                 wx = a * (tx0 + bx) + b * (ty0 + by) + c
                 wy = d * (tx0 + bx) + e * (ty0 + by) + f
                 dx, dy = transform_coords(wx, wy, src_crs, dst_crs)
                 pxs = oia[0] * dx + oia[1] * dy + oia[2]
                 pys = oia[3] * dx + oia[4] * dy + oia[5]
-                otx0 = max(0, int(np.floor(pxs.min() - 1)) // og.tile_w)
-                otx1 = min(og.n_tiles_x - 1, int(np.ceil(pxs.max() + 1)) // og.tile_w)
-                oty0 = max(0, int(np.floor(pys.min() - 1)) // og.tile_h)
-                oty1 = min(og.n_tiles_y - 1, int(np.ceil(pys.max() + 1)) // og.tile_h)
-                if otx0 > otx1 or oty0 > oty1:
-                    continue
-                rows.append(
-                    {
-                        "band": r.band, "tile_x": r.tile_x, "tile_y": r.tile_y,
-                        "width": r.width, "height": r.height, "dtype": r.dtype,
-                        "data": r.data,
-                        "otx0": otx0, "otx1": otx1, "oty0": oty0, "oty1": oty1,
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
+                # dst pixels [min - 1, ceil(max + 1)]: a 1 px margin
+                # around the transformed boundary samples
+                box.append((pxs.min() - 1, np.ceil(pxs.max() + 1) + 1, pys.min() - 1, np.ceil(pys.max() + 1) + 1))
+            yield pdf.assign(**dict(zip(["px0", "px1", "py0", "py1"], np.array(box, np.float64).reshape(-1, 4).T)))
 
+    cols = ["band", "tile_x", "tile_y", "width", "height", "dtype", "data"]
     span_schema = (
         "band int, tile_x int, tile_y int, width int, height int, dtype string, "
-        "data binary, otx0 int, otx1 int, oty0 int, oty1 int"
+        "data binary, px0 double, px1 double, py0 double, py1 double"
     )
-    cand = (
-        tiles.select("band", "tile_x", "tile_y", "width", "height", "dtype", "data")
-        .mapInPandas(spans, schema=span_schema)
-        .select("*", F.explode(F.sequence("otx0", "otx1")).alias("otx"))
-        .select("*", F.explode(F.sequence("oty0", "oty1")).alias("oty"))
-        .drop("otx0", "otx1", "oty0", "oty1")
+    cand = explode_tiles(
+        tiles.select(*cols).mapInPandas(spans, schema=span_schema), cols, og, "px0", "px1", "py0", "py1",
+        ("otx", "oty"),
     )
 
     def assemble(key, pdf):

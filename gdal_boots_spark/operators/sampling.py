@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from .. import memo
 from ..geom.affine import invert_transform
-from ..sources.tiles import RasterGrid
+from ..sources.tiles import RasterGrid, tile_range, tile_range_sql
 
 
 def _broadcast_raster(tiles: DataFrame, grid: RasterGrid):
@@ -117,7 +117,8 @@ def values_by_points(
             iy = py_s.to_numpy(np.int64)
             ok = (ix >= 0) & (ix < g.width) & (iy >= 0) & (iy < g.height)
             ixc, iyc = np.clip(ix, 0, g.width - 1), np.clip(iy, 0, g.height - 1)
-            ok &= present[b, iyc // g.tile_h, ixc // g.tile_w]
+            ok &= present[b, tile_range(iyc, iyc + 1, g.tile_h, g.n_tiles_y)[0],
+                          tile_range(ixc, ixc + 1, g.tile_w, g.n_tiles_x)[0]]
             vals = arr[b, iyc, ixc]
             # FloatingArray(values, mask): ONLY ~ok rows become NULL —
             # a genuine NaN pixel in a float raster stays NaN (a
@@ -152,8 +153,8 @@ def values_by_points(
             F.format_string(
                 f"{grid.raster_id}/%d/%d/%d",
                 F.col("band"),
-                (F.col("py") / grid.tile_h).cast("int"),
-                (F.col("px") / grid.tile_w).cast("int"),
+                F.expr(tile_range_sql("py", "py + 1", grid.tile_h, grid.n_tiles_y)[0]),
+                F.expr(tile_range_sql("px", "px + 1", grid.tile_w, grid.n_tiles_x)[0]),
             ),
         )
         .otherwise(F.format_string("oob/%d", F.pmod(F.xxhash64("point_id"), F.lit(64))))

@@ -345,7 +345,6 @@ def pip_join_docs_any(docs: DataFrame, polys: DataFrame, res: int | None = None)
         from ..geom.packed import PackedGeometry, collection_children
         from ..geom.pip import (
             _any_segment_intersection,
-            _open_edges,
             _ring_edges,
             points_in_polygon,
             polygons_intersect,
@@ -417,7 +416,7 @@ def pip_join_docs_any(docs: DataFrame, polys: DataFrame, res: int | None = None)
                             if poly_edges is None:
                                 poly_edges = _ring_edges(pcoords, pro)
                             if _any_segment_intersection(
-                                _open_edges(ch.coords, ch.ring_offsets), poly_edges
+                                _ring_edges(ch.coords, ch.ring_offsets, close=False), poly_edges
                             ):
                                 keep[i] = True
                                 break
@@ -427,7 +426,7 @@ def pip_join_docs_any(docs: DataFrame, polys: DataFrame, res: int | None = None)
                     if poly_edges is None:
                         poly_edges = _ring_edges(pcoords, pro)
                     keep[i] = _any_segment_intersection(
-                        _open_edges(pg.coords, pg.ring_offsets), poly_edges
+                        _ring_edges(pg.coords, pg.ring_offsets, close=False), poly_edges
                     )
         return pd.Series(keep)
 

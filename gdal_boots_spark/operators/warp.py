@@ -18,10 +18,10 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from ..functions.geometry_fns import double_lit_sql
 from ..geom.affine import snap_bbox_to_grid
-from ..sources.tiles import TILE_SCHEMA, RasterGrid
+from ..sources.tiles import TILE_SCHEMA, RasterGrid, explode_tiles, tile_range
 
 
 def window_of_bbox(grid: RasterGrid, bbox, clip: bool = False):
@@ -66,35 +66,18 @@ def slice_window(tiles: DataFrame, grid: RasterGrid, window) -> tuple[DataFrame,
 
     # prune input tiles to the window (native; becomes min/max file
     # pruning on a persisted tile table)
-    tx0, tx1 = col0 // g.tile_w, (col1 - 1) // g.tile_w
-    ty0, ty1 = row0 // g.tile_h, (row1 - 1) // g.tile_h
-    pruned = tiles.where(
-        (F.col("tile_x") >= tx0) & (F.col("tile_x") <= tx1) & (F.col("tile_y") >= ty0) & (F.col("tile_y") <= ty1)
-    )
+    tx0, tx1 = (int(t) for t in tile_range(col0, col1, g.tile_w, g.n_tiles_x))
+    ty0, ty1 = (int(t) for t in tile_range(row0, row1, g.tile_h, g.n_tiles_y))
+    pruned = tiles.where(f"tile_x >= {tx0} AND tile_x <= {tx1} AND tile_y >= {ty0} AND tile_y <= {ty1}")
 
-    # native contribution explode: each input tile -> its out-tile range
-    gx0 = F.greatest(F.col("tile_x") * g.tile_w, F.lit(col0))
-    gx1 = F.least(F.col("tile_x") * g.tile_w + F.col("width"), F.lit(col1))
-    gy0 = F.greatest(F.col("tile_y") * g.tile_h, F.lit(row0))
-    gy1 = F.least(F.col("tile_y") * g.tile_h + F.col("height"), F.lit(row1))
-    cand = pruned.where((gx0 < gx1) & (gy0 < gy1)).select(
-        "band", "tile_x", "tile_y", "width", "height", "dtype", "data",
-        F.explode(
-            F.sequence(
-                F.floor((gx0 - col0) / og.tile_w).cast("int"),
-                F.floor((gx1 - 1 - col0) / og.tile_w).cast("int"),
-            )
-        ).alias("otx"),
-        gy0.alias("_gy0"), gy1.alias("_gy1"),
-    ).select(
-        "*",
-        F.explode(
-            F.sequence(
-                F.floor((F.col("_gy0") - row0) / og.tile_h).cast("int"),
-                F.floor((F.col("_gy1") - 1 - row0) / og.tile_h).cast("int"),
-            )
-        ).alias("oty"),
-    ).drop("_gy0", "_gy1")
+    # each input tile -> the out tiles its part of the window touches
+    # (pixels of the out grid: the window starts at (col0, row0))
+    cand = explode_tiles(
+        pruned, ["band", "tile_x", "tile_y", "width", "height", "dtype", "data"], og,
+        f"GREATEST(tile_x * {g.tile_w}, {col0}) - {col0}", f"LEAST(tile_x * {g.tile_w} + width, {col1}) - {col0}",
+        f"GREATEST(tile_y * {g.tile_h}, {row0}) - {row0}", f"LEAST(tile_y * {g.tile_h} + height, {row1}) - {row0}",
+        ("otx", "oty"),
+    )
 
     def assemble(key, pdf):
         import pandas as pd
@@ -218,44 +201,14 @@ def resample(
 
     g = grid
     halo = support + 1  # source pixels beyond the tile that can matter
-    # out col range a source tile [x0,x1) can influence (+-halo)
-    jx0 = F.greatest(
-        F.floor((F.col("tile_x") * g.tile_w - halo) / scale_x).cast("int") - 1, F.lit(0)
-    )
-    jx1 = F.least(
-        F.ceil((F.col("tile_x") * g.tile_w + F.col("width") + halo) / scale_x).cast("int") + 1,
-        F.lit(og.width - 1),
-    )
-    jy0 = F.greatest(
-        F.floor((F.col("tile_y") * g.tile_h - halo) / scale_y).cast("int") - 1, F.lit(0)
-    )
-    jy1 = F.least(
-        F.ceil((F.col("tile_y") * g.tile_h + F.col("height") + halo) / scale_y).cast("int") + 1,
-        F.lit(og.height - 1),
-    )
-    cand = (
-        tiles.select(
-            "band", "tile_x", "tile_y", "width", "height", "dtype", "data",
-            jx0.alias("jx0"), jx1.alias("jx1"), jy0.alias("jy0"), jy1.alias("jy1"),
-        )
-        .where((F.col("jx0") <= F.col("jx1")) & (F.col("jy0") <= F.col("jy1")))
-        .select(
-            "*",
-            F.explode(
-                F.sequence(
-                    (F.col("jx0") / og.tile_w).cast("int"), (F.col("jx1") / og.tile_w).cast("int")
-                )
-            ).alias("otx"),
-        )
-        .select(
-            "*",
-            F.explode(
-                F.sequence(
-                    (F.col("jy0") / og.tile_h).cast("int"), (F.col("jy1") / og.tile_h).cast("int")
-                )
-            ).alias("oty"),
-        )
-        .drop("jx0", "jx1", "jy0", "jy1")
+    # out pixels a source tile [x0, x1) can influence: from
+    # floor((x0 - halo) / scale) - 1 through ceil((x1 + halo) / scale) + 1
+    sx, sy = double_lit_sql(scale_x), double_lit_sql(scale_y)
+    cand = explode_tiles(
+        tiles, ["band", "tile_x", "tile_y", "width", "height", "dtype", "data"], og,
+        f"FLOOR((tile_x * {g.tile_w} - {halo}) / {sx}) - 1", f"CEIL((tile_x * {g.tile_w} + width + {halo}) / {sx}) + 2",
+        f"FLOOR((tile_y * {g.tile_h} - {halo}) / {sy}) - 1", f"CEIL((tile_y * {g.tile_h} + height + {halo}) / {sy}) + 2",
+        ("otx", "oty"),
     )
 
     fill = 0.0 if g.nodata is None else g.nodata

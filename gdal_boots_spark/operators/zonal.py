@@ -51,57 +51,46 @@ def zonal_stats(
     with no driver collect; output is identical (pytest-asserted)."""
     g = grid
     if not fits_broadcast(plan_bytes(polys)):
-        cdf = contribs_distributed(polys, grid)
-        joined = tiles.join(cdf, ["tile_x", "tile_y"])
+        joined = tiles.join(contribs_distributed(polys, grid), ["tile_x", "tile_y"])
 
-        def partial(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                out = []
-                cache: dict = {}  # decode each polygon once per batch
-                for r in pdf.itertuples(index=False):
-                    pid = int(r.poly_id)
-                    arrays = cache.get(pid)
-                    if arrays is None:
-                        arrays = cache[pid] = geom_arrays(r.geom)
-                    rec = _pair_partial(r, arrays[0], arrays[1], g)
-                    if rec is not None:
-                        out.append(rec)
-                if out:
-                    yield pd.DataFrame(out)
-
-        partials = joined.mapInPandas(partial, schema=_PARTIAL_SCHEMA)
+        def arrays_of(r):
+            return geom_arrays(r.geom)
     else:
         dim = poly_dim(polys)
-        pairs = tile_contribs(dim, grid)
+        tx, ty, pids = tile_contribs(dim, grid)
         # driver relations come from Arrow tables (local relations: no
         # execution runs a Python worker to scan them)
-        if not pairs:
+        if not len(pids):
             return spark.createDataFrame(
                 pa.table({c.split()[0]: pa.nulls(0) for c in _OUT_SCHEMA.split(", ")}), _OUT_SCHEMA
             )
         cdf = spark.createDataFrame(
-            pa.table(list(zip(*pairs)), names=["tile_x", "tile_y", "poly_id"]),
+            pa.table([tx, ty, pids], names=["tile_x", "tile_y", "poly_id"]),
             "tile_x int, tile_y int, poly_id long",
         )
         joined = tiles.join(F.broadcast(cdf), ["tile_x", "tile_y"])
         bpolys = dim.bpacked
 
-        def partial(batches):
-            import pandas as pd
+        def arrays_of(r):
+            return bpolys.value[int(r.poly_id)]
 
-            for pdf in batches:
-                out = []
-                for r in pdf.itertuples(index=False):
-                    coords, ro = bpolys.value[int(r.poly_id)]
-                    rec = _pair_partial(r, coords, ro, g)
-                    if rec is not None:
-                        out.append(rec)
-                if out:
-                    yield pd.DataFrame(out)
+    def partial(batches):
+        import pandas as pd
 
-        partials = joined.mapInPandas(partial, schema=_PARTIAL_SCHEMA)
+        for pdf in batches:
+            out = []
+            cache: dict = {}  # look each polygon up (or decode it) once per batch
+            for r in pdf.itertuples(index=False):
+                pid = int(r.poly_id)
+                if pid not in cache:
+                    cache[pid] = arrays_of(r)
+                rec = _pair_partial(r, *cache[pid], g)
+                if rec is not None:
+                    out.append(rec)
+            if out:
+                yield pd.DataFrame(out)
+
+    partials = joined.mapInPandas(partial, schema=_PARTIAL_SCHEMA)
 
     return partials.groupBy("poly_id", "band").agg(
         F.sum("n_pixels").alias("n_pixels"),

@@ -81,6 +81,62 @@ class RasterGrid:
         return f"{self.raster_id}/{band}/{ty}/{tx}"
 
 
+# --- tile assignment: pixel interval -> touched tiles ---------------------
+#
+# The one place that maps a half-open pixel interval [p0, p1) on one axis
+# of a grid to the tiles it touches: snap outward (floor p0, ceil p1),
+# divide by the tile size, clamp to [0, n_tiles - 1].  An interval off the
+# grid comes back as t0 > t1 (empty); one that snaps empty inside a tile
+# still names that tile, whose render then finds nothing.  ``tile_range``
+# (NumPy) and ``tile_range_sql`` (Spark SQL) compute the same integers.
+
+
+def tile_range(p0, p1, tile: int, n_tiles: int):
+    """Pixel interval(s) [p0, p1) -> inclusive int64 tile range(s) (t0, t1)."""
+    t0 = np.maximum(np.floor(p0) // tile, 0)
+    t1 = np.minimum((np.ceil(p1) - 1) // tile, n_tiles - 1)
+    return np.asarray(t0, np.int64), np.asarray(t1, np.int64)
+
+
+def tile_range_sql(p0: str, p1: str, tile: int, n_tiles: int) -> tuple[str, str]:
+    """``tile_range`` over SQL fragments -> (t0, t1) INT expressions."""
+    return (
+        f"CAST(GREATEST(0, FLOOR(FLOOR({p0}) / {tile})) AS INT)",
+        f"CAST(LEAST({n_tiles - 1}, FLOOR((CEIL({p1}) - 1) / {tile})) AS INT)",
+    )
+
+
+def tile_explode(px0, px1, py0, py1, grid: RasterGrid):
+    """Per-row pixel boxes -> (row, tile_x, tile_y) int64 arrays, one
+    entry per touched tile: rows in input order, tile_y-major within a
+    row (the driver twin of ``explode_tiles``)."""
+    tx0, tx1 = tile_range(px0, px1, grid.tile_w, grid.n_tiles_x)
+    ty0, ty1 = tile_range(py0, py1, grid.tile_h, grid.n_tiles_y)
+    nx, ny = np.maximum(tx1 - tx0 + 1, 0), np.maximum(ty1 - ty0 + 1, 0)
+    cnt = nx * ny
+    row = np.repeat(np.arange(cnt.size), cnt)
+    k = np.arange(row.size) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    return row, tx0[row] + k % nx[row], ty0[row] + k // nx[row]
+
+
+def explode_tiles(df: DataFrame, keep, grid: RasterGrid, px0: str, px1: str, py0: str, py1: str,
+                  names=("tile_x", "tile_y")) -> DataFrame:
+    """One output row per tile of ``grid`` that the per-row pixel box
+    [px0, px1) x [py0, py1) (SQL fragments over ``df``) touches: the
+    ``keep`` columns, then the tile indices as ``names``.  Four selectExpr
+    steps (explode cannot nest); the range guard runs before the explodes
+    because ``sequence(1, 0)`` counts down instead of coming back empty."""
+    nx, ny = names
+    tx0, tx1 = tile_range_sql(px0, px1, grid.tile_w, grid.n_tiles_x)
+    ty0, ty1 = tile_range_sql(py0, py1, grid.tile_h, grid.n_tiles_y)
+    return (
+        df.selectExpr(*keep, f"{tx0} AS _tx0", f"{tx1} AS _tx1", f"{ty0} AS _ty0", f"{ty1} AS _ty1")
+        .where("_tx0 <= _tx1 AND _ty0 <= _ty1")
+        .selectExpr(*keep, f"explode(sequence(_tx0, _tx1)) AS {nx}", "_ty0", "_ty1")
+        .selectExpr(*keep, nx, f"explode(sequence(_ty0, _ty1)) AS {ny}")
+    )
+
+
 def generate_tiles(spark: SparkSession, grid: RasterGrid, fill) -> DataFrame:
     """Distributed tile generation: one task per tile, the `fill`
     callable produces the pixel block.

@@ -77,8 +77,8 @@ def main():
     sections.append((
         "Distributed polygon cover (rasterize/zonal scale path)",
         "No driver collect: one decode_geojson MapInArrow (packed geometry "
-        "plus envelope), then inverse-affine/tile-range explode entirely in "
-        "codegen Column math — "
+        "plus envelope), then inverse-affine corners and the one tile-range "
+        "explode (sources/tiles.py) as SQL strings in codegen — "
         "ready to shuffle on (tile_x, tile_y) with the packed coords riding "
         "the rows.",
         cap(contribs_distributed(rect_polygons_df(spark), g3)),

@@ -27,7 +27,7 @@ from gdal_boots_spark.session import get_spark
 spark = get_spark("plan-probe", master="local[4]")
 spark.sparkContext.setLogLevel("ERROR")
 sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-qs = entrymod.queries()
+qs = entrymod.all_queries()  # board queries and the extras
 out = {}
 for n in names:
     df = qs[n](spark, sf)

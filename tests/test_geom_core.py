@@ -369,6 +369,29 @@ def test_cell_format_in_one_module():
     assert not bad, bad
 
 
+def test_tile_range_in_one_module():
+    """Only sources/tiles.py maps pixel intervals to tiles: no other
+    module divides by a grid's tile_w/tile_h or explodes a sequence of
+    tile indices, and the deleted per-module copies stay deleted."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "gdal_boots_spark"
+    div = re.compile(r"/\s*[\w.]*\.tile_[wh]\b")
+    seq = re.compile(r"\bsequence\(")
+    gone = re.compile(r"^\s*def\s+(?:_tile_range|vertex_pixel_bbox)\b", re.M)
+    bad = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        text = path.read_text()
+        if rel != "sources/tiles.py":
+            bad += [f"{rel}: {m.group(0)}" for m in div.finditer(text)]
+            if "tile_x" in text:
+                bad += [f"{rel}: {m.group(0)}" for m in seq.finditer(text)]
+        bad += [f"{rel}: {m.group(0).strip()}" for m in gone.finditer(text)]
+    assert not bad, bad
+
+
 def test_operators_decode_once():
     """Operators decode GeoJSON only through the one mapInArrow pass
     (functions.geometry_fns.decode_geojson): no module under operators/

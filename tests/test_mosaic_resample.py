@@ -70,6 +70,12 @@ def test_mosaic_extent_and_nodata(spark):
     exp[0, 0] = 7
     assert np.array_equal(got, exp)
 
+    # a NaN nodata (no SQL literal spells it) builds and masks nothing
+    c1, c2 = np.full((4, 4), 1.0), np.full((4, 4), 2.0)
+    t1, g1 = _mk(spark, c1, (1.0, 0.0, 0.0, 0.0, -1.0, 4.0), tile=2, rid="f1", nodata=float("nan"))
+    t2, g2 = _mk(spark, c2, (1.0, 0.0, 0.0, 0.0, -1.0, 4.0), tile=2, rid="f2", nodata=float("nan"))
+    assert np.array_equal(tiles_to_array(*mosaic(spark, [(t1, g1), (t2, g2)])), c2)
+
 
 def test_mosaic_misaligned_raises(spark):
     a = np.zeros((4, 4), np.uint8)

@@ -182,6 +182,71 @@ def test_rasterize_broadcast_vs_distributed(spark, monkeypatch):
     assert 0 < len(tiles[False]) <= len(tiles[True]) == grid.n_tiles_x * grid.n_tiles_y
 
 
+def _thin_triangles(spark, grid, n, seed):
+    """``n`` seeded thin triangles (long axis 0.5-3 world units, any
+    direction) centred on pixels of ``grid``."""
+    rng = np.random.default_rng(seed)
+    a, b, c, d, e, f = grid.transform
+    rows = []
+    for pid in range(n):
+        cx, cy = rng.uniform(0, grid.width), rng.uniform(0, grid.height)
+        wx, wy = a * cx + b * cy + c, d * cx + e * cy + f
+        ang, half = rng.uniform(0, np.pi), rng.uniform(0.25, 1.5)
+        ux, uy = np.cos(ang) * half, np.sin(ang) * half
+        ring = [[wx - ux, wy - uy], [wx + ux, wy + uy], [wx - ux - 0.02 * uy, wy - uy + 0.02 * ux]]
+        ring = [[round(float(x), 6), round(float(y), 6)] for x, y in ring + ring[:1]]
+        rows.append((pid, json.dumps({"type": "Polygon", "coordinates": [ring]})))
+    return spark.createDataFrame(rows, "poly_id long, geojson string")
+
+
+def test_rotated_grid_contribs_one_relation(spark, monkeypatch):
+    """On a grid with rotation terms the driver-side (tile, polygon)
+    pairs equal the distributed ones (both read the decode pass's
+    envelope), and rasterize and zonal_stats give the same rows on both
+    sides of the broadcast gate."""
+    from gdal_boots_spark.operators import cover
+    from gdal_boots_spark.operators.zonal import zonal_stats
+
+    from tests.conftest import GATE_SIDES
+
+    grid = RasterGrid("rot", 4326, (0.01, 0.004, 0.0, 0.004, -0.01, 10.0), 1024, 1024, 64, 64, 1, "int32")
+    polys = _thin_triangles(spark, grid, 40, seed=5)
+    driver = set(zip(*cover.tile_contribs(cover.poly_dim(polys), grid)))
+    dist = {tuple(r) for r in cover.contribs_distributed(polys, grid).select("tile_x", "tile_y", "poly_id").collect()}
+    assert driver == dist and len(dist) > 40
+
+    tiles = generate_tiles(spark, grid, ramp_fill)
+    burned, stats = {}, {}
+    for side, ceiling in GATE_SIDES.items():
+        monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", ceiling)
+        burned[side] = {r["tile_key"]: bytes(r["data"]) for r in rasterize(spark, polys, grid).collect()}
+        stats[side] = {tuple(r) for r in zonal_stats(spark, tiles, grid, polys).collect()}
+    assert burned["broadcast"] == burned["distributed"] and burned["broadcast"]
+    assert stats["broadcast"] == stats["distributed"] and len(stats["broadcast"]) == 40
+
+
+def test_tile_explode_sql_matches_numpy(spark):
+    """explode_tiles (Spark SQL) and tile_explode (NumPy) assign the same
+    tiles to pixel boxes that start off the grid, end past it, sit in
+    the ragged last tile, snap empty or lie wholly outside."""
+    from gdal_boots_spark.sources.tiles import explode_tiles, tile_explode
+
+    grid = RasterGrid("tr", 4326, (1.0, 0.0, 0.0, 0.0, -1.0, 0.0), 200, 130, 64, 32, 1, "uint8")
+    rng = np.random.default_rng(3)
+    lo = rng.uniform(-80, 260, (400, 2))
+    lo[::2] = lo[::2].round()  # whole pixels: boxes that snap to nothing
+    box = np.hstack([lo, lo + rng.uniform(0, 90, (400, 2)) * (rng.random((400, 1)) > 0.1)])
+    box[:4] = [[-5.5, -1, -0.5, 0], [64, 32, 64, 32], [199.5, 129.2, 400, 131], [300, 10, 310, 20]]
+    row, tx, ty = tile_explode(box[:, 0], box[:, 2], box[:, 1], box[:, 3], grid)
+    df = spark.createDataFrame(
+        [(i, *map(float, b)) for i, b in enumerate(box)], "i long, x0 double, y0 double, x1 double, y1 double"
+    )
+    got = sorted(tuple(r) for r in explode_tiles(df, ["i"], grid, "x0", "x1", "y0", "y1").collect())
+    assert got == sorted(zip(row.tolist(), tx.tolist(), ty.tolist()))
+    assert 0 < len(set(row.tolist())) < len(box)
+    assert tx.min() >= 0 and tx.max() == grid.n_tiles_x - 1 and ty.max() == grid.n_tiles_y - 1
+
+
 def test_read_by_geom_composite_flow(spark, tmp_path):
     """Reference test_utils.py:14-26 (test_read_by_geom) — permanently
     skipped upstream for lack of its "extra" satellite fixture; ported
