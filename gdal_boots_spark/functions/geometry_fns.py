@@ -11,6 +11,9 @@ Three tiers, per the engine's "UDFs are the slow path" rule:
   that emits the packed geometry, its bbox and a rectangle flag as
   concrete columns.  Every operator that reads a GeoJSON column decodes
   it here, exactly once.
+* **One exact-refine predicate** (``where_intersects``): a boolean Arrow
+  UDF in a WHERE over the decode pass's columns (or Point x/y) and a
+  polygon id; every polygon join refines its candidates through it.
 * **Arrow-batched pandas UDFs** for row-preserving column codecs and
   NumPy kernels (GeoJSON decode/encode with null in, null out; CRS
   transform; make_valid) — Series/DataFrame in, never per-row Python on
@@ -40,7 +43,7 @@ from pyspark.sql.types import (
 from ..geom import crs as _crs
 from ..geom.cells import cell_id_sql  # noqa: F401  (re-exported: the cell id as SQL)
 from ..geom.packed import PackedGeometry, from_geojson, to_geojson
-from ..geom.pip import rect_rings
+from ..geom.pip import Probes, intersects_polygons, point_probes, rect_rings
 
 GEOMETRY_TYPE = StructType(
     [
@@ -354,6 +357,73 @@ def _emit_decoded(batch, keep, blank_rect, sel, gtypes, lists):
         ],
         names=[*keep, "geom", "minx", "miny", "maxx", "maxy", "rect"],
     )
+
+
+def _list_buffers(arr) -> tuple:
+    """An Arrow ListArray -> (values, offsets) NumPy views: the offsets
+    index ``values`` directly, slices included."""
+    return arr.values.to_numpy(zero_copy_only=False), arr.offsets.to_numpy()
+
+
+def arrow_probes(geom, minx, miny, maxx, maxy, rect) -> Probes:
+    """decode_geojson's columns as Arrow arrays (a GEOMETRY_TYPE struct,
+    the bbox, the rect flag) -> geom.pip.Probes over their flat buffers,
+    with no per-row materialization."""
+    fields = geom.flatten()
+    return Probes(
+        fields[0].to_numpy(zero_copy_only=False),
+        *(_list_buffers(f) for f in fields[1:]),
+        bbox=tuple(b.to_numpy(zero_copy_only=False) for b in (minx, miny, maxx, maxy)),
+        rect=rect.to_numpy(zero_copy_only=False),
+    )
+
+
+def where_intersects(df: DataFrame, pid: str, probe: tuple, polygons) -> DataFrame:
+    """``df`` filtered to the rows whose probe geometry intersects the
+    polygon ``pid`` names (geom.pip.intersects_polygons, the one exact
+    refine): a boolean Arrow UDF inside a WHERE, so only its argument
+    columns cross Arrow, one byte returns per row, and the JVM applies
+    the filter.
+
+    ``probe`` names (x, y) Point columns, or the (geom, minx, miny,
+    maxx, maxy, rect) columns of decode_geojson.  ``polygons`` is a
+    Broadcast of {poly_id: (coords, ring_offsets)} (cover.poly_dim) or
+    the name of a GEOMETRY_TYPE column carrying each row's polygon.
+    Struct and list columns are read as zero-copy .values/.offsets
+    buffers (arrow_probes), never materialized per row."""
+    import warnings
+
+    import pyarrow as pa
+    from pyspark.sql.functions import ArrowUDFType, arrow_udf
+
+    carried = isinstance(polygons, str)
+
+    def _intersects(pids, *cols):
+        if carried:
+            rings = [_list_buffers(f) for f in cols[0].flatten()[1:3]]
+            cols = cols[1:]
+
+            def polygon_of(p, i):
+                return tuple(vals[offs[i] : offs[i + 1]] for vals, offs in rings)
+
+        else:
+            dim = polygons.value
+
+            def polygon_of(p, i):
+                return dim[int(p)]
+
+        if len(cols) == 2:
+            probes = point_probes(*(c.to_numpy(zero_copy_only=False) for c in cols))
+        else:
+            probes = arrow_probes(*cols)
+        return pa.array(intersects_polygons(pids.to_numpy(zero_copy_only=False), probes, polygon_of))
+
+    # varargs defeat the type-hint inference, so the scalar type is
+    # named (and PySpark's nudge towards type hints silenced)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", UserWarning)
+        udf = arrow_udf(_intersects, "boolean", ArrowUDFType.SCALAR)
+    return df.where(udf(pid, *([polygons] if carried else []), *probe))
 
 
 # --- pandas UDFs ---------------------------------------------------------

@@ -11,9 +11,11 @@ points exactly on a horizontal edge resolve deterministically.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 
-from .packed import PackedGeometry
+from .packed import PackedGeometry, collection_children
 
 
 def _ring_edges(coords: np.ndarray, ring_offsets: np.ndarray, close: bool = True):
@@ -113,7 +115,7 @@ def polygons_intersect(pga: PackedGeometry, pgb: PackedGeometry) -> bool:
     # boundary crossing: orientation tests, vectorized (m x n)
     x1a, y1a, x2a, y2a = _ring_edges(pga.coords, pga.ring_offsets)
     x1b, y1b, x2b, y2b = _ring_edges(pgb.coords, pgb.ring_offsets)
-    return _any_segment_intersection((x1a, y1a, x2a, y2a), (x1b, y1b, x2b, y2b))
+    return bool(_segment_contacts((x1a, y1a, x2a, y2a), (x1b, y1b, x2b, y2b)).any())
 
 
 def _segment_contacts(edges_a, edges_b) -> np.ndarray:
@@ -153,20 +155,18 @@ def _segment_contacts(edges_a, edges_b) -> np.ndarray:
     )
 
 
-def _any_segment_intersection(edges_a, edges_b) -> bool:
-    """True iff any segment of edges_a intersects any of edges_b
-    (_segment_contacts)."""
-    return bool(_segment_contacts(edges_a, edges_b).any())
-
-
 def geometry_intersects_polygon(pg: PackedGeometry, poly: PackedGeometry) -> bool:
     """GEOS-Intersects of ANY geometry type against a Polygon/
     MultiPolygon: Polygon sides dispatch to polygons_intersect;
     LineStrings use open-edge crossing + vertex containment; Points use
     the even-odd PIP (boundary-exact points resolve by the even-odd
-    rule — engine fixtures keep points off edges by construction)."""
+    rule — engine fixtures keep points off edges by construction);
+    GeometryCollections intersect through any child.  The per-pair test
+    reference: the engine refines through intersects_polygons."""
     if poly.gtype not in (3, 6):
         raise ValueError("right side must be Polygon/MultiPolygon")
+    if pg.gtype == 7:
+        return any(geometry_intersects_polygon(ch, poly) for ch in collection_children(pg))
     if pg.gtype in (3, 6):
         return polygons_intersect(pg, poly)
     c = pg.coords.reshape(-1, 2)
@@ -183,7 +183,7 @@ def geometry_intersects_polygon(pg: PackedGeometry, poly: PackedGeometry) -> boo
         return False
     line_edges = _ring_edges(pg.coords, pg.ring_offsets, close=False)
     poly_edges = _ring_edges(poly.coords, poly.ring_offsets)
-    return _any_segment_intersection(line_edges, poly_edges)
+    return bool(_segment_contacts(line_edges, poly_edges).any())
 
 
 def rects_intersect_polygon(
@@ -251,6 +251,100 @@ def rects_intersect_polygon(
             )
             out[r] = _segment_contacts(redges, pedges).reshape(r.size, ne).any(axis=1)
     return out
+
+
+class Probes(NamedTuple):
+    """n probe geometries in the decode pass's flat Arrow layout
+    (functions.geometry_fns.GEOMETRY_TYPE): ``gtype`` int8[n] and each
+    list field as (values, offsets[n+1]), the offsets indexing values
+    directly (an Arrow ListArray's ``.values``/``.offsets``, slices
+    included); plus the bbox (minx, miny, maxx, maxy) arrays and the
+    rect flag, which together stand in for a rectangle shipped with
+    empty coords.  Fields a batch never reads may be None: Point probes
+    carry gtype and coords only (point_probes)."""
+
+    gtype: np.ndarray
+    coords: tuple
+    ring_offsets: tuple | None = None
+    part_offsets: tuple | None = None
+    part_types: tuple | None = None
+    child_offsets: tuple | None = None
+    bbox: tuple | None = None
+    rect: np.ndarray | None = None
+
+
+def point_probes(x, y) -> Probes:
+    """x, y arrays -> a batch of n Point probes, without a per-row loop."""
+    n = len(x)
+    return Probes(np.ones(n, np.int8), (np.column_stack([x, y]).ravel(), np.arange(0, 2 * n + 1, 2)))
+
+
+def _flat_row(field: tuple, i: int) -> np.ndarray:
+    vals, offs = field
+    return vals[offs[i] : offs[i + 1]]
+
+
+def _edge_contact(pg: PackedGeometry, poly: PackedGeometry, poly_edges) -> bool:
+    """``pg``, none of whose vertices lies inside ``poly``, still
+    intersects it: polygons through polygons_intersect, lines through
+    the segment-contact test, collections through any child."""
+    if pg.gtype == 7:
+        return any(
+            _edge_contact(ch, poly, poly_edges)
+            for ch in collection_children(pg)
+            if ch.gtype not in (1, 4) and ch.coords.size
+        )
+    if pg.gtype in (3, 6):
+        return polygons_intersect(pg, poly)
+    return bool(_segment_contacts(_ring_edges(pg.coords, pg.ring_offsets, close=False), poly_edges).any())
+
+
+def intersects_polygons(pid, probes: Probes, polygon_of) -> np.ndarray:
+    """GEOS-Intersects of n probe geometries against the polygons their
+    ``pid`` names -> bool[n]: the one exact refine of every polygon join.
+
+    ``polygon_of(p, row)`` returns polygon ``p``'s (coords,
+    ring_offsets); ``row`` is the first candidate row naming ``p``, for
+    a polygon carried on the candidate rows.  Rows are grouped by pid
+    once and each polygon is fetched once.  Per polygon: rect probes
+    shipped without coords go to rects_intersect_polygon; every other
+    probe's vertices go through ONE points_in_polygon call, reduced per
+    probe with reduceat, which decides Points and MultiPoints; the
+    remaining lines, polygons and collections take the edge tests
+    (_edge_contact) row by row."""
+    pid = np.asarray(pid)
+    keep = np.zeros(pid.size, dtype=bool)
+    cvals, coffs = probes.coords
+    lens = np.diff(np.asarray(coffs, np.int64))
+    blank = (lens == 0) & (False if probes.rect is None else probes.rect)
+    order = np.argsort(pid, kind="stable")
+    uniq, first = np.unique(pid[order], return_index=True)
+    for p, s in zip(uniq, np.split(order, first[1:])):
+        coords, ro = polygon_of(p, s[0])
+        sb = s[blank[s]]
+        if sb.size:
+            keep[sb] = rects_intersect_polygon(*(b[sb] for b in probes.bbox), coords, ro)
+        s = s[lens[s] > 0]
+        if not s.size:
+            continue
+        nv = lens[s] // 2
+        vstart = np.zeros(s.size, np.int64)
+        np.cumsum(nv[:-1], out=vstart[1:])
+        fx = np.repeat(coffs[s] - 2 * vstart, nv) + 2 * np.arange(int(nv.sum()))
+        inside = points_in_polygon(cvals[fx], cvals[fx + 1], coords, ro)
+        keep[s] = np.logical_or.reduceat(inside, vstart)
+        gt = probes.gtype[s]
+        rest = s[~keep[s] & (gt != 1) & (gt != 4)]
+        if not rest.size:
+            continue
+        poly = PackedGeometry(gtype=3, coords=coords, ring_offsets=ro, part_offsets=np.zeros(1, np.int32))
+        edges = _ring_edges(coords, ro)
+        for i in rest:
+            gti = int(probes.gtype[i])
+            # coords, ring and part offsets (+ part_types, child_offsets for a collection)
+            pg = PackedGeometry(gti, *(_flat_row(f, i) for f in probes[1 : 6 if gti == 7 else 4]))
+            keep[i] = _edge_contact(pg, poly, edges)
+    return keep
 
 
 def rect_rings(coords: np.ndarray, offsets: np.ndarray, one_ring: np.ndarray) -> np.ndarray:

@@ -19,7 +19,7 @@ import math
 from pyspark.sql import DataFrame
 
 from .. import memo
-from ..functions.geometry_fns import decode_geojson
+from ..functions.geometry_fns import decode_geojson, where_intersects
 from ..geom import cells
 
 
@@ -162,61 +162,25 @@ def intersects_join(left: DataFrame, right: DataFrame, res: int | None = None) -
     bbox-overlap candidates (cell-bucketed, dedup-free; res=None picks
     the resolution from sampled bbox sizes — the candidate volume
     matters MORE here than in bbox_overlap_join because every
-    candidate row crosses into the Python refine) refined by the
-    exact GEOS-Intersects predicate (geom.pip.polygons_intersect —
-    boundary crossing, containment, AND degenerate touching).
+    candidate row crosses into the Python refine) refined by the one
+    exact GEOS-Intersects predicate (functions.geometry_fns.
+    where_intersects: boundary crossing, containment, AND degenerate
+    touching), the right geometry the probe and the left the polygon
+    (right-side rectangles payload-free, read from their bbox).
     Each side is decoded ONCE (functions.geometry_fns.decode_geojson,
     which also emits the bbox and drops unparseable geometries) and the
-    packed geometry struct rides the candidate rows; within each Arrow
-    batch every distinct lid/rid geometry is read from its struct once
-    and pairs are processed grouped by lid.  For dimension x dimension
-    workloads; point x polygon goes through pip_join_*, bbox-only
-    through bbox_overlap_join.
+    packed geometry struct rides the candidate rows; only the refine's
+    argument columns cross Arrow, and each left polygon is read once
+    per batch.  For dimension x dimension workloads; point x polygon
+    goes through pip_join_*, bbox-only through bbox_overlap_join.
     """
 
-    def side(df, p):
-        g = decode_geojson(df.selectExpr(f"CAST(poly_id AS BIGINT) AS {p}id", "geojson"), "geojson", [f"{p}id"])
-        return g.selectExpr(f"{p}id", *(f"{c} AS {p}{c}" for c in ("geom", "minx", "miny", "maxx", "maxy")))
+    def side(df, p, blank_rect):
+        g = decode_geojson(
+            df.selectExpr(f"CAST(poly_id AS BIGINT) AS {p}id", "geojson"), "geojson", [f"{p}id"], blank_rect
+        )
+        return g.selectExpr(f"{p}id", *(f"{c} AS {p}{c}" for c in ("geom", "minx", "miny", "maxx", "maxy", "rect")))
 
-    cand = bbox_overlap_join(side(left, "l"), side(right, "r"), res=res).select("lid", "rid", "lgeom", "rgeom")
-
-    def refine(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from ..geom.packed import PackedGeometry
-        from ..geom.pip import polygons_intersect
-
-        def packed(geom, i):
-            g = geom[int(i)].as_py()
-            return PackedGeometry(
-                gtype=g["gtype"], coords=np.asarray(g["coords"], np.float64),
-                ring_offsets=np.asarray(g["ring_offsets"], np.int32),
-                part_offsets=np.asarray(g["part_offsets"], np.int32),
-            )
-
-        for batch in batches:
-            lids = batch.column("lid").to_numpy(zero_copy_only=False)
-            rids = batch.column("rid").to_numpy(zero_copy_only=False)
-            lgeom, rgeom = batch.column("lgeom"), batch.column("rgeom")
-            rcache: dict = {}
-            keep = np.zeros(batch.num_rows, dtype=bool)
-            order = np.argsort(lids, kind="stable")
-            uniq_l = np.unique(lids)
-            bounds = np.searchsorted(lids[order], uniq_l)
-            for grp in np.split(order, bounds[1:]):
-                if len(grp) == 0:
-                    continue
-                lpg = packed(lgeom, grp[0])
-                for i in grp:
-                    rpg = rcache.get(rids[i])
-                    if rpg is None:
-                        rpg = rcache[rids[i]] = packed(rgeom, i)
-                    keep[i] = polygons_intersect(lpg, rpg)
-            if keep.any():
-                mask = pa.array(keep)
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column("lid").filter(mask), batch.column("rid").filter(mask)], names=["lid", "rid"]
-                )
-
-    return cand.mapInArrow(refine, schema="lid long, rid long")
+    cand = bbox_overlap_join(side(left, "l", False), side(right, "r", True), res=res)
+    probe = ("rgeom", "rminx", "rminy", "rmaxx", "rmaxy", "rrect")
+    return where_intersects(cand, "lid", probe, "lgeom").selectExpr("lid", "rid")

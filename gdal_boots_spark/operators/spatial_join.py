@@ -10,8 +10,8 @@ Physical shape (small/medium polygon side — the common case):
                                              ├─ BROADCAST hash join on cell_id
     polys ──(driver: bbox cover explode)─────┘
                       │
-                      └─ ray-cast refinement: a boolean pandas UDF in a
-                         WHERE (Arrow batches of (x, y, poly_id) only,
+                      └─ exact refinement: a boolean Arrow UDF in a
+                         WHERE (Arrow batches of (poly_id, x, y) only,
                          polygon coords via a Spark broadcast variable —
                          candidate rows never carry coordinate payloads)
 
@@ -20,10 +20,18 @@ filter -> project -> broadcast-join -> UDF filter entirely within one
 stage, so the plan scales linearly with executors at 100 TB (the
 two-parallelism scaling evidence in BENCH runs this operator).
 
+A polygon dim over cover.fits_broadcast's ceiling is never collected:
+every join here (Point and non-Point spans alike) then joins its
+candidates to the decoded, cell-exploded polygons (_cover_shuffle),
+which carry their packed geometry to the refine.  Both sides refine
+through the one predicate, functions.geometry_fns.where_intersects
+(geom.pip.intersects_polygons).
+
 For point-vs-polygon the (point, poly) pair appears at most once —
 a point maps to exactly one cell and a polygon's cover lists each cell
-once — so no dedup shuffle is needed (SURVEY §4.3 applies only to
-geometry x geometry joins).
+once per level, and a point matches only its own level — so no dedup
+shuffle is needed (SURVEY §4.3 applies only to geometry x geometry
+joins).
 """
 
 from __future__ import annotations
@@ -34,10 +42,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import memo
-from ..functions.geometry_fns import decode_geojson, point_xy_sql, quote_ident
+from ..functions.geometry_fns import decode_geojson, point_xy_sql, quote_ident, where_intersects
 from ..geom import cells
 from ..geom.cells import cover_bbox, level_for_edge, pick_res
-from ..geom.pip import points_in_polygon
 from ..partitioning import plan_bytes
 from .cover import fits_broadcast, poly_dim
 from .spans import extract_geo_spans
@@ -100,6 +107,52 @@ def _cover_df(spark: SparkSession, bboxes: dict, rect_pids: frozenset, res: int)
     return memo.get("cover_df", (res, tuple(sorted(bboxes.items())), rect_pids), build)
 
 
+def _cover_shuffle(polys: DataFrame, res: int | None, window: int = ADAPTIVE_LEVEL_WINDOW) -> tuple[int, DataFrame]:
+    """-> (res, cover): _cover_df's relation built in Spark and never
+    collected, for a dim over the broadcast gate.  The one decode pass
+    (decode_geojson), then the same columns at the same [res - window,
+    res] levels through the cell-grid SQL explode, plus each polygon's
+    packed geometry as ``_pgeom`` for the refine to read off the
+    candidate rows.  A Point join passes ``window=0``: a point's cell
+    matches only the level-``res`` rows.
+
+    ``res=None`` is _auto_res computed distributed: the approximate
+    median extent and the largest-area bbox in one aggregate, memoised
+    per session and dim plan (warm builds run no job)."""
+    gb = decode_geojson(polys, "geojson", ["poly_id"])
+    if res is None:
+
+        def probe():
+            b = gb.selectExpr(
+                "percentile_approx(GREATEST(maxx - minx, maxy - miny), 0.5) AS med",
+                "max_by(struct(minx, miny, maxx, maxy), (maxx - minx) * (maxy - miny)) AS worst",
+            ).collect()[0]
+            return _span_res(b["med"], tuple(b["worst"])) if b["worst"] else _auto_res({})
+
+        res = memo.get("shuffle_res", memo.plan_key(polys), probe)
+    s1, s2, cid = cells.cover_explode_sql("_pminx", "_pminy", "_pmaxx", "_pmaxy", "_lvl", "_n")
+    cols = ["poly_id", "_pminx", "_pminy", "_pmaxx", "_pmaxy", "_prect", "_pgeom"]
+    cover = gb.selectExpr(
+        "poly_id", "minx AS _pminx", "miny AS _pminy", "maxx AS _pmaxx", "maxy AS _pmaxy", "rect AS _prect",
+        "geom AS _pgeom", f"explode(sequence({max(0, res - window)}, {res})) AS _lvl",
+    ).selectExpr(*cols, "_lvl", f"{cells.grid_n_sql('_lvl')} AS _n").selectExpr(
+        *cols, "_lvl", "_n", *s1
+    ).selectExpr(*cols, "_lvl", "_n", "_ix", *s2).selectExpr(f"{cid} AS cell_id", *cols)
+    return res, cover
+
+
+def _span_dim(polys: DataFrame, res: int | None):
+    """The polygon dim as the span join reads it, on the side
+    cover.fits_broadcast picks -> (res, cover relation, the refine's
+    polygon source): the collected dim's broadcast cover and packed
+    coords, or the distributed cover carrying ``_pgeom``."""
+    if fits_broadcast(plan_bytes(polys)):
+        dim = poly_dim(polys)
+        res = _auto_res(dim.bboxes) if res is None else res
+        return res, F.broadcast(_cover_df(polys.sparkSession, dim.bboxes, dim.rect_pids, res)), dim.bpacked
+    return (*_cover_shuffle(polys, res), "_pgeom")
+
+
 def pip_join_points(
     points: DataFrame,
     polys: DataFrame,
@@ -139,8 +192,8 @@ def pip_join_points(
     # XOR of the two crossings is the half-open box).  When EVERY dim
     # polygon is such a rectangle the refinement is a pure codegen
     # filter: no broadcast of packed coords, no ArrowEvalPython stage,
-    # zero bytes across the Python boundary.  Mixed/non-rect dims keep
-    # the pandas-UDF ray-cast path unchanged.
+    # zero bytes across the Python boundary.  Mixed/non-rect dims take
+    # the Arrow-UDF refine below.
     all_rect = rect_pids == set(dim.packed)
     xq, yq = quote_ident(x_col), quote_ident(y_col)
     pts = points.withColumn("cell_id", F.expr(cells.cell_id_sql(xq, yq, res)))
@@ -154,38 +207,15 @@ def pip_join_points(
     if not refine:
         return cand
 
-    bpolys = dim.bpacked
-
-    # Refinement as a BOOLEAN pandas UDF inside a WHERE, not a
+    # Refinement as a BOOLEAN Arrow UDF inside a WHERE, not a
     # mapInArrow over whole rows: Spark's ArrowEvalPython projects ONLY
-    # (x, y, poly_id) into Python and gets one byte back per row, so
+    # (poly_id, x, y) into Python and gets one byte back per row, so
     # id/string payload columns never cross the Arrow boundary in
     # either direction and the JVM applies the filter in codegen.
     # Measured on the 20M-doc flagship: ~2x faster end-to-end than the
     # round-trip refine and the refine increment scales with cores like
     # the pure-JVM stages (BENCH/BASELINE.md).
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("boolean")
-    def pip_ok(px, py, pid):
-        import pandas as pd
-
-        polys_local = bpolys.value
-        pxv = px.to_numpy(np.float64)
-        pyv = py.to_numpy(np.float64)
-        pidv = pid.to_numpy(np.int64)
-        keep = np.zeros(len(pxv), dtype=bool)
-        order = np.argsort(pidv, kind="stable")
-        uniq = np.unique(pidv)
-        bounds = np.searchsorted(pidv[order], uniq)
-        for s, p in zip(np.split(order, bounds[1:]), uniq):
-            if len(s) == 0:
-                continue
-            coords, ro = polys_local[int(p)]
-            keep[s] = points_in_polygon(pxv[s], pyv[s], coords, ro)
-        return pd.Series(keep)
-
-    return cand.where(pip_ok(F.col(x_col), F.col(y_col), F.col("poly_id")))
+    return where_intersects(cand, "poly_id", (x_col, y_col), dim.bpacked)
 
 
 def pip_join_docs(
@@ -197,9 +227,9 @@ def pip_join_docs(
     then Point coordinates via native string ops (point_xy_sql — NOT
     from_json, which does not scale with cores; see its docstring) —
     the engine keeps the 10^12-doc hot path JVM-side and enters Python
-    only inside the Arrow-batched ray-cast refinement (pandas UDF
-    surface, SURVEY §2.8).  Point spans only (the flagship hot path);
-    use pip_join_docs_any when documents also carry Polygon/LineString
+    only inside the Arrow-batched exact refine (where_intersects, a
+    boolean Arrow UDF; SURVEY §2.8).  Point spans only (the flagship hot
+    path); use pip_join_docs_any when documents also carry Polygon/LineString
     geo spans.
     """
     geo = extract_geo_spans(docs)
@@ -215,10 +245,11 @@ def pip_join_docs(
     )
 
 
-def _poly_span_candidates(docs: DataFrame, bboxes: dict, rect_pids: frozenset, res: int) -> DataFrame:
+def _poly_span_candidates(docs: DataFrame, cover: DataFrame, res: int, carry: tuple = ()) -> DataFrame:
     """non-Point geo spans of ``docs`` -> deduped (doc_id, span_pos,
-    poly_id, geom, rect, _prect, bbox) candidates: geojson decode ->
-    native bbox cover explode -> broadcast cell join (_cover_df) -> bbox
+    poly_id, geom, rect, _prect, bbox, ``carry``...) candidates: geojson
+    decode -> native bbox cover explode -> cell join with the dim's
+    ``cover`` (_span_dim: _cover_df broadcast, or _cover_shuffle) -> bbox
     overlap filter -> reporting-cell dedup (the pair survives only in
     the cell holding the bbox-intersection lower-left corner — dedup
     WITHOUT a shuffle).
@@ -231,13 +262,14 @@ def _poly_span_candidates(docs: DataFrame, bboxes: dict, rect_pids: frozenset, r
     wrong for spans much larger than the median polygon (a 2-degree
     span at the bench res explodes ~18 cells; at web scale,
     heterogeneous span sizes make this the explode bottleneck).  The
-    polygon side is the broadcast DIM, so it absorbs the multi-level
-    cost: it publishes its bbox cover at EVERY level in the window and
-    the join key (cell_id embeds the level, geom.cells.compose) matches
-    each span at the span's level.  Dedup/filter semantics are
-    unchanged — the output is exactly the bbox-overlap pair set at any
-    level choice, because the cell holding the bbox-intersection
-    lower-left corner is covered by both sides at the span's level.
+    polygon side is the DIM, so it absorbs the multi-level cost: it
+    publishes its bbox cover at EVERY level in the window, on both sides
+    of the broadcast gate, and the join key (cell_id embeds the level,
+    geom.cells.compose) matches each span at the span's level.
+    Dedup/filter semantics are unchanged — the output is exactly the
+    bbox-overlap pair set at any level choice, because the cell holding
+    the bbox-intersection lower-left corner is covered by both sides at
+    the span's level.
 
     The decode is the one mapInArrow pass (decode_geojson) with
     payload-free rectangles: the rect-x-rect split and the refine read a
@@ -274,11 +306,11 @@ def _poly_span_candidates(docs: DataFrame, bboxes: dict, rect_pids: frozenset, r
         + cells.reporting_cell_sql(("minx", "_pminx"), ("miny", "_pminy"), "_lvl", "_n")
     )
     return (
-        covered.join(F.broadcast(_cover_df(docs.sparkSession, bboxes, rect_pids, res)), "cell_id")
+        covered.join(cover, "cell_id")
         .where(keep)
         .selectExpr(
             "doc_id", "span_pos", "poly_id", "geom", "rect", "_prect",
-            "minx", "miny", "maxx", "maxy",
+            "minx", "miny", "maxx", "maxy", *carry,
         )
     )
 
@@ -287,12 +319,10 @@ def poly_span_candidates(docs: DataFrame, polys: DataFrame, res: int | None = No
     """Bench/diagnostic surface: the poly-span path's pre-refinement
     candidates for interleaved docs (mirrors pip_join_points
     ``refine=False``) — used to normalize per-candidate refine cost.
-
-    Collects and broadcasts the polygon dim whatever
-    cover.fits_broadcast says: the span branch has no distributed twin
-    yet."""
-    dim = poly_dim(polys)
-    return _poly_span_candidates(docs, dim.bboxes, dim.rect_pids, _auto_res(dim.bboxes) if res is None else res)
+    The polygon dim is read on the side cover.fits_broadcast picks
+    (_span_dim), as in pip_join_docs_any."""
+    res, cover, _ = _span_dim(polys, res)
+    return _poly_span_candidates(docs, cover, res)
 
 
 def pip_join_docs_any(docs: DataFrame, polys: DataFrame, res: int | None = None) -> DataFrame:
@@ -302,133 +332,36 @@ def pip_join_docs_any(docs: DataFrame, polys: DataFrame, res: int | None = None)
 
     Point spans take the codegen fast path (== pip_join_docs);
     Polygon/LineString/Multi* spans go through the Arrow decode ->
-    native bbox cover explode -> broadcast cell join, deduped WITHOUT a
-    shuffle via the reporting-cell trick (a candidate survives only in
-    the cell containing the bbox-intersection lower-left corner), then
-    exact GEOS-Intersects refinement against the broadcast packed dims.
+    native bbox cover explode -> cell join, deduped WITHOUT a shuffle
+    via the reporting-cell trick (a candidate survives only in the cell
+    containing the bbox-intersection lower-left corner), then the exact
+    GEOS-Intersects refine.  cover.fits_broadcast picks the dim's side
+    for both branches: a dim under the ceiling is collected once and
+    its cover broadcast (_cover_df); a dim over it is never collected,
+    and the candidates join the distributed cover (_cover_shuffle),
+    which carries each polygon's packed geometry to the refine.
 
     The candidates are materialized once (persist) and split: a rect
     span against a rect dim polygon is already decided by the bbox
     overlap filter it passed (closed rects: bbox overlap <=> GEOS
     Intersects), so those pairs are accepted in the JVM and at
     rect-heavy corpus shapes ~90% of candidate rows never cross Arrow.
-    The rest is refined by a BOOLEAN pandas UDF inside a WHERE — the
-    Point path's pattern: only the argument columns (poly_id, rect flag,
-    bbox, geometry struct — empty for rect spans) cross Arrow and one
-    byte returns per row, so doc_id/span_pos strings never leave the
-    JVM.  (A/B at 4.66M candidates, same-run controls: 4.80 s for this
-    split, 5.81 s for one refine over all candidates, 7.00 s for a
-    mapInArrow row filter.  A plain where()-split without the persist
-    would recompute the candidate subtree twice.)
-
-    Only the Point branch goes through the broadcast gate
-    (pip_join_points -> cover.fits_broadcast).  The non-Point span
-    branch collects and broadcasts the polygon dim whatever the gate
-    says: it has no distributed twin yet, so a dim too big to broadcast
-    is still pulled to the driver.
+    The rest is refined by the one boolean Arrow UDF inside a WHERE
+    (where_intersects) — the Point path's pattern: only the argument
+    columns (poly_id, geometry struct — empty for rect spans — bbox,
+    rect flag, and on the distributed side the polygon's geometry) cross
+    Arrow and one byte returns per row, so doc_id/span_pos strings never
+    leave the JVM.  (A/B at 4.66M candidates, same-run controls: 4.80 s
+    for this split, 5.81 s for one refine over all candidates, 7.00 s
+    for a mapInArrow row filter.  A plain where()-split without the
+    persist would recompute the candidate subtree twice.)
     """
-    from pyspark.sql.functions import pandas_udf
     from pyspark.storagelevel import StorageLevel
 
-    dim = poly_dim(polys)
-    if res is None:
-        res = _auto_res(dim.bboxes)
-
+    res, cover, polygons = _span_dim(polys, res)
+    carry = (polygons,) if isinstance(polygons, str) else ()
     pt_pairs = pip_join_docs(docs, polys, res=res).selectExpr("doc_id", "span_pos", "poly_id")
-    cand = _poly_span_candidates(docs, dim.bboxes, dim.rect_pids, res)
-    bpolys = dim.bpacked
-
-    @pandas_udf("boolean")
-    def poly_ok(pid_s, rect_s, minx_s, miny_s, maxx_s, maxy_s, geom_df):
-        import pandas as pd
-
-        from ..geom.packed import PackedGeometry, collection_children
-        from ..geom.pip import (
-            _any_segment_intersection,
-            _ring_edges,
-            points_in_polygon,
-            polygons_intersect,
-            rects_intersect_polygon,
-        )
-
-        polys_local = bpolys.value
-        gtypes = geom_df["gtype"].to_numpy(np.int8)
-        keep = np.zeros(len(gtypes), dtype=bool)
-        pidv = pid_s.to_numpy(np.int64)
-        rectv = rect_s.to_numpy(bool)
-        mnx = minx_s.to_numpy(np.float64)
-        mny = miny_s.to_numpy(np.float64)
-        mxx = maxx_s.to_numpy(np.float64)
-        mxy = maxy_s.to_numpy(np.float64)
-        coords_o = geom_df["coords"].to_numpy(object)
-        ring_o = geom_df["ring_offsets"].to_numpy(object)
-        part_o = geom_df["part_offsets"].to_numpy(object)
-        ptype_o = geom_df["part_types"].to_numpy(object)
-        choff_o = geom_df["child_offsets"].to_numpy(object)
-
-        order = np.argsort(pidv, kind="stable")
-        uniq = np.unique(pidv)
-        bnds = np.searchsorted(pidv[order], uniq)
-        for s0, p in zip(np.split(order, bnds[1:]), uniq):
-            pcoords, pro = polys_local[int(p)]
-            lens = np.fromiter((len(coords_o[i]) for i in s0), np.int64, len(s0))
-            srect = s0[rectv[s0] & (lens == 0)]
-            if len(srect):
-                hit = rects_intersect_polygon(
-                    mnx[srect], mny[srect], mxx[srect], mxy[srect], pcoords, pro
-                )
-                keep[srect[hit]] = True
-            sreal = s0[lens > 0]
-            if len(sreal) == 0:
-                continue
-            verts = np.concatenate([np.asarray(coords_o[i], np.float64) for i in sreal]).reshape(-1, 2)
-            inside = points_in_polygon(verts[:, 0], verts[:, 1], pcoords, pro)
-            vstarts = np.zeros(len(sreal), dtype=np.int64)
-            np.cumsum((lens[lens > 0] // 2)[:-1], out=vstarts[1:])
-            anyin = np.logical_or.reduceat(inside, vstarts)
-            keep[sreal[anyin]] = True
-            poly = PackedGeometry(
-                gtype=3, coords=pcoords, ring_offsets=pro, part_offsets=np.asarray([0], np.int32)
-            )
-            poly_edges = None
-            for i in sreal[~anyin]:
-                gt = int(gtypes[i])
-                if gt in (1, 4):
-                    continue
-                pg = PackedGeometry(
-                    gtype=gt,
-                    coords=np.asarray(coords_o[i], np.float64),
-                    ring_offsets=np.asarray(ring_o[i], np.int32),
-                    part_offsets=np.asarray(part_o[i], np.int32),
-                )
-                if gt == 7:
-                    pg.part_types = np.asarray(ptype_o[i], np.int8)
-                    pg.child_offsets = np.asarray(choff_o[i], np.int32)
-                    for ch in collection_children(pg):
-                        cgt = int(ch.gtype)
-                        if cgt in (1, 4) or ch.coords.size == 0:
-                            continue
-                        if cgt in (3, 6):
-                            if polygons_intersect(ch, poly):
-                                keep[i] = True
-                                break
-                        else:
-                            if poly_edges is None:
-                                poly_edges = _ring_edges(pcoords, pro)
-                            if _any_segment_intersection(
-                                _ring_edges(ch.coords, ch.ring_offsets, close=False), poly_edges
-                            ):
-                                keep[i] = True
-                                break
-                elif gt in (3, 6):
-                    keep[i] = polygons_intersect(pg, poly)
-                else:
-                    if poly_edges is None:
-                        poly_edges = _ring_edges(pcoords, pro)
-                    keep[i] = _any_segment_intersection(
-                        _ring_edges(pg.coords, pg.ring_offsets, close=False), poly_edges
-                    )
-        return pd.Series(keep)
+    cand = _poly_span_candidates(docs, cover, res, carry)
 
     # persist (NOT localCheckpoint): lineage survives, so an executor
     # loss on a 1000-node cluster recomputes the lost partitions instead
@@ -437,12 +370,8 @@ def pip_join_docs_any(docs: DataFrame, polys: DataFrame, res: int | None = None)
     # it until unpersist/clearCache, across Python and JVM GC.
     c = cand.persist(StorageLevel.MEMORY_AND_DISK)
     fast = c.where("rect AND _prect").selectExpr("doc_id", "span_pos", "poly_id")
-    slow = c.where("NOT (rect AND _prect)").where(
-        poly_ok(
-            F.col("poly_id"), F.col("rect"),
-            F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
-            F.col("geom"),
-        )
+    slow = where_intersects(
+        c.where("NOT (rect AND _prect)"), "poly_id", ("geom", "minx", "miny", "maxx", "maxy", "rect"), polygons
     ).selectExpr("doc_id", "span_pos", "poly_id")
     return pt_pairs.unionByName(fast).unionByName(slow)
 
@@ -458,69 +387,23 @@ def pip_join_points_shuffle(
 ) -> DataFrame:
     """Big-polygon-side variant: no driver collect, no broadcast dict.
 
-    The polygon table is decoded by the one mapInArrow pass
-    (decode_geojson, which also emits each bbox) and cover-exploded
-    DISTRIBUTED (the cell-grid SQL explode of geom.cells), candidates
-    come from a shuffle hash join on cell_id with **salted
-    repartitioning on hot cells** (north_star: points side counts pick
-    hot cell ids; their rows split across `salt` reducers, the polygon
-    side's hot rows are exploded x salt), and the ray-cast refinement
-    runs per candidate batch with each polygon's packed coords read
-    once per (batch, poly) group.
+    The polygon table is decoded and cover-exploded DISTRIBUTED
+    (_cover_shuffle, the span join's distributed cover, at level res
+    only), candidates come from a shuffle hash join
+    on cell_id with **salted repartitioning on hot cells** (north_star:
+    points side counts pick hot cell ids; their rows split across
+    `salt` reducers, the polygon side's hot rows are exploded x salt),
+    and the one Arrow-UDF refine (where_intersects) reads each polygon's
+    packed coords off the candidate rows, once per (batch, poly) group.
 
     Semantics identical to pip_join_points (tested); use when the
     polygon side is too large to broadcast.
     """
     from .skew import salted_join
 
-    gb = decode_geojson(polys, "geojson", ["poly_id"])
-    if res is None:
-        # _auto_res computed distributed: the approximate median extent
-        # and the largest-area bbox in one aggregate, memoised per
-        # session and dim plan (warm builds run no job)
-        def probe():
-            b = gb.selectExpr(
-                "percentile_approx(GREATEST(maxx - minx, maxy - miny), 0.5) AS med",
-                "max_by(struct(minx, miny, maxx, maxy), (maxx - minx) * (maxy - miny)) AS worst",
-            ).collect()[0]
-            return _span_res(b["med"], tuple(b["worst"])) if b["worst"] else _auto_res({})
-
-        res = memo.get("shuffle_res", memo.plan_key(polys), probe)
-    s1, s2, cid = cells.cover_explode_sql("minx", "miny", "maxx", "maxy", res)
-    cover = gb.selectExpr("poly_id", "geom", *s1).selectExpr("poly_id", "geom", "_ix", *s2).selectExpr(
-        "poly_id", "geom", f"{cid} AS cell_id"
-    )
-
+    res, cover = _cover_shuffle(polys, res, window=0)
     pts = points.withColumn("cell_id", F.expr(cells.cell_id_sql(quote_ident(x_col), quote_ident(y_col), res)))
-    cand = salted_join(pts, cover, "cell_id", salt=salt, hot_threshold=hot_threshold).drop("cell_id")
-
-    out_cols = [c for c in cand.columns if c not in ("geom",)]
-    out_schema = cand.select(*out_cols).schema
-
-    def refine(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            px = batch.column(x_col).to_numpy(zero_copy_only=False)
-            py = batch.column(y_col).to_numpy(zero_copy_only=False)
-            pids = batch.column("poly_id").to_numpy(zero_copy_only=False)
-            geom = batch.column("geom")
-            keep = np.zeros(n, dtype=bool)
-            order = np.argsort(pids, kind="stable")
-            uniq = np.unique(pids)
-            bounds = np.searchsorted(pids[order], uniq)
-            for s, pid in zip(np.split(order, bounds[1:]), uniq):
-                if len(s) == 0:
-                    continue
-                g0 = geom[int(s[0])]  # decode this polygon's arrays once
-                coords = np.asarray(g0["coords"].as_py(), dtype=np.float64)
-                ro = np.asarray(g0["ring_offsets"].as_py(), dtype=np.int32)
-                keep[s] = points_in_polygon(px[s], py[s], coords, ro)
-            out = pa.Table.from_batches([batch]).filter(pa.array(keep)).drop_columns(["geom"])
-            if out.num_rows:
-                yield from out.combine_chunks().to_batches()
-
-    return cand.mapInArrow(refine, schema=out_schema)
+    cand = salted_join(
+        pts, cover.selectExpr("cell_id", "poly_id", "_pgeom"), "cell_id", salt=salt, hot_threshold=hot_threshold
+    ).drop("cell_id")
+    return where_intersects(cand, "poly_id", (x_col, y_col), "_pgeom").drop("_pgeom")

@@ -34,7 +34,8 @@ def main():
         "filter/string-decode/cell math -> BroadcastHashJoin on cell_id. "
         "With an all-rectangle dim (r8) the refinement is the half-open "
         "box test FUSED into the join condition — no Python eval node at "
-        "all; non-rect dims add one boolean-pandas-UDF ArrowEvalPython.",
+        "all; non-rect dims add one ArrowEvalPython, the boolean Arrow-UDF "
+        "refine (where_intersects).",
         cap(df),
     ))
 
@@ -165,7 +166,8 @@ def main():
         "concrete columns — scalar UDFs were duplicated by projection "
         "collapse into stacked ArrowEvalPython stages), then native cover "
         "explode, broadcast cell join, reporting-cell dedup (no shuffle), "
-        "and an Arrow-columnar grouped intersects refinement.",
+        "and the one boolean Arrow-UDF refine (where_intersects) over the "
+        "candidates the JVM rect x rect split leaves.",
         cap(pip_join_docs_any(_idocs(spark, "/root/testdata/sf0.001", poly_spans=True), rect_polygons_df(spark))),
     ))
 

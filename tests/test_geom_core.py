@@ -420,6 +420,105 @@ def test_operators_decode_once():
     assert not bad, bad
 
 
+def test_intersects_polygons_equals_reference():
+    """The one exact refine, geom.pip.intersects_polygons, over a mixed
+    batch read from a SLICED Arrow struct column (arrow_probes): Points,
+    a MultiPoint, a line, polygons, GeometryCollections and payload-free
+    rectangles, each against two polygons, equal the per-pair reference
+    geometry_intersects_polygon; Point probes built from x/y
+    (point_probes) equal points_in_polygon bit for bit."""
+    import pyarrow as pa
+
+    from gdal_boots_spark.functions.geometry_fns import arrow_probes
+    from gdal_boots_spark.geom.pip import (
+        geometry_intersects_polygon,
+        intersects_polygons,
+        point_probes,
+        points_in_polygon,
+    )
+
+    def ring(*pts):
+        return {"type": "Polygon", "coordinates": [[list(p) for p in pts + pts[:1]]]}
+
+    def box(x0, y0, x1, y1):
+        return ring((x0, y0), (x1, y0), (x1, y1), (x0, y1))
+
+    def line(*pts):
+        return {"type": "LineString", "coordinates": [list(p) for p in pts]}
+
+    def gc(*geoms):
+        return {"type": "GeometryCollection", "geometries": list(geoms)}
+
+    polys = {10: from_geojson(ring((0, 0), (10, 0), (5, 8))),
+             11: from_geojson(ring((20, 0), (26, 0), (26, 2), (22, 2), (22, 6), (20, 6)))}
+    far = {"type": "Point", "coordinates": [50.0, 50.0]}
+    probes = [
+        {"type": "Point", "coordinates": [5.0, 2.0]},
+        far,
+        {"type": "MultiPoint", "coordinates": [[50.0, 50.0], [21.0, 5.0]]},
+        line((-1.0, 1.0), (30.0, 1.0)),
+        box(-5.0, -5.0, 15.0, 15.0),
+        gc(box(-1.0, -1.0, 11.0, 9.0), far),
+        gc(line((23.0, -1.0), (23.0, 3.0)), box(40.0, 40.0, 41.0, 41.0)),
+        gc(far, line((60.0, 60.0), (61.0, 61.0))),
+    ]
+    rects = [(4.0, 7.0, 6.0, 9.0), (21.0, 3.0, 21.5, 3.5), (12.0, 12.0, 13.0, 13.0)]
+    geoms = [from_geojson(g) for g in probes] + [from_geojson(box(*r)) for r in rects]
+    n_real = len(probes)
+    rows = [(g, p) for g in range(len(geoms)) for p in polys]
+    exp = [geometry_intersects_polygon(geoms[g], polys[p]) for g, p in rows]
+
+    def col(field, t, blank_as):
+        vals = [blank_as if g >= n_real else getattr(geoms[g], field) for g, _ in rows]
+        vals = [None if v is None else list(v) for v in vals]
+        return pa.array([[9]] + vals, pa.list_(t))  # one leading row, sliced off below
+
+    struct = pa.StructArray.from_arrays(
+        [pa.array([1] + [geoms[g].gtype for g, _ in rows], pa.int8()),
+         col("coords", pa.float64(), []), col("ring_offsets", pa.int32(), []), col("part_offsets", pa.int32(), []),
+         col("part_types", pa.int8(), None), col("child_offsets", pa.int32(), None)],
+        names=["gtype", "coords", "ring_offsets", "part_offsets", "part_types", "child_offsets"],
+    ).slice(1)
+    bbox = [pa.array([rects[g - n_real][k] if g >= n_real else 0.0 for g, _ in rows]) for k in range(4)]
+    rect = pa.array([g >= n_real for g, _ in rows])
+    pids = np.array([p for _, p in rows])
+    def polygon_of(p, i):
+        return polys[p].coords, polys[p].ring_offsets
+
+    got = intersects_polygons(pids, arrow_probes(struct, *bbox, rect), polygon_of)
+    assert got.tolist() == exp and 8 <= sum(exp) <= len(exp) - 8
+
+    rng = np.random.default_rng(5)
+    x, y = rng.uniform(19, 27, 500), rng.uniform(-1, 7, 500)
+    pg = polys[11]
+    got = intersects_polygons(np.full(500, 11), point_probes(x, y), lambda p, i: (pg.coords, pg.ring_offsets))
+    assert np.array_equal(got, points_in_polygon(x, y, pg.coords, pg.ring_offsets)) and 50 < got.sum() < 450
+
+
+def test_refine_in_one_kernel():
+    """The polygon joins' exact refine is one predicate,
+    geom.pip.intersects_polygons behind functions.geometry_fns.
+    where_intersects: spatial_join.py and bbox_join.py run no mapInArrow
+    of their own and call none of the geometry kernels directly, and
+    the per-operator refine bodies they once held stay deleted."""
+    import ast
+    import pathlib
+    import re
+
+    ops = pathlib.Path(__file__).resolve().parents[1] / "gdal_boots_spark" / "operators"
+    calls = {"mapInArrow", "points_in_polygon", "polygons_intersect", "rects_intersect_polygon", "_segment_contacts"}
+    gone = re.compile(r"^\s*def\s+(?:pip_ok|poly_ok|refine|packed)\b", re.M)
+    bad = []
+    for name in ("spatial_join.py", "bbox_join.py"):
+        text = (ops / name).read_text()
+        bad += [f"{name}: {m.group(0).strip()}" for m in gone.finditer(text)]
+        for node in ast.walk(ast.parse(text)):
+            if isinstance(node, ast.Call):
+                fn = getattr(node.func, "id", None) or getattr(node.func, "attr", None)
+                bad += [f"{name}:{node.lineno} calls {fn}"] * (fn in calls)
+    assert not bad, bad
+
+
 def test_operators_build_driver_relations_from_arrow():
     """Every relation an operator builds on the driver from Python
     values comes from a pyarrow Table: each createDataFrame call under

@@ -570,18 +570,19 @@ def test_shuffle_res_matches_auto_res(spark, monkeypatch):
     extents, within one level of the broadcast path's _auto_res for the
     same dim (a span taken over the interleaved x and y values once read
     ~27 degrees on the rect dim, level 3 against 9).  The spy reads the
-    level the polygon side's cover explode is built at."""
+    level the point side's cells are built at, the finest level of the
+    polygon side's cover."""
     from gdal_boots_spark.geom import cells
     from gdal_boots_spark.operators import spatial_join as sj
 
     levels = []
-    real = cells.cover_explode_sql
+    real = cells.cell_id_sql
 
-    def spy(minx, miny, maxx, maxy, level, n=None):
-        levels.append(level)
-        return real(minx, miny, maxx, maxy, level, n)
+    def spy(lon, lat, res):
+        levels.append(res)
+        return real(lon, lat, res)
 
-    monkeypatch.setattr(cells, "cover_explode_sql", spy)
+    monkeypatch.setattr(cells, "cell_id_sql", spy)
     polys = rect_polygons_df(spark)
     pts = spark.createDataFrame([(0, 26.5, 53.5)], "point_id long, x double, y double")
     sj.pip_join_points_shuffle(pts, polys)
@@ -875,17 +876,21 @@ def test_poly_refine_vs_oracle_sf0001(spark):
     compare_to_oracle(df, entrymod.all_oracle_sql()["pip_join_poly_spans"], SF_SMOKE)
 
 
-def test_adaptive_levels_heterogeneous_spans(spark):
+def test_adaptive_levels_heterogeneous_spans(spark, monkeypatch):
     """Adaptive cover resolution (VERDICT r5 item 4): spans whose sizes
     range over 3+ orders of magnitude (0.01 deg .. 30 deg, i.e. far
     larger than the poly-derived global res cell) each explode at their
     own level; the output must still be EXACTLY the intersecting pair
     set (brute force), with zero duplicate pairs — the reporting-cell
-    dedup must hold across mixed levels."""
+    dedup must hold across mixed levels.  GeometryCollection spans
+    (a polygon child holding a dim polygon, a line child crossing one,
+    a point child inside one, a disjoint collection) ride along, and
+    both sides of the broadcast gate are checked."""
     import json as _json
 
     from gdal_boots_spark.geom.packed import from_geojson
     from gdal_boots_spark.geom.pip import geometry_intersects_polygon
+    from gdal_boots_spark.operators import cover
     from gdal_boots_spark.operators.spatial_join import pip_join_docs_any
 
     def rect(minx, miny, maxx, maxy):
@@ -906,6 +911,18 @@ def test_adaptive_levels_heterogeneous_spans(spark):
             shape = rect if (k % 2 == 0) else tri
             spans[str(k)] = shape(x0, y0, x0 + w, y0 + w * 0.75)
             k += 1
+
+    def gc(*geoms):
+        return {"type": "GeometryCollection", "geometries": list(geoms)}
+
+    def line(*pts):
+        return {"type": "LineString", "coordinates": [list(p) for p in pts]}
+
+    far = {"type": "Point", "coordinates": [80.0, 50.0]}
+    spans["gc_holds"] = gc(rect(-59.0, -39.0, -57.5, -37.5), far)  # holds dim 0
+    spans["gc_line"] = gc(line((-40.0, -20.0), (-15.0, -20.0)), rect(70.0, 40.0, 70.5, 40.5))  # crosses dim 3
+    spans["gc_point"] = gc({"type": "Point", "coordinates": [-50.2, -33.9]}, line((-49.0, -30.0), (-48.5, -29.5)))
+    spans["gc_far"] = gc(far, line((86.0, 81.0), (87.0, 82.0)))
     docs = spark.createDataFrame(
         [(d, [{"kind": "geo", "text": _json.dumps(g), "media_ref": None, "offset": 1}])
          for d, g in spans.items()],
@@ -919,8 +936,6 @@ def test_adaptive_levels_heterogeneous_spans(spark):
         polys_rows.append((pid, _json.dumps(rect(x0, y0, x0 + w, y0 + w * 0.8))))
     polys = spark.createDataFrame(polys_rows, "poly_id long, geojson string")
 
-    pairs = [(r["doc_id"], r["poly_id"]) for r in pip_join_docs_any(docs, polys).collect()]
-    assert len(pairs) == len(set(pairs)), "duplicate pairs across mixed levels"
     pr = {pid: from_geojson(gj) for pid, gj in polys_rows}
     exp = set()
     for d, gj in spans.items():
@@ -928,7 +943,13 @@ def test_adaptive_levels_heterogeneous_spans(spark):
         for pid, pp in pr.items():
             if geometry_intersects_polygon(pg, pp):
                 exp.add((d, pid))
-    assert set(pairs) == exp and len(exp) >= 15
+    assert len(exp) >= 15 and {("gc_holds", 0), ("gc_line", 3), ("gc_point", 1)} <= exp
+    assert not any(d == "gc_far" for d, _ in exp)
+    for side, ceiling in GATE_SIDES.items():
+        monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", ceiling)
+        pairs = [(r["doc_id"], r["poly_id"]) for r in pip_join_docs_any(docs, polys).collect()]
+        assert len(pairs) == len(set(pairs)), (side, "duplicate pairs across mixed levels")
+        assert set(pairs) == exp, side
 
 
 def test_board_oracle_contract():
@@ -1075,18 +1096,21 @@ def test_decode_once_plan_shape(spark, monkeypatch):
     """The distributed raster x vector paths (rasterize_hist and
     zonal_stats forced past the broadcast gate), the shuffle PIP join and
     the intersects join decode each GeoJSON input in exactly one
-    decode_geojson mapInArrow, with no ArrowEvalPython (scalar pandas
-    UDF) node left in their executed plans."""
+    decode_geojson mapInArrow, with no scalar decode or bounds UDF left
+    in their executed plans: the raster paths hold no ArrowEvalPython
+    node, and the two joins exactly one, the exact-refine predicate
+    (where_intersects).  Their only mapInArrow nodes are the decode
+    passes."""
     from gdal_boots_spark.operators import cover
 
     monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", GATE_SIDES["distributed"])
     qs = entrymod.all_queries()
-    for name, inputs in (
-        ("rasterize_hist", 1), ("zonal_stats", 1), ("pip_join_shuffle", 1), ("intersects_join", 2),
+    for name, inputs, refines in (
+        ("rasterize_hist", 1, 0), ("zonal_stats", 1, 0), ("pip_join_shuffle", 1, 1), ("intersects_join", 2, 1),
     ):
         plan = qs[name](spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" not in plan, (name, plan)
-        assert plan.count("MapInArrow _decode_geojson(") == inputs, (name, plan)
+        assert plan.count("ArrowEvalPython") == plan.count("ArrowEvalPython [_intersects(") == refines, (name, plan)
+        assert plan.count("MapInArrow ") == plan.count("MapInArrow _decode_geojson(") == inputs, (name, plan)
 
 
 def _executed_leaves(df):
@@ -1127,9 +1151,10 @@ def test_driver_relations_plan_no_python_rdd(spark, monkeypatch, tmp_path):
     on both sides of the broadcast gate, and the board pip_join at its
     own gate, no executed plan (AQE stages and cached plans included)
     has a ``Scan ExistingRDD`` leaf, and the broadcast cover or
-    contribution side is a LocalTableScan.  The dim is the board's
-    rectangle dim written to parquet, so the caller's own source is not
-    a driver list either."""
+    contribution side is a LocalTableScan on the broadcast side; the
+    distributed side broadcasts no local relation at all.  The dim is
+    the board's rectangle dim written to parquet, so the caller's own
+    source is not a driver list either."""
     from gdal_boots_spark.operators import cover
     from gdal_boots_spark.operators.spatial_join import pip_join_docs_any
     from gdal_boots_spark.operators.zonal import zonal_stats
@@ -1159,7 +1184,7 @@ def test_driver_relations_plan_no_python_rdd(spark, monkeypatch, tmp_path):
     check("pip_join", entrymod.queries()["pip_join"](spark, SF_SMOKE), cover_cols)
     for side, ceiling in GATE_SIDES.items():
         monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", ceiling)
-        check(f"pip_join_docs_any/{side}", pip_join_docs_any(docs, dim), cover_cols)
+        check(f"pip_join_docs_any/{side}", pip_join_docs_any(docs, dim), cover_cols if side == "broadcast" else None)
         check(f"zonal_stats/{side}", zonal_stats(spark, tiles, grid, dim), contrib_cols if side == "broadcast" else None)
 
 
@@ -1274,6 +1299,9 @@ def _embedding_case(spark, side):
 # executed plan holds)
 GATE_CASES = {
     "pip_join": (_board_case("pip_join", float_cols=("x", "y")), "MapInArrow _decode_geojson("),
+    # the span join's own decode runs on both sides; only the
+    # distributed side decodes the polygon dim
+    "pip_join_poly_spans": (_board_case("pip_join_poly_spans"), "MapInArrow _decode_geojson(poly_id"),
     "point_sampling": (_sampling_case, "FlatMapCoGroupsInPandas"),
     "embedding_neardup": (_embedding_case, "MapInPandas bucketize("),
 }
@@ -1296,6 +1324,38 @@ def test_broadcast_gate_both_ways(spark, monkeypatch, name):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert (marker in plan) == (side == "distributed"), (side, plan)
     assert out["broadcast"] == out["distributed"]
+
+
+def test_span_join_distributed_never_collects(spark, monkeypatch, tmp_path):
+    """Forced distributed, cold pip_join_docs_any and
+    poly_span_candidates builds over a parquet dim never collect it:
+    poly_dim is never called and no SparkContext.broadcast is made."""
+    from pyspark import SparkContext
+
+    from gdal_boots_spark import memo
+    from gdal_boots_spark.operators import cover
+    from gdal_boots_spark.operators import spatial_join as sj
+
+    path = str(tmp_path / "polys.parquet")
+    rect_polygons_df(spark).write.parquet(path)
+    polys = spark.read.parquet(path)
+    docs = interleaved_docs(spark, SF_SMOKE, poly_spans=True)
+    calls = []
+    real_broadcast = SparkContext.broadcast
+
+    def broadcast(self, value):
+        calls.append("broadcast")
+        return real_broadcast(self, value)
+
+    monkeypatch.setattr(SparkContext, "broadcast", broadcast)
+    monkeypatch.setattr(sj, "poly_dim", lambda p: calls.append("poly_dim"))
+    monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", GATE_SIDES["distributed"])
+    for build in (sj.pip_join_docs_any, sj.poly_span_candidates):
+        memo.clear()
+        assert build(docs, polys).count() > 0
+    memo.clear()
+    spark.catalog.clearCache()  # pip_join_docs_any persists its branch point
+    assert calls == []
 
 
 def test_dim_null_and_empty_geometry_rows(spark, monkeypatch):
