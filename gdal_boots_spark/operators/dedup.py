@@ -192,22 +192,22 @@ def embedding_neardup(
 
     TWO physical shapes, picked from the table's plan statistics (zero
     probe jobs — cover.fits_broadcast, the one switch the spatial dims
-    use too):
+    use too), both built from the ann.py kernels:
 
-    * exact broadcast path (table fits a broadcast): the base matrix
-      collects once (like ann.cosine_topk) and each Arrow batch does
-      one matmul, emitting only pairs over the threshold with a < b
-      (each unordered pair produced exactly once: by the batch holding
-      its smaller id).  Exact — the board-oracle contract.
+    * exact broadcast path (table fits a broadcast): the memoised
+      broadcast base matrix of ann.cosine_topk (``ann._cosine_matrix``,
+      one matmul per Arrow batch), emitting only pairs over the
+      threshold with a < b (each unordered pair produced exactly once:
+      by the batch holding its smaller id).  Exact — the board-oracle
+      contract.
 
-    * bucketed LSH path (the table exceeds the broadcast cap — the r8
-      closure of the 100 TB gap: the old code
-      ALWAYS collected the full embedding table to the driver): the
-      ann.py sign-LSH candidate generator (deterministic seeded integer
-      hyperplanes, ids-only (id, table, bucket) rows) feeds a bucket
-      self-join; candidate pairs dedup on the narrow (a, b) key;
-      vectors re-attach ONCE per side via equi-joins; the SAME exact
-      cosine >= threshold filter verifies every candidate.  No
+    * bucketed LSH path (the table exceeds the broadcast cap): the
+      ann.py sign-LSH bucketizer (``ann._lsh_buckets``: deterministic
+      seeded integer hyperplanes, ids-only (id, table, bucket) rows)
+      feeds a bucket self-join; candidate pairs dedup on the narrow
+      (a, b) key; ``ann._score_pairs`` re-attaches each side's vector
+      ONCE by an equi-join and scores every candidate with the exact
+      row-wise cosine, and ``cos >= threshold`` is a JVM filter.  No
       embedding payload ever rides a shuffle multiplied by n_tables,
       and nothing collects to the driver.  Precision is exact
       (verified); recall is the sign-LSH collision bound
@@ -217,99 +217,36 @@ def embedding_neardup(
       bigger buckets).
     """
     import numpy as np
+    import pyarrow as pa
 
-    from .. import memo
     from ..partitioning import plan_bytes
+    from .ann import _cosine_matrix, _emb_dim, _lsh_buckets, _score_pairs
     from .cover import fits_broadcast
 
     t = float(threshold)
     if fits_broadcast(plan_bytes(emb)):
-        from .ann import _broadcast_base
 
-        b = _broadcast_base(emb, id_col, vec_col)
+        def over_threshold(qid, bids, cos):
+            ii, jj = np.nonzero((cos >= t) & (qid[:, None] < bids[None, :]))
+            if len(ii):
+                return pa.RecordBatch.from_arrays(
+                    [pa.array(qid[ii]), pa.array(bids[jj]), pa.array(cos[ii, jj])], names=["a", "b", "cos"]
+                )
 
-        def pairs(batches):
-            import pandas as pd
+        return _cosine_matrix(emb, emb, id_col, vec_col, over_threshold, "a long, b long, cos double")
 
-            bids, bmat, bnorms = b.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                q = np.array(list(pdf["_vec"]), dtype=np.float64)
-                qn = np.linalg.norm(q, axis=1)
-                qn[qn == 0] = 1.0
-                qid = pdf["_qid"].to_numpy(np.int64)
-                cos = (q @ bmat.T) / (qn[:, None] * bnorms[None, :])
-                keep = (cos >= t) & (qid[:, None] < bids[None, :])
-                ii, jj = np.nonzero(keep)
-                if len(ii):
-                    yield pd.DataFrame({"a": qid[ii], "b": bids[jj], "cos": cos[ii, jj]})
+    def side(name):
+        return emb.select(F.col(id_col).cast("long").alias(name), F.col(vec_col).alias("_vec"))
 
-        qd = emb.select(F.col(id_col).alias("_qid"), F.col(vec_col).alias("_vec"))
-        return qd.mapInPandas(pairs, schema="a long, b long, cos double")
-
-    # ---- bucketed path: LSH candidates -> exact cosine verify --------
-    from .ann import _plane_matrix
-
-    # one probe job per session and table plan
-    dim = memo.get("emb_dim", memo.plan_key(emb, vec_col), lambda: len(emb.select(vec_col).first()[0]))
-    planes = [_plane_matrix(dim, bits, tbl) for tbl in range(n_tables)]
-
-    def bucketize(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.array(list(pdf["_vec"]), dtype=np.float64)
-            vid = pdf["_id"].to_numpy(np.int64)
-            outs = []
-            for tbl, P in enumerate(planes):
-                sign = (v @ P) > 0
-                bucket = (sign * (1 << np.arange(bits))[None, :]).sum(axis=1).astype(np.int64)
-                outs.append(pd.DataFrame({"_id": vid, "table": np.full(len(vid), tbl, np.int32), "bucket": bucket}))
-            yield pd.concat(outs, ignore_index=True)
-
-    vd = emb.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
-    bk = vd.mapInPandas(bucketize, schema="_id long, table int, bucket long")
-    a_side = bk.select(F.col("_id").alias("a"), "table", "bucket")
-    b_side = bk.select(F.col("_id").alias("b"), "table", "bucket")
+    bk = _lsh_buckets(side("_id"), _emb_dim(emb, vec_col), bits, n_tables)
     cand = (
-        a_side.join(b_side, ["table", "bucket"])
+        bk.withColumnRenamed("_id", "a")
+        .join(bk.withColumnRenamed("_id", "b"), ["table", "bucket"])
         .where(F.col("a") < F.col("b"))
         .select("a", "b")
         .dropDuplicates(["a", "b"])
     )
-    # re-attach each side's vector ONCE (narrow (a, b) pairs shuffled,
-    # each embedding crosses the wire once per side, never x n_tables)
-    withv = cand.join(vd.select(F.col("_id").alias("a"), F.col("_vec").alias("_va")), "a").join(
-        vd.select(F.col("_id").alias("b"), F.col("_vec").alias("_vb")), "b"
-    )
-
-    def verify(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            va = np.array(list(pdf["_va"]), dtype=np.float64)
-            vb = np.array(list(pdf["_vb"]), dtype=np.float64)
-            na = np.linalg.norm(va, axis=1)
-            nb = np.linalg.norm(vb, axis=1)
-            na[na == 0] = 1.0
-            nb[nb == 0] = 1.0
-            cos = (va * vb).sum(axis=1) / (na * nb)
-            keep = cos >= t
-            if keep.any():
-                yield pd.DataFrame(
-                    {
-                        "a": pdf["a"].to_numpy(np.int64)[keep],
-                        "b": pdf["b"].to_numpy(np.int64)[keep],
-                        "cos": cos[keep],
-                    }
-                )
-
-    return withv.mapInPandas(verify, schema="a long, b long, cos double")
+    return _score_pairs(cand, side("a"), side("b")).where(F.col("cos") >= t)
 
 
 def simhash_neardup(

@@ -12,7 +12,8 @@ never underfill).
 
 Scale shape: a bare ``Window.orderBy`` would collapse ALL rows into a
 single partition (Spark's global-window behavior) — a non-starter at
-10^12 documents.  The operator instead (1) range-partitions by key and
+10^12 documents.  The operator instead (``range_offsets``, which
+``sources.osm``'s dense fids share) (1) range-partitions by key and
 sorts within partitions, (2) aggregates ONE tiny per-partition token
 total to the driver (#partitions rows), (3) broadcasts the prefix
 offsets back and runs the cumulative window PARTITIONED by
@@ -26,6 +27,42 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def range_offsets(df: DataFrame, n: int, order: list, weight) -> tuple[DataFrame, DataFrame]:
+    """The scale-safe prefix sum over a global order: range-partition
+    ``df`` into ``n`` partitions by the ``order`` columns, sort within
+    partitions, and tag each row with its ``_pid``; ONE tiny aggregate
+    of ``weight`` (an aggregate Column, e.g. ``F.count("*")``) per
+    partition reaches the driver, and each partition's prefix offset —
+    the total of every earlier partition — comes back as the ``_off``
+    column.  A partition-local window plus ``_off`` then equals the
+    global window.
+
+    -> (ranged, src): ``ranged`` is persisted, because the offsets are
+    valid only for its partition boundaries — unpersist it once the
+    result is consumed; ``src`` is ``ranged`` plus ``_off``."""
+    ranged = (
+        df.repartitionByRange(n, *order).sortWithinPartitions(*order).withColumn("_pid", F.spark_partition_id())
+    ).persist()
+    totals = {r["_pid"]: r["t"] for r in ranged.groupBy("_pid").agg(weight.alias("t")).collect()}
+    offsets, acc = {}, 0
+    for pid in sorted(totals):
+        offsets[pid] = acc
+        acc += int(totals[pid])
+    if not offsets:  # empty input: an untyped map() would fail analysis
+        return ranged, ranged.withColumn("_off", F.lit(0).cast("long"))
+    if len(offsets) <= 256:
+        off_map = F.create_map(*[F.lit(v) for kv in sorted(offsets.items()) for v in kv])
+        return ranged, ranged.withColumn("_off", F.coalesce(off_map[F.col("_pid")], F.lit(0)))
+    # thousands of partitions would bloat the plan with a literal map;
+    # ship the offsets as a broadcast dimension instead (an Arrow local
+    # relation: no Python worker scans it)
+    off_df = df.sparkSession.createDataFrame(
+        pa.table(list(zip(*sorted(offsets.items()))), names=["_pid", "_off"]), "_pid int, _off long"
+    )
+    src = ranged.join(F.broadcast(off_df), "_pid", "left")
+    return ranged, src.withColumn("_off", F.coalesce(F.col("_off"), F.lit(0)))
 
 
 def pack_shards(
@@ -48,37 +85,11 @@ def pack_shards(
         toks = F.when(F.length(F.trim(F.col("text"))) == 0, F.lit(0)).otherwise(toks)
     else:
         toks = F.col(tokens_col)
-    spark = docs.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
+    n = num_partitions or docs.sparkSession.sparkContext.defaultParallelism
     out = docs.select(F.col(key_col), toks.cast("long").alias("n_tokens"))
-    ranged = out.repartitionByRange(n, F.col(key_col)).sortWithinPartitions(key_col).withColumn(
-        "_pid", F.spark_partition_id()
-    ).persist()
-    totals = {
-        r["_pid"]: r["t"]
-        for r in ranged.groupBy("_pid").agg(F.sum("n_tokens").alias("t")).collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(totals):
-        offsets[pid] = acc
-        acc += int(totals[pid])
+    ranged, src = range_offsets(out, n, [F.col(key_col)], F.sum("n_tokens"))
     w = Window.partitionBy("_pid").orderBy(F.col(key_col)).rowsBetween(Window.unboundedPreceding, -1)
-    if len(offsets) <= 256:
-        off_map = F.create_map(
-            *[F.lit(v) for kv in sorted(offsets.items()) for v in kv]
-        ) if offsets else F.create_map()
-        off_col = F.coalesce(off_map[F.col("_pid")], F.lit(0))
-        src = ranged
-    else:
-        # thousands of partitions would bloat the plan with a literal
-        # map; ship the offsets as a broadcast dimension instead (an
-        # Arrow local relation: no Python worker scans it)
-        off_df = spark.createDataFrame(
-            pa.table(list(zip(*sorted(offsets.items()))), names=["_pid", "_off"]), "_pid int, _off long"
-        )
-        src = ranged.join(F.broadcast(off_df), "_pid", "left")
-        off_col = F.coalesce(F.col("_off"), F.lit(0))
-    cum_before = off_col + F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
+    cum_before = F.col("_off") + F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
     # integer shard arithmetic (ADVICE r4): floor(double / budget)
     # loses ulps once cumulative tokens pass 2^53 (plausible at 10^12
     # docs); `div` stays in 64-bit integers end-to-end.  cum_before is

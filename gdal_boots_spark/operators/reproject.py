@@ -6,8 +6,9 @@ Pipeline:
   driver   — destination grid from the source bounds densified-boundary
              envelope in the target CRS (the curvature-safe version of
              what GDAL's SuggestedWarpOutput does)
-  executors— (1) mapInPandas over source tiles: each tile's dst-tile
-             span via vectorized corner+edge transform (+1 px margin)
+  executors— (1) mapInPandas over the distinct source tile keys: each
+             tile's dst-tile span via vectorized corner+edge transform
+             (+1 px margin), joined back to the pixel blobs in the JVM
              -> sources.tiles.explode_tiles
              (2) groupBy(dst tile) applyInPandas: paste contributions
              into a src-pixel buffer, transform the dst tile's pixel
@@ -23,6 +24,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..functions.geometry_fns import transform_geom_udf
 from ..geom.affine import invert_transform
@@ -106,14 +108,18 @@ def reproject(
                 box.append((pxs.min() - 1, np.ceil(pxs.max() + 1) + 1, pys.min() - 1, np.ceil(pys.max() + 1) + 1))
             yield pdf.assign(**dict(zip(["px0", "px1", "py0", "py1"], np.array(box, np.float64).reshape(-1, 4).T)))
 
-    cols = ["band", "tile_x", "tile_y", "width", "height", "dtype", "data"]
-    span_schema = (
-        "band int, tile_x int, tile_y int, width int, height int, dtype string, "
-        "data binary, px0 double, px1 double, py0 double, py1 double"
+    # a tile's destination box depends on its position and shape alone
+    # (every band shares it): compute it once per distinct tile key and
+    # join the pixel blobs back in the JVM, so no raster byte crosses
+    # into a Python worker before the assemble step
+    keys = ["tile_x", "tile_y", "width", "height"]
+    box_schema = StructType(
+        [tiles.schema[k] for k in keys] + [StructField(c, DoubleType()) for c in ("px0", "px1", "py0", "py1")]
     )
+    boxes = tiles.select(*keys).distinct().mapInPandas(spans, schema=box_schema)
+    cols = ["band", "tile_x", "tile_y", "width", "height", "dtype", "data"]
     cand = explode_tiles(
-        tiles.select(*cols).mapInPandas(spans, schema=span_schema), cols, og, "px0", "px1", "py0", "py1",
-        ("otx", "oty"),
+        tiles.select(*cols).join(boxes, keys), cols, og, "px0", "px1", "py0", "py1", ("otx", "oty"),
     )
 
     def assemble(key, pdf):

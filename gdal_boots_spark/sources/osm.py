@@ -468,8 +468,9 @@ def read_osm_distributed(
 
     ``dense_fids=True`` reproduces the driver parse exactly (fids are
     1..N in file order per layer) via a distributed prefix-sum rank
-    (range partition + per-partition counts + broadcast offsets — no
-    single-partition stage, planet-scale safe; r8).  ``False`` keeps
+    (packing.range_offsets: range partition + per-partition counts +
+    broadcast offsets — no single-partition stage, planet-scale safe;
+    r8).  ``False`` keeps
     fid = stable file-order sequence (unique, monotone, NOT dense)
     with zero extra jobs.
 
@@ -631,40 +632,20 @@ def read_osm_distributed(
         if dense_fids:
             from pyspark.sql.window import Window
 
-            # scale-safe dense fids (r8, VERDICT r7 item 5): the old
-            # bare Window.orderBy collapsed the whole layer into ONE
-            # partition — fine to ~10^7 rows, a wall at planet scale.
-            # Same fids via the packing.py prefix-sum pattern:
-            # range-partition by the order key, sort within partitions,
-            # ONE tiny per-partition count to the driver, broadcast the
-            # prefix offsets back, partition-local row_number + offset.
-            # (kind, seq) is unique per layer (seq is the element id
-            # sequence), so the assignment is deterministic under any
-            # partitioning.
+            from ..operators.packing import range_offsets
+
+            # scale-safe dense fids: a bare Window.orderBy would collapse
+            # the whole layer into ONE partition.  range_offsets is the
+            # one prefix-sum step (pack_shards uses it too): range
+            # partitions, ONE tiny per-partition count to the driver,
+            # prefix offsets back; then a partition-local row_number +
+            # offset.  (kind, seq) is unique per layer (seq is the
+            # element id sequence), so the assignment is deterministic
+            # under any partitioning.
             n = max(spark.sparkContext.defaultParallelism, 2)
-            ranged = (
-                df.repartitionByRange(n, F.col("kind"), F.col("seq"))
-                .sortWithinPartitions("kind", "seq")
-                .withColumn("_pid", F.spark_partition_id())
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            totals = {
-                r["_pid"]: r["c"]
-                for r in ranged.groupBy("_pid").agg(F.count("*").alias("c")).collect()
-            }
-            offsets, acc = {}, 0
-            for pid in sorted(totals):
-                offsets[pid] = acc
-                acc += int(totals[pid])
-            if offsets:
-                off_map = F.create_map(*[F.lit(v) for kv in sorted(offsets.items()) for v in kv])
-                off_col = F.coalesce(off_map[F.col("_pid")], F.lit(0))
-            else:  # empty layer: untyped map() would fail analysis
-                off_col = F.lit(0)
+            ranged, src = range_offsets(df, n, [F.col("kind"), F.col("seq")], F.count("*"))
             w = Window.partitionBy("_pid").orderBy("kind", "seq")
-            df = ranged.withColumn(
-                "fid", (F.row_number().over(w) + off_col).cast("long")
-            ).drop("_pid")
+            df = src.withColumn("fid", (F.row_number().over(w) + F.col("_off")).cast("long")).drop("_pid", "_off")
             cached.append(ranged)
         else:
             df = df.withColumn("fid", (F.col("kind").cast("long") * F.lit(1 << 62) + F.col("seq")))

@@ -108,13 +108,13 @@ def main():
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     sections.append((
         "IVF similarity search (scale path)",
-        "Map-side centroid assignment emits IDS-ONLY (id, cell) rows (one "
-        "matmul per Arrow batch), ONE equi-join on the int cell key, base "
-        "vectors re-attached once via an equi-join on bid with query "
-        "vectors broadcast, map-side rerank, then only narrow "
-        "(qid, bid, cos) rows reach the window top-k — no dedup exchange "
-        "(a pair can appear at most once) and no `_vec` in the cell "
-        "exchange.",
+        "Map-side centroid assignment (MapInArrow ivf_assign) emits "
+        "IDS-ONLY (id, cell) rows (one matmul per Arrow batch), ONE "
+        "equi-join on the int cell key, base vectors re-attached once via "
+        "an equi-join on bid with query vectors broadcast, the shared "
+        "MapInArrow pair_cosine scorer, then only narrow (qid, bid, cos) "
+        "rows reach the window top-k — no dedup exchange (a pair can "
+        "appear at most once) and no `_vec` in the cell exchange.",
         cap(ivf_topk(emb.where(F.col("vec_id") % 50 == 0), emb, k=5, n_cells=16, n_probe=8)),
     ))
 
@@ -122,11 +122,12 @@ def main():
 
     sections.append((
         "Sign-LSH similarity search (ids-only bucket join)",
-        "Bucketize maps emit NARROW (id, table, bucket) rows — no `_vec` "
-        "attribute appears in the bucket-join exchanges or the (qid, bid) "
-        "dedup; base vectors re-attach via ONE equi-join on bid and query "
-        "vectors broadcast, so embedding payloads cross the wire exactly "
-        "once instead of riding the bucket shuffle x n_tables.",
+        "The shared MapInArrow lsh_bucketize maps emit NARROW (id, table, "
+        "bucket) rows — no `_vec` attribute appears in the bucket-join "
+        "exchanges or the (qid, bid) dedup; base vectors re-attach via ONE "
+        "equi-join on bid and query vectors broadcast (pair_cosine), so "
+        "embedding payloads cross the wire exactly once instead of riding "
+        "the bucket shuffle x n_tables.",
         cap(ann_lsh_topk(emb.where(F.col("vec_id") % 50 == 0), emb, k=5, bits=4, n_tables=8)),
     ))
 

@@ -420,6 +420,39 @@ def test_operators_decode_once():
     assert not bad, bad
 
 
+def test_embedding_kernels_in_one_module():
+    """The embedding operators share one kernel set in operators/ann.py:
+    no module under operators/ builds vectors row by row with
+    ``list(pdf[...])``, and the sign-LSH bucketizer, the pair scorer and
+    their arithmetic (the bucket code and the row-wise cosine) are each
+    written once, in ann.py."""
+    import pathlib
+    import re
+
+    ops = pathlib.Path(__file__).resolve().parents[1] / "gdal_boots_spark" / "operators"
+    once = {
+        "bucketizer": re.compile(r"^\s*def\s+(?:_lsh_buckets|lsh_bucketize)\b", re.M),
+        "pair scorer": re.compile(r"^\s*def\s+(?:_score_pairs|pair_cosine)\b", re.M),
+        "bucket code": re.compile(r"\(1 << np\.arange\("),
+        "row-wise cosine": re.compile(r"\)\.sum\(axis=1\) / \("),
+    }
+    found = {name: [] for name in once}
+    bad = []
+    for path in sorted(ops.rglob("*.py")):
+        text = path.read_text()
+        if "list(pdf[" in text:
+            bad.append(f"{path.name}: list(pdf[")
+        for name, pat in once.items():
+            found[name] += [path.name] * len(pat.findall(text))
+    assert not bad, bad
+    assert found == {
+        "bucketizer": ["ann.py", "ann.py"],
+        "pair scorer": ["ann.py", "ann.py"],
+        "bucket code": ["ann.py"],
+        "row-wise cosine": ["ann.py"],
+    }, found
+
+
 def test_intersects_polygons_equals_reference():
     """The one exact refine, geom.pip.intersects_polygons, over a mixed
     batch read from a SLICED Arrow struct column (arrow_probes): Points,

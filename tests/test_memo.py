@@ -106,7 +106,8 @@ def test_warm_builds_run_no_job_and_no_broadcast(spark, monkeypatch, side):
     gate, runs no Spark job and makes no SparkContext.broadcast call: the
     collected dims, their broadcasts, the tile contributions, the auto-res
     aggregate, the ann base matrix and the embedding-width probe all come
-    from the memo."""
+    from the memo, and the LSH planes and IVF centroids ride in their UDF
+    closures."""
     import __spark_entry__ as entry
     from pyspark import SparkContext
 
@@ -115,7 +116,7 @@ def test_warm_builds_run_no_job_and_no_broadcast(spark, monkeypatch, side):
     monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", GATE_SIDES[side])
     names = (
         "pip_join", "pip_join_poly_spans", "rasterize_hist", "zonal_stats", "point_sampling", "polygonize",
-        "pip_join_shuffle", "ann_cosine", "embedding_neardup",
+        "pip_join_shuffle", "ann_cosine", "ann_lsh", "ann_ivf", "embedding_neardup",
     )
     qs = entry.all_queries()
     for name in names:

@@ -147,21 +147,20 @@ def test_ann_dedup_exchange_carries_no_vectors(spark):
     didx = lp.index("Deduplicate")
     dedup_line, child_line = lp[didx:].split("\n")[:2]
     # the dedup keys and its direct child are the narrow id pair
-    assert "_vec" not in dedup_line and "_bvec" not in dedup_line
-    assert "_vec" not in child_line and "_bvec" not in child_line
+    for payload in ("_vec", "_va", "_vb"):
+        assert payload not in dedup_line and payload not in child_line
     # every map node BELOW the dedup is a bucketizer whose OUTPUT list
     # (the [...] after the function) must be payload-free — the vector
     # enters the Python bucketizer but never leaves it
-    n_maps = 0
-    for line in lp[didx:].split("\n"):
-        if "MapInPandas" in line:
-            n_maps += 1
-            out_attrs = line.rsplit(", [", 1)[1].split("]", 1)[0]
-            assert "_vec" not in out_attrs and "_bvec" not in out_attrs
-            assert "bucket#" in out_attrs
-    assert n_maps == 2  # query-side + base-side bucketize
-    # the rerank map sits ABOVE the dedup (vectors attached once)
-    assert "MapInPandas" in lp[:didx]
+    maps = [line for line in lp[didx:].split("\n") if "MapInArrow" in line]
+    assert len(maps) == 2  # query-side + base-side bucketize
+    for line in maps:
+        assert "MapInArrow lsh_bucketize(" in line
+        out_attrs = line.rsplit(", [", 1)[1].split("]", 1)[0]
+        assert "_vec" not in out_attrs and "_va" not in out_attrs and "_vb" not in out_attrs
+        assert "bucket#" in out_attrs
+    # the pair scorer sits ABOVE the dedup (vectors attached once)
+    assert "MapInArrow pair_cosine(" in lp[:didx]
     assert out.count() > 0
 
 
@@ -180,6 +179,7 @@ def test_embedding_neardup_bucketed_parity_and_plan(spark, monkeypatch):
     # the auto-switch: a parquet-backed fixture this small stays exact
     pe = embedding_neardup(emb, threshold=0.4)._jdf.queryExecution().analyzed().toString()
     assert "Deduplicate" not in pe  # broadcast path has no pair dedup
+    assert "MapInArrow cosine_matrix(" in pe and "lsh_bucketize" not in pe
     monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", GATE_SIDES["distributed"])
     bucketed_df = embedding_neardup(emb, threshold=0.4, bits=2, n_tables=24)
     # plan audit: every exchange and the dedup are payload-free; the
@@ -187,10 +187,15 @@ def test_embedding_neardup_bucketed_parity_and_plan(spark, monkeypatch):
     lp = bucketed_df._jdf.queryExecution().analyzed().toString()
     didx = lp.index("Deduplicate")
     assert "_va" not in lp[didx:].split("\n")[0] and "_vec" not in lp[didx:].split("\n")[0]
-    for line in lp.split("\n"):
-        if "MapInPandas" in line and "bucketize" in line:
-            out_attrs = line.rsplit(", [", 1)[1].split("]", 1)[0]
-            assert "_vec" not in out_attrs and "bucket#" in out_attrs
+    buckets = [line for line in lp.split("\n") if "MapInArrow lsh_bucketize(" in line]
+    assert len(buckets) == 2  # one bucketizer per side of the bucket self-join
+    for line in buckets:
+        out_attrs = line.rsplit(", [", 1)[1].split("]", 1)[0]
+        assert "_vec" not in out_attrs and "bucket#" in out_attrs
+    # the exact scorer runs once, above the dedup, and the threshold is
+    # a JVM filter over its output
+    assert lp.count("MapInArrow pair_cosine(") == 1 and "MapInArrow pair_cosine(" in lp[:didx]
+    assert "Filter (cos#" in lp[: lp.index("MapInArrow pair_cosine(")]
 
 
 def test_ivf_recall_vs_bruteforce(spark):

@@ -55,6 +55,26 @@ def test_reproject_4326_to_3857_matches_dense(spark):
     assert inb.mean() > 0.85
 
 
+def test_reproject_span_pass_takes_no_pixels(spark):
+    """The destination-box pass runs over the distinct tile keys only:
+    the executed plan's span node reads no ``data`` column (the pixel
+    blobs join back in the JVM), and the output is still the dense
+    inverse mapping."""
+    rng = np.random.default_rng(13)
+    src = rng.integers(0, 255, (2, 40, 48)).astype(np.int32)
+    grid = RasterGrid("rs", 4326, (0.01, 0.0, 26.0, 0.0, -0.01, 54.0), 48, 40, tile_w=16, tile_h=16,
+                      bands=2, dtype="int32")
+    tiles = array_to_tiles(spark, src, grid)
+    out_tiles, og = reproject(tiles, grid, 4326, out_grid=grid)
+    assert np.array_equal(tiles_to_array(out_tiles, og), src)
+    plan = out_tiles._jdf.queryExecution().executedPlan().toString()
+    spans = [line for line in plan.split("\n") if "MapInPandas spans(" in line]
+    assert spans
+    for line in spans:
+        args = line.split("spans(", 1)[1].split(")", 1)[0]
+        assert "data#" not in args and "band#" not in args, line
+
+
 def test_reproject_proj4_albers(spark):
     """Custom proj4 CRS arm (test_raster.py:489-495): output carries
     proj4, values drawn from the source value set."""

@@ -1303,7 +1303,7 @@ GATE_CASES = {
     # distributed side decodes the polygon dim
     "pip_join_poly_spans": (_board_case("pip_join_poly_spans"), "MapInArrow _decode_geojson(poly_id"),
     "point_sampling": (_sampling_case, "FlatMapCoGroupsInPandas"),
-    "embedding_neardup": (_embedding_case, "MapInPandas bucketize("),
+    "embedding_neardup": (_embedding_case, "MapInArrow lsh_bucketize("),
 }
 
 
