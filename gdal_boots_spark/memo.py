@@ -18,9 +18,16 @@ single build) then pays the collect or probe job once.
 * **Session.**  The memo serves one ``applicationId``; a new
   application drops every entry, so no key carries the ID.
 * **Eviction.**  Each kind is a least-recently-used map bounded by the
-  call site's ``limit``.  An evicted ``Broadcast``, or one held in an
-  evicted tuple, is unpersisted, never destroyed: plans that are
-  already built may still read it.
+  call site's ``limit``.  An evicted ``Broadcast`` or DataFrame, or one
+  held in an evicted tuple, is unpersisted, never destroyed: plans that
+  are already built may still read it.
+* **Persisted relations.**  ``persist`` is the engine's one way to
+  cache a DataFrame.  Entries are keyed by semantic hash and keep the
+  file fingerprint ``plan_key`` saw; Spark's cache matches a file
+  relation by root path only, so a same-hash plan over rewritten files
+  unpersists the stale entry first.  They are never evicted (a built
+  plan would recompute them), only freed by ``clear()`` or the
+  ``releasing()`` block that first persisted them.
 
 Callers must treat returned values as read-only; they are the memo's
 entries themselves.
@@ -31,6 +38,7 @@ from __future__ import annotations
 import os
 import threading
 from collections import OrderedDict
+from contextlib import contextmanager
 from typing import Any, Callable
 from urllib.parse import unquote, urlparse
 
@@ -61,8 +69,9 @@ def _active() -> bool:
 
 def _release(value: Any) -> None:
     from pyspark.broadcast import Broadcast
+    from pyspark.sql import DataFrame
 
-    if isinstance(value, Broadcast):
+    if isinstance(value, (Broadcast, DataFrame)):
         value.unpersist()
     elif isinstance(value, tuple):  # e.g. a collected dim holding its broadcast
         for v in value:
@@ -94,9 +103,45 @@ def get(kind: str, key: Any, build: Callable[[], Any], limit: int = 64) -> Any:
     return value
 
 
+def persist(df):
+    """``df`` persisted (MEMORY_AND_DISK) and owned by the memo.  Every
+    call persists: a no-op while Spark holds the plan, a re-cache after
+    an outside ``clearCache``.  A plan without a key is owned too."""
+    from pyspark.storagelevel import StorageLevel
+
+    key = plan_key(df)
+    h, files = key[0] if key is not None else (object(), None)
+    with _lock:
+        entries = _entries.setdefault("persist", OrderedDict()) if _active() else {}
+        old = entries.get(h)
+        hit = old is not None and old[1] == files
+        _counts.setdefault("persist", [0, 0])[0 if hit else 1] += 1
+        if not hit:
+            entries[h] = (df, files)
+    if old is not None and not hit:  # same plan over rewritten files
+        _release(old[0])
+    return df.persist(StorageLevel.MEMORY_AND_DISK)
+
+
+@contextmanager
+def releasing():
+    """Unpersist, on exit, every relation ``persist`` began to own
+    inside the block; entries owned before it stay."""
+    with _lock:
+        before = dict(_entries.get("persist", {}))
+    try:
+        yield
+    finally:
+        with _lock:
+            entries = _entries.get("persist", {})
+            dropped = [entries.pop(k) for k, v in list(entries.items()) if before.get(k) is not v]
+        for df, _files in dropped:
+            _release(df)
+
+
 def clear() -> None:
-    """Drop every entry (unpersisting memoised broadcasts) and zero the
-    hit/miss counts."""
+    """Drop every entry (unpersisting memoised broadcasts and persisted
+    relations) and zero the hit/miss counts."""
     with _lock:
         dropped = [v for entries in _entries.values() for v in entries.values()] if _active() else []
         _entries.clear()

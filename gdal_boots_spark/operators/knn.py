@@ -1,30 +1,24 @@
 """Grid-pruned k-nearest-neighbours join — engine-only operator
 (north_rule; no reference counterpart, SURVEY §2.3 "kNN").
 
-Algorithm (ring expansion over the cell index, SURVEY §2.9):
+Algorithm (one lazy plan over the cell index, SURVEY §2.9; details in
+``knn_join``):
 
-    r = 0, remaining = all queries
-    repeat with r growing GEOMETRICALLY (r <- max(2r, r+1)):
-        annulus(r_prev, r] cells of each remaining query (exact
-            Chebyshev annulus — inner cells were joined in earlier
-            rounds, so no candidate is ever produced twice; geometric
-            growth makes the driver-synchronous round count
-            O(log domain) instead of O(domain))
-        ⋈ base points on cell_id        (hash join; broadcast shells)
-        accumulate candidates
-        a query FINISHES when it holds >= k candidates whose k-th
-        smallest distance < r * min(cell_w, cell_h) — nothing outside
-        the explored (2r+1)x(2r+1) block can be closer or tie-win
+    phase 1: each query's radius-r0 cell block ⋈ base points on
+        cell_id, capped to the top-k per query
+    phase 2: a query not provably finished (fewer than k candidates, or
+        a k-th distance >= r0 * min(cell_w, cell_h)) explodes only the
+        annulus out to the radius that provably holds its true top-k
     top-k per query: row_number over (dist, base_id)  — deterministic
         tie-break, reproducible under any parallelism
 
 Distance is planar Euclidean in coordinate units (degree space for
 EPSG:4326 inputs — documented engine semantics).
 
-Scale shape: each round is one equi-join keyed by cell id + one
-partial agg; only *unfinished* queries re-enter, so round volume decays
-geometrically.  The candidate accumulator is persisted per round
-(checkpointable by the resumable runner).
+Scale shape: each phase is one equi-join keyed by cell id plus one qid
+window; only unfinished queries enter phase 2.  Nothing is persisted:
+the phase-1 exchange feeds both of its consumers through Spark's
+exchange reuse.
 """
 
 from __future__ import annotations

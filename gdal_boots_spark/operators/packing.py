@@ -28,8 +28,10 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 
-def range_offsets(df: DataFrame, n: int, order: list, weight) -> tuple[DataFrame, DataFrame]:
+
+def range_offsets(df: DataFrame, n: int, order: list, weight) -> DataFrame:
     """The scale-safe prefix sum over a global order: range-partition
     ``df`` into ``n`` partitions by the ``order`` columns, sort within
     partitions, and tag each row with its ``_pid``; ONE tiny aggregate
@@ -39,22 +41,23 @@ def range_offsets(df: DataFrame, n: int, order: list, weight) -> tuple[DataFrame
     column.  A partition-local window plus ``_off`` then equals the
     global window.
 
-    -> (ranged, src): ``ranged`` is persisted, because the offsets are
-    valid only for its partition boundaries — unpersist it once the
-    result is consumed; ``src`` is ``ranged`` plus ``_off``."""
-    ranged = (
+    -> the range-partitioned rows with ``_pid`` and ``_off``.  They are
+    read from a ``memo.persist`` copy, because the offsets are valid
+    only for its partition boundaries; ``memo.clear()`` or the
+    enclosing ``StageRunner`` stage frees it."""
+    ranged = memo.persist(
         df.repartitionByRange(n, *order).sortWithinPartitions(*order).withColumn("_pid", F.spark_partition_id())
-    ).persist()
+    )
     totals = {r["_pid"]: r["t"] for r in ranged.groupBy("_pid").agg(weight.alias("t")).collect()}
     offsets, acc = {}, 0
     for pid in sorted(totals):
         offsets[pid] = acc
         acc += int(totals[pid])
     if not offsets:  # empty input: an untyped map() would fail analysis
-        return ranged, ranged.withColumn("_off", F.lit(0).cast("long"))
+        return ranged.withColumn("_off", F.lit(0).cast("long"))
     if len(offsets) <= 256:
         off_map = F.create_map(*[F.lit(v) for kv in sorted(offsets.items()) for v in kv])
-        return ranged, ranged.withColumn("_off", F.coalesce(off_map[F.col("_pid")], F.lit(0)))
+        return ranged.withColumn("_off", F.coalesce(off_map[F.col("_pid")], F.lit(0)))
     # thousands of partitions would bloat the plan with a literal map;
     # ship the offsets as a broadcast dimension instead (an Arrow local
     # relation: no Python worker scans it)
@@ -62,7 +65,7 @@ def range_offsets(df: DataFrame, n: int, order: list, weight) -> tuple[DataFrame
         pa.table(list(zip(*sorted(offsets.items()))), names=["_pid", "_off"]), "_pid int, _off long"
     )
     src = ranged.join(F.broadcast(off_df), "_pid", "left")
-    return ranged, src.withColumn("_off", F.coalesce(F.col("_off"), F.lit(0)))
+    return src.withColumn("_off", F.coalesce(F.col("_off"), F.lit(0)))
 
 
 def pack_shards(
@@ -87,40 +90,20 @@ def pack_shards(
         toks = F.col(tokens_col)
     n = num_partitions or docs.sparkSession.sparkContext.defaultParallelism
     out = docs.select(F.col(key_col), toks.cast("long").alias("n_tokens"))
-    ranged, src = range_offsets(out, n, [F.col(key_col)], F.sum("n_tokens"))
+    src = range_offsets(out, n, [F.col(key_col)], F.sum("n_tokens"))
     w = Window.partitionBy("_pid").orderBy(F.col(key_col)).rowsBetween(Window.unboundedPreceding, -1)
     cum_before = F.col("_off") + F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
     # integer shard arithmetic (ADVICE r4): floor(double / budget)
     # loses ulps once cumulative tokens pass 2^53 (plausible at 10^12
     # docs); `div` stays in 64-bit integers end-to-end.  cum_before is
     # non-negative so floor == integer division.
-    res = src.select(
+    return src.select(
         key_col,
         "n_tokens",
         cum_before.cast("long").alias("_cum"),
     ).select(
         key_col, "n_tokens", F.expr(f"_cum div CAST({int(budget)} AS BIGINT)").alias("shard")
     )
-    # NOTE: `ranged` stays persisted until the caller is done — the
-    # collected per-partition offsets are only valid for the cached
-    # partition boundaries, so unpersisting before the result is
-    # consumed would risk a recompute with different boundaries.
-    # Call pack_release(result) once the result has been materialized
-    # (ADVICE r5: repeated invocations — bench best-of reps, oracle
-    # sweeps — otherwise accumulate cached copies).
-    res._pack_cache = ranged
-    return res
-
-
-def pack_release(res: DataFrame) -> None:
-    """Unpersist the internal cache of a pack_shards result.  Safe to
-    call exactly once after the result DataFrame has been consumed
-    (collected / written); re-consuming the result afterwards would
-    recompute with possibly different range boundaries."""
-    cache = getattr(res, "_pack_cache", None)
-    if cache is not None:
-        cache.unpersist()
-        res._pack_cache = None
 
 
 def pack_oracle_sql(budget: int, key_sql: str = "doc_id", tokens_sql: str | None = None) -> str:

@@ -30,6 +30,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..geom.polygonize_kernel import (
     boundary_edges,
     cancel_paired_edges,
@@ -160,7 +161,7 @@ def polygonize(
     _report(0.0, "polygonize: tile sweep")
     src = tiles.where(f"band = {int(band)}").select("tile_x", "tile_y", "width", "height", "dtype", "data")
     # the one branch point: components and border runs both read it
-    sweep = src.mapInArrow(_per_tile(grid, exclude), _SWEEP).persist()
+    sweep = memo.persist(src.mapInArrow(_per_tile(grid, exclude), _SWEEP))
     if progress is not None:
         sweep.count()  # materialize the per-tile pass into the persisted cache
         _report(0.4, "polygonize: merge graph, connected components, ring assembly")
@@ -236,7 +237,7 @@ def polygonize(
         assemble, schema="comp_id string, value double, n_pixels long, geojson string"
     )
     if progress is not None:
-        out = out.persist()
+        out = memo.persist(out)
         out.count()
         _report(1.0, "polygonize: done")
     return out

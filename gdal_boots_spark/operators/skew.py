@@ -4,7 +4,7 @@ north_rule: "skew is handled explicitly with salted repartitioning on
 hot H3 cells" (+ AQE for residual skew, enabled in session.py).
 
 ``salted_join`` is the generic pattern (SURVEY §4.2): count keys on the
-probe side (sampled for big inputs), pick keys above a hotness
+probe side, pick keys above a hotness
 threshold, split the probe side's hot rows across S salts and explode
 the build side's hot rows x S.  The result is row-identical to a plain
 inner equi-join while the hot key's work spreads over S reducers.
@@ -16,16 +16,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def hot_keys(df: DataFrame, key: str, threshold: int, sample_fraction: float | None = None) -> DataFrame:
-    """Keys whose (estimated) row count exceeds `threshold`."""
-    probe = df.sample(sample_fraction, seed=42) if sample_fraction else df
-    scale = 1.0 / sample_fraction if sample_fraction else 1.0
-    return (
-        probe.groupBy(key)
-        .agg((F.count("*") * scale).alias("est_rows"))
-        .where(F.col("est_rows") > threshold)
-        .select(key)
-    )
+def hot_keys(df: DataFrame, key: str, threshold: int) -> DataFrame:
+    """Keys whose row count exceeds `threshold`."""
+    return df.groupBy(key).agg(F.count("*").alias("n")).where(F.col("n") > threshold).select(key)
 
 
 def salted_join(
@@ -34,8 +27,6 @@ def salted_join(
     key: str,
     salt: int = 8,
     hot_threshold: int = 100_000,
-    sample_fraction: float | None = None,
-    how: str = "inner",
 ) -> DataFrame:
     """Equi-join `big ⋈ small` on `key`, salting hot keys S ways.
 
@@ -43,7 +34,7 @@ def salted_join(
     hot keys are exploded to all S salts, others ride salt 0.  Result
     rows are exactly those of the unsalted join.
     """
-    hot = hot_keys(big, key, hot_threshold, sample_fraction).withColumn("_hot", F.lit(True))
+    hot = hot_keys(big, key, hot_threshold).withColumn("_hot", F.lit(True))
 
     b = big.join(F.broadcast(hot), key, "left")
     b = b.withColumn(
@@ -60,5 +51,4 @@ def salted_join(
     ).drop("_hot")
     s = s.withColumn("_salt", F.explode("_salt"))
 
-    out = b.join(s, [key, "_salt"], how)
-    return out.drop("_salt")
+    return b.join(s, [key, "_salt"]).drop("_salt")

@@ -356,8 +356,6 @@ def pip_join_docs_any(docs: DataFrame, polys: DataFrame, res: int | None = None)
     for a mapInArrow row filter.  A plain where()-split without the
     persist would recompute the candidate subtree twice.)
     """
-    from pyspark.storagelevel import StorageLevel
-
     res, cover, polygons = _span_dim(polys, res)
     carry = (polygons,) if isinstance(polygons, str) else ()
     pt_pairs = pip_join_docs(docs, polys, res=res).selectExpr("doc_id", "span_pos", "poly_id")
@@ -365,10 +363,8 @@ def pip_join_docs_any(docs: DataFrame, polys: DataFrame, res: int | None = None)
 
     # persist (NOT localCheckpoint): lineage survives, so an executor
     # loss on a 1000-node cluster recomputes the lost partitions instead
-    # of failing the job; spill-to-disk bounds memory.  Nothing frees
-    # the cached copy when the plan is released: the CacheManager holds
-    # it until unpersist/clearCache, across Python and JVM GC.
-    c = cand.persist(StorageLevel.MEMORY_AND_DISK)
+    # of failing the job; spill-to-disk bounds memory.
+    c = memo.persist(cand)
     fast = c.where("rect AND _prect").selectExpr("doc_id", "span_pos", "poly_id")
     slow = where_intersects(
         c.where("NOT (rect AND _prect)"), "poly_id", ("geom", "minx", "miny", "maxx", "maxy", "rect"), polygons

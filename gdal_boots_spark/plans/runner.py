@@ -31,6 +31,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
+
 
 class StageRunner:
     def __init__(self, spark: SparkSession, root: str):
@@ -70,31 +72,31 @@ class StageRunner:
             return self.spark.read.parquet(out_path)
 
         t0 = time.perf_counter()
-        df = fn()
-        df.write.mode("overwrite").parquet(out_path)
-        out = self.spark.read.parquet(out_path)
+        with memo.releasing():  # fn()'s cached relations end at commit
+            fn().write.mode("overwrite").parquet(out_path)
+            out = self.spark.read.parquet(out_path)
 
-        # per-file (≈ per-partition) lineage + row counts — the Iceberg
-        # manifest-entry analogue, computed from the files as written
-        lineage = (
-            out.groupBy(F.input_file_name().alias("file"))
-            .agg(F.count("*").alias("rows"))
-            .select(F.lit(name).alias("stage"), "file", "rows")
-        )
-        self._write_metrics(name, lineage)
-        mrows = self.spark.read.parquet(os.path.join(self.root, "_metrics", name)).collect()
-        total = sum(r["rows"] for r in mrows)
+            # per-file (≈ per-partition) lineage + row counts — the Iceberg
+            # manifest-entry analogue, computed from the files as written
+            lineage = (
+                out.groupBy(F.input_file_name().alias("file"))
+                .agg(F.count("*").alias("rows"))
+                .select(F.lit(name).alias("stage"), "file", "rows")
+            )
+            self._write_metrics(name, lineage)
+            mrows = self.spark.read.parquet(os.path.join(self.root, "_metrics", name)).collect()
+            total = sum(r["rows"] for r in mrows)
 
-        manifest = self._load_manifest()
-        manifest[name] = {
-            "status": "done",
-            "rows": int(total),
-            "files": len(mrows),
-            "wall_sec": round(time.perf_counter() - t0, 3),
-            "fingerprint": fingerprint,
-            "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        self._save_manifest(manifest)
+            manifest = self._load_manifest()
+            manifest[name] = {
+                "status": "done",
+                "rows": int(total),
+                "files": len(mrows),
+                "wall_sec": round(time.perf_counter() - t0, 3),
+                "fingerprint": fingerprint,
+                "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            }
+            self._save_manifest(manifest)
         self.events.append({"stage": name, "action": "ran", "rows": int(total)})
         return out
 

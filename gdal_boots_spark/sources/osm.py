@@ -24,6 +24,7 @@ import numpy as np
 
 from pyspark.sql import SparkSession
 
+from .. import memo
 from .vector_io import FEATURE_SCHEMA, VectorDataset
 
 # keys OGR's default osmconf drops entirely (verified on the fixture:
@@ -474,14 +475,13 @@ def read_osm_distributed(
     fid = stable file-order sequence (unique, monotone, NOT dense)
     with zero extra jobs.
 
-    Feature rows are persisted (MEMORY_AND_DISK) before the 5-way layer
+    Feature rows are persisted (``memo.persist``) before the 5-way layer
     split — a where()-split of one DataFrame into consumed branches
     recomputes the whole subtree per branch otherwise."""
     import os as _os
     import tempfile
 
     from pyspark.sql import functions as F
-    from pyspark.storagelevel import StorageLevel
 
     if work_dir is None:
         work_dir = tempfile.mkdtemp(prefix="osm_ndjson_")
@@ -562,7 +562,7 @@ def read_osm_distributed(
         way_geo.select(F.col("id").alias("wid"), F.col("nds").alias("wnds"), "pts"), "wid", "left"
     ).groupBy("id").agg(F.collect_list(F.struct("wid", "wnds", "pts")).alias("wgeo"))
     rel_in = rels.join(rway, "id", "left")
-    rel_out = rel_in.mapInPandas(_rel_rows, schema=feat_schema).persist(StorageLevel.MEMORY_AND_DISK)
+    rel_out = memo.persist(rel_in.mapInPandas(_rel_rows, schema=feat_schema))
 
     consumed_df = rel_out.where(F.col("layer") == "__consumed").select("wid").distinct()
 
@@ -622,11 +622,10 @@ def read_osm_distributed(
     node_out = nodes.mapInPandas(_node_rows, schema=feat_schema)
 
     feats = node_out.unionByName(rel_out.where(F.col("layer") != "__consumed")).unionByName(way_out)
-    feats = feats.persist(StorageLevel.MEMORY_AND_DISK)
+    feats = memo.persist(feats)
 
     names = ["points", "lines", "multilinestrings", "multipolygons", "other_relations"]
     layers = {}
-    cached = [rel_out, feats]
     for name in names:
         df = feats.where(F.col("layer") == name)
         if dense_fids:
@@ -643,16 +642,10 @@ def read_osm_distributed(
             # element id sequence), so the assignment is deterministic
             # under any partitioning.
             n = max(spark.sparkContext.defaultParallelism, 2)
-            ranged, src = range_offsets(df, n, [F.col("kind"), F.col("seq")], F.count("*"))
+            src = range_offsets(df, n, [F.col("kind"), F.col("seq")], F.count("*"))
             w = Window.partitionBy("_pid").orderBy("kind", "seq")
             df = src.withColumn("fid", (F.row_number().over(w) + F.col("_off")).cast("long")).drop("_pid", "_off")
-            cached.append(ranged)
         else:
             df = df.withColumn("fid", (F.col("kind").cast("long") * F.lit(1 << 62) + F.col("seq")))
         layers[name] = df.select("fid", "gtype", "geojson", "props_json")
-    vd = VectorDataset(layers)
-    # expose the persisted handles for release() (ADVICE r6: repeated
-    # invocations otherwise leak cached copies, same leak pack_release
-    # fixed for pack_shards)
-    vd._cached = tuple(cached)
-    return vd
+    return VectorDataset(layers)

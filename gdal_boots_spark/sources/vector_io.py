@@ -181,17 +181,6 @@ class VectorDataset:
         """reference ``layers.first()`` (gdal.py:621, 701)."""
         return next(iter(self._layers.values()))
 
-    def release(self) -> None:
-        """Unpersist any cached DataFrames a distributed reader attached
-        (read_osm_distributed persists its relation-assembly branch point
-        and the unioned feature set).  Mirrors pack_release (ADVICE r6:
-        repeated invocations — bench reps, retries — otherwise leak
-        cached copies).  Safe to call once after the layers have been
-        consumed; re-reading a layer afterwards recomputes from source."""
-        for df in getattr(self, "_cached", ()):
-            df.unpersist()
-        self._cached = ()
-
     def add_layer(self, name: str, df: DataFrame, overwrite: bool = False) -> None:
         """Duplicate layer names error unless overwrite (the reference
         add_layer creates-or-fails at the OGR level)."""

@@ -48,7 +48,7 @@ def main() -> None:
     # LLM-pipeline branch: chunk the raw documents table, pack chunks
     # into token-budget shards (operators/chunking.py, packing.py)
     from gdal_boots_spark.operators.chunking import chunk_documents
-    from gdal_boots_spark.operators.packing import pack_release, pack_shards
+    from gdal_boots_spark.operators.packing import pack_shards
 
     raw_docs = spark.read.parquet(f"{args.sf_dir}/documents.parquet")
     chunks = runner.run("chunk", lambda: chunk_documents(raw_docs, chunk_tokens=64), fp)
@@ -61,8 +61,7 @@ def main() -> None:
         out = pack_shards(keyed, budget=5000, key_col="chunk_key", tokens_col="n_tokens")
         return out
 
-    packed = runner.run("pack", _pack, fp)
-    pack_release(packed)
+    runner.run("pack", _pack, fp)
     for e in runner.events:
         print(e)
     spark.stop()

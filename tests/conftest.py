@@ -22,6 +22,15 @@ def spark():
     s.stop()
 
 
+def persisted_rdds(spark) -> set:
+    """Ids of the RDDs the SparkContext holds persisted."""
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().keysIterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(it.next())
+    return ids
+
+
 def duck_with_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """Mirror the driver's oracle setup: each parquet as a view."""
     con = duckdb.connect()

@@ -116,8 +116,9 @@ def test_chunk_to_pack_shards_composition(spark):
     token-budget shards.  Every shard except possibly the last stays
     within budget, every chunk is assigned exactly once, and chunk
     keys are unique (pack_shards' contract)."""
+    from gdal_boots_spark import memo
     from gdal_boots_spark.operators.chunking import chunk_documents
-    from gdal_boots_spark.operators.packing import pack_release, pack_shards
+    from gdal_boots_spark.operators.packing import pack_shards
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     chunks = chunk_documents(docs, chunk_tokens=64).select(
@@ -128,7 +129,7 @@ def test_chunk_to_pack_shards_composition(spark):
     assert chunks.select("chunk_key").distinct().count() == n_chunks  # unique keys
     packed = pack_shards(chunks, budget=500, key_col="chunk_key", tokens_col="n_tokens")
     rows = packed.collect()
-    pack_release(packed)
+    memo.clear()  # drops the range cache
     assert len(rows) == n_chunks  # every chunk assigned once
     by_shard = {}
     for r in rows:

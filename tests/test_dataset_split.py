@@ -115,13 +115,13 @@ def test_pack_shards_matches_duckdb_oracle(spark):
     """Contiguous token-budget packing == the ANSI window-function
     oracle, plus the packing invariants: shards are contiguous in key
     order, monotone, and under-budget before their last document."""
-    from gdal_boots_spark.operators.packing import pack_oracle_sql, pack_release, pack_shards
+    from gdal_boots_spark import memo
+    from gdal_boots_spark.operators.packing import pack_oracle_sql, pack_shards
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     res = pack_shards(docs, budget=5000)
     got = res.toPandas()
-    pack_release(res)  # ADVICE r5: drop the internal range cache
-    assert res._pack_cache is None
+    memo.clear()  # drops the range cache
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{SF}/documents.parquet')")
     want = con.execute(pack_oracle_sql(5000)).df()
@@ -134,7 +134,7 @@ def test_pack_shards_matches_duckdb_oracle(spark):
     wide = pack_shards(docs, budget=5000, num_partitions=400)
     assert "LocalTableScan" in wide._jdf.queryExecution().executedPlan().toString()
     got_wide = wide.toPandas()
-    pack_release(wide)
+    memo.clear()
     assert got_wide[cols].sort_values(cols).reset_index(drop=True).equals(b)
     # invariants
     srt = got.sort_values("doc_id").reset_index(drop=True)

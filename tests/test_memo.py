@@ -1,9 +1,11 @@
 """The session memo: no stale reads after a rewrite, per-raster
-broadcasts that survive eviction, warm rebuilds, and no ad-hoc cache
-outside ``gdal_boots_spark/memo.py``."""
+broadcasts that survive eviction, warm rebuilds, persisted relations
+it owns and frees, and no ad-hoc cache outside
+``gdal_boots_spark/memo.py``."""
 
 import ast
 import pathlib
+import re
 
 import numpy as np
 import pytest
@@ -41,6 +43,34 @@ def test_rewritten_parquet_path_serves_new_rows(spark, tmp_path):
     _write_rect_dim(spark, path, 8, 2.0)
     assert [r["poly_id"] for r in read_parquet_memo(spark, path).collect()] == [8]
     assert pairs() == [(2, 8)]
+
+
+def test_rewritten_file_serves_no_stale_persisted_rows(spark, tmp_path):
+    """A persisted branch point over a file that a writer other than
+    Spark rewrites (Spark's cache matches a file relation by its root
+    path and only a Spark writer refreshes it): the span join over the
+    rewritten file equals the join over a fresh copy of the new rows,
+    not the old file's cached candidates."""
+    import pyarrow.parquet as pq
+
+    from gdal_boots_spark.operators.spatial_join import pip_join_docs_any
+    from gdal_boots_spark.sources.synth import interleaved_docs, rect_polygons_df
+
+    table = interleaved_docs(spark, SF_SMOKE, poly_spans=True).toArrow()
+    path, fresh = str(tmp_path / "docs.parquet"), str(tmp_path / "fresh.parquet")
+
+    def pairs(p):
+        got = pip_join_docs_any(spark.read.parquet(p), rect_polygons_df(spark)).collect()
+        return sorted(tuple(r) for r in got)
+
+    pq.write_table(table, path)
+    assert len(pairs(path)) == 337
+    third = table.slice(0, table.num_rows // 3)
+    pq.write_table(third, path)
+    pq.write_table(third, fresh)
+    want = pairs(fresh)
+    assert len(want) == 120
+    assert pairs(path) == want
 
 
 def test_many_rasters_sample_their_own_values(spark):
@@ -169,13 +199,26 @@ def test_memo_lru_and_clear(spark, monkeypatch):
     assert released == [bc]
     memo.get("t", 11, lambda: 11, limit=1)
     assert released == [bc, held]
+    # a DataFrame is released the same way: evicted (here inside a
+    # tuple) or, once persisted, by clear()
+    frame = spark.range(3)
+    real = type(frame).unpersist
+    monkeypatch.setattr(type(frame), "unpersist", lambda self, blocking=False: released.append(self) or real(self))
+    memo.get("t", 12, lambda: ("dim", frame), limit=1)
+    memo.get("t", 13, lambda: 13, limit=1)
+    assert released == [bc, held, frame]
+    cached = memo.persist(spark.range(4))
+    assert cached.storageLevel.useDisk and cached.storageLevel.useMemory
     memo.clear()
+    assert released == [bc, held, frame, cached]
+    assert not cached.storageLevel.useMemory
     assert memo.stats() == {}
 
 
 def test_no_session_cache_outside_memo():
-    """Only memo.py may read applicationId or keep a module-level
-    ``*_CACHE``: session memos have one mechanism."""
+    """Only memo.py may read applicationId, keep a module-level
+    ``*_CACHE`` or persist a relation (``.persist(`` / ``.cache()``):
+    session memos and cached relations have one owner."""
     bad = []
     for path in sorted(PKG.rglob("*.py")):
         if path.name == "memo.py" and path.parent == PKG:
@@ -183,6 +226,7 @@ def test_no_session_cache_outside_memo():
         src = path.read_text()
         if "applicationId" in src:
             bad.append(f"{path.name}: applicationId")
+        bad.extend(f"{path.name}: {m}" for m in re.findall(r"(?<!\bmemo)\.persist\(|\.cache\(\)", src))
         for node in ast.parse(src).body:
             targets = node.targets if isinstance(node, ast.Assign) else [getattr(node, "target", None)]
             for t in targets:

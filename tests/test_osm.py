@@ -15,6 +15,7 @@ import sqlite3
 
 import pytest
 
+from gdal_boots_spark import memo
 from gdal_boots_spark.sources.osm import read_osm
 
 OSM = "/root/reference/tests/fixtures/minsk-boundary.osm"
@@ -247,7 +248,7 @@ def test_osm_dense_fids_multi_partition(spark, tmp_path):
     # range before ranking)
     plan = vds["points"]._jdf.queryExecution().executedPlan().toString()
     assert "rangepartitioning" in plan
-    vds.release()
+    memo.clear()
 
 
 def test_osm_to_ndjson_bounded_memory_and_shards(spark, tmp_path):
@@ -398,11 +399,12 @@ def test_osm_distributed_parity_edge_cases_2(spark, tmp_path):
 
 
 def test_osm_distributed_release_unpersists(spark, tmp_path):
-    """ADVICE r6: read_osm_distributed persists its relation-assembly
-    branch point and the unioned feature set; the returned dataset must
-    expose a release() that unpersists both (the pack_release pattern),
-    so repeated invocations (bench reps, retries) don't leak caches."""
+    """read_osm_distributed persists its relation-assembly branch point,
+    the unioned feature set and one prefix-sum range partition per
+    layer, all through the memo: memo.clear() unpersists every one, so
+    repeated invocations (bench reps, retries) don't leak caches."""
     from gdal_boots_spark.sources.osm import read_osm_distributed
+    from tests.conftest import persisted_rdds
 
     xml = """<?xml version="1.0" encoding="UTF-8"?>
 <osm version="0.6">
@@ -415,12 +417,12 @@ def test_osm_distributed_release_unpersists(spark, tmp_path):
     path = str(tmp_path / "rel.osm")
     with open(path, "w") as f:
         f.write(xml)
+    memo.clear()
+    before = persisted_rdds(spark)
     vds = read_osm_distributed(spark, path, work_dir=str(tmp_path / "nd"))
     assert vds["lines"].count() == 1
-    cached = getattr(vds, "_cached", ())
     # rel_out + feats + one prefix-sum ranged frame per layer (r8)
-    assert len(cached) == 7
-    assert all(df.storageLevel.useMemory or df.storageLevel.useDisk for df in cached)
-    vds.release()
-    assert all(not (df.storageLevel.useMemory or df.storageLevel.useDisk) for df in cached)
-    assert getattr(vds, "_cached", None) == ()
+    assert memo.stats()["persist"]["misses"] == 7
+    assert len(persisted_rdds(spark) - before) == 7
+    memo.clear()
+    assert not persisted_rdds(spark) - before

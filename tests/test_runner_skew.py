@@ -34,6 +34,27 @@ def test_runner_runs_then_skips(spark, tmp_path):
     assert out3.count() == 100 and calls["n"] == 1
 
 
+def test_runner_stage_releases_its_persisted_relations(spark, tmp_path):
+    """A stage whose fn() persists a relation (pack_shards' range
+    partition) leaves no new persisted RDD once it commits, and the
+    committed shards equal the DuckDB oracle."""
+    from gdal_boots_spark import memo
+    from gdal_boots_spark.operators.packing import pack_oracle_sql, pack_shards
+    from tests.conftest import SF_SMOKE, duck_with_views, persisted_rdds
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    memo.clear()
+    before = persisted_rdds(spark)
+    out = StageRunner(spark, str(tmp_path / "pipe")).run("pack", lambda: pack_shards(docs, budget=5000))
+    assert not persisted_rdds(spark) - before
+    assert memo.stats()["persist"]["misses"] == 1  # the stage did persist
+    con = duck_with_views(SF_SMOKE)
+    want = sorted(con.execute(pack_oracle_sql(5000)).fetchall())
+    con.close()
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == want and got
+
+
 def test_runner_fingerprint_invalidates(spark, tmp_path):
     runner = StageRunner(spark, str(tmp_path / "pipe2"))
     calls = {"n": 0}

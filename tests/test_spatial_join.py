@@ -952,14 +952,23 @@ def test_adaptive_levels_heterogeneous_spans(spark, monkeypatch):
         assert set(pairs) == exp, side
 
 
-def test_board_oracle_contract():
+def test_board_oracle_contract(spark):
     """Every driver-board query carries a DuckDB oracle (the driver's
     correctness gate hashes both sides), extras included, and no
-    orphan oracles exist."""
+    orphan oracles exist.  Every query, built and collected at sf0.001,
+    leaves no persisted RDD once ``memo.clear()`` has run: the memo owns
+    every relation the engine caches."""
+    from gdal_boots_spark import memo
+    from tests.conftest import persisted_rdds
+
     q, o = set(entrymod.queries()), set(entrymod.oracle_sql())
     assert q == o, (sorted(q - o), sorted(o - q))
     aq, ao = set(entrymod.all_queries()), set(entrymod.all_oracle_sql())
     assert aq == ao, (sorted(aq - ao), sorted(ao - aq))
+    for build in entrymod.all_queries().values():
+        build(spark, SF_SMOKE).collect()
+    memo.clear()
+    assert not persisted_rdds(spark)
 
 
 def test_multiring_fast_decode_parity(spark):
