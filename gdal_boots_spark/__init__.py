@@ -22,6 +22,10 @@ Design rules (see SURVEY.md):
 
 __version__ = "0.1.0"
 
+from gdal_boots_spark.worker_imports import freeze_spark_archives
+
+freeze_spark_archives()
+
 
 def engine_versions() -> dict:
     """Environment probe (reference utils.py:1-32 get_geos/gdal_version):

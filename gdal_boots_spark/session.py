@@ -3,9 +3,10 @@
 Scale posture (100 TB / 1000-executor design, tested on local[N]):
 AQE on (skew-join splitting + partition coalescing), Arrow enabled for
 every pandas UDF boundary, broadcast threshold sized for dimension
-(polygon) tables.  Shuffle partition count defaults to 2x cores
-locally; on a real cluster set it ~2-3x total executor cores or rely
-on AQE coalescing from a higher initial value.
+(polygon) tables.  Shuffle partition count defaults to max(8, N) on
+local[N] (32 on local[*] or a master without a core count); on a real
+cluster set it ~2-3x total executor cores or rely on AQE coalescing
+from a higher initial value.
 """
 
 from __future__ import annotations
@@ -38,7 +39,7 @@ def get_spark(app_name: str = "gdal_boots_spark", master: str | None = None,
     for k, v in ENGINE_CONF.items():
         b = b.config(k, v)
     if shuffle_partitions is None:
-        # local[N] -> N; a real cluster passes an explicit value
+        # local[N] -> max(8, N), local[*] -> 32; a real cluster passes an explicit value
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
         shuffle_partitions = 32 if n == "*" else max(8, int(n))
     b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
