@@ -111,27 +111,6 @@ def point_xy_sql(text: str = "text") -> tuple[str, str, str]:
 
 # --- the one GeoJSON decode pass (mapInArrow) ------------------------------
 
-def _parse_floats(s: str) -> np.ndarray:
-    """Whitespace-separated float blob -> float64 array.  Prefers
-    np.fromstring(sep=' ') (fastest single-call text parse) but NumPy
-    has slated text-mode fromstring for removal, so fall back to a
-    split-parse; malformed tokens yield an EMPTY array in both paths'
-    net effect (fromstring truncates -> segment-count check fails;
-    split-parse raises -> we return empty), routing callers to the
-    slow from_geojson path."""
-    import warnings
-
-    try:
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore", DeprecationWarning)
-            return np.fromstring(s, sep=" ")
-    except Exception:
-        try:
-            return np.asarray(s.split(), dtype=np.float64)
-        except ValueError:
-            return np.empty(0, dtype=np.float64)
-
-
 # "[]," AND pre-existing whitespace all become newlines in ONE pass
 # (r8: the old two-pass translate-to-space + replace(" ", "\n") copied
 # the multi-MB joined blob an extra time per batch)
@@ -140,32 +119,26 @@ _TBL = str.maketrans("[], ", "\n\n\n\n")
 
 def _parse_float_segments(blobs: list) -> np.ndarray:
     """Coord blobs -> ONE float64 array with NaN separators between
-    segments.  Arrow's CSV float parser (single-threaded) measured
-    ~1.8x np.fromstring on the joined blob; any parse surprise — error,
-    non-float inference — falls back to _parse_floats, whose own
-    failure mode (empty / truncated array) routes the caller's
-    segment-count check to the per-row from_geojson path.  Guards stay
-    a tight per-row str loop (vectorizing short-string scans through
-    Arrow compute measured 7.7x SLOWER); only the float parse runs
-    through Arrow."""
+    segments, through Arrow's CSV float parser (single-threaded; it
+    measured ~1.8x np.fromstring on the joined blob).  The column is
+    typed float64, so a token that is not a number fails the whole
+    parse: the result is then EMPTY, and the caller's count check sends
+    its rows to the per-row from_geojson path.  Guards stay a tight
+    per-row str loop (vectorizing short-string scans through Arrow
+    compute measured 7.7x SLOWER); only the float parse runs through
+    Arrow."""
+    import pyarrow as pa
+    import pyarrow.csv as pacsv
+
     joined = "\nnan\n".join(blobs).translate(_TBL)
     try:
-        import pyarrow as pa
-        import pyarrow.csv as pacsv
-
-        out = (
-            pacsv.read_csv(
-                pa.py_buffer(joined.encode()),
-                read_options=pacsv.ReadOptions(autogenerate_column_names=True, use_threads=False),
-            )
-            .column(0)
-            .to_numpy(zero_copy_only=False)
-        )
-        if out.dtype != np.float64:
-            return _parse_floats(joined)
-        return out
-    except Exception:
-        return _parse_floats(joined)
+        return pacsv.read_csv(
+            pa.py_buffer(joined.encode()),
+            read_options=pacsv.ReadOptions(column_names=["v"], use_threads=False),
+            convert_options=pacsv.ConvertOptions(column_types={"v": pa.float64()}),
+        ).column(0).to_numpy()
+    except pa.ArrowInvalid:
+        return np.empty(0, np.float64)
 
 
 def decode_geojson(df: DataFrame, col: str, keep: list[str], blank_rect: bool = False) -> DataFrame:
@@ -199,18 +172,54 @@ def decode_geojson(df: DataFrame, col: str, keep: list[str], blank_rect: bool = 
     return df.selectExpr(*(quote_ident(c) for c in [*keep, col])).mapInArrow(_decode_geojson, schema=schema)
 
 
+_POINT_HEAD = '{"type":"Point","coordinates":['
+
+
+def _point_fast_path(texts):
+    """Rows of ``texts`` spelled as the compact 2-D Point
+    ``{"type":"Point","coordinates":[x,y]}`` -> (row indices, their
+    interleaved x,y), parsed as ONE joined float blob.  A parse that
+    does not yield exactly two finite floats per row (a malformed or
+    non-finite token) returns no rows, so every Point of the batch
+    takes from_geojson instead."""
+    rows, blobs = [], []
+    for j, v in enumerate(texts):
+        if v is not None and v.startswith(_POINT_HEAD) and v.endswith("]}"):
+            b = v[len(_POINT_HEAD) : -2]
+            if b.count(",") == 1 and "]" not in b:
+                rows.append(j)
+                blobs.append(b)
+    if rows:
+        xy = _parse_float_segments([",".join(blobs)])
+        if xy.size == 2 * len(rows) and np.isfinite(xy).all():
+            return np.asarray(rows, np.int64), xy
+    return np.empty(0, np.int64), None
+
+
 def _decode_batch(batch, col, keep, blank_rect):
     """decode_geojson over one RecordBatch, building the output columns
     DIRECTLY from flat buffers (_emit_decoded) — no pandas dict
-    materialization on the way out.  Polygons whose ``coordinates`` is
-    the trailing field (the overwhelmingly common span shape, any ring
-    count) parse as one joined float blob; everything else falls back to
-    from_geojson, and a row it rejects (malformed JSON, unknown type) is
-    dropped."""
+    materialization on the way out.  Compact 2-D Points
+    (_point_fast_path) and Polygons whose ``coordinates`` is the
+    trailing field (the overwhelmingly common span shape, any ring
+    count) each parse as one joined float blob; everything else falls
+    back to from_geojson, and a row it rejects (malformed JSON, unknown
+    type) is dropped."""
     n = batch.num_rows
     if n == 0:
         return
     texts = batch.column(batch.schema.get_field_index(col)).to_pylist()
+    fastmask = np.zeros(n, dtype=bool)
+    sel, xy = _point_fast_path(texts)
+    if sel.size:
+        fastmask[sel] = True
+        k = sel.size
+        pairs = np.arange(0, 2 * k + 1, 2)
+        one = (np.tile(np.asarray([0, 1], np.int64), k), pairs)  # ring_offsets and part_offsets [0, 1]
+        no_list = (np.empty(0), np.zeros(k + 1, np.int64))
+        yield _emit_decoded(batch, keep, blank_rect, sel, np.ones(k, np.int8), [
+            (xy, pairs), one, one, no_list, no_list,
+        ])
     # fast-path rows parse as ONE nan-sentinel-joined float parse, one
     # segment per ring (per-row fromstring overhead was the decode hot
     # spot).  A segment-count mismatch (malformed token, literal 'nan')
@@ -244,7 +253,6 @@ def _decode_batch(batch, col, keep, blank_rect):
                 continue
             f_j.append(j)
             f_rc.append(r)
-    fastmask = np.zeros(n, dtype=bool)
     if f_blob:
         nums = _parse_float_segments(f_blob)
         isn = np.isnan(nums)

@@ -279,24 +279,98 @@ def point_probes(x, y) -> Probes:
     return Probes(np.ones(n, np.int8), (np.column_stack([x, y]).ravel(), np.arange(0, 2 * n + 1, 2)))
 
 
-def _flat_row(field: tuple, i: int) -> np.ndarray:
-    vals, offs = field
-    return vals[offs[i] : offs[i + 1]]
+def _groups(counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Per-group counts -> (group of each member, member's index in its
+    group), for members laid out group after group."""
+    counts = np.asarray(counts, np.int64)
+    group = np.repeat(np.arange(counts.size), counts)
+    return group, np.arange(group.size) - np.repeat(np.cumsum(counts) - counts, counts)
 
 
-def _edge_contact(pg: PackedGeometry, poly: PackedGeometry, poly_edges) -> bool:
-    """``pg``, none of whose vertices lies inside ``poly``, still
-    intersects it: polygons through polygons_intersect, lines through
-    the segment-contact test, collections through any child."""
-    if pg.gtype == 7:
-        return any(
-            _edge_contact(ch, poly, poly_edges)
-            for ch in collection_children(pg)
-            if ch.gtype not in (1, 4) and ch.coords.size
-        )
-    if pg.gtype in (3, 6):
-        return polygons_intersect(pg, poly)
-    return bool(_segment_contacts(_ring_edges(pg.coords, pg.ring_offsets, close=False), poly_edges).any())
+def _probe_edges(probes: Probes, rows: np.ndarray):
+    """The boundary edges of probe ``rows`` (no Point parts), ordered
+    ring by ring -> (x1, y1, x2, y2, row, unit).  Polygonal parts give
+    closed rings (a ring not closed is wrapped, like _ring_edges), line
+    parts open ones, and a GeometryCollection's children are read part
+    by part.  ``unit`` numbers each edge's polygonal geometry — the row
+    for a Polygon/MultiPolygon, the child for a collection — and is -1
+    on line edges; rings shorter than 2 vertices give no edge."""
+    cvals, coffs = probes.coords
+    rvals, roffs = probes.ring_offsets
+    pvals, poffs = probes.part_offsets
+    gt = probes.gtype[rows].astype(np.int64)
+    # rings: (row, first vertex, vertex count); a vertex is the index
+    # of its x in cvals (offsets index the values directly, slices too)
+    ring_row, r = _groups(roffs[rows + 1] - roffs[rows] - 1)
+    pos = roffs[rows][ring_row] + r
+    a0 = coffs[rows][ring_row] + 2 * rvals[pos].astype(np.int64)
+    nv = (rvals[pos + 1] - rvals[pos]).astype(np.int64)
+    # parts: their type and polygonal unit (a collection's child)
+    part_row, q = _groups(poffs[rows + 1] - poffs[rows] - 1)
+    ppos = poffs[rows][part_row] + q
+    ring_part = np.repeat(np.arange(part_row.size), pvals[ppos + 1] - pvals[ppos])
+    ptype, unit = gt[part_row], part_row.copy()
+    gc = ptype == 7
+    if gc.any():
+        tvals, toffs = probes.part_types
+        hvals, hoffs = probes.child_offsets
+        child_row, c = _groups(toffs[rows + 1] - toffs[rows])
+        hpos = hoffs[rows][child_row] + c
+        nparts = hvals[hpos + 1] - hvals[hpos]
+        ptype[gc] = np.repeat(tvals[toffs[rows][child_row] + c], nparts)
+        unit[gc] = rows.size + np.repeat(np.arange(child_row.size), nparts)
+    rtype, runit = ptype[ring_part], unit[ring_part]
+    closed = (rtype == 3) | (rtype == 6)
+    ok = (closed | (rtype == 2) | (rtype == 5)) & (nv >= 2)
+    # each ring's consecutive-vertex edges, then the closing edge of a
+    # polygonal ring whose last vertex is not its first
+    e_ring, k = _groups(np.where(ok, nv - 1, 0))
+    start = a0[e_ring] + 2 * k
+    shut = np.flatnonzero(ok & closed)
+    last = a0[shut] + 2 * (nv[shut] - 1)
+    open_ = (cvals[a0[shut]] != cvals[last]) | (cvals[a0[shut] + 1] != cvals[last + 1])
+    shut, last = shut[open_], last[open_]
+    e_ring = np.concatenate([e_ring, shut])
+    order = np.argsort(e_ring, kind="stable")
+    e_ring = e_ring[order]
+    i1 = np.concatenate([start, last])[order]
+    i2 = np.concatenate([start + 2, a0[shut]])[order]
+    return cvals[i1], cvals[i1 + 1], cvals[i2], cvals[i2 + 1], ring_row[e_ring], np.where(closed, runit, -1)[e_ring]
+
+
+def _edge_contacts(probes: Probes, rows: np.ndarray, coords: np.ndarray, ring_offsets: np.ndarray) -> np.ndarray:
+    """bool[rows.size]: probe ``rows`` (lines, polygons and collections,
+    none of whose vertices lies inside the polygon) still intersect the
+    polygon (coords, ring_offsets).  Either a probe edge touches a
+    polygon edge (_segment_contacts, chunked over all the rows' edges at
+    once), or the polygon lies inside one of the probe's polygonal parts
+    with no boundary contact — so the first vertex of each polygon ring
+    decides it, by the even-odd rule over that part's rings."""
+    x1, y1, x2, y2, row, unit = _probe_edges(probes, rows)
+    hit = np.zeros(rows.size, dtype=bool)
+    pedges = _ring_edges(coords, ring_offsets)
+    if x1.size == 0 or pedges[0].size == 0:
+        return hit
+    step = max(1, 48_000 // pedges[0].size)
+    for lo in range(0, x1.size, step):
+        sl = slice(lo, lo + step)
+        touch = _segment_contacts((x1[sl], y1[sl], x2[sl], y2[sl]), pedges).any(axis=1)
+        hit[row[sl][touch]] = True
+    poly = unit >= 0
+    if poly.any():
+        x1, y1, x2, y2, row, unit = (v[poly] for v in (x1, y1, x2, y2, row, unit))
+        starts = np.flatnonzero(np.diff(unit, prepend=-2))
+        ro = np.asarray(ring_offsets, np.int64)
+        c = np.asarray(coords, np.float64).reshape(-1, 2)
+        # the same crossing arithmetic as points_in_polygon
+        dy = y2 - y1
+        slope = (x2 - x1) / np.where(dy == 0.0, 1.0, dy)
+        for v in ro[:-1][np.diff(ro) > 0]:
+            qx, qy = c[v]
+            cross = ((y1 > qy) != (y2 > qy)) & (qx < x1 + slope * (qy - y1))
+            inside = np.add.reduceat(cross.astype(np.int64), starts) & 1
+            hit[row[starts][inside.astype(bool)]] = True
+    return hit
 
 
 def intersects_polygons(pid, probes: Probes, polygon_of) -> np.ndarray:
@@ -310,8 +384,8 @@ def intersects_polygons(pid, probes: Probes, polygon_of) -> np.ndarray:
     shipped without coords go to rects_intersect_polygon; every other
     probe's vertices go through ONE points_in_polygon call, reduced per
     probe with reduceat, which decides Points and MultiPoints; the
-    remaining lines, polygons and collections take the edge tests
-    (_edge_contact) row by row."""
+    remaining lines, polygons and collections take the edge and
+    containment tests all at once (_edge_contacts)."""
     pid = np.asarray(pid)
     keep = np.zeros(pid.size, dtype=bool)
     cvals, coffs = probes.coords
@@ -335,15 +409,8 @@ def intersects_polygons(pid, probes: Probes, polygon_of) -> np.ndarray:
         keep[s] = np.logical_or.reduceat(inside, vstart)
         gt = probes.gtype[s]
         rest = s[~keep[s] & (gt != 1) & (gt != 4)]
-        if not rest.size:
-            continue
-        poly = PackedGeometry(gtype=3, coords=coords, ring_offsets=ro, part_offsets=np.zeros(1, np.int32))
-        edges = _ring_edges(coords, ro)
-        for i in rest:
-            gti = int(probes.gtype[i])
-            # coords, ring and part offsets (+ part_types, child_offsets for a collection)
-            pg = PackedGeometry(gti, *(_flat_row(f, i) for f in probes[1 : 6 if gti == 7 else 4]))
-            keep[i] = _edge_contact(pg, poly, edges)
+        if rest.size:
+            keep[rest] = _edge_contacts(probes, rest, coords, ro)
     return keep
 
 

@@ -28,6 +28,9 @@ single build) then pays the collect or probe job once.
   unpersists the stale entry first.  They are never evicted (a built
   plan would recompute them), only freed by ``clear()`` or the
   ``releasing()`` block that first persisted them.
+* **Scratch directories.**  ``temp_dir`` makes a directory that the
+  memo owns like a persisted relation: ``clear()`` and the
+  ``releasing()`` block that made it remove it.
 
 Callers must treat returned values as read-only; they are the memo's
 entries themselves.
@@ -36,6 +39,8 @@ entries themselves.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 import threading
 from collections import OrderedDict
 from contextlib import contextmanager
@@ -62,9 +67,15 @@ def _active() -> bool:
     if sc is not _context:
         app_id = sc.applicationId
         if app_id != _app_id:
+            for path, _ in _entries.get("temp_dir", {}).values():
+                _release(path)
             _entries.clear()
         _context, _app_id = sc, app_id
     return True
+
+
+class _Dir(str):
+    """A directory path the memo owns: releasing it removes it."""
 
 
 def _release(value: Any) -> None:
@@ -73,6 +84,8 @@ def _release(value: Any) -> None:
 
     if isinstance(value, (Broadcast, DataFrame)):
         value.unpersist()
+    elif isinstance(value, _Dir):
+        shutil.rmtree(value, ignore_errors=True)
     elif isinstance(value, tuple):  # e.g. a collected dim holding its broadcast
         for v in value:
             _release(v)
@@ -123,27 +136,44 @@ def persist(df):
     return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
+def temp_dir(prefix: str) -> str:
+    """A new local scratch directory (``tempfile.mkdtemp``) that the
+    memo owns: removed by ``clear()`` or by the ``releasing()`` block
+    that made it, so a caller that reads it lazily keeps it until then."""
+    path = _Dir(tempfile.mkdtemp(prefix=prefix))
+    with _lock:
+        _entries.setdefault("temp_dir", OrderedDict())[path] = (path, None)
+    return path
+
+
+_OWNED = ("persist", "temp_dir")  # kinds freed by releasing(), as (value, files) pairs
+
+
 @contextmanager
 def releasing():
-    """Unpersist, on exit, every relation ``persist`` began to own
-    inside the block; entries owned before it stay."""
+    """Unpersist (or remove), on exit, every relation ``persist`` and
+    every directory ``temp_dir`` began to own inside the block; entries
+    owned before it stay."""
     with _lock:
-        before = dict(_entries.get("persist", {}))
+        before = {kind: dict(_entries.get(kind, {})) for kind in _OWNED}
     try:
         yield
     finally:
         with _lock:
-            entries = _entries.get("persist", {})
-            dropped = [entries.pop(k) for k, v in list(entries.items()) if before.get(k) is not v]
-        for df, _files in dropped:
-            _release(df)
+            dropped = []
+            for kind in _OWNED:
+                entries = _entries.get(kind, {})
+                dropped += [entries.pop(k) for k, v in list(entries.items()) if before[kind].get(k) is not v]
+        for value, _files in dropped:
+            _release(value)
 
 
 def clear() -> None:
     """Drop every entry (unpersisting memoised broadcasts and persisted
-    relations) and zero the hit/miss counts."""
+    relations, removing owned directories) and zero the hit/miss counts."""
     with _lock:
-        dropped = [v for entries in _entries.values() for v in entries.values()] if _active() else []
+        owned = _entries if _active() else {"temp_dir": _entries.get("temp_dir", {})}
+        dropped = [v for entries in owned.values() for v in entries.values()]
         _entries.clear()
         _counts.clear()
     for value in dropped:

@@ -28,13 +28,22 @@ def salted_join(
     salt: int = 8,
     hot_threshold: int = 100_000,
 ) -> DataFrame:
-    """Equi-join `big ⋈ small` on `key`, salting hot keys S ways.
+    """Equi-join `big ⋈ small` on `key`, salting hot keys S ways: the
+    keys of `big` with more than `hot_threshold` rows (join_salting)."""
+    return join_salting(big, small, key, hot_keys(big, key, hot_threshold), salt)
+
+
+def join_salting(big: DataFrame, small: DataFrame, key: str, hot: DataFrame, salt: int) -> DataFrame:
+    """Equi-join `big ⋈ small` on `key`, salting the keys `hot` lists S
+    ways.
 
     big rows on hot keys get salt = pmod(hash(row), S); small rows on
     hot keys are exploded to all S salts, others ride salt 0.  Result
-    rows are exactly those of the unsalted join.
+    rows are exactly those of the unsalted join for ANY key set, so a
+    caller whose `big` is costly to compute twice may count its hot
+    keys on a cheaper relation.
     """
-    hot = hot_keys(big, key, hot_threshold).withColumn("_hot", F.lit(True))
+    hot = hot.withColumn("_hot", F.lit(True))
 
     b = big.join(F.broadcast(hot), key, "left")
     b = b.withColumn(

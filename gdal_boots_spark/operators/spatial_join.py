@@ -20,12 +20,16 @@ filter -> project -> broadcast-join -> UDF filter entirely within one
 stage, so the plan scales linearly with executors at 100 TB (the
 two-parallelism scaling evidence in BENCH runs this operator).
 
+Documents whose geo spans mix geometry types (pip_join_docs_any) take
+ONE span pass in the same shape: one decode of every geo span, Points
+included (a Point's bbox is its own cell), one cover join, one refine,
+and one task per scan partition.
+
 A polygon dim over cover.fits_broadcast's ceiling is never collected:
-every join here (Point and non-Point spans alike) then joins its
-candidates to the decoded, cell-exploded polygons (_cover_shuffle),
-which carry their packed geometry to the refine.  Both sides refine
-through the one predicate, functions.geometry_fns.where_intersects
-(geom.pip.intersects_polygons).
+every join here then joins its candidates to the dim decoded once and
+cell-exploded (_cover_shuffle), which carries each polygon's packed
+geometry to the refine.  Both sides refine through the one predicate,
+functions.geometry_fns.where_intersects (geom.pip.intersects_polygons).
 
 For point-vs-polygon the (point, poly) pair appears at most once —
 a point maps to exactly one cell and a polygon's cover lists each cell
@@ -47,6 +51,7 @@ from ..geom import cells
 from ..geom.cells import cover_bbox, level_for_edge, pick_res
 from ..partitioning import plan_bytes
 from .cover import fits_broadcast, poly_dim
+from .skew import hot_keys, join_salting, salted_join
 from .spans import extract_geo_spans
 
 
@@ -72,11 +77,15 @@ def _auto_res(bboxes: dict) -> int:
 # fact side
 ADAPTIVE_LEVEL_WINDOW = 4
 
+# the distributed side's skew handling: a cell holding more than
+# HOT_CELL_ROWS point rows is split across HOT_CELL_SALT reducers
+HOT_CELL_SALT, HOT_CELL_ROWS = 8, 1_000_000
 
-def _cover_df(spark: SparkSession, bboxes: dict, rect_pids: frozenset, res: int) -> DataFrame:
+
+def _cover_df(spark: SparkSession, bboxes: dict, res: int) -> DataFrame:
     """The polygon dim's cell cover, the one relation both join paths
-    read: a (cell_id, poly_id, _pminx, _pminy, _pmaxx, _pmaxy, _prect)
-    row per polygon and cell of its bbox cover at every level in
+    read: a (cell_id, poly_id, _pminx, _pminy, _pmaxx, _pmaxy) row per
+    polygon and cell of its bbox cover at every level in
     [res - ADAPTIVE_LEVEL_WINDOW, res].  Cell ids embed their level
     (geom.cells), so a Point's level-``res`` cell matches only the
     level-``res`` rows while a span matches at its own level.  The
@@ -97,14 +106,11 @@ def _cover_df(spark: SparkSession, bboxes: dict, rect_pids: frozenset, res: int)
         own = np.repeat(np.arange(len(ids)) // (res + 1 - lmin), [c.size for c in ids])
         cols = {"cell_id": np.concatenate(ids) if ids else np.empty(0, np.int64), "poly_id": pids[own]}
         cols.update((name, box[own, j]) for j, name in enumerate(("_pminx", "_pminy", "_pmaxx", "_pmaxy")))
-        cols["_prect"] = np.isin(pids, list(rect_pids))[own]
         return spark.createDataFrame(
-            pa.table(cols),
-            "cell_id long, poly_id long, _pminx double, _pminy double, _pmaxx double, _pmaxy double, "
-            "_prect boolean",
+            pa.table(cols), "cell_id long, poly_id long, _pminx double, _pminy double, _pmaxx double, _pmaxy double"
         )
 
-    return memo.get("cover_df", (res, tuple(sorted(bboxes.items())), rect_pids), build)
+    return memo.get("cover_df", (res, tuple(sorted(bboxes.items()))), build)
 
 
 def _cover_shuffle(polys: DataFrame, res: int | None, window: int = ADAPTIVE_LEVEL_WINDOW) -> tuple[int, DataFrame]:
@@ -131,10 +137,10 @@ def _cover_shuffle(polys: DataFrame, res: int | None, window: int = ADAPTIVE_LEV
 
         res = memo.get("shuffle_res", memo.plan_key(polys), probe)
     s1, s2, cid = cells.cover_explode_sql("_pminx", "_pminy", "_pmaxx", "_pmaxy", "_lvl", "_n")
-    cols = ["poly_id", "_pminx", "_pminy", "_pmaxx", "_pmaxy", "_prect", "_pgeom"]
+    cols = ["poly_id", "_pminx", "_pminy", "_pmaxx", "_pmaxy", "_pgeom"]
     cover = gb.selectExpr(
-        "poly_id", "minx AS _pminx", "miny AS _pminy", "maxx AS _pmaxx", "maxy AS _pmaxy", "rect AS _prect",
-        "geom AS _pgeom", f"explode(sequence({max(0, res - window)}, {res})) AS _lvl",
+        "poly_id", "minx AS _pminx", "miny AS _pminy", "maxx AS _pmaxx", "maxy AS _pmaxy", "geom AS _pgeom",
+        f"explode(sequence({max(0, res - window)}, {res})) AS _lvl",
     ).selectExpr(*cols, "_lvl", f"{cells.grid_n_sql('_lvl')} AS _n").selectExpr(
         *cols, "_lvl", "_n", *s1
     ).selectExpr(*cols, "_lvl", "_n", "_ix", *s2).selectExpr(f"{cid} AS cell_id", *cols)
@@ -149,7 +155,7 @@ def _span_dim(polys: DataFrame, res: int | None):
     if fits_broadcast(plan_bytes(polys)):
         dim = poly_dim(polys)
         res = _auto_res(dim.bboxes) if res is None else res
-        return res, F.broadcast(_cover_df(polys.sparkSession, dim.bboxes, dim.rect_pids, res)), dim.bpacked
+        return res, F.broadcast(_cover_df(polys.sparkSession, dim.bboxes, res)), dim.bpacked
     return (*_cover_shuffle(polys, res), "_pgeom")
 
 
@@ -177,7 +183,7 @@ def pip_join_points(
         return pip_join_points_shuffle(points, polys, res=res, x_col=x_col, y_col=y_col)
     spark: SparkSession = points.sparkSession
     dim = poly_dim(polys)
-    bboxes, rect_pids = dim.bboxes, dim.rect_pids
+    bboxes = dim.bboxes
     if res is None:
         res = _auto_res(bboxes)
 
@@ -194,14 +200,14 @@ def pip_join_points(
     # filter: no broadcast of packed coords, no ArrowEvalPython stage,
     # zero bytes across the Python boundary.  Mixed/non-rect dims take
     # the Arrow-UDF refine below.
-    all_rect = rect_pids == set(dim.packed)
+    all_rect = dim.rect_pids == set(dim.packed)
     xq, yq = quote_ident(x_col), quote_ident(y_col)
     pts = points.withColumn("cell_id", F.expr(cells.cell_id_sql(xq, yq, res)))
-    cover_df = _cover_df(spark, bboxes, rect_pids, res)
+    cover_df = _cover_df(spark, bboxes, res)
     if refine and all_rect:
         cand = pts.join(F.broadcast(cover_df), "cell_id").drop("cell_id")
         keep = f"{xq} >= _pminx AND {xq} < _pmaxx AND {yq} >= _pminy AND {yq} < _pmaxy"
-        return cand.where(keep).drop("_pminx", "_pminy", "_pmaxx", "_pmaxy", "_prect")
+        return cand.where(keep).drop("_pminx", "_pminy", "_pmaxx", "_pmaxy")
 
     cand = pts.join(F.broadcast(cover_df.select("cell_id", "poly_id")), "cell_id").drop("cell_id")
     if not refine:
@@ -245,11 +251,11 @@ def pip_join_docs(
     )
 
 
-def _poly_span_candidates(docs: DataFrame, cover: DataFrame, res: int, carry: tuple = ()) -> DataFrame:
-    """non-Point geo spans of ``docs`` -> deduped (doc_id, span_pos,
-    poly_id, geom, rect, _prect, bbox, ``carry``...) candidates: geojson
+def _poly_span_candidates(spans: DataFrame, cover: DataFrame, res: int, hot: DataFrame | None = None) -> DataFrame:
+    """geo spans (extract_geo_spans rows) -> deduped (doc_id, span_pos,
+    geom, bbox, rect, poly_id[, the cover's _pgeom]) candidates: geojson
     decode -> native bbox cover explode -> cell join with the dim's
-    ``cover`` (_span_dim: _cover_df broadcast, or _cover_shuffle) -> bbox
+    ``cover`` (_span_dim), salting the ``hot`` cells if given -> bbox
     overlap filter -> reporting-cell dedup (the pair survives only in
     the cell holding the bbox-intersection lower-left corner — dedup
     WITHOUT a shuffle).
@@ -269,13 +275,13 @@ def _poly_span_candidates(docs: DataFrame, cover: DataFrame, res: int, carry: tu
     Dedup/filter semantics are unchanged — the output is exactly the
     bbox-overlap pair set at any level choice, because the cell holding
     the bbox-intersection lower-left corner is covered by both sides at
-    the span's level.
+    the span's level.  A Point's bbox is (x, y, x, y): it takes level
+    ``res`` and explodes to exactly its own cell.
 
     The decode is the one mapInArrow pass (decode_geojson) with
-    payload-free rectangles: the rect-x-rect split and the refine read a
-    rectangle span from its bbox columns."""
+    payload-free rectangles: the refine reads a rectangle span from its
+    bbox columns."""
     lmin = max(0, res - ADAPTIVE_LEVEL_WINDOW)
-    spans = extract_geo_spans(docs).where(f"NOT {point_xy_sql('text')[2]}")
     g = decode_geojson(spans, "text", ["doc_id", "span_pos"], blank_rect=True)
 
     # the whole level-pick -> explode -> cell-id -> bbox-filter ->
@@ -305,71 +311,53 @@ def _poly_span_candidates(docs: DataFrame, cover: DataFrame, res: int, carry: tu
         "minx <= _pmaxx AND _pminx <= maxx AND miny <= _pmaxy AND _pminy <= maxy AND cell_id = "
         + cells.reporting_cell_sql(("minx", "_pminx"), ("miny", "_pminy"), "_lvl", "_n")
     )
-    return (
-        covered.join(cover, "cell_id")
-        .where(keep)
-        .selectExpr(
-            "doc_id", "span_pos", "poly_id", "geom", "rect", "_prect",
-            "minx", "miny", "maxx", "maxy", *carry,
-        )
-    )
+    if hot is None:
+        pairs = covered.join(cover, "cell_id")
+    else:
+        pairs = join_salting(covered, cover, "cell_id", hot, HOT_CELL_SALT)
+    return pairs.where(keep).drop("cell_id", "_lvl", "_n", "_pminx", "_pminy", "_pmaxx", "_pmaxy")
 
 
 def poly_span_candidates(docs: DataFrame, polys: DataFrame, res: int | None = None) -> DataFrame:
-    """Bench/diagnostic surface: the poly-span path's pre-refinement
-    candidates for interleaved docs (mirrors pip_join_points
+    """Bench/diagnostic surface: the pre-refinement candidates of the
+    non-Point geo spans of interleaved docs (mirrors pip_join_points
     ``refine=False``) — used to normalize per-candidate refine cost.
     The polygon dim is read on the side cover.fits_broadcast picks
     (_span_dim), as in pip_join_docs_any."""
     res, cover, _ = _span_dim(polys, res)
-    return _poly_span_candidates(docs, cover, res)
+    spans = extract_geo_spans(docs).where(f"NOT {point_xy_sql('text')[2]}")
+    return _poly_span_candidates(spans, cover, res)
 
 
 def pip_join_docs_any(docs: DataFrame, polys: DataFrame, res: int | None = None) -> DataFrame:
     """Interleaved documents x polygons -> (doc_id, span_pos, poly_id)
     for geo spans of ANY geometry type (crop/rasterize in the reference
-    accept any geometry, gdal.py:836-846).
+    accept any geometry, gdal.py:836-846), in ONE span pass: every geo
+    span, Points included, goes through _poly_span_candidates (one
+    decode, one cover join, reporting-cell dedup without a shuffle),
+    then the one exact refine, where_intersects: only its argument
+    columns cross Arrow (a rect span as its bbox alone, decided by box
+    arithmetic) and one byte returns per row.  The dim is read on the
+    side cover.fits_broadcast picks (_span_dim); over the ceiling it is
+    decoded once and never collected, and the candidates join it with
+    hot cells salted (skew.join_salting), counted over the Point spans'
+    cell ids in the JVM so that the count reruns no decode.
 
-    Point spans take the codegen fast path (== pip_join_docs);
-    Polygon/LineString/Multi* spans go through the Arrow decode ->
-    native bbox cover explode -> cell join, deduped WITHOUT a shuffle
-    via the reporting-cell trick (a candidate survives only in the cell
-    containing the bbox-intersection lower-left corner), then the exact
-    GEOS-Intersects refine.  cover.fits_broadcast picks the dim's side
-    for both branches: a dim under the ceiling is collected once and
-    its cover broadcast (_cover_df); a dim over it is never collected,
-    and the candidates join the distributed cover (_cover_shuffle),
-    which carries each polygon's packed geometry to the refine.
-
-    The candidates are materialized once (persist) and split: a rect
-    span against a rect dim polygon is already decided by the bbox
-    overlap filter it passed (closed rects: bbox overlap <=> GEOS
-    Intersects), so those pairs are accepted in the JVM and at
-    rect-heavy corpus shapes ~90% of candidate rows never cross Arrow.
-    The rest is refined by the one boolean Arrow UDF inside a WHERE
-    (where_intersects) — the Point path's pattern: only the argument
-    columns (poly_id, geometry struct — empty for rect spans — bbox,
-    rect flag, and on the distributed side the polygon's geometry) cross
-    Arrow and one byte returns per row, so doc_id/span_pos strings never
-    leave the JVM.  (A/B at 4.66M candidates, same-run controls: 4.80 s
-    for this split, 5.81 s for one refine over all candidates, 7.00 s
-    for a mapInArrow row filter.  A plain where()-split without the
-    persist would recompute the candidate subtree twice.)
-    """
+    Rect x rect pairs are not split off in the JVM: that needed the
+    candidates persisted (one subtree consumed twice), and the cache
+    stage and its eager planning cost more per pass than the NumPy
+    test they spared, at rect-heavy shapes too (CHANGES.md)."""
     res, cover, polygons = _span_dim(polys, res)
-    carry = (polygons,) if isinstance(polygons, str) else ()
-    pt_pairs = pip_join_docs(docs, polys, res=res).selectExpr("doc_id", "span_pos", "poly_id")
-    cand = _poly_span_candidates(docs, cover, res, carry)
-
-    # persist (NOT localCheckpoint): lineage survives, so an executor
-    # loss on a 1000-node cluster recomputes the lost partitions instead
-    # of failing the job; spill-to-disk bounds memory.
-    c = memo.persist(cand)
-    fast = c.where("rect AND _prect").selectExpr("doc_id", "span_pos", "poly_id")
-    slow = where_intersects(
-        c.where("NOT (rect AND _prect)"), "poly_id", ("geom", "minx", "miny", "maxx", "maxy", "rect"), polygons
+    spans = extract_geo_spans(docs)
+    hot = None
+    if isinstance(polygons, str):  # the distributed cover
+        xs, ys, ps = point_xy_sql("text")
+        cell_ids = spans.where(ps).selectExpr(f"{cells.cell_id_sql(xs, ys, res)} AS cell_id")
+        hot = hot_keys(cell_ids, "cell_id", HOT_CELL_ROWS)
+    cand = _poly_span_candidates(spans, cover, res, hot)
+    return where_intersects(
+        cand, "poly_id", ("geom", "minx", "miny", "maxx", "maxy", "rect"), polygons
     ).selectExpr("doc_id", "span_pos", "poly_id")
-    return pt_pairs.unionByName(fast).unionByName(slow)
 
 
 def pip_join_points_shuffle(
@@ -378,8 +366,8 @@ def pip_join_points_shuffle(
     res: int | None = None,
     x_col: str = "x",
     y_col: str = "y",
-    salt: int = 8,
-    hot_threshold: int = 1_000_000,
+    salt: int = HOT_CELL_SALT,
+    hot_threshold: int = HOT_CELL_ROWS,
 ) -> DataFrame:
     """Big-polygon-side variant: no driver collect, no broadcast dict.
 
@@ -395,8 +383,6 @@ def pip_join_points_shuffle(
     Semantics identical to pip_join_points (tested); use when the
     polygon side is too large to broadcast.
     """
-    from .skew import salted_join
-
     res, cover = _cover_shuffle(polys, res, window=0)
     pts = points.withColumn("cell_id", F.expr(cells.cell_id_sql(quote_ident(x_col), quote_ident(y_col), res)))
     cand = salted_join(

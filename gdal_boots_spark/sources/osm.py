@@ -477,14 +477,16 @@ def read_osm_distributed(
 
     Feature rows are persisted (``memo.persist``) before the 5-way layer
     split — a where()-split of one DataFrame into consumed branches
-    recomputes the whole subtree per branch otherwise."""
+    recomputes the whole subtree per branch otherwise.  Without a
+    ``work_dir`` the NDJSON goes to a ``memo.temp_dir``, which
+    ``memo.clear()`` (or the enclosing ``memo.releasing()`` block, such
+    as a StageRunner stage) removes along with those persisted rows."""
     import os as _os
-    import tempfile
 
     from pyspark.sql import functions as F
 
     if work_dir is None:
-        work_dir = tempfile.mkdtemp(prefix="osm_ndjson_")
+        work_dir = memo.temp_dir("osm_ndjson_")
     if not _os.path.exists(_os.path.join(work_dir, "_SUCCESS")):
         osm_to_ndjson(path, work_dir)
 

@@ -162,13 +162,14 @@ def main():
     from gdal_boots_spark.sources.synth import interleaved_docs as _idocs
 
     sections.append((
-        "Mixed-geometry flagship (poly spans: one decode pass)",
-        "Non-Point spans decode in ONE mapInArrow node (geometry + bbox as "
-        "concrete columns — scalar UDFs were duplicated by projection "
-        "collapse into stacked ArrowEvalPython stages), then native cover "
-        "explode, broadcast cell join, reporting-cell dedup (no shuffle), "
-        "and the one boolean Arrow-UDF refine (where_intersects) over the "
-        "candidates the JVM rect x rect split leaves.",
+        "Mixed-geometry flagship (one span pass)",
+        "One scan of the span table: every geo span, Points included, "
+        "decodes in ONE mapInArrow node (geometry + bbox as concrete "
+        "columns — scalar UDFs were duplicated by projection collapse into "
+        "stacked ArrowEvalPython stages), then native cover explode, one "
+        "broadcast cell join, reporting-cell dedup (no shuffle), and ONE "
+        "boolean Arrow-UDF refine (where_intersects) over every candidate. "
+        "No InMemoryRelation: the candidates are not persisted.",
         cap(pip_join_docs_any(_idocs(spark, "/root/testdata/sf0.001", poly_spans=True), rect_polygons_df(spark))),
     ))
 

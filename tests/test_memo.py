@@ -46,31 +46,27 @@ def test_rewritten_parquet_path_serves_new_rows(spark, tmp_path):
 
 
 def test_rewritten_file_serves_no_stale_persisted_rows(spark, tmp_path):
-    """A persisted branch point over a file that a writer other than
-    Spark rewrites (Spark's cache matches a file relation by its root
-    path and only a Spark writer refreshes it): the span join over the
-    rewritten file equals the join over a fresh copy of the new rows,
-    not the old file's cached candidates."""
+    """memo.persist over a parquet file that a writer other than Spark
+    rewrites (Spark's cache matches a file relation by its root path and
+    only a Spark writer refreshes it): persisting the same plan over the
+    rewritten file serves the new rows, not the old file's cached ones."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from gdal_boots_spark.operators.spatial_join import pip_join_docs_any
-    from gdal_boots_spark.sources.synth import interleaved_docs, rect_polygons_df
+    from gdal_boots_spark import memo
 
-    table = interleaved_docs(spark, SF_SMOKE, poly_spans=True).toArrow()
-    path, fresh = str(tmp_path / "docs.parquet"), str(tmp_path / "fresh.parquet")
+    path = str(tmp_path / "keys.parquet")
 
-    def pairs(p):
-        got = pip_join_docs_any(spark.read.parquet(p), rect_polygons_df(spark)).collect()
-        return sorted(tuple(r) for r in got)
+    def evens():
+        return sorted(r["k"] for r in memo.persist(spark.read.parquet(path).where("k % 2 = 0")).collect())
 
-    pq.write_table(table, path)
-    assert len(pairs(path)) == 337
-    third = table.slice(0, table.num_rows // 3)
-    pq.write_table(third, path)
-    pq.write_table(third, fresh)
-    want = pairs(fresh)
-    assert len(want) == 120
-    assert pairs(path) == want
+    pq.write_table(pa.table({"k": list(range(10))}), path)
+    assert evens() == [0, 2, 4, 6, 8]
+    pq.write_table(pa.table({"k": list(range(10, 30))}), path)
+    try:
+        assert evens() == list(range(10, 30, 2))
+    finally:
+        memo.clear()
 
 
 def test_many_rasters_sample_their_own_values(spark):

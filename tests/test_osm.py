@@ -426,3 +426,35 @@ def test_osm_distributed_release_unpersists(spark, tmp_path):
     assert len(persisted_rdds(spark) - before) == 7
     memo.clear()
     assert not persisted_rdds(spark) - before
+
+
+def test_osm_distributed_temp_dir_released(spark, tmp_path, monkeypatch):
+    """read_osm_distributed without a work_dir writes its NDJSON to a
+    directory the memo owns: after three calls memo.clear() leaves no
+    osm_ndjson_* directory behind, and a call inside memo.releasing()
+    (a StageRunner stage) leaves none once the block exits."""
+    import tempfile
+
+    from gdal_boots_spark.sources.osm import read_osm_distributed
+
+    path = str(tmp_path / "way.osm")
+    with open(path, "w") as f:
+        f.write("""<?xml version="1.0" encoding="UTF-8"?>
+<osm version="0.6">
+ <node id="1" lat="0.0" lon="0.0"/>
+ <node id="2" lat="0.0" lon="1.0"/>
+ <way id="10"><nd ref="1"/><nd ref="2"/><tag k="highway" v="primary"/></way>
+</osm>""")
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    memo.clear()
+    for _ in range(3):
+        assert read_osm_distributed(spark, path)["lines"].count() == 1
+    assert len(list(scratch.glob("osm_ndjson_*"))) == 3
+    memo.clear()
+    assert not list(scratch.glob("osm_ndjson_*"))
+    with memo.releasing():
+        assert read_osm_distributed(spark, path)["lines"].count() == 1
+        assert len(list(scratch.glob("osm_ndjson_*"))) == 1
+    assert not list(scratch.glob("osm_ndjson_*"))

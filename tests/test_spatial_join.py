@@ -759,6 +759,127 @@ def test_rects_intersect_polygon_matches_loop():
         assert ((bx[:, 0] == bx[:, 1]) | (by[:, 0] == by[:, 1])).sum() >= 100, name
 
 
+def _loop_edge_contact(pg, poly, poly_edges) -> bool:
+    """The per-row edge test intersects_polygons ran before
+    _edge_contacts: polygons through polygons_intersect, lines through
+    the segment-contact test, collections through any child."""
+    from gdal_boots_spark.geom.packed import collection_children
+    from gdal_boots_spark.geom.pip import _ring_edges, _segment_contacts, polygons_intersect
+
+    if pg.gtype == 7:
+        return any(
+            _loop_edge_contact(ch, poly, poly_edges)
+            for ch in collection_children(pg)
+            if ch.gtype not in (1, 4) and ch.coords.size
+        )
+    if pg.gtype in (3, 6):
+        return polygons_intersect(pg, poly)
+    return bool(_segment_contacts(_ring_edges(pg.coords, pg.ring_offsets, close=False), poly_edges).any())
+
+
+def test_edge_contacts_match_loop():
+    """intersects_polygons' vectorized edge and containment step
+    (geom.pip._edge_contacts) equals the per-row loop it replaced, bit
+    for bit, over seeded lines, multi-lines, holed polygons and
+    multipolygons and GeometryCollections of them (with Point children)
+    against a 64-gon, an L-shape, a holed square and a two-part
+    multipolygon; some probe rings are left open.  Vertices snap to the
+    polygon's vertices and edges, so touching and collinear contacts
+    occur; probes that wholly contain the polygon, or that sit in its
+    hole, take the containment test."""
+    from gdal_boots_spark.geom.packed import GTYPE_IDS, PackedGeometry, from_geojson
+    from gdal_boots_spark.geom.pip import Probes, _ring_edges, intersects_polygons, points_in_polygon
+
+    t = np.linspace(0.0, 2 * np.pi, 65)[:-1]
+    gon = np.column_stack([5 + 3 * np.cos(t), 5 + 3 * np.sin(t)])
+
+    def poly(*rings):
+        return {"type": "Polygon", "coordinates": [np.vstack([r, r[:1]]).tolist() for r in map(np.asarray, rings)]}
+
+    square = [[0, 0], [6, 0], [6, 6], [0, 6]]
+    dims = {
+        "convex64": poly(gon),
+        "l_shape": poly([[0, 0], [4, 0], [4, 1], [1, 1], [1, 3], [0, 3]]),
+        "holed": poly(square, [[1, 1], [2, 1], [2, 2], [1, 2]], [[4, 2.5], [5, 4], [4, 5.5], [3, 4]]),
+        "multi": {"type": "MultiPolygon", "coordinates": [
+            poly([[0, 0], [2, 0], [2, 2], [0, 2]])["coordinates"],
+            poly([[4, 4], [7, 4], [7, 7], [4, 7]])["coordinates"],
+        ]},
+    }
+    rng = np.random.default_rng(23)
+    for name, dim_gj in dims.items():
+        dim = from_geojson(dim_gj)
+        v = dim.coords.reshape(-1, 2)
+        lo, hi = v.min(axis=0) - 2.0, v.max(axis=0) + 2.0
+        mids = (v[:-1] + v[1:]) / 2
+
+        def pt():
+            pick = rng.integers(3)
+            if pick == 0:
+                return v[rng.integers(len(v))].tolist()  # a polygon vertex
+            if pick == 1:
+                return mids[rng.integers(len(mids))].tolist()  # on a polygon edge
+            return rng.uniform(lo, hi).tolist()
+
+        def line():
+            return {"type": "LineString", "coordinates": [pt() for _ in range(rng.integers(2, 5))]}
+
+        def ring_poly():
+            if rng.integers(4) == 0:  # a box around the whole polygon, holed or not
+                e = rng.uniform(0.1, 1.0)
+                outer = [[lo[0] - e, lo[1] - e], [hi[0] + e, lo[1] - e], [hi[0] + e, hi[1] + e], [lo[0] - e, hi[1] + e]]
+                hole = [[lo[0] - e / 2, lo[1] - e / 2], [lo[0], lo[1] - e / 2], [lo[0], lo[1]]]
+                return poly(outer, hole) if rng.integers(2) else poly(outer)
+            c, r = rng.uniform(lo, hi), rng.uniform(0.05, 1.5)
+            k = rng.integers(3, 7)
+            a = np.sort(rng.uniform(0, 2 * np.pi, k))
+            shell = np.column_stack([c[0] + r * np.cos(a), c[1] + r * np.sin(a)])
+            if rng.integers(3) == 0:
+                shell[0] = pt()  # snapped: touching / collinear cases
+            if rng.integers(5) == 0:  # a ring left open: its closing edge is implied
+                return {"type": "Polygon", "coordinates": [shell.tolist()]}
+            hole = c + 0.2 * r * np.asarray([[-1, -1], [1, -1], [0, 1]])
+            return poly(shell, hole) if rng.integers(2) else poly(shell)
+
+        def geom():
+            kind = rng.integers(5)
+            if kind == 0:
+                return line()
+            if kind == 1:
+                return {"type": "MultiLineString", "coordinates": [line()["coordinates"] for _ in range(2)]}
+            if kind == 2:
+                return ring_poly()
+            if kind == 3:
+                return {"type": "MultiPolygon", "coordinates": [ring_poly()["coordinates"] for _ in range(2)]}
+            children = [line(), ring_poly(), {"type": "Point", "coordinates": pt()}]
+            pick = rng.permutation(3)[: rng.integers(2, 4)]
+            return {"type": "GeometryCollection", "geometries": [children[i] for i in pick]}
+
+        geoms = [from_geojson(geom()) for _ in range(600)]
+        assert {g.gtype for g in geoms} == {2, 3, 5, 6, 7}
+
+        def flat(field, dtype):
+            arrs = [np.asarray(getattr(g, field) if getattr(g, field) is not None else (), dtype) for g in geoms]
+            return np.concatenate(arrs), np.cumsum([0] + [a.size for a in arrs])
+
+        probes = Probes(
+            np.asarray([g.gtype for g in geoms], np.int8), flat("coords", np.float64),
+            flat("ring_offsets", np.int32), flat("part_offsets", np.int32),
+            flat("part_types", np.int8), flat("child_offsets", np.int32),
+        )
+        got = intersects_polygons(np.zeros(len(geoms), np.int64), probes, lambda p, i: (dim.coords, dim.ring_offsets))
+        as_poly = PackedGeometry(gtype=GTYPE_IDS["Polygon"], coords=dim.coords, ring_offsets=dim.ring_offsets,
+                                 part_offsets=np.zeros(1, np.int32))
+        edges = _ring_edges(dim.coords, dim.ring_offsets)
+        vertex_in = np.asarray([points_in_polygon(*g.xy(), dim.coords, dim.ring_offsets).any() for g in geoms])
+        exp = np.asarray([
+            bool(vin) or _loop_edge_contact(g, as_poly, edges) for g, vin in zip(geoms, vertex_in)
+        ])
+        assert np.array_equal(got, exp), (name, np.flatnonzero(got != exp)[:10])
+        # the edge step decided many probes, both ways
+        assert (exp & ~vertex_in).sum() >= 30 and (~exp).sum() >= 30, name
+
+
 def test_hole_polygon_with_whitespace_separators(spark):
     """ADVICE r3: a hole polygon serialized with json.dumps DEFAULT
     separators ("]], [[") slipped past the old single-ring fast-path
@@ -1024,8 +1145,9 @@ def test_multiring_fast_decode_parity(spark):
             texts.append(json.dumps({"type": "MultiLineString", "coordinates": [hole, hole2]}))
         elif k == 10:  # 3-D rectangle
             texts.append(poly([[p + [5.0] for p in outer]]))
-        else:
-            texts.append(json.dumps({"type": "Point", "coordinates": [cx, cy]}))
+        else:  # Points, compact (the decode's fast path) or spaced
+            sep = (",", ":") if i // 12 % 2 else (", ", ": ")
+            texts.append(json.dumps({"type": "Point", "coordinates": [cx, cy]}, separators=sep))
     for extra in (
         poly([[p + [1.0] for p in outer], [p + [2.0] for p in hole]]),
         poly([[[0.0, 0.0, 5.0], [4.0, 0.0, 5.0], [0.0, 4.0, 5.0], [0.0, 0.0, 5.0]]]),
@@ -1070,6 +1192,55 @@ def test_multiring_fast_decode_parity(spark):
             )
         # 40 None rows, the empty collection and the truncated row dropped
         assert got == exp and len(got) == 444
+
+
+def test_point_fast_decode_spellings():
+    """The decode pass's Point fast path (one joined float parse for
+    the compact ``{"type":"Point","coordinates":[x,y]}`` spelling)
+    takes the compact, exponent, negative and integer spellings and
+    leaves the spaced, 3-D and coordinates-first ones to from_geojson;
+    every row decodes to what from_geojson gives.  A batch holding a
+    malformed compact Point sends all its Points to from_geojson, which
+    drops only the malformed row."""
+    import pyarrow as pa
+
+    from gdal_boots_spark.functions.geometry_fns import _decode_batch, _point_fast_path
+    from gdal_boots_spark.geom.packed import from_geojson
+
+    spellings = {
+        "compact": '{"type":"Point","coordinates":[27.123456,53.5]}',
+        "exponent": '{"type":"Point","coordinates":[2.7123456e1,5.35E+01]}',
+        "negative": '{"type":"Point","coordinates":[-73.985428,-0.000001]}',
+        "integer": '{"type":"Point","coordinates":[27,-53]}',
+        "spaced": '{"type": "Point", "coordinates": [27.123456, 53.5]}',
+        "3d": '{"type":"Point","coordinates":[27.123456,53.5,120.0]}',
+        "coordinates_first": '{"coordinates":[27.123456,53.5],"type":"Point"}',
+    }
+    fast = {"compact", "exponent", "negative", "integer"}
+
+    def decoded(texts):
+        batch = pa.RecordBatch.from_arrays([pa.array(list(range(len(texts)))), pa.array(texts)], ["i", "text"])
+        out = {}
+        for b in _decode_batch(batch, "text", ["i"], False):
+            for r in b.to_pylist():
+                out[r["i"]] = (r["geom"], r["minx"], r["miny"], r["maxx"], r["maxy"], r["rect"])
+        return out
+
+    def reference(text):
+        pg = from_geojson(text)
+        x, y = pg.coords.tolist()
+        geom = {"gtype": 1, "coords": [x, y], "ring_offsets": [0, 1], "part_offsets": [0, 1],
+                "part_types": [], "child_offsets": []}
+        return geom, x, y, x, y, False
+
+    texts = list(spellings.values())
+    rows, _ = _point_fast_path(texts)
+    assert {list(spellings)[j] for j in rows} == fast
+    assert decoded(texts) == {j: reference(t) for j, t in enumerate(texts)}
+
+    bad = texts + ['{"type":"Point","coordinates":[27.1,53.5x]}']
+    assert _point_fast_path(bad)[0].size == 0
+    assert decoded(bad) == {j: reference(t) for j, t in enumerate(texts)}
 
 
 def test_3d_span_coordinates_join(spark):
@@ -1122,10 +1293,10 @@ def test_decode_once_plan_shape(spark, monkeypatch):
         assert plan.count("MapInArrow ") == plan.count("MapInArrow _decode_geojson(") == inputs, (name, plan)
 
 
-def _executed_leaves(df):
-    """(node name, output column names, under a broadcast exchange) of
-    every leaf of ``df``'s executed plan, walking into AQE query stages
-    and cached relations the way perfbench/tracer.py does."""
+def _executed_nodes(df):
+    """(node, under a broadcast exchange, is a leaf) for every node of
+    ``df``'s executed plan, walking into AQE query stages and cached
+    relations the way perfbench/tracer.py does."""
     out, seen = [], set()
     stack = [(df._jdf.queryExecution().executedPlan(), False)]
     while stack:
@@ -1146,10 +1317,19 @@ def _executed_leaves(df):
         else:
             ch = node.children()
             kids = [ch.apply(i) for i in range(ch.size())]
-        if not kids:
+        out.append((node, bcast, not kids))
+        stack.extend((k, bcast) for k in kids)
+    return out
+
+
+def _executed_leaves(df):
+    """(node name, output column names, under a broadcast exchange) of
+    every leaf of ``df``'s executed plan (_executed_nodes)."""
+    out = []
+    for node, bcast, leaf in _executed_nodes(df):
+        if leaf:
             cols = node.output()
             out.append((node.nodeName(), {cols.apply(i).name() for i in range(cols.size())}, bcast))
-        stack.extend((k, bcast) for k in kids)
     return out
 
 
@@ -1181,11 +1361,8 @@ def test_driver_relations_plan_no_python_rdd(spark, monkeypatch, tmp_path):
     cover_cols, contrib_cols = {"cell_id", "poly_id"}, {"tile_x", "tile_y", "poly_id"}
 
     def check(name, df, local_cols):
-        try:
-            assert df.count() > 0, name
-            leaves = _executed_leaves(df)
-        finally:
-            spark.catalog.clearCache()  # pip_join_docs_any persists its branch point
+        assert df.count() > 0, name
+        leaves = _executed_leaves(df)
         assert not [n for n, _, _ in leaves if n.startswith("Scan ExistingRDD")], (name, leaves)
         local = [cols for n, cols, bcast in leaves if n == "LocalTableScan" and bcast]
         assert any(local_cols <= cols for cols in local) if local_cols else not local, (name, leaves)
@@ -1195,6 +1372,74 @@ def test_driver_relations_plan_no_python_rdd(spark, monkeypatch, tmp_path):
         monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", ceiling)
         check(f"pip_join_docs_any/{side}", pip_join_docs_any(docs, dim), cover_cols if side == "broadcast" else None)
         check(f"zonal_stats/{side}", zonal_stats(spark, tiles, grid, dim), contrib_cols if side == "broadcast" else None)
+
+
+
+def _mixed_dim(spark):
+    """Convex polygons, rectangles and a holed polygon over the
+    interleaved docs' lon/lat box (overlaps included)."""
+    import json
+
+    def ring(*pts):
+        return [list(p) for p in pts + pts[:1]]
+
+    def hexagon(cx, cy, r):
+        t = np.linspace(0.0, 2 * np.pi, 7)[:-1] + 0.3
+        return ring(*zip(cx + r * np.cos(t), cy + r * 0.6 * np.sin(t)))
+
+    def box(x0, y0, x1, y1):
+        return ring((x0, y0), (x1, y0), (x1, y1), (x0, y1))
+
+    rings = {
+        1: [hexagon(26.5, 53.5, 0.4)],
+        2: [hexagon(27.6, 54.3, 0.5)],
+        3: [ring((28.1, 53.1), (28.9, 53.3), (28.4, 54.0))],
+        4: [box(26.0, 54.0, 26.8, 54.8)],
+        5: [box(27.8, 54.4, 28.9, 54.95)],
+        6: [box(27.0, 53.0, 28.0, 53.9), box(27.3, 53.3, 27.7, 53.6)],
+    }
+    return spark.createDataFrame(
+        [(pid, json.dumps({"type": "Polygon", "coordinates": r})) for pid, r in rings.items()],
+        "poly_id long, geojson string",
+    )
+
+
+def test_span_join_one_pass(spark, monkeypatch):
+    """pip_join_docs_any runs ONE span pass on both sides of the
+    broadcast gate: over a mixed dim (convex polygons, rectangles, a
+    holed polygon), its executed plan, walked through the AQE stages,
+    holds exactly one exact refine, one decode of the docs, on the
+    distributed side one decode of the dim, and no cached relation.
+    Its Point pairs equal pip_join_docs's on the same docs and dim."""
+    from gdal_boots_spark import memo
+    from gdal_boots_spark.functions.geometry_fns import point_xy_sql
+    from gdal_boots_spark.operators import cover
+    from gdal_boots_spark.operators.spans import extract_geo_spans
+    from gdal_boots_spark.operators.spatial_join import pip_join_docs, pip_join_docs_any
+
+    docs = interleaved_docs(spark, SF_SMOKE, poly_spans=True)
+    dim = _mixed_dim(spark)
+    points = extract_geo_spans(docs).where(point_xy_sql("text")[2]).select("doc_id", "span_pos")
+    points = {tuple(r) for r in points.collect()}
+    out = {}
+    for side, ceiling in GATE_SIDES.items():
+        monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", ceiling)
+        memo.clear()
+        df = pip_join_docs_any(docs, dim)
+        out[side] = {tuple(r) for r in df.collect()}
+        nodes = [node.simpleString(100) for node, _, _ in _executed_nodes(df)]
+
+        def count(marker):
+            return sum(marker in n for n in nodes)
+
+        assert count("ArrowEvalPython [_intersects(") == 1, (side, nodes)
+        assert count("MapInArrow _decode_geojson(doc_id") == 1, (side, nodes)
+        assert count("_decode_geojson(poly_id") == (side == "distributed"), (side, nodes)
+        assert count("InMemoryTableScan") == 0, (side, nodes)
+        want = {tuple(r) for r in pip_join_docs(docs, dim).select("doc_id", "span_pos", "poly_id").collect()}
+        assert {p for p in out[side] if p[:2] in points} == want and len(want) > 50, side
+    assert out["broadcast"] == out["distributed"]
+    assert len({p[2] for p in out["broadcast"]}) == 6
 
 
 @pytest.mark.parametrize("name", ["order", "my id"])
@@ -1363,7 +1608,6 @@ def test_span_join_distributed_never_collects(spark, monkeypatch, tmp_path):
         memo.clear()
         assert build(docs, polys).count() > 0
     memo.clear()
-    spark.catalog.clearCache()  # pip_join_docs_any persists its branch point
     assert calls == []
 
 
