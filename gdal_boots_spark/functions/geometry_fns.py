@@ -178,10 +178,10 @@ _POINT_HEAD = '{"type":"Point","coordinates":['
 def _point_fast_path(texts):
     """Rows of ``texts`` spelled as the compact 2-D Point
     ``{"type":"Point","coordinates":[x,y]}`` -> (row indices, their
-    interleaved x,y), parsed as ONE joined float blob.  A parse that
-    does not yield exactly two finite floats per row (a malformed or
-    non-finite token) returns no rows, so every Point of the batch
-    takes from_geojson instead."""
+    interleaved x,y), parsed as one _parse_float_segments call with one
+    segment per row.  Unless every segment holds exactly two finite
+    floats (a malformed, missing, extra or non-finite token), no rows
+    are returned and every Point of the batch takes from_geojson."""
     rows, blobs = [], []
     for j, v in enumerate(texts):
         if v is not None and v.startswith(_POINT_HEAD) and v.endswith("]}"):
@@ -190,9 +190,11 @@ def _point_fast_path(texts):
                 rows.append(j)
                 blobs.append(b)
     if rows:
-        xy = _parse_float_segments([",".join(blobs)])
-        if xy.size == 2 * len(rows) and np.isfinite(xy).all():
-            return np.asarray(rows, np.int64), xy
+        nums = _parse_float_segments(blobs)
+        if nums.size == 3 * len(rows) - 1:
+            seg = np.append(nums, np.nan).reshape(-1, 3)
+            if np.isnan(seg[:, 2]).all() and np.isfinite(seg[:, :2]).all():
+                return np.asarray(rows, np.int64), seg[:, :2].ravel()
     return np.empty(0, np.int64), None
 
 

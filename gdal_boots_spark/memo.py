@@ -30,7 +30,8 @@ single build) then pays the collect or probe job once.
   ``releasing()`` block that first persisted them.
 * **Scratch directories.**  ``temp_dir`` makes a directory that the
   memo owns like a persisted relation: ``clear()`` and the
-  ``releasing()`` block that made it remove it.
+  ``releasing()`` block that made it remove it.  An application change
+  keeps them: they hold no Spark state.
 
 Callers must treat returned values as read-only; they are the memo's
 entries themselves.
@@ -57,7 +58,9 @@ _lock = threading.Lock()
 def _active() -> bool:
     """True when a SparkContext is active.  A context of a different
     application than the entries' drops them all (without unpersisting:
-    their broadcasts died with their context)."""
+    their broadcasts died with their context) except the scratch
+    directories, which belong to no application and may still be read
+    by a plan built before this call."""
     global _context, _app_id
     from pyspark import SparkContext
 
@@ -67,9 +70,10 @@ def _active() -> bool:
     if sc is not _context:
         app_id = sc.applicationId
         if app_id != _app_id:
-            for path, _ in _entries.get("temp_dir", {}).values():
-                _release(path)
+            dirs = _entries.pop("temp_dir", None)
             _entries.clear()
+            if dirs:
+                _entries["temp_dir"] = dirs
         _context, _app_id = sc, app_id
     return True
 

@@ -432,7 +432,9 @@ def test_osm_distributed_temp_dir_released(spark, tmp_path, monkeypatch):
     """read_osm_distributed without a work_dir writes its NDJSON to a
     directory the memo owns: after three calls memo.clear() leaves no
     osm_ndjson_* directory behind, and a call inside memo.releasing()
-    (a StageRunner stage) leaves none once the block exits."""
+    (a StageRunner stage) leaves none once the block exits.  A memo
+    that first meets the application inside the call (a fresh process)
+    keeps the directory the lazily planned reads still need."""
     import tempfile
 
     from gdal_boots_spark.sources.osm import read_osm_distributed
@@ -457,4 +459,12 @@ def test_osm_distributed_temp_dir_released(spark, tmp_path, monkeypatch):
     with memo.releasing():
         assert read_osm_distributed(spark, path)["lines"].count() == 1
         assert len(list(scratch.glob("osm_ndjson_*"))) == 1
+    assert not list(scratch.glob("osm_ndjson_*"))
+    monkeypatch.setattr(memo, "_context", None)
+    monkeypatch.setattr(memo, "_app_id", None)
+    layers = read_osm_distributed(spark, path)
+    counts = {name: layers[name].count() for name in layers.layer_names}  # every layer reads the directory
+    assert counts["lines"] == 1
+    assert len(list(scratch.glob("osm_ndjson_*"))) == 1
+    memo.clear()
     assert not list(scratch.glob("osm_ndjson_*"))

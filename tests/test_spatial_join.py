@@ -1240,6 +1240,10 @@ def test_point_fast_decode_spellings():
 
     bad = texts + ['{"type":"Point","coordinates":[27.1,53.5x]}']
     assert _point_fast_path(bad)[0].size == 0
+    # two malformed rows whose value counts cancel (0 + 4 == 2 * 2)
+    cancelling = texts + ['{"type":"Point","coordinates":[,]}', '{"type":"Point","coordinates":[1 2,3 4]}']
+    assert _point_fast_path(cancelling)[0].size == 0
+    assert decoded(cancelling) == {j: reference(t) for j, t in enumerate(texts)}
     assert decoded(bad) == {j: reference(t) for j, t in enumerate(texts)}
 
 
