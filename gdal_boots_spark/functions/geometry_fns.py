@@ -11,9 +11,13 @@ Three tiers, per the engine's "UDFs are the slow path" rule:
   that emits the packed geometry, its bbox and a rectangle flag as
   concrete columns.  Every operator that reads a GeoJSON column decodes
   it here, exactly once.
-* **One exact-refine predicate** (``where_intersects``): a boolean Arrow
-  UDF in a WHERE over the decode pass's columns (or Point x/y) and a
-  polygon id; every polygon join refines its candidates through it.
+* **One exact refine** (geom.pip.intersects_polygons) with two Spark
+  surfaces.  ``where_intersects``: a boolean Arrow UDF in a WHERE over
+  the decode pass's columns (or Point x/y) and a polygon id, for
+  candidates a JVM join produced.  ``intersecting_pairs``: the span
+  join's broadcast side, where one mapInArrow decodes, looks each
+  geometry up in a collected dim's cell cover and refines it in the
+  same worker, so no geometry goes back to the JVM.
 * **Arrow-batched pandas UDFs** for row-preserving column codecs and
   NumPy kernels (GeoJSON decode/encode with null in, null out; CRS
   transform; make_valid) — Series/DataFrame in, never per-row Python on
@@ -35,13 +39,14 @@ from pyspark.sql.types import (
     ByteType,
     DoubleType,
     IntegerType,
+    LongType,
     StringType,
     StructField,
     StructType,
 )
 
 from ..geom import crs as _crs
-from ..geom.cells import cell_id_sql  # noqa: F401  (re-exported: the cell id as SQL)
+from ..geom.cells import cell_id_sql, cover_pairs  # noqa: F401  (cell_id_sql re-exported: the cell id as SQL)
 from ..geom.packed import PackedGeometry, from_geojson, to_geojson
 from ..geom.pip import Probes, intersects_polygons, point_probes, rect_rings
 
@@ -434,6 +439,46 @@ def where_intersects(df: DataFrame, pid: str, probe: tuple, polygons) -> DataFra
         warnings.simplefilter("ignore", UserWarning)
         udf = arrow_udf(_intersects, "boolean", ArrowUDFType.SCALAR)
     return df.where(udf(pid, *([polygons] if carried else []), *probe))
+
+
+def intersecting_pairs(df: DataFrame, col: str, keep: list[str], cover, polygons) -> DataFrame:
+    """``df`` -> (``keep``..., poly_id) for every row whose GeoJSON
+    ``col`` intersects a polygon of a collected dim, as ONE mapInArrow.
+    Per Arrow batch: the decode pass (_decode_batch, rectangles
+    payload-free), candidates from the dim's sorted cell cover
+    (geom.cells.cover_pairs: each geometry at its own level, bbox
+    overlap, reporting-cell dedup), the one exact refine
+    (geom.pip.intersects_polygons), and only the pairs that hold leave
+    the worker.
+
+    ``cover`` is a Broadcast of the dim's geom.cells.SortedCover and
+    ``polygons`` a Broadcast of {poly_id: (coords, ring_offsets)}
+    (cover.poly_dim): the closure carries their ids only, and each
+    Python worker loads each value once."""
+    import pyarrow as pa
+
+    schema = StructType([df.schema[k] for k in keep] + [StructField("poly_id", LongType())])
+    probe_cols = ("geom", "minx", "miny", "maxx", "maxy", "rect")
+
+    def _intersecting_pairs(batches):
+        index, dim = cover.value, polygons.value
+
+        def polygon_of(p, i):
+            return dim[int(p)]
+
+        for batch in batches:
+            for d in _decode_batch(batch, col, keep, True):
+                row, pid = cover_pairs(index, *(d.column(c).to_numpy() for c in probe_cols[1:5]))
+                if not row.size:
+                    continue
+                take = pa.array(row)
+                hit = intersects_polygons(pid, arrow_probes(*(d.column(c).take(take) for c in probe_cols)), polygon_of)
+                take = pa.array(row[hit])
+                yield pa.RecordBatch.from_arrays(
+                    [*(d.column(k).take(take) for k in keep), pa.array(pid[hit], pa.int64())], names=[*keep, "poly_id"]
+                )
+
+    return df.selectExpr(*(quote_ident(c) for c in [*keep, col])).mapInArrow(_intersecting_pairs, schema=schema)
 
 
 # --- pandas UDFs ---------------------------------------------------------

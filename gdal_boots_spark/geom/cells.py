@@ -22,10 +22,15 @@ they take column names or SQL fragments and return Spark SQL strings
 (one server-side parse per fragment instead of a py4j Column tree),
 built from the same constants.  No other Spark code spells the format
 out.  A level is an int (range-checked like ``cell_id``) or a per-row
-SQL expression; ``n`` (2^level) may name a column holding it.
+SQL expression; ``n`` (2^level) may name a column holding it.  The
+per-row builders have NumPy twins (``bbox_level``, ``cover_cells``,
+``reporting_cell``) that evaluate as Spark does, for the cover join a
+Python worker runs itself (``cover_pairs``).
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 
@@ -50,23 +55,26 @@ def level_for_edge(edge, span: float = 360.0) -> int:
     return int(np.clip(np.floor(np.log2(span / edge)), 0, MAX_RES))
 
 
-def _grid(lon, lat, res: int):
-    n = 1 << res
-    lon = np.asarray(lon, dtype=np.float64)
-    lat = np.asarray(lat, dtype=np.float64)
-    ix = np.clip(np.floor((lon + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
-    iy = np.clip(np.floor((lat + 90.0) / 180.0 * n), 0, n - 1).astype(np.int64)
-    return ix, iy
+def _index(v, off: float, span: float, n):
+    """Index of ``v`` on an axis of ``n`` cells (a float, or one per
+    row), clamped to [0, n-1] as _index_sql computes it: a NaN floors to
+    0, as Spark's FLOOR casts it to BIGINT."""
+    f = np.floor((np.asarray(v, dtype=np.float64) + off) / span * n)
+    return np.minimum(np.maximum(np.nan_to_num(f, nan=0.0), 0), np.subtract(n, 1)).astype(np.int64)
+
+
+def _grid(lon, lat, level):
+    n = np.ldexp(1.0, level)
+    return _index(lon, 180.0, 360.0, n), _index(lat, 90.0, 180.0, n)
 
 
 def cell_id(lon, lat, res: int):
     """lon/lat arrays -> int64 cell ids at resolution `res`."""
-    ix, iy = _grid(lon, lat, _check_res(res))
-    return np.int64(res) * _RES_SHIFT + ix * _IX_SHIFT + iy
+    return compose(res, *_grid(lon, lat, _check_res(res)))
 
 
 def compose(res, ix, iy):
-    return np.int64(res) * _RES_SHIFT + np.asarray(ix, np.int64) * _IX_SHIFT + np.asarray(iy, np.int64)
+    return np.asarray(res, np.int64) * _RES_SHIFT + np.asarray(ix, np.int64) * _IX_SHIFT + np.asarray(iy, np.int64)
 
 
 def cell_decode(cid):
@@ -95,12 +103,93 @@ def cover_bbox(minx, miny, maxx, maxy, res: int) -> np.ndarray:
     This is the safe (no-false-negative) covering used as the join
     pre-filter; exact refinement happens in the PIP kernel.
     """
-    ix0, iy0 = _grid(minx, miny, res)
-    ix1, iy1 = _grid(maxx, maxy, res)
-    ixs = np.arange(int(ix0), int(ix1) + 1, dtype=np.int64)
-    iys = np.arange(int(iy0), int(iy1) + 1, dtype=np.int64)
-    gx, gy = np.meshgrid(ixs, iys, indexing="ij")
-    return compose(res, gx.ravel(), gy.ravel())
+    return cover_cells(*np.array([[minx], [miny], [maxx], [maxy]], np.float64), res)[1]
+
+
+def bbox_level(minx, miny, maxx, maxy, lo: int, hi: int) -> np.ndarray:
+    """``bbox_level_sql`` per row: the finest level in [lo, hi] whose
+    cell edge is at least the bbox extent on both axes.  Evaluated as
+    Spark does: LOG2 is ln(x) / ln(2) and null (so ``hi``) at 0, LEAST
+    skips a NaN, FLOOR casts NaN to 0."""
+    w = np.maximum(np.subtract(maxx, minx), 1e-12)
+    h = np.maximum(np.subtract(maxy, miny), 1e-12)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        lvl = np.floor(np.log(np.fmin(360.0 / w, 180.0 / h)) / np.log(2.0))
+    return np.clip(np.nan_to_num(lvl, nan=0.0, neginf=hi), _check_res(lo), _check_res(hi)).astype(np.int64)
+
+
+def cover_cells(minx, miny, maxx, maxy, level) -> tuple[np.ndarray, np.ndarray]:
+    """``cover_explode_sql`` over many bboxes, each at its own ``level``
+    (an int or one per row) -> (row, cell_id): every cell at the level
+    that a row's bbox intersects (inclusive), rows in input order and
+    each row's cells ix-major.  A bbox with min > max covers nothing
+    here, where SQL's ``sequence`` would count down; decoded bboxes
+    never have one."""
+    level = np.broadcast_to(np.asarray(level, np.int64), np.shape(minx))
+    ix0, iy0 = _grid(minx, miny, level)
+    ix1, iy1 = _grid(maxx, maxy, level)
+    ny = np.maximum(iy1 - iy0 + 1, 0)
+    cnt = np.maximum(ix1 - ix0 + 1, 0) * ny
+    row = np.repeat(np.arange(cnt.size), cnt)
+    k = np.arange(row.size) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    return row, compose(level[row], ix0[row] + k // ny[row], iy0[row] + k % ny[row])
+
+
+def window_cover(minx, miny, maxx, maxy, lo: int, hi: int) -> tuple[np.ndarray, np.ndarray]:
+    """``cover_cells`` of every bbox at every level in [lo, hi] ->
+    (row, cell_id), row-major with levels ascending."""
+    rows = np.repeat(np.arange(np.size(minx)), hi - lo + 1)
+    levels = np.tile(np.arange(_check_res(lo), _check_res(hi) + 1), np.size(minx))
+    sub, cid = cover_cells(*(np.asarray(v, np.float64)[rows] for v in (minx, miny, maxx, maxy)), levels)
+    return rows[sub], cid
+
+
+def reporting_cell(minxs, minys, level) -> np.ndarray:
+    """``reporting_cell_sql`` per row: the cell at ``level`` of the
+    lower-left corner of the intersection of bboxes whose min corners
+    are the arrays in ``minxs``/``minys`` (NaN, like Spark's GREATEST,
+    is the greatest)."""
+    return compose(level, *_grid(np.maximum.reduce(minxs), np.maximum.reduce(minys), level))
+
+
+class SortedCover(NamedTuple):
+    """Items' bbox covers at every level in [lo, hi] (``window_cover``),
+    sorted by cell id: the index ``cover_pairs`` probes."""
+
+    cell: np.ndarray  # int64 cell ids, ascending
+    item: np.ndarray  # int64 item id of each cell row
+    box: np.ndarray  # float64 [m, 4] item bbox of each cell row
+    lo: int
+    hi: int
+
+
+def sorted_cover(ids, boxes, lo: int, hi: int) -> SortedCover:
+    """ids int64[k] and their boxes float64[k, 4] -> SortedCover."""
+    boxes = np.asarray(boxes, np.float64).reshape(-1, 4)
+    row, cid = window_cover(*boxes.T, lo, hi)
+    order = np.argsort(cid, kind="stable")
+    return SortedCover(cid[order], np.asarray(ids, np.int64)[row[order]], boxes[row[order]], lo, hi)
+
+
+def cover_pairs(cover: SortedCover, minx, miny, maxx, maxy) -> tuple[np.ndarray, np.ndarray]:
+    """Probe bboxes against ``cover`` -> (probe row, item id) for every
+    pair whose bboxes overlap (closed), each pair once: a probe is
+    covered at its own ``bbox_level`` in [lo, hi], its cells are looked
+    up in the sorted cover, and a pair is kept only in its reporting
+    cell.  Every level in the window is covered on the item side, so the
+    pair set does not depend on the level a probe takes."""
+    minx, miny, maxx, maxy = (np.asarray(v, np.float64) for v in (minx, miny, maxx, maxy))
+    lvl = bbox_level(minx, miny, maxx, maxy, cover.lo, cover.hi)
+    row, cid = cover_cells(minx, miny, maxx, maxy, lvl)
+    a = np.searchsorted(cover.cell, cid, "left")
+    cnt = np.searchsorted(cover.cell, cid, "right") - a
+    j = np.repeat(a - np.cumsum(cnt) + cnt, cnt) + np.arange(int(cnt.sum()))
+    row, cid = np.repeat(row, cnt), np.repeat(cid, cnt)
+    pminx, pminy, pmaxx, pmaxy = cover.box[j].T
+    hit = (minx[row] <= pmaxx) & (pminx <= maxx[row]) & (miny[row] <= pmaxy) & (pminy <= maxy[row])
+    row, j, cid, pminx, pminy = row[hit], j[hit], cid[hit], pminx[hit], pminy[hit]
+    keep = cid == reporting_cell((minx[row], pminx), (miny[row], pminy), lvl[row])
+    return row[keep], cover.item[j[keep]]
 
 
 def pick_res(minx, miny, maxx, maxy, max_cells: int = 64) -> int:

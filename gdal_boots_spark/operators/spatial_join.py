@@ -4,7 +4,8 @@ This re-expresses, as one distributed plan, what the reference does
 in-process in ``crop_by_geometry``/``values_by_points`` (gdal.py:819-931):
 geometry -> covering cells -> candidate pairs -> exact refinement.
 
-Physical shape (small/medium polygon side — the common case):
+Physical shape of the Point join (small/medium polygon side — the
+common case):
 
     points ──(native cell_id math, codegen)──┐
                                              ├─ BROADCAST hash join on cell_id
@@ -21,15 +22,25 @@ stage, so the plan scales linearly with executors at 100 TB (the
 two-parallelism scaling evidence in BENCH runs this operator).
 
 Documents whose geo spans mix geometry types (pip_join_docs_any) take
-ONE span pass in the same shape: one decode of every geo span, Points
-included (a Point's bbox is its own cell), one cover join, one refine,
-and one task per scan partition.
+ONE span pass, and on the broadcast side it is one Python pass:
+
+    geo spans ──(codegen posexplode + filter)──> ONE mapInArrow; per batch:
+        decode -> cell-cover lookup (sorted cover, a Broadcast)
+               -> exact refine (packed coords, a Broadcast)
+               -> (doc_id, span_pos, poly_id) only
+
+No broadcast exchange, no JVM join and no second Python worker: the
+geometry a worker decodes is filtered and refined where it was decoded
+(geom.cells.cover_pairs has the cover join's rules in NumPy: a span
+at its own level, bbox overlap, reporting-cell dedup).
 
 A polygon dim over cover.fits_broadcast's ceiling is never collected:
 every join here then joins its candidates to the dim decoded once and
 cell-exploded (_cover_shuffle), which carries each polygon's packed
-geometry to the refine.  Both sides refine through the one predicate,
-functions.geometry_fns.where_intersects (geom.pip.intersects_polygons).
+geometry to the refine.  Every side refines through the one kernel,
+geom.pip.intersects_polygons: after a JVM join through the boolean
+Arrow UDF functions.geometry_fns.where_intersects, and in the span
+join's broadcast pass through functions.geometry_fns.intersecting_pairs.
 
 For point-vs-polygon the (point, poly) pair appears at most once —
 a point maps to exactly one cell and a polygon's cover lists each cell
@@ -46,9 +57,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import memo
-from ..functions.geometry_fns import decode_geojson, point_xy_sql, quote_ident, where_intersects
+from ..functions.geometry_fns import decode_geojson, intersecting_pairs, point_xy_sql, quote_ident, where_intersects
 from ..geom import cells
-from ..geom.cells import cover_bbox, level_for_edge, pick_res
+from ..geom.cells import level_for_edge, pick_res
 from ..partitioning import plan_bytes
 from .cover import fits_broadcast, poly_dim
 from .skew import hot_keys, join_salting, salted_join
@@ -82,11 +93,18 @@ ADAPTIVE_LEVEL_WINDOW = 4
 HOT_CELL_SALT, HOT_CELL_ROWS = 8, 1_000_000
 
 
+def _dim_boxes(bboxes: dict) -> tuple[np.ndarray, np.ndarray]:
+    """A collected dim's {poly_id: bbox} -> (poly ids int64[k], bboxes
+    float64[k, 4]), in dim order."""
+    return np.fromiter(bboxes, np.int64, len(bboxes)), np.asarray(list(bboxes.values()), np.float64).reshape(-1, 4)
+
+
 def _cover_df(spark: SparkSession, bboxes: dict, res: int) -> DataFrame:
-    """The polygon dim's cell cover, the one relation both join paths
-    read: a (cell_id, poly_id, _pminx, _pminy, _pmaxx, _pmaxy) row per
-    polygon and cell of its bbox cover at every level in
-    [res - ADAPTIVE_LEVEL_WINDOW, res].  Cell ids embed their level
+    """The polygon dim's cell cover as the relation pip_join_points and
+    poly_span_candidates join (the span join's broadcast pass reads the
+    same rows sorted, _cover_index): a (cell_id, poly_id, _pminx,
+    _pminy, _pmaxx, _pmaxy) row per polygon and cell of its bbox cover
+    at every level in [res - ADAPTIVE_LEVEL_WINDOW, res].  Cell ids embed their level
     (geom.cells), so a Point's level-``res`` cell matches only the
     level-``res`` rows while a span matches at its own level.  The
     underscore names cannot collide with a caller's point columns.
@@ -97,20 +115,31 @@ def _cover_df(spark: SparkSession, bboxes: dict, res: int) -> DataFrame:
     execution re-runs.  Memoised per session: the build ships the
     table through py4j on every cold plan build, and the rows are a
     pure function of the key."""
-    lmin = max(0, res - ADAPTIVE_LEVEL_WINDOW)
 
     def build():
-        pids = np.fromiter(bboxes, np.int64, len(bboxes))
-        box = np.asarray(list(bboxes.values()), np.float64).reshape(-1, 4)
-        ids = [cover_bbox(*b, lvl) for b in box for lvl in range(lmin, res + 1)]
-        own = np.repeat(np.arange(len(ids)) // (res + 1 - lmin), [c.size for c in ids])
-        cols = {"cell_id": np.concatenate(ids) if ids else np.empty(0, np.int64), "poly_id": pids[own]}
+        pids, box = _dim_boxes(bboxes)
+        own, cid = cells.window_cover(*box.T, max(0, res - ADAPTIVE_LEVEL_WINDOW), res)
+        cols = {"cell_id": cid, "poly_id": pids[own]}
         cols.update((name, box[own, j]) for j, name in enumerate(("_pminx", "_pminy", "_pmaxx", "_pmaxy")))
         return spark.createDataFrame(
             pa.table(cols), "cell_id long, poly_id long, _pminx double, _pminy double, _pmaxx double, _pmaxy double"
         )
 
     return memo.get("cover_df", (res, tuple(sorted(bboxes.items()))), build)
+
+
+def _cover_index(spark: SparkSession, dim, res: int):
+    """A Broadcast of the collected ``dim``'s cell cover at every level
+    in [res - ADAPTIVE_LEVEL_WINDOW, res] (_cover_df's rows) as a
+    geom.cells.SortedCover, for the span join's broadcast side.
+    Memoised per session, dim plan and res, and unpersisted on eviction,
+    like the dim's packed coords."""
+
+    def build():
+        cover = cells.sorted_cover(*_dim_boxes(dim.bboxes), max(0, res - ADAPTIVE_LEVEL_WINDOW), res)
+        return spark.sparkContext.broadcast(cover)
+
+    return memo.get("cover_index", None if dim.key is None else (dim.key, res), build)
 
 
 def _cover_shuffle(polys: DataFrame, res: int | None, window: int = ADAPTIVE_LEVEL_WINDOW) -> tuple[int, DataFrame]:
@@ -145,18 +174,6 @@ def _cover_shuffle(polys: DataFrame, res: int | None, window: int = ADAPTIVE_LEV
         *cols, "_lvl", "_n", *s1
     ).selectExpr(*cols, "_lvl", "_n", "_ix", *s2).selectExpr(f"{cid} AS cell_id", *cols)
     return res, cover
-
-
-def _span_dim(polys: DataFrame, res: int | None):
-    """The polygon dim as the span join reads it, on the side
-    cover.fits_broadcast picks -> (res, cover relation, the refine's
-    polygon source): the collected dim's broadcast cover and packed
-    coords, or the distributed cover carrying ``_pgeom``."""
-    if fits_broadcast(plan_bytes(polys)):
-        dim = poly_dim(polys)
-        res = _auto_res(dim.bboxes) if res is None else res
-        return res, F.broadcast(_cover_df(polys.sparkSession, dim.bboxes, res)), dim.bpacked
-    return (*_cover_shuffle(polys, res), "_pgeom")
 
 
 def pip_join_points(
@@ -255,10 +272,10 @@ def _poly_span_candidates(spans: DataFrame, cover: DataFrame, res: int, hot: Dat
     """geo spans (extract_geo_spans rows) -> deduped (doc_id, span_pos,
     geom, bbox, rect, poly_id[, the cover's _pgeom]) candidates: geojson
     decode -> native bbox cover explode -> cell join with the dim's
-    ``cover`` (_span_dim), salting the ``hot`` cells if given -> bbox
-    overlap filter -> reporting-cell dedup (the pair survives only in
-    the cell holding the bbox-intersection lower-left corner — dedup
-    WITHOUT a shuffle).
+    ``cover`` (_cover_df or _cover_shuffle), salting the ``hot`` cells
+    if given -> bbox overlap filter -> reporting-cell dedup (the pair
+    survives only in the cell holding the bbox-intersection lower-left
+    corner — dedup WITHOUT a shuffle).
 
     ADAPTIVE COVER RESOLUTION (VERDICT r5 item 4): each span explodes at
     its OWN level — the finest level in [res-ADAPTIVE_LEVEL_WINDOW, res]
@@ -322,9 +339,15 @@ def poly_span_candidates(docs: DataFrame, polys: DataFrame, res: int | None = No
     """Bench/diagnostic surface: the pre-refinement candidates of the
     non-Point geo spans of interleaved docs (mirrors pip_join_points
     ``refine=False``) — used to normalize per-candidate refine cost.
-    The polygon dim is read on the side cover.fits_broadcast picks
-    (_span_dim), as in pip_join_docs_any."""
-    res, cover, _ = _span_dim(polys, res)
+    The polygon dim is read on the side cover.fits_broadcast picks: the
+    collected dim's broadcast cover, or the distributed cover
+    (_cover_shuffle), whose ``_pgeom`` rides along."""
+    if fits_broadcast(plan_bytes(polys)):
+        dim = poly_dim(polys)
+        res = _auto_res(dim.bboxes) if res is None else res
+        cover = F.broadcast(_cover_df(polys.sparkSession, dim.bboxes, res))
+    else:
+        res, cover = _cover_shuffle(polys, res)
     spans = extract_geo_spans(docs).where(f"NOT {point_xy_sql('text')[2]}")
     return _poly_span_candidates(spans, cover, res)
 
@@ -332,31 +355,38 @@ def poly_span_candidates(docs: DataFrame, polys: DataFrame, res: int | None = No
 def pip_join_docs_any(docs: DataFrame, polys: DataFrame, res: int | None = None) -> DataFrame:
     """Interleaved documents x polygons -> (doc_id, span_pos, poly_id)
     for geo spans of ANY geometry type (crop/rasterize in the reference
-    accept any geometry, gdal.py:836-846), in ONE span pass: every geo
-    span, Points included, goes through _poly_span_candidates (one
-    decode, one cover join, reporting-cell dedup without a shuffle),
-    then the one exact refine, where_intersects: only its argument
-    columns cross Arrow (a rect span as its bbox alone, decided by box
-    arithmetic) and one byte returns per row.  The dim is read on the
-    side cover.fits_broadcast picks (_span_dim); over the ceiling it is
-    decoded once and never collected, and the candidates join it with
-    hot cells salted (skew.join_salting), counted over the Point spans'
-    cell ids in the JVM so that the count reruns no decode.
+    accept any geometry, gdal.py:836-846), in ONE span pass on either
+    side of cover.fits_broadcast.
 
-    Rect x rect pairs are not split off in the JVM: that needed the
-    candidates persisted (one subtree consumed twice), and the cache
-    stage and its eager planning cost more per pass than the NumPy
-    test they spared, at rect-heavy shapes too (CHANGES.md)."""
-    res, cover, polygons = _span_dim(polys, res)
+    Broadcast side: one mapInArrow over the geo spans
+    (geometry_fns.intersecting_pairs) decodes each Arrow batch, looks its
+    candidates up in the collected dim's sorted cell cover (_cover_index,
+    one Broadcast) and refines them, all in the Python worker that
+    decoded them; only the (doc_id, span_pos, poly_id) pairs come back.
+    The plan has no broadcast exchange and no JVM join.
+
+    Distributed side: the dim is decoded once and never collected;
+    every span, Points included, goes through _poly_span_candidates (one
+    decode, one cover join with hot cells salted by skew.join_salting,
+    counted over the Point spans' cell ids in the JVM so that the count
+    reruns no decode; reporting-cell dedup without a shuffle), then the
+    one exact refine, where_intersects, reading each polygon off the
+    candidate rows.  Rect x rect pairs are not split off in the JVM:
+    that needed the candidates persisted, and the cache stage cost more
+    per pass than the NumPy test it spared (CHANGES.md).  Both sides
+    give the same pairs."""
     spans = extract_geo_spans(docs)
-    hot = None
-    if isinstance(polygons, str):  # the distributed cover
-        xs, ys, ps = point_xy_sql("text")
-        cell_ids = spans.where(ps).selectExpr(f"{cells.cell_id_sql(xs, ys, res)} AS cell_id")
-        hot = hot_keys(cell_ids, "cell_id", HOT_CELL_ROWS)
-    cand = _poly_span_candidates(spans, cover, res, hot)
+    if fits_broadcast(plan_bytes(polys)):
+        dim = poly_dim(polys)
+        res = _auto_res(dim.bboxes) if res is None else res
+        cover = _cover_index(polys.sparkSession, dim, res)
+        return intersecting_pairs(spans, "text", ["doc_id", "span_pos"], cover, dim.bpacked)
+    res, cover = _cover_shuffle(polys, res)
+    xs, ys, ps = point_xy_sql("text")
+    cell_ids = spans.where(ps).selectExpr(f"{cells.cell_id_sql(xs, ys, res)} AS cell_id")
+    cand = _poly_span_candidates(spans, cover, res, hot_keys(cell_ids, "cell_id", HOT_CELL_ROWS))
     return where_intersects(
-        cand, "poly_id", ("geom", "minx", "miny", "maxx", "maxy", "rect"), polygons
+        cand, "poly_id", ("geom", "minx", "miny", "maxx", "maxy", "rect"), "_pgeom"
     ).selectExpr("doc_id", "span_pos", "poly_id")
 
 

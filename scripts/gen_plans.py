@@ -163,13 +163,14 @@ def main():
 
     sections.append((
         "Mixed-geometry flagship (one span pass)",
-        "One scan of the span table: every geo span, Points included, "
-        "decodes in ONE mapInArrow node (geometry + bbox as concrete "
-        "columns — scalar UDFs were duplicated by projection collapse into "
-        "stacked ArrowEvalPython stages), then native cover explode, one "
-        "broadcast cell join, reporting-cell dedup (no shuffle), and ONE "
-        "boolean Arrow-UDF refine (where_intersects) over every candidate. "
-        "No InMemoryRelation: the candidates are not persisted.",
+        "One scan of the span table, and on the broadcast side of the gate "
+        "ONE Python node: every geo span, Points included, goes through one "
+        "mapInArrow (intersecting_pairs) that decodes each Arrow batch, looks "
+        "the spans up in the dim's sorted cell cover (a Broadcast variable: "
+        "each span at its own level, bbox overlap, reporting-cell dedup) and "
+        "refines the candidates in the same worker; only (doc_id, span_pos, "
+        "poly_id) returns.  No BroadcastExchange, no JVM join, no "
+        "ArrowEvalPython, no InMemoryRelation.",
         cap(pip_join_docs_any(_idocs(spark, "/root/testdata/sf0.001", poly_spans=True), rect_polygons_df(spark))),
     ))
 

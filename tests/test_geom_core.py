@@ -336,6 +336,66 @@ def test_cell_id_arithmetic_matches_sql_form(spark):
         ).tolist()
 
 
+def test_vectorized_cover_matches_sql_builders(spark):
+    """The NumPy twins of the per-row cell SQL, over 2,000 seeded bboxes
+    (points, boxes clamped at the antimeridian and the poles, small boxes
+    and boxes wider than 2x2 cells at ``lo``), equal what Spark computes
+    from the SQL builders: bbox_level (bbox_level_sql), cover_cells
+    (cover_explode_sql at the per-row level: same rows in the same
+    order) and reporting_cell (reporting_cell_sql over box pairs).
+    window_cover equals the per-bbox, per-level cover_bbox loop."""
+    from gdal_boots_spark.geom import cells
+
+    rng = np.random.default_rng(18)
+    k = 500
+    cx, cy = rng.uniform(-180.0, 180.0, 4 * k), rng.uniform(-90.0, 90.0, 4 * k)
+    cx[:8] = [-180.0, 180.0, 0.0, -180.0, 180.0, 90.0, 45.0, -45.0]
+    cy[:8] = [-90.0, 90.0, 0.0, 90.0, -90.0, 0.0, 90.0, -90.0]
+    w = np.concatenate([
+        np.zeros(k),  # points
+        10.0 ** rng.uniform(-4.0, 0.7, k),  # small boxes
+        rng.uniform(0.5, 8.0, k),  # clamped at +-180 / +-90 (centres moved to an edge below)
+        rng.uniform(12.0, 60.0, k),  # wider than 2x2 level-6 cells
+    ])
+    h = w * rng.uniform(0.3, 1.0, 4 * k)
+    edge = slice(2 * k, 3 * k)
+    cx[edge] = np.where(rng.random(k) < 0.5, rng.choice([-180.0, 180.0], k), cx[edge])
+    cy[edge] = np.where(rng.random(k) < 0.5, rng.choice([-90.0, 90.0], k), cy[edge])
+    box = np.column_stack([cx - w / 2, cy - h / 2, cx + w / 2, cy + h / 2])
+    lo, hi = 6, 10
+    names = ("minx", "miny", "maxx", "maxy")
+    bb = spark.createDataFrame(
+        [(i, *map(float, b)) for i, b in enumerate(box)], "i long, minx double, miny double, maxx double, maxy double"
+    )
+
+    lv = bb.selectExpr("*", f"{cells.bbox_level_sql(*names, lo, hi)} AS _lvl")
+    got = lv.select("_lvl").collect()
+    level = cells.bbox_level(*box.T, lo, hi)
+    assert level.dtype == np.int64 and [r._lvl for r in got] == level.tolist()
+    assert set(level.tolist()) == set(range(lo, hi + 1))
+
+    s1, s2, cid = cells.cover_explode_sql(*names, "_lvl")
+    got = lv.selectExpr("*", *s1).selectExpr("*", *s2).selectExpr("i", f"{cid} AS cid").collect()
+    row, cover = cells.cover_cells(*box.T, level)
+    assert row.dtype == cover.dtype == np.int64
+    assert [(r.i, r.cid) for r in got] == list(zip(row.tolist(), cover.tolist()))
+    assert np.bincount(row).max() > 4 and len(got) > 4 * k
+
+    partner = rng.permutation(4 * k)
+    pairs = spark.createDataFrame(
+        [(float(box[i, 0]), float(box[i, 1]), float(box[j, 0]), float(box[j, 1]), int(level[i]))
+         for i, j in enumerate(partner)],
+        "ax double, ay double, bx double, by double, _lvl int",
+    )
+    got = pairs.selectExpr(f"{cells.reporting_cell_sql(('ax', 'bx'), ('ay', 'by'), '_lvl')} AS cid").collect()
+    exp = cells.reporting_cell((box[:, 0], box[partner, 0]), (box[:, 1], box[partner, 1]), level)
+    assert [r.cid for r in got] == exp.tolist()
+
+    row, cover = cells.window_cover(*box[k:2 * k].T, lo, hi)
+    loop = [(i, c) for i, b in enumerate(box[k:2 * k]) for lvl in range(lo, hi + 1) for c in cover_bbox(*b, lvl)]
+    assert list(zip(row.tolist(), cover.tolist())) == loop
+
+
 def test_level_for_edge_matches_inline_formulas():
     """geom.cells.level_for_edge equals the inline floor-log2 level
     formulas it replaced (their 1e-9/1e-12 edge floors all clip to

@@ -988,12 +988,15 @@ def test_pip_join_docs_any_geometry_collection_spans(spark):
 
 
 def test_poly_refine_vs_oracle_sf0001(spark):
-    """The one poly-span refine path at sf0.001 (mixed Point /
-    rect-Polygon / GeometryCollection spans) equals the analytic DuckDB
-    oracle, and only the non-rect-x-rect branch enters Python."""
+    """The one poly-span pass at sf0.001 (mixed Point / rect-Polygon /
+    GeometryCollection spans) equals the analytic DuckDB oracle, and the
+    board's broadcast-sized dim enters Python once: one mapInArrow that
+    decodes, finds the candidates and refines them, with no
+    ArrowEvalPython refine after a JVM join."""
     df = entrymod.all_queries()["pip_join_poly_spans"](spark, SF_SMOKE)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1, plan
+    assert plan.count("MapInArrow ") == plan.count("MapInArrow _intersecting_pairs(doc_id") == 1, plan
+    assert "ArrowEvalPython" not in plan and "BroadcastExchange" not in plan, plan
     compare_to_oracle(df, entrymod.all_oracle_sql()["pip_join_poly_spans"], SF_SMOKE)
 
 
@@ -1343,9 +1346,12 @@ def test_driver_relations_plan_no_python_rdd(spark, monkeypatch, tmp_path):
     them: after collecting pip_join_docs_any (sf0.001) and zonal_stats
     on both sides of the broadcast gate, and the board pip_join at its
     own gate, no executed plan (AQE stages and cached plans included)
-    has a ``Scan ExistingRDD`` leaf, and the broadcast cover or
-    contribution side is a LocalTableScan on the broadcast side; the
-    distributed side broadcasts no local relation at all.  The dim is
+    has a ``Scan ExistingRDD`` leaf, and the board pip_join's cover and
+    zonal_stats' contributions are a broadcast LocalTableScan on the
+    broadcast side.  pip_join_docs_any's broadcast side reads its cover
+    through a Broadcast variable inside its one mapInArrow, so it
+    broadcasts no local relation; neither does any distributed side.
+    The dim is
     the board's rectangle dim written to parquet, so the caller's own
     source is not a driver list either."""
     from gdal_boots_spark.operators import cover
@@ -1374,7 +1380,7 @@ def test_driver_relations_plan_no_python_rdd(spark, monkeypatch, tmp_path):
     check("pip_join", entrymod.queries()["pip_join"](spark, SF_SMOKE), cover_cols)
     for side, ceiling in GATE_SIDES.items():
         monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", ceiling)
-        check(f"pip_join_docs_any/{side}", pip_join_docs_any(docs, dim), cover_cols if side == "broadcast" else None)
+        check(f"pip_join_docs_any/{side}", pip_join_docs_any(docs, dim), None)
         check(f"zonal_stats/{side}", zonal_stats(spark, tiles, grid, dim), contrib_cols if side == "broadcast" else None)
 
 
@@ -1412,9 +1418,15 @@ def test_span_join_one_pass(spark, monkeypatch):
     """pip_join_docs_any runs ONE span pass on both sides of the
     broadcast gate: over a mixed dim (convex polygons, rectangles, a
     holed polygon), its executed plan, walked through the AQE stages,
-    holds exactly one exact refine, one decode of the docs, on the
-    distributed side one decode of the dim, and no cached relation.
-    Its Point pairs equal pip_join_docs's on the same docs and dim."""
+    holds no cached relation.  On the broadcast side its only Python
+    node is the one mapInArrow over the docs that decodes, finds the
+    candidates and refines them, with no ArrowEvalPython and no
+    broadcast exchange.  On the distributed side it holds exactly one
+    exact refine, one decode of the docs and one decode of the dim.
+    Both sides give the same rows, and their Point pairs equal
+    pip_join_docs's on the same docs and dim."""
+    import re
+
     from gdal_boots_spark import memo
     from gdal_boots_spark.functions.geometry_fns import point_xy_sql
     from gdal_boots_spark.operators import cover
@@ -1431,19 +1443,74 @@ def test_span_join_one_pass(spark, monkeypatch):
         memo.clear()
         df = pip_join_docs_any(docs, dim)
         out[side] = {tuple(r) for r in df.collect()}
-        nodes = [node.simpleString(100) for node, _, _ in _executed_nodes(df)]
+        executed = _executed_nodes(df)
+        nodes = [node.simpleString(100) for node, _, _ in executed]
+        python = [n for (node, _, _), n in zip(executed, nodes) if re.search(
+            "Python|InPandas|InArrow", node.getClass().getSimpleName()
+        )]
 
         def count(marker):
             return sum(marker in n for n in nodes)
 
-        assert count("ArrowEvalPython [_intersects(") == 1, (side, nodes)
-        assert count("MapInArrow _decode_geojson(doc_id") == 1, (side, nodes)
-        assert count("_decode_geojson(poly_id") == (side == "distributed"), (side, nodes)
+        if side == "broadcast":
+            assert len(python) == 1 and python[0].startswith("MapInArrow _intersecting_pairs(doc_id"), (side, nodes)
+            assert count("ArrowEvalPython") == count("BroadcastExchange") == 0, (side, nodes)
+        else:
+            assert count("ArrowEvalPython [_intersects(") == 1, (side, nodes)
+            assert count("MapInArrow _decode_geojson(doc_id") == 1, (side, nodes)
+            assert count("_decode_geojson(poly_id") == 1, (side, nodes)
         assert count("InMemoryTableScan") == 0, (side, nodes)
         want = {tuple(r) for r in pip_join_docs(docs, dim).select("doc_id", "span_pos", "poly_id").collect()}
         assert {p for p in out[side] if p[:2] in points} == want and len(want) > 50, side
     assert out["broadcast"] == out["distributed"]
     assert len({p[2] for p in out["broadcast"]}) == 6
+
+
+def test_span_join_cover_rides_a_broadcast(spark, monkeypatch):
+    """The broadcast side's cell cover reaches the Python workers as a
+    Broadcast variable, not inside the pickled closure: over a dim of
+    5,000 small polygons, pip_join_docs_any's one mapInArrow carries a
+    serialized Python command under 16 KB (the dim's cover pickles to
+    about 2.8 MB), and the broadcasts it reads are exactly the dim's
+    memoised cover and packed coords (PySpark broadcasts a command over
+    1 MB by itself, once per build).  Its rows equal the
+    forced-distributed side's."""
+    import json
+
+    from gdal_boots_spark import memo
+    from gdal_boots_spark.operators import cover
+    from gdal_boots_spark.operators import spatial_join as sj
+    from gdal_boots_spark.operators.spatial_join import pip_join_docs_any
+
+    rng = np.random.default_rng(7)
+    x0, y0 = rng.uniform(26.0, 29.0, 5000), rng.uniform(53.0, 55.0, 5000)
+    w = rng.uniform(0.01, 0.06, 5000)
+    dim = spark.createDataFrame(
+        [(i, json.dumps({"type": "Polygon", "coordinates": [[[x, y], [x + d, y], [x + d / 2, y + d], [x, y]]]}))
+         for i, (x, y, d) in enumerate(zip(x0.tolist(), y0.tolist(), w.tolist()))],
+        "poly_id long, geojson string",
+    )
+    docs = interleaved_docs(spark, SF_SMOKE, poly_spans=True)
+    out = {}
+    for side, ceiling in GATE_SIDES.items():
+        monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", ceiling)
+        memo.clear()
+        df = pip_join_docs_any(docs, dim)
+        out[side] = sorted(tuple(r) for r in df.collect())
+        if side == "broadcast":
+            funcs, stack = [], [df._jdf.queryExecution().analyzed()]
+            while stack:
+                node = stack.pop()
+                if node.nodeName() == "MapInArrow":
+                    funcs.append(node.functionExpr().func())
+                stack.extend(node.children().apply(i) for i in range(node.children().size()))
+            assert len(funcs) == 1 and funcs[0].command().size() < 16 << 10, funcs
+            bvars = funcs[0].broadcastVars()
+            pd_ = poly_dim(dim)
+            want = {b._jbroadcast.id() for b in (sj._cover_index(spark, pd_, sj._auto_res(pd_.bboxes)), pd_.bpacked)}
+            assert {bvars.get(i).id() for i in range(bvars.size())} == want
+    assert out["broadcast"] == out["distributed"] and len(out["broadcast"]) > 50
+    memo.clear()
 
 
 @pytest.mark.parametrize("name", ["order", "my id"])
