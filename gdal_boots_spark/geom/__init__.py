@@ -27,7 +27,5 @@ from .cells import (  # noqa: F401
     cell_decode,
     cell_bounds,
     cover_bbox,
-    cover_geometry,
-    ring,
     CELL_RES_BITS,
 )

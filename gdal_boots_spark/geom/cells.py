@@ -13,9 +13,11 @@ the DuckDB oracle:
 Deterministic, versioned (v1): ids appear in persisted outputs
 (tile-to-cell assignments) and must stay stable across releases.
 
-``ring(cell, k)`` gives the Chebyshev-distance-k neighbourhood used by
-the grid-pruned kNN expansion; ix wraps across the antimeridian, iy
-clamps at the poles.
+``block(cell, r)`` gives the Chebyshev-radius-r neighbourhood of many
+cells at once, as one cell-id range per column (ids are ix-major, so a
+column's cells are contiguous); ``sorted_points`` and ``block_spans``
+are the point index and its block lookup that the broadcast side of
+kNN runs in a Python worker.
 
 The ``*_sql`` builders at the end are the Spark side of the same grid:
 they take column names or SQL fragments and return Spark SQL strings
@@ -183,13 +185,74 @@ def cover_pairs(cover: SortedCover, minx, miny, maxx, maxy) -> tuple[np.ndarray,
     row, cid = cover_cells(minx, miny, maxx, maxy, lvl)
     a = np.searchsorted(cover.cell, cid, "left")
     cnt = np.searchsorted(cover.cell, cid, "right") - a
-    j = np.repeat(a - np.cumsum(cnt) + cnt, cnt) + np.arange(int(cnt.sum()))
+    j = runs(a, cnt)
     row, cid = np.repeat(row, cnt), np.repeat(cid, cnt)
     pminx, pminy, pmaxx, pmaxy = cover.box[j].T
     hit = (minx[row] <= pmaxx) & (pminx <= maxx[row]) & (miny[row] <= pmaxy) & (pminy <= maxy[row])
     row, j, cid, pminx, pminy = row[hit], j[hit], cid[hit], pminx[hit], pminy[hit]
     keep = cid == reporting_cell((minx[row], pminx), (miny[row], pminy), lvl[row])
     return row[keep], cover.item[j[keep]]
+
+
+def runs(start, count) -> np.ndarray:
+    """start[i], start[i] + 1, ... for count[i] values each, concatenated."""
+    count = np.asarray(count, np.int64)
+    return np.repeat(np.asarray(start, np.int64) - np.cumsum(count) + count, count) + np.arange(int(count.sum()))
+
+
+def block(cid, r, box=None) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The cells within Chebyshev distance ``r`` (one radius, or one per
+    cell) of each cell in ``cid`` -> (row, lo, hi): one inclusive
+    cell-id range per column of each block, rows in input order and
+    columns ascending (ids are ix-major, so a column's cells are the
+    ids lo..hi).  Both axes clamp to the grid, or to the inclusive cell
+    box ``box = (ix0, iy0, ix1, iy1)``: iy stops at the poles and ix at
+    the antimeridian without wrapping, because kNN's distance is
+    planar and a point more than r columns away unwrapped is more than
+    r cell widths away.  A block outside the box has no range."""
+    res, ix, iy = cell_decode(cid)
+    r = np.broadcast_to(np.asarray(r, np.int64), ix.shape)
+    top = np.left_shift(1, res) - 1
+    x0, y0, x1, y1 = (0, 0, top, top) if box is None else box
+    cx0, cx1 = np.maximum(ix - r, x0), np.minimum(ix + r, x1)
+    ry0, ry1 = np.maximum(iy - r, y0), np.minimum(iy + r, y1)
+    ncol = np.where(ry0 <= ry1, np.maximum(cx1 - cx0 + 1, 0), 0)
+    row = np.repeat(np.arange(ix.size), ncol)
+    col = runs(cx0, ncol)
+    return row, compose(res[row], col, ry0[row]), compose(res[row], col, ry1[row])
+
+
+class PointIndex(NamedTuple):
+    """Points sorted by their cell id at one level: the index
+    ``block_spans`` probes."""
+
+    cell: np.ndarray  # int64 cell ids, ascending
+    x: np.ndarray  # float64, in cell order
+    y: np.ndarray
+    item: np.ndarray  # int64 input row of each point
+    res: int
+    box: tuple  # (ix0, iy0, ix1, iy1): the cells the points occupy, inclusive
+
+
+def sorted_points(x, y, res: int) -> PointIndex:
+    """Point coordinates (float64[k] each, no NaN) -> PointIndex at ``res``."""
+    x, y = np.asarray(x, np.float64), np.asarray(y, np.float64)
+    ix, iy = _grid(x, y, _check_res(res))
+    cid = compose(res, ix, iy)
+    order = np.argsort(cid, kind="stable")
+    box = (int(ix.min()), int(iy.min()), int(ix.max()), int(iy.max())) if x.size else (0, 0, -1, -1)
+    return PointIndex(cid[order], x[order], y[order], order, res, box)
+
+
+def block_spans(index: PointIndex, cid, r) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """-> (row, start, count): the index positions start .. start +
+    count - 1 hold the points of one column of ``block(cid, r)`` for
+    input row ``row``, every column of the index's box once.  ``cid``
+    are cell ids at ``index.res``; ``runs(start, count)`` lists the
+    points."""
+    row, lo, hi = block(cid, r, index.box)
+    start = np.searchsorted(index.cell, lo, "left")
+    return row, start, np.searchsorted(index.cell, hi, "right") - start
 
 
 def pick_res(minx, miny, maxx, maxy, max_cells: int = 64) -> int:
@@ -202,28 +265,6 @@ def pick_res(minx, miny, maxx, maxy, max_cells: int = 64) -> int:
         if est <= max_cells:
             return res
     return 0
-
-
-def cover_geometry(pg, res: int) -> np.ndarray:
-    """Bbox cover of a PackedGeometry (safe superset)."""
-    from .packed import bounds
-
-    minx, miny, maxx, maxy = bounds(pg)
-    if np.isnan(minx):
-        return np.empty(0, dtype=np.int64)
-    return cover_bbox(minx, miny, maxx, maxy, res)
-
-
-def ring(cid: int, k: int) -> np.ndarray:
-    """All cells within Chebyshev distance k of `cid` (the (2k+1)^2
-    block), ix wrapped mod 2^res, iy clamped — kNN ring expansion."""
-    res, ix, iy = cell_decode(np.asarray([cid]))
-    res, ix, iy = int(res[0]), int(ix[0]), int(iy[0])
-    n = 1 << res
-    dxs = np.arange(-k, k + 1, dtype=np.int64)
-    gx, gy = np.meshgrid((ix + dxs) % n, iy + dxs, indexing="ij")
-    keep = (gy >= 0) & (gy < n)
-    return compose(res, gx[keep], gy[keep])
 
 
 # --- Spark SQL builders --------------------------------------------------

@@ -174,6 +174,24 @@ def main():
         cap(pip_join_docs_any(_idocs(spark, "/root/testdata/sf0.001", poly_spans=True), rect_polygons_df(spark))),
     ))
 
+    from gdal_boots_spark.operators import cover
+
+    notes = {
+        "broadcast": "The base side is collected once per session, sorted by cell id and "
+        "broadcast (memoised): the query side is ONE MapInArrow (_knn_block) that ranks "
+        "each Arrow batch's radius-1 cell blocks in NumPy and grows only the unfinished "
+        "queries' blocks.  No Exchange, no join, no Window.",
+        "distributed": "For a base over the broadcast gate: the radius-r0 block explode, "
+        "an equi-join on cell_id and a qid Window for the capped top-k, the per-row "
+        "annulus of the unfinished queries through a second join, and one more Window "
+        "over the union.",
+    }
+    default = cover.BROADCAST_MAX_BYTES
+    for side, ceiling in (("broadcast", 1 << 62), ("distributed", -1)):
+        cover.BROADCAST_MAX_BYTES = ceiling
+        sections.append((f"kNN join, {side} side of the gate", notes[side], cap(e.q_knn(spark, e.SF0001))))
+    cover.BROADCAST_MAX_BYTES = default
+
     with open("PLANS.md", "w") as f:
         f.write("# PLANS — captured physical plans of the key operators\n\n")
         f.write("Regenerate with `python scripts/gen_plans.py`.\n")

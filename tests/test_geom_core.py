@@ -20,7 +20,6 @@ from gdal_boots_spark.geom import (
     geom_bounds,
     pixel_of,
     points_in_packed,
-    ring,
     snap_bbox_to_grid,
     to_geojson,
     transform_coords,
@@ -654,11 +653,50 @@ def test_cover_bbox_and_ring():
     minlon, minlat, maxlon, maxlat = cell_bounds(ids)
     assert (maxlon >= 26.0).all() and (minlon <= 29.0).all()
     assert (maxlat >= 53.0).all() and (minlat <= 55.0).all()
-    ctr = cell_id(np.array([27.5]), np.array([54.0]), 8)[0]
-    r1 = ring(int(ctr), 1)
-    assert len(r1) == 9 and int(ctr) in r1.tolist()
-    r0 = ring(int(ctr), 0)
-    assert r0.tolist() == [int(ctr)]
+    from gdal_boots_spark.geom.cells import block, compose
+
+    def cells_of(cid, r, box=None):
+        row, lo, hi = block(np.asarray(cid, np.int64), r, box)
+        return [sorted(c for a, b in zip(lo[row == i], hi[row == i]) for c in range(a, b + 1)) for i in range(len(cid))]
+
+    ctr = int(cell_id(np.array([27.5]), np.array([54.0]), 8)[0])
+    _, (ix,), (iy,) = cell_decode([ctr])
+    r1, r0 = cells_of([ctr, ctr], [1, 0])
+    assert r1 == sorted(compose(8, ix + dx, iy + dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1))
+    assert r0 == [ctr]
+    # the antimeridian clamps (kNN's distance is planar: no wrap) and so
+    # do the poles; a corner cell keeps a quarter of its block
+    n = 1 << 8
+    east, north_pole, corner = compose(8, n - 1, 100), compose(8, 7, n - 1), compose(8, 0, 0)
+    got = cells_of([east, north_pole, corner], 2)
+    assert got[0] == sorted(compose(8, x, y) for x in (n - 3, n - 2, n - 1) for y in range(98, 103))
+    assert got[1] == sorted(compose(8, x, y) for x in range(5, 10) for y in (n - 3, n - 2, n - 1))
+    assert got[2] == sorted(compose(8, x, y) for x in range(3) for y in range(3))
+    # a box clips the block; a block outside the box has no range
+    assert cells_of([ctr, corner], 1, (ix, iy, ix + 5, iy + 5)) == [
+        sorted(compose(8, x, y) for x in (ix, ix + 1) for y in (iy, iy + 1)), []
+    ]
+
+
+def test_sorted_points_block_spans():
+    """block_spans lists, for each probe cell and radius, exactly the
+    index points whose cells lie in the probe's block, each once."""
+    from gdal_boots_spark.geom.cells import block_spans, runs, sorted_points
+
+    rng = np.random.default_rng(5)
+    x, y = rng.uniform(26, 29, 500), rng.uniform(53, 55, 500)
+    index = sorted_points(x, y, 9)
+    assert (np.diff(index.cell) >= 0).all() and sorted(index.item.tolist()) == list(range(500))
+    _, bix, biy = cell_decode(cell_id(x, y, 9))
+    probes = cell_id(np.array([27.0, 26.0, 120.0]), np.array([54.0, 53.0, -60.0]), 9)
+    radii = np.array([1, 3, 2])
+    row, start, count = block_spans(index, probes, radii)
+    q, j = np.repeat(row, count), runs(start, count)
+    _, pix, piy = cell_decode(probes)
+    for i in range(3):
+        near = np.maximum(abs(bix - pix[i]), abs(biy - piy[i])) <= radii[i]
+        assert sorted(index.item[j[q == i]].tolist()) == np.flatnonzero(near).tolist(), i
+    assert count[row == 2].sum() == 0 and count.sum() > 0
 
 
 def _rect_pg(minx, miny, maxx, maxy):

@@ -3,6 +3,7 @@
 import numpy as np
 
 from gdal_boots_spark.operators.knn import knn_join
+from tests.conftest import GATE_SIDES
 
 
 def _brute_knn(qx, qy, bx, by, bids, k):
@@ -14,7 +15,41 @@ def _brute_knn(qx, qy, bx, by, bids, k):
     return out
 
 
-def test_knn_matches_bruteforce(spark):
+def _oracle(query, base, k):
+    """Definitional kNN over row lists (id, x, y): every base row with
+    x and y against every such query row, ranked by (dist, bid)."""
+    out = []
+    for qid, x, y in query:
+        if x is None or y is None:
+            continue
+        d = sorted(
+            (float(np.sqrt((x - bx) * (x - bx) + (y - by) * (y - by))), bid)
+            for bid, bx, by in base if bx is not None and by is not None
+        )
+        out += [(qid, bid, dist, rank) for rank, (dist, bid) in enumerate(d[:k], 1)]
+    return sorted(out)
+
+
+def _both_sides(monkeypatch, build):
+    """{side: (schema, sorted rows)} of ``build()`` forced to each side
+    of the broadcast gate; the two schemas are identical."""
+    from gdal_boots_spark import memo
+    from gdal_boots_spark.operators import cover
+
+    out = {}
+    for side, ceiling in GATE_SIDES.items():
+        monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", ceiling)
+        memo.clear()
+        df = build()
+        out[side] = (df.schema, sorted(tuple(r) for r in df.collect()))
+    monkeypatch.undo()
+    assert out["broadcast"][0] == out["distributed"][0], out
+    return {side: rows for side, (_, rows) in out.items()}
+
+
+def test_knn_matches_bruteforce(spark, monkeypatch):
+    """Random points, some queries outside the base hull, on both sides
+    of the broadcast gate."""
     rng = np.random.default_rng(21)
     bx = rng.uniform(26, 29, 800)
     by = rng.uniform(53, 55, 800)
@@ -26,24 +61,90 @@ def test_knn_matches_bruteforce(spark):
     query = spark.createDataFrame(
         [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(qx, qy))], "qid long, x double, y double"
     )
-    got = knn_join(query, base, k=5, q_id="qid", b_id="bid")
-    rows = got.collect()
+    sides = _both_sides(monkeypatch, lambda: knn_join(query, base, k=5, q_id="qid", b_id="bid"))
     exp = _brute_knn(qx, qy, bx, by, np.arange(800), 5)
-    got_by_q = {}
-    for r in sorted(rows, key=lambda r: (r["qid"], r["rank"])):
-        got_by_q.setdefault(r["qid"], []).append((r["bid"], r["dist"]))
-    assert set(got_by_q) == set(exp)
-    for q in exp:
-        assert [b for b, _ in got_by_q[q]] == [b for b, _ in exp[q]], q
-        assert np.allclose([d for _, d in got_by_q[q]], [d for _, d in exp[q]])
+    for side, rows in sides.items():
+        got_by_q = {}
+        for qid, bid, dist, rank in sorted(rows, key=lambda r: (r[0], r[3])):
+            got_by_q.setdefault(qid, []).append((bid, dist))
+        assert set(got_by_q) == set(exp), side
+        for q in exp:
+            assert [b for b, _ in got_by_q[q]] == [b for b, _ in exp[q]], (side, q)
+            assert np.allclose([d for _, d in got_by_q[q]], [d for _, d in exp[q]])
+    assert sides["broadcast"] == sides["distributed"]
 
 
-def test_knn_k_larger_than_base(spark):
+def test_knn_k_larger_than_base(spark, monkeypatch):
     base = spark.createDataFrame([(i, float(i), 0.0) for i in range(3)], "bid long, x double, y double")
     query = spark.createDataFrame([(0, 1.2, 0.0)], "qid long, x double, y double")
-    rows = knn_join(query, base, k=10).collect()
-    assert len(rows) == 3  # all of the base, never more
-    assert sorted(r["bid"] for r in rows) == [0, 1, 2]
+    for side, rows in _both_sides(monkeypatch, lambda: knn_join(query, base, k=10)).items():
+        assert len(rows) == 3, side  # all of the base, never more
+        assert sorted(r[1] for r in rows) == [0, 1, 2], side
+
+
+def test_knn_edge_cases_both_sides(spark, monkeypatch):
+    """Both sides of the broadcast gate equal the definitional oracle,
+    row for row with bit-identical distances, on: exact distance ties
+    (broken by bid), k larger than the base, queries far outside the
+    base hull (the grow step falls back to the whole base), null x or y
+    on either side (no row), and string ids."""
+    base = [
+        # four points exactly 0.25 from the query (27, 54): bid decides
+        (7, 27.25, 54.0), (3, 26.75, 54.0), (9, 27.0, 54.25), (1, 27.0, 53.75),
+        (20, 27.5, 54.5), (21, 28.0, 53.0), (22, None, 54.0), (23, 27.1, None), (24, None, None),
+    ]
+    query = [
+        (0, 27.0, 54.0), (1, -170.0, -80.0), (2, 179.5, 89.5), (3, None, 54.0), (4, 27.0, None),
+        (5, 27.6, 54.4), (6, 26.0, 53.0),
+    ]
+    for ids in ("long", "string"):
+        cast = int if ids == "long" else (lambda v: f"id-{v:02d}")
+        b = [(cast(i), x, y) for i, x, y in base]
+        q = [(cast(i), x, y) for i, x, y in query]
+        bdf = spark.createDataFrame(b, f"bid {ids}, x double, y double")
+        qdf = spark.createDataFrame(q, f"qid {ids}, x double, y double")
+        for k in (2, 3, 10):
+            sides = _both_sides(monkeypatch, lambda: knn_join(qdf, bdf, k=k))
+            want = _oracle(q, b, k)
+            assert sides["broadcast"] == sides["distributed"] == want, (ids, k)
+        assert [r[1] for r in want if r[0] == cast(0)][:4] == [cast(i) for i in (1, 3, 7, 9)]
+        assert {r[0] for r in want} == {cast(i) for i in (0, 1, 2, 5, 6)}
+
+
+def test_knn_base_rides_a_broadcast(spark, monkeypatch):
+    """The broadcast side's base index reaches the Python workers as a
+    Broadcast variable, not inside the pickled closure: over a base of
+    200,000 points, knn_join's one mapInArrow carries a serialized
+    Python command under 16 KB, and the one broadcast it reads is the
+    memoised base index (PySpark broadcasts a command over 1 MB by
+    itself, once per build).  Its rows equal the forced-distributed
+    side's."""
+    from gdal_boots_spark.operators import knn
+
+    base = spark.range(200_000).selectExpr(
+        "id AS bid",
+        "26.0D + CAST((id * 7919) % 30011 AS DOUBLE) / 10000.0D AS x",
+        "53.0D + CAST((id * 104729) % 20011 AS DOUBLE) / 10000.0D AS y",
+    )
+    query = spark.range(50).selectExpr("id AS qid", "25.9D + id * 0.065D AS x", "52.9D + id * 0.045D AS y")
+
+    def build():
+        df = knn_join(query, base, k=4)
+        if knn.fits_broadcast(knn.plan_bytes(base)):
+            funcs, stack = [], [df._jdf.queryExecution().analyzed()]
+            while stack:
+                node = stack.pop()
+                if node.nodeName() == "MapInArrow":
+                    funcs.append(node.functionExpr().func())
+                stack.extend(node.children().apply(i) for i in range(node.children().size()))
+            assert len(funcs) == 1 and funcs[0].command().size() < 16 << 10, funcs
+            bvars = funcs[0].broadcastVars()
+            want = knn._base_index(base, "bid", 4, None)._jbroadcast.id()
+            assert [bvars.get(i).id() for i in range(bvars.size())] == [want]
+        return df
+
+    sides = _both_sides(monkeypatch, build)
+    assert sides["broadcast"] == sides["distributed"] and len(sides["broadcast"]) == 200
 
 
 def test_radius_join_vs_oracle(spark):

@@ -131,9 +131,9 @@ def test_warm_builds_run_no_job_and_no_broadcast(spark, monkeypatch, side):
     """A second build in one session, on either side of the broadcast
     gate, runs no Spark job and makes no SparkContext.broadcast call: the
     collected dims, their broadcasts, the tile contributions, the auto-res
-    aggregate, the ann base matrix and the embedding-width probe all come
-    from the memo, and the LSH planes and IVF centroids ride in their UDF
-    closures."""
+    aggregate, the ann base matrix, the embedding-width probe and the knn
+    base index (distributed: its stats aggregate) all come from the memo,
+    and the LSH planes and IVF centroids ride in their UDF closures."""
     import __spark_entry__ as entry
     from pyspark import SparkContext
 
@@ -142,7 +142,7 @@ def test_warm_builds_run_no_job_and_no_broadcast(spark, monkeypatch, side):
     monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", GATE_SIDES[side])
     names = (
         "pip_join", "pip_join_poly_spans", "rasterize_hist", "zonal_stats", "point_sampling", "polygonize",
-        "pip_join_shuffle", "ann_cosine", "ann_lsh", "ann_ivf", "embedding_neardup",
+        "pip_join_shuffle", "ann_cosine", "ann_lsh", "ann_ivf", "embedding_neardup", "knn",
     )
     qs = entry.all_queries()
     for name in names:

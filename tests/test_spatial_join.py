@@ -1533,7 +1533,10 @@ def test_reserved_and_spaced_column_names(spark, monkeypatch, name):
     def knn(q, b, col):
         return knn_join(q, b, k=3, q_id=col, b_id=col)
 
-    assert rows(knn(odd, odd, name)) == rows(knn(plain, plain, "id"))
+    for ceiling in GATE_SIDES.values():
+        monkeypatch.setattr(cover, "BROADCAST_MAX_BYTES", ceiling)
+        assert rows(knn(odd, odd, name)) == rows(knn(plain, plain, "id"))
+    monkeypatch.undo()
 
     def near(q, b, col):
         return radius_join(q, b, 0.3, q_id=col, b_id=col)
@@ -1629,6 +1632,8 @@ GATE_CASES = {
     "pip_join_poly_spans": (_board_case("pip_join_poly_spans"), "MapInArrow _decode_geojson(poly_id"),
     "point_sampling": (_sampling_case, "FlatMapCoGroupsInPandas"),
     "embedding_neardup": (_embedding_case, "MapInArrow lsh_bucketize("),
+    # the broadcast side ranks inside its one mapInArrow
+    "knn": (_board_case("knn"), "Window"),
 }
 
 
